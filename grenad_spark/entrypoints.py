@@ -998,8 +998,8 @@ _TYPO_SETTINGS_KW = {"disable_on_words": {"wandow"}}
 )
 def q_bm25_typo_settings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Meilisearch typoTolerance settings: per-word edit budgets from
-    minWordSizeForTypos (5/9) + disableOnWords, expansion bucketed through
-    the persisted exact/bigram/SymSpell tables, ranked by the rule
+    minWordSizeForTypos (5/9) + disableOnWords, expansion bucketed into an
+    exact dictionary probe and expand_fuzzy_queries, ranked by the rule
     pipeline (slots DESC, typos ASC, BM25 DESC, doc ASC)."""
     from grenad_spark.query.search import TypoSettings, search_topk_typo_settings
 
@@ -1360,7 +1360,7 @@ from grenad_spark.query.phrase import sql_mixed_fuzzy_topk as _sql_mixed_fuzzy  
 @register("bm25_topk_mixed_fuzzy", _sql_mixed_fuzzy(_MIXED_FUZZY_QUERIES, max_edits=1))
 def q_bm25_mixed_fuzzy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixed queries with typo tolerance on the non-final free terms
-    (persisted bigram-table expansion), prefix on the final word, literal
+    (expand_fuzzy_queries), prefix on the final word, literal
     phrases — the full Meilisearch query-string interplay."""
     from grenad_spark.index.positions import build_positions
     from grenad_spark.query.phrase import search_topk_mixed_prefix
@@ -2530,7 +2530,7 @@ _DRIVER_GATE_ORDER = [
     # BM25 serving paths (pruned/composed modes + expansion + LSM read path;
     # with_docs demoted mid-round-5 — a doc_id-keyed join over the gated
     # wand path — to make room for the bm25_topk_negative debut)
-    # (bm25_topk_fuzzy demoted mid-round-5 — the bigram 1-edit expansion
+    # (bm25_topk_fuzzy demoted mid-round-5 — the 1-edit expansion
     # also drives the gated bm25_topk_fuzzy_ranked — for the geo_bbox debut)
     # (bm25_topk_fuzzy2 demoted mid-round-5 after 2 driver-green rounds —
     # the SymSpell deletion-table path now gates through

@@ -42,17 +42,6 @@ def term_doc_tf(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text")
     )
 
 
-def char_bigrams(col: Column) -> Column:
-    """Array of character bigrams of a string column, JVM-side (a 1-char
-    string yields itself: substr(1,2) of "a" is "a"). Shared by the build's
-    persisted (gram, term) typo index and query-side expansion — both sides
-    MUST use the same gram definition or the equi-join silently misses."""
-    return F.transform(
-        F.sequence(F.lit(1), F.greatest(F.length(col) - 1, F.lit(1))),
-        lambda i: col.substr(i, F.lit(2)),
-    )
-
-
 def sql_tokens_cte(table: str = "documents") -> str:
     """DuckDB CTE producing the identical (doc_id, term) stream for oracles."""
     return (

@@ -195,13 +195,17 @@ def tokens_with_dl(docs: DataFrame, tokens_fn=None) -> DataFrame:
         "doc_id", F.size("toks").alias("dl"), F.array_sort("toks").alias("ts")
     )
     # st[j] = 1-based index of each run start in the sorted token array;
-    # tf of run j = next run's start − this run's start
+    # tf of run j = next run's start − this run's start.
+    # transform(a, (x, i) -> i + 1) is 1..size(a), and empty for an empty or
+    # punctuation-only document, where sequence(1, 0) would be [1, 0] and
+    # index out of bounds
     stage = srt.select(
         "doc_id",
         "dl",
         "ts",
         F.expr(
-            "filter(sequence(1, size(ts)), i -> i = 1 OR ts[i-1] != ts[i-2])"
+            "filter(transform(ts, (x, i) -> i + 1),"
+            " i -> i = 1 OR ts[i-1] != ts[i-2])"
         ).alias("st"),
     )
     pairs = stage.select(
@@ -209,7 +213,7 @@ def tokens_with_dl(docs: DataFrame, tokens_fn=None) -> DataFrame:
         "dl",
         F.explode(
             F.expr(
-                "transform(sequence(1, size(st)), j -> struct("
+                "transform(transform(st, (x, i) -> i + 1), j -> struct("
                 "ts[st[j-1]-1] AS term, "
                 "CAST((CASE WHEN j = size(st) THEN size(ts)+1 ELSE st[j] END)"
                 " - st[j-1] AS INT) AS tf))"
@@ -361,16 +365,16 @@ def _build_index_inner(
     docs_path = os.path.join(out_dir, "docs")
     manifest_path = os.path.join(out_dir, "manifest.json")
     # fully-built index: the manifest is the LAST artifact written, so its
-    # presence (plus EVERY stage's _SUCCESS, auxiliary typo tables included)
+    # presence (plus EVERY stage's _SUCCESS, the typo table included)
     # means resume has nothing to do — return the handle without launching a
-    # single Spark job. An index missing an auxiliary stage (e.g. built
-    # before term_deletes existed) falls through to the per-stage guards
-    # below and gets upgraded in place.
+    # single Spark job. An index missing the typo table (built before
+    # term_deletes existed) falls through to the per-stage guards below and
+    # gets upgraded in place. The bigram typo table older builds wrote is
+    # ignored.
     if os.path.exists(manifest_path) and all(
         _done(p)
         for p in (
             docs_path, stats_path, seg_path, dict_path,
-            os.path.join(out_dir, "term_bigrams"),
             os.path.join(out_dir, "term_deletes"),
         )
     ):
@@ -465,17 +469,9 @@ def _build_index_inner(
         n_shards = max(1, by_mem, par_floor)
     doc_space = max_doc + 1
 
-    # stage 3 paths (needed by both branches below)
-    # stage 3b: persisted typo index — (gram, term) vocabulary bigrams, the
-    # table Meilisearch precomputes for typo tolerance. Built ONCE here so
-    # fuzzy expansion is a pruned scan + join instead of re-exploding the
-    # whole term dictionary per query batch (at a 10^9-term web vocabulary
-    # that explode is a full-dictionary pass per batch). Range-partitioned on
-    # gram: the query side pushes gram IN (...) into the scan → file pruning.
-    bigrams_path = os.path.join(out_dir, "term_bigrams")
-    # stage 3c: SymSpell-style deletion-variant table — (delvar, term) for
-    # every variant reachable by deleting ≤ MAX_DELETES chars. Serves
-    # max_edits=2 fuzzy expansion WITHOUT any vocabulary scan: if
+    # stage 3b: SymSpell-style deletion-variant table — (delvar, term) for
+    # every variant reachable by deleting ≤ MAX_DELETES chars, the one typo
+    # index. Serves fuzzy expansion WITHOUT any vocabulary scan: if
     # lev(q, t) ≤ d then deleting ≤ d chars from each reaches a common
     # string (each edit contributes at most one deletion per side), so
     # candidates = delvar-equi-join of the two sides' deletion neighborhoods,
@@ -489,30 +485,10 @@ def _build_index_inner(
         ).sortWithinPartitions("term").write.mode("overwrite").parquet(dict_path)
 
     def _write_aux() -> None:
-        # 3b and 3c both derive from the written term_dict and are
-        # independent of each other — submit them from a small thread pool
-        # so the second job's tasks back-fill executors freed by the first
-        # job's tail (vocabulary-sized jobs: their cost is scheduling
-        # overhead, which overlaps fully).
-        aux_jobs = []
-        if not _done(bigrams_path):
-            aux_jobs.append(
-                lambda: write_term_bigrams(
-                    spark, dict_path, bigrams_path, max(1, partitions // 8))
-            )
         if not _done(deletes_path):
-            aux_jobs.append(
-                lambda: write_term_deletes(
-                    spark, dict_path, deletes_path, max(1, partitions // 8))
+            write_term_deletes(
+                spark, dict_path, deletes_path, max(1, partitions // 8)
             )
-        if len(aux_jobs) == 1:
-            aux_jobs[0]()
-        elif aux_jobs:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(aux_jobs)) as pool:
-                for fut in [pool.submit(fn) for fn in aux_jobs]:
-                    fut.result()
 
     # authoritative dumped-bytes/postings totals for the manifest (the live
     # accumulators in LAST_BUILD_PROGRESS show the same numbers mid-build; a
@@ -525,82 +501,89 @@ def _build_index_inner(
         ).first()
 
     enc = None
-    # stage 2: segments (the wide shuffle + encode)
-    if not _done(seg_path):
-        ts = time.time()
-        segments = build_segments(
-            tokens_with_dl(docs, tokens_fn=tokens_fn), doc_space, n_shards, partitions,
-            payload_codec, block_size, track_progress=True,
-        )
-        # Materialize block rows before the range write: repartitionByRange
-        # SAMPLES its child to pick boundaries, which would re-run the whole
-        # tokenize→shuffle→encode pipeline a second time. Block rows are
-        # ~1/100 of the token stream (varbyte-packed), so caching them costs
-        # far less than the recompute; on a real cluster this is a staging
-        # write. MEMORY_AND_DISK: spill, don't recompute.
-        from pyspark.storagelevel import StorageLevel
-
-        segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
-        # one count materializes the cache (the expensive pipeline runs
-        # exactly once); every downstream job below reads the cached rows
-        segments.count()
-        stage_secs["segments_encode"] = time.time() - ts
-        ts = time.time()
-
-        # The range write, the term_dict chain (dict → bigrams ∥ deletes)
-        # and the manifest accounting agg are mutually independent consumers
-        # of the cached block rows — run them concurrently so the
-        # vocabulary-sized jobs hide entirely behind the segment write's
-        # tail (driver threads submitting jobs; FIFO scheduling back-fills).
-        def _seg_write():
-            # storage codec = grenad's per-block compression_type
-            # (src/compression.rs:9-28) at the parquet layer; posting
-            # payloads are additionally varbyte-packed inside the blocks.
-            # partitions//4 output files, not `partitions`: block rows are
-            # ~1/100 of the token stream, and every serving query pays a
-            # per-file open/footer cost on the pruned scan (measured ~3 ms
-            # × 64 files = most of a single query's 226 ms scan time at
-            # sf0.1×128; 16 larger files cut it ~4×). The same ratio holds
-            # at cluster scale: scan partitions are sized by bytes, so
-            # fewer-but-larger segment files only reduce footer overhead.
-            (
-                segments.repartitionByRange(
-                    max(1, partitions // 4), "term", "shard", "block_id"
-                )
-                .sortWithinPartitions("term", "shard", "block_id")
-                .write.mode("overwrite")
-                .option("compression", compression)
-                .parquet(seg_path)
+    try:
+        # stage 2: segments (the wide shuffle + encode)
+        if not _done(seg_path):
+            ts = time.time()
+            segments = build_segments(
+                tokens_with_dl(docs, tokens_fn=tokens_fn), doc_space, n_shards,
+                partitions, payload_codec, block_size, track_progress=True,
             )
+            # Materialize block rows before the range write:
+            # repartitionByRange SAMPLES its child to pick boundaries, which
+            # would re-run the whole tokenize→shuffle→encode pipeline a second
+            # time. Block rows are ~1/100 of the token stream (varbyte-packed),
+            # so caching them costs far less than the recompute; on a real
+            # cluster this is a staging write. MEMORY_AND_DISK: spill, don't
+            # recompute.
+            from pyspark.storagelevel import StorageLevel
 
-        def _dict_chain():
-            if not _done(dict_path):
-                _write_dict_from(segments)
-            _write_aux()
+            segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
+            # one count materializes the cache (the expensive pipeline runs
+            # exactly once); every downstream job below reads the cached
+            # rows
+            segments.count()
+            stage_secs["segments_encode"] = time.time() - ts
+            ts = time.time()
 
-        from concurrent.futures import ThreadPoolExecutor
+            # The range write, the term_dict chain (dict → deletes) and the
+            # manifest accounting agg are mutually independent consumers of
+            # the cached block rows — run them concurrently so the
+            # vocabulary-sized jobs hide entirely behind the segment write's
+            # tail (driver threads submitting jobs; FIFO scheduling
+            # back-fills).
+            def _seg_write():
+                # storage codec = grenad's per-block compression_type
+                # (src/compression.rs:9-28) at the parquet layer; posting
+                # payloads are additionally varbyte-packed inside the blocks.
+                # partitions//4 output files, not `partitions`: block rows
+                # are ~1/100 of the token stream, and every serving query
+                # pays a per-file open/footer cost on the pruned scan
+                # (measured ~3 ms × 64 files = most of a single query's
+                # 226 ms scan time at sf0.1×128; 16 larger files cut it ~4×).
+                # The same ratio holds at cluster scale: scan partitions are
+                # sized by bytes, so fewer-but-larger segment files only
+                # reduce footer overhead.
+                (
+                    segments.repartitionByRange(
+                        max(1, partitions // 4), "term", "shard", "block_id"
+                    )
+                    .sortWithinPartitions("term", "shard", "block_id")
+                    .write.mode("overwrite")
+                    .option("compression", compression)
+                    .parquet(seg_path)
+                )
 
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [
-                pool.submit(_seg_write),
-                pool.submit(_dict_chain),
-                pool.submit(lambda: _enc_agg(segments)),
-            ]
-            futs[0].result()
-            futs[1].result()
-            enc = futs[2].result()
-        segments.unpersist()
-        stage_secs["segments_finalize"] = time.time() - ts
+            def _dict_chain():
+                if not _done(dict_path):
+                    _write_dict_from(segments)
+                _write_aux()
+
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=3) as pool:
+                futs = [
+                    pool.submit(_seg_write),
+                    pool.submit(_dict_chain),
+                    pool.submit(lambda: _enc_agg(segments)),
+                ]
+                futs[0].result()
+                futs[1].result()
+                enc = futs[2].result()
+            segments.unpersist()
+            stage_secs["segments_finalize"] = time.time() - ts
+    finally:
+        if docs_write_fut is not None:
+            # join the overlapped docs/stats writes on every path, so a
+            # failed segments stage leaves no writer thread or cached table
+            # behind; the recorded time is only the non-hidden tail (usually
+            # ~0 — the write finished while the segments pipeline ran)
+            ts = time.time()
+            _docs_pool.shutdown(wait=True)
+            dl_cached.unpersist()
+            stage_secs["docs"] = round(time.time() - ts, 3)
     if docs_write_fut is not None:
-        # join the overlapped docs/stats writes; the recorded time is only
-        # the non-hidden tail (usually ~0 — the write finished while the
-        # segments pipeline ran)
-        ts = time.time()
-        docs_write_fut.result()
-        _docs_pool.shutdown()
-        dl_cached.unpersist()
-        docs_write_fut = None
-        stage_secs["docs"] = round(time.time() - ts, 3)
+        docs_write_fut.result()  # raise a failed docs/stats write
     segments = spark.read.parquet(seg_path)
 
     # stage 3 (resume path): term_dict (vocabulary-sized) + aux tables from
@@ -659,17 +642,13 @@ def _build_index_inner(
 MAX_DELETES = 2
 
 
-def write_term_deletes(
-    spark: SparkSession, dict_path: str, out_path: str, partitions: int
-) -> None:
-    """(delvar, term) SymSpell deletion table from a persisted term_dict:
-    every string reachable from a vocabulary term by deleting ≤ MAX_DELETES
-    characters (including the term itself at 0 deletions). 100% JVM-side —
+def term_delete_rows(vocab: DataFrame) -> DataFrame:
+    """(term, delvar) SymSpell deletion rows of a (term, …) vocabulary: every
+    string reachable from a term by deleting ≤ MAX_DELETES characters
+    (including the term itself at 0 deletions), distinct. 100% JVM-side —
     two explode+substring passes, no Python. ~1 + L + L(L-1)/2 rows per
-    term of length L (≈40 rows at L=8). Range-partitioned on delvar so the
-    query side's delvar IN (…) prunes files (the same layout contract as
-    term_bigrams)."""
-    t0 = spark.read.parquet(dict_path).select("term")
+    term of length L (≈40 rows at L=8)."""
+    t0 = vocab.select("term")
     # one deletion: position i ∈ [1, L] (SQL substring is 1-based)
     d1 = t0.select(
         "term",
@@ -694,34 +673,23 @@ def write_term_deletes(
             ).alias("delvar"),
         )
     )
-    all_vars = (
+    return (
         t0.select("term", F.col("term").alias("delvar"))
         .unionByName(d1.select("term", F.col("d1").alias("delvar")))
         .unionByName(d2)
         .distinct()
     )
-    (
-        all_vars.repartitionByRange(partitions, "delvar")
-        .sortWithinPartitions("delvar", "term")
-        .write.mode("overwrite")
-        .parquet(out_path)
-    )
 
 
-def write_term_bigrams(
+def write_term_deletes(
     spark: SparkSession, dict_path: str, out_path: str, partitions: int
 ) -> None:
-    """(gram, term) vocabulary-bigram table from a persisted term_dict —
-    distinct (a repeated bigram inside one term adds nothing), gram-range
-    partitioned and sorted for pruned expansion scans."""
-    from grenad_spark.functions.tokenize import char_bigrams
-
+    """Persist term_delete_rows of a written term_dict, range-partitioned on
+    delvar so the query side's delvar IN (…) prunes files."""
     (
-        spark.read.parquet(dict_path)
-        .select("term", F.explode(char_bigrams(F.col("term"))).alias("gram"))
-        .distinct()
-        .repartitionByRange(partitions, "gram")
-        .sortWithinPartitions("gram", "term")
+        term_delete_rows(spark.read.parquet(dict_path))
+        .repartitionByRange(partitions, "delvar")
+        .sortWithinPartitions("delvar", "term")
         .write.mode("overwrite")
         .parquet(out_path)
     )
@@ -782,22 +750,6 @@ class IndexHandle:
     def docs(self, spark: SparkSession) -> DataFrame:
         """(doc_id, dl) membership/norms table."""
         return self._table(spark, "docs")
-
-    def term_bigrams(self, spark: SparkSession) -> DataFrame:
-        """(gram, term) persisted typo index (fuzzy-expansion candidates via
-        gram equi-join). Indexes built before this table existed fall back to
-        deriving it from term_dict on the fly — correct, but a full-vocab
-        explode per use; rebuild or call write_term_bigrams to persist."""
-        p = os.path.join(self.path, "term_bigrams")
-        if _done(p):
-            return self._table(spark, "term_bigrams")
-        from grenad_spark.functions.tokenize import char_bigrams
-
-        return (
-            self.term_dict(spark)
-            .select("term", F.explode(char_bigrams(F.col("term"))).alias("gram"))
-            .distinct()
-        )
 
     def positions(self, spark: SparkSession) -> DataFrame:
         """(term, shard, block_id, n, first_doc, last_doc, header, positions)
@@ -894,15 +846,15 @@ class IndexHandle:
             os.path.join(self.path, "prefix_pair_dict")
         )
 
-    def term_deletes(self, spark: SparkSession) -> DataFrame | None:
-        """(delvar, term) persisted SymSpell deletion table (max_edits=2
-        expansion via delvar equi-join — no vocabulary scan). Returns None
-        for indexes built before this table existed; callers fall back to
-        the length-banded vocabulary scan (correct, a bounded slice)."""
-        p = os.path.join(self.path, "term_deletes")
-        if _done(p):
+    def term_deletes(self, spark: SparkSession) -> DataFrame:
+        """(delvar, term) SymSpell deletion table, the typo index (fuzzy
+        expansion via delvar equi-join — no vocabulary scan). Indexes built
+        before this table existed derive the same rows from term_dict on the
+        fly — correct, but a full-vocab explode per use; a resume
+        build_index persists it."""
+        if _done(os.path.join(self.path, "term_deletes")):
             return self._table(spark, "term_deletes")
-        return None
+        return term_delete_rows(self.term_dict(spark))
 
     # ---- user-facing search API (what a reference user calls after the
     # switch; thin delegates to query/search.py so the handle is the one

@@ -359,14 +359,10 @@ def compact_indexes(
         os.path.join(out_dir, "term_dict")
     )
     n_terms = spark.read.parquet(os.path.join(out_dir, "term_dict")).count()
-    from grenad_spark.index.build import write_term_bigrams, write_term_deletes
+    from grenad_spark.index.build import write_term_deletes
 
-    write_term_bigrams(
-        spark, os.path.join(out_dir, "term_dict"),
-        os.path.join(out_dir, "term_bigrams"), max(1, partitions // 8),
-    )
-    # SymSpell deletion table too — a compacted index must serve max_edits=2
-    # without the vocabulary-scan fallback, same as a fresh build
+    # the SymSpell deletion table — a compacted index serves typo expansion
+    # from the persisted table, same as a fresh build
     write_term_deletes(
         spark, os.path.join(out_dir, "term_dict"),
         os.path.join(out_dir, "term_deletes"), max(1, partitions // 8),

@@ -1241,8 +1241,8 @@ def search_topk_mixed_prefix(
     max_edits > 0 additionally applies TYPO TOLERANCE to the non-final free
     terms (Meilisearch applies typos inside mixed queries but disables them
     inside quoted phrases and serves the still-being-typed final word by
-    prefix alone — both mirrored here): each such term expands via the
-    persisted bigram/SymSpell tables, expansions scoring as disjuncts."""
+    prefix alone — both mirrored here): each such term expands via
+    expand_fuzzy_queries, expansions scoring as disjuncts."""
     parsed0 = {qid: parse_mixed_query_prefix(q) for qid, q in queries}
     parsed0 = {
         qid: pfl for qid, pfl in parsed0.items() if pfl[0] or pfl[1] or pfl[2]

@@ -40,8 +40,8 @@ pruned In(term) positions scan, broadcast (query_id, term, idf) rows, ONE
 hash exchange into a per-(query_id, shard) Arrow kernel, global top-k
 window. Shards are doc-disjoint, so every per-doc rule statistic is complete
 within its shard and the union is exact. Work is ~ the expansion terms'
-posting sizes — never ~ corpus — and the typo expansion reuses the persisted
-bigram/SymSpell tables (no vocabulary scan).
+posting sizes — never ~ corpus — and the typo expansion is
+expand_fuzzy_queries (no vocabulary scan).
 """
 
 from __future__ import annotations
@@ -393,7 +393,7 @@ def search_topk_ranked(
     """The COMPOSED Meilisearch default ranking in one entry point:
     words DESC -> typos ASC -> proximity ASC -> attribute ASC ->
     exactness DESC -> BM25 DESC -> doc_id ASC, with <=max_edits typo
-    expansion (persisted bigram/SymSpell tables, no vocabulary scan).
+    expansion (expand_fuzzy_queries, no vocabulary scan).
     Requires FIELD-AWARE positions (build_positions fields=[...]).
     Returns every rule's statistic so consumers (and the oracle) can verify
     each tier: (query_id, doc_id, words, typos, proximity, attribute,

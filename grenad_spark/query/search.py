@@ -35,7 +35,7 @@ from pyspark.sql.window import Window
 
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
 from grenad_spark.functions.varbyte import decode_block, decode_block_rows, decompress_payload, decompress_payloads
-from grenad_spark.index.build import IndexHandle
+from grenad_spark.index.build import MAX_DELETES, IndexHandle
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
 
 
@@ -192,36 +192,32 @@ def expand_fuzzy_queries(
     within `max_edits` Levenshtein distance (the feature Meilisearch builds
     on grenad's sorted-term files). Expansions score as ordinary disjuncts.
 
-    N-GRAM PREFILTER (the 10^9-vocabulary path): a term within 1 edit of a
-    query term of length ≥ 4 must share ≥ len(q)-3 ≥ 1 of its character
-    bigrams (one edit destroys at most 2 adjacent bigrams), so candidates
-    come from the PERSISTED (gram, term) typo index written at build time
-    (index.term_bigrams — Meilisearch persists its typo databases the same
-    way): the query grams are driver-known, so the scan is gram-IN-pruned
-    (parquet min/max on the gram-range-partitioned table) and levenshtein
-    runs only on gram-sharing candidates, never on the whole dictionary.
-    Query terms shorter than 4 chars (where one edit can destroy every
-    bigram) fall back to a length-banded vocabulary scan — a bounded slice,
-    and rare in real query logs.
-
-    max_edits == 2 (the SymSpell path): candidates come from the PERSISTED
-    (delvar, term) deletion-variant table (index.term_deletes, written at
-    build): if lev(q, t) ≤ 2 then some ≤2-char deletion of q equals some
-    ≤2-char deletion of t (each edit costs at most one deletion per side),
-    so the candidate set is an equi-join of the query's driver-tiny deletion
-    neighborhood against the table — delvar IN (…) pruned, NO vocabulary
-    scan — followed by an exact levenshtein filter. Indexes built before the
-    table existed fall back to the banded scan."""
-    from grenad_spark.functions.tokenize import char_bigrams
-
+    Candidates come from one of two sources, both exact:
+      - max_edits == 1 with a driver-held vocabulary (df_map) on an index
+        built with the default tokenizer: generate the 1-edit neighborhood
+        over the tokenizer alphabet and test it against the dict — zero
+        Spark jobs.
+      - otherwise the SymSpell (delvar, term) deletion table
+        (index.term_deletes — persisted at build, derived from term_dict for
+        indexes built before it): if lev(q, t) ≤ d then some ≤d-char deletion
+        of q equals some ≤d-char deletion of t (each edit costs at most one
+        deletion per side), so the candidates are an equi-join of the
+        query's driver-tiny deletion neighborhood against the table —
+        delvar IN (…) pruned, no vocabulary scan — followed by an exact
+        levenshtein filter. The table holds deletions up to MAX_DELETES, so
+        that is the largest budget served (Meilisearch's typo budget tops
+        out at 2 as well)."""
+    if max_edits > MAX_DELETES:
+        raise ValueError(
+            f"max_edits={max_edits} exceeds the deletion table depth {MAX_DELETES}"
+        )
     qt = _tokenize_queries(queries)
-    # ONE-edit expansion against a driver-held vocabulary (df_map, the
-    # vocab-gated fast path): the 1-edit neighborhood over the tokenizer
-    # alphabet IS the exact lev≤1 string set (vocab terms only contain
-    # [a-z0-9]), so generate-and-test against the dict replaces the
-    # bigram-join Spark job entirely — ~600 hash lookups per query term,
-    # zero jobs. Huge vocabularies (no df map) keep the distributed path.
-    if max_edits == 1:
+    if not qt:
+        return []
+    # the neighborhood is generated over [a-z0-9]: exact only when the
+    # vocabulary came from the default tokenizer (a custom TokenizerSettings
+    # vocabulary can hold `-`, `+`, …)
+    if max_edits == 1 and "tokenizer_tag" not in index.manifest:
         dfm = index.df_map(spark)
         if dfm is not None:
             return sorted(
@@ -232,80 +228,8 @@ def expand_fuzzy_queries(
                     if v in dfm
                 }
             )
-    if max_edits == 2:
-        deletes = index.term_deletes(spark)
-        if deletes is not None:
-            cand = _symspell_candidates(spark, deletes, qt, max_edits)
-            return sorted(
-                (r["query_id"], r["term"]) for r in cand.collect()
-            )
-    # the >=1-shared-bigram pigeonhole only holds for ONE edit (an edit kills
-    # at most 2 adjacent bigrams); with max_edits >= 2 every term takes the
-    # banded-scan path rather than silently dropping valid matches
-    gram_ok = max_edits == 1
-    long_terms = sorted({(q, t) for q, t in qt if gram_ok and len(t) >= 4})
-    # short terms at one edit: GENERATE-AND-TEST — the full 1-edit
-    # neighborhood over [a-z0-9] is ≤ ~37·(2l+1) strings (l ≤ 3), so it
-    # becomes an In(term, …) point-lookup pushed into the term_dict scan;
-    # no vocabulary scan of any kind. max_edits ≥ 2 keeps the banded scan
-    # (neighborhood size explodes quadratically; rare path, documented).
-    gen_terms = sorted({(q, t) for q, t in qt if gram_ok and len(t) < 4})
-    short_terms = sorted({(q, t) for q, t in qt if not gram_ok})
-    vocab = index.term_dict(spark).select("term")
-    pairs: set[tuple[int, str]] = set()
-    band = (F.abs(F.length("term") - F.length("qterm")) <= max_edits) & (
-        F.levenshtein("term", "qterm") <= max_edits
-    )
-    if long_terms:
-        qdf = spark.createDataFrame(long_terms, "query_id int, qterm string")
-        qgrams = qdf.select(
-            "query_id", "qterm", F.explode(char_bigrams(F.col("qterm"))).alias("gram")
-        ).distinct()
-        # driver-side gram list (bounded by Σ len(qterm)) — pushed into the
-        # bigram-table scan as In(gram, …) so only matching files/row-groups
-        # are read; MUST be a superset of qgrams' engine-side values (same
-        # substr definition, ASCII-only terms)
-        gram_list = sorted({t[i : i + 2] for _, t in long_terms for i in range(len(t) - 1)})
-        matched = (
-            index.term_bigrams(spark)
-            .filter(F.col("gram").isin(gram_list))
-            .join(F.broadcast(qgrams), "gram")
-            .select("query_id", "qterm", "term")
-            .distinct()
-            .filter(band)
-            .select("query_id", "term")
-            .distinct()
-            .collect()
-        )
-        pairs.update((r["query_id"], r["term"]) for r in matched)
-    if gen_terms:
-        cand_rows = [
-            (q, v) for q, t in gen_terms for v in _edit1_neighborhood(t)
-        ]
-        cdf = spark.createDataFrame(
-            sorted(set(cand_rows)), "query_id int, term string"
-        )
-        matched = (
-            # the explicit isin is what reaches the parquet scan as
-            # In(term, …)/InSet — the broadcast join alone would not push
-            # its keys into the scan
-            vocab.filter(F.col("term").isin(sorted({v for _, v in cand_rows})))
-            .join(F.broadcast(cdf), "term")
-            .select("query_id", "term")
-            .distinct()
-            .collect()
-        )
-        pairs.update((r["query_id"], r["term"]) for r in matched)
-    if short_terms:
-        qdf = spark.createDataFrame(short_terms, "query_id int, qterm string")
-        matched = (
-            vocab.join(F.broadcast(qdf), band)
-            .select("query_id", "term")
-            .distinct()
-            .collect()
-        )
-        pairs.update((r["query_id"], r["term"]) for r in matched)
-    return sorted(pairs)
+    cand = _symspell_candidates(spark, index.term_deletes(spark), qt, max_edits)
+    return sorted((r["query_id"], r["term"]) for r in cand.collect())
 
 
 def _deletes_upto(t: str, d: int) -> set[str]:
@@ -366,8 +290,8 @@ _EDIT_ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789"
 
 def _edit1_neighborhood(t: str) -> set[str]:
     """All nonempty strings within Levenshtein distance ≤ 1 of t over the
-    tokenizer alphabet — |t|·37 + (|t|+1)·36 + 1 strings, driver-tiny for
-    the short terms this serves."""
+    default tokenizer alphabet — |t|·37 + (|t|+1)·36 + 1 strings, driver-tiny
+    per query term."""
     out = {t}
     for i in range(len(t)):
         d = t[:i] + t[i + 1 :]
@@ -2453,7 +2377,7 @@ def search_topk_fuzzy_ranked(
     """Typo-tolerant search ranked by the Meilisearch rule pipeline:
     (covered query-term slots DESC, total typos ASC, BM25 DESC, doc_id ASC).
     (query_id, doc_id, hit_terms, typos, score). Expansion reuses the
-    persisted typo tables (bigram / SymSpell paths); slot+distance metadata
+    typo expansion (expand_fuzzy_queries); slot+distance metadata
     is driver-computed over the expansion set and rides the kernel closure
     (block rows never duplicate per slot)."""
     pairs = expand_fuzzy_queries(spark, index, queries, max_edits)
@@ -2625,8 +2549,9 @@ def typo_slot_expansion(
     (qslots, slot_meta, pairs) where qslots = qid -> ordered deduped query
     words, slot_meta = qid -> term -> [(slot, distance)], pairs = the
     (qid, term) scan list. Exact words probe the dictionary (In-pruned),
-    1-edit rides the bigram table, 2-edit the SymSpell deletion table —
-    no bucket scans the vocabulary."""
+    1- and 2-edit words expand through expand_fuzzy_queries (the driver
+    neighborhood test or the SymSpell deletion table) — no bucket scans the
+    vocabulary."""
     qslots: dict[int, list[str]] = {}
     for qid, qterm in _tokenize_queries(queries):
         qslots.setdefault(qid, []).append(qterm)
@@ -2687,10 +2612,9 @@ def search_topk_typo_settings(
     pipeline as search_topk_fuzzy_ranked (slots DESC, typos ASC, BM25 DESC,
     doc ASC). (query_id, doc_id, hit_terms, typos, score).
 
-    Expansion runs per budget bucket through the persisted tables — exact
-    terms as an In(term)-pruned dictionary probe, 1-edit via the bigram
-    table, 2-edit via the SymSpell deletion table — so no bucket ever scans
-    the vocabulary."""
+    Expansion runs per budget bucket (typo_slot_expansion) — exact terms as
+    an In(term)-pruned dictionary probe, 1- and 2-edit terms via
+    expand_fuzzy_queries — so no bucket ever scans the vocabulary."""
     settings = settings or TypoSettings()
     qslots, slot_meta, pairs = typo_slot_expansion(spark, index, queries, settings)
     if not pairs:

@@ -363,24 +363,35 @@ def test_compaction_geometry_reshard_copy_through(spark, docs_small, tmp_path):
 def test_compacted_index_serves_fuzzy2_and_resumed_build_upgrades(
     spark, docs_small, tmp_path
 ):
-    """A compacted index must carry the SymSpell deletion table (max_edits=2
-    without the vocabulary-scan fallback), and a pre-existing index missing
-    an auxiliary table must get upgraded in place by a resume build instead
-    of being short-circuited past the stage guards."""
+    """A compacted index must carry the SymSpell deletion table (the one
+    typo index — no bigram table beside it), an index missing the table
+    must derive the same rows from term_dict, and a resume build must
+    upgrade it in place instead of being short-circuited past the stage
+    guards."""
     import shutil
+
+    from grenad_spark.index.build import IndexHandle, _done
+
+    def rows(h):
+        return sorted(map(tuple, h.term_deletes(spark).select("delvar", "term").collect()))
 
     src = str(tmp_path / "fsrc")
     idx = build_index(spark, docs_small.select("doc_id", "text"), src, n_shards=2)
     compacted = compact_indexes(spark, [src], str(tmp_path / "fcomp"))
-    assert compacted.term_deletes(spark) is not None
+    for h in (idx, compacted):
+        assert _done(os.path.join(h.path, "term_deletes"))
+        assert not os.path.exists(os.path.join(h.path, "term_bigrams"))
     f2 = compacted.search_fuzzy(spark, [(1, "sprak")], k=5, max_edits=2)
     assert f2.count() > 0
+    persisted = rows(idx)
+    assert rows(compacted) == persisted
 
     # simulate an index built before the table existed
     shutil.rmtree(os.path.join(src, "term_deletes"))
-    assert idx.term_deletes(spark) is None or True  # handle may be cached
+    assert rows(IndexHandle(src)) == persisted  # derived from term_dict
     idx2 = build_index(spark, docs_small.select("doc_id", "text"), src, n_shards=2)
-    assert idx2.term_deletes(spark) is not None
+    assert _done(os.path.join(src, "term_deletes"))
+    assert rows(idx2) == persisted
 
 
 def test_streaming_incremental_with_positions(spark, docs_small, tmp_path):

@@ -3,10 +3,14 @@ shard-count invariance (salting correctness, FIXTURES.md skew_corpus intent),
 checkpoint resume, and pure-Python BM25 oracle agreement."""
 
 import math
+import os
 import re
+import shutil
 from collections import Counter
 
-from grenad_spark.index.build import build_index
+import pytest
+
+from grenad_spark.index.build import IndexHandle, _done, build_index
 from grenad_spark.query.bm25 import (
     B,
     DEFAULT_K,
@@ -205,42 +209,6 @@ def test_out_of_vocabulary_edges(spark, index_small):
     assert search_topk(spark, index_small, [(1, "spark zzzzunknown")], k=5, mode="exhaustive").count() == 5
 
 
-def test_fuzzy_expansion_uses_persisted_bigram_table(spark, index_small):
-    """The typo index is PERSISTED at build (Meilisearch-style): fuzzy
-    expansion must scan the (gram, term) table with the query grams pushed
-    into the scan — no per-batch explode of the whole term dictionary — and
-    the fallback derive (pre-bigram-table indexes) must expand identically."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from grenad_spark.index.build import _done
-    from grenad_spark.query.search import expand_fuzzy_queries
-
-    assert _done(os.path.join(index_small.path, "term_bigrams"))
-    bg = index_small.term_bigrams(spark).filter(F.col("gram").isin(["sp", "pa"]))
-    plan = bg._jdf.queryExecution().executedPlan().toString()
-    assert "term_bigrams" in plan  # file scan of the persisted table
-    assert "Generate" not in plan  # no explode anywhere in the serving scan
-    assert "PushedFilters: [In(gram" in plan, plan  # gram pruning reaches parquet
-
-    queries = [(0, "sparky"), (1, "lineitme shipmode")]
-    persisted = expand_fuzzy_queries(spark, index_small, queries)
-    # simulate a pre-bigram-table index: force the fallback derive path
-    import shutil
-    import tempfile
-
-    with tempfile.TemporaryDirectory() as td:
-        legacy = os.path.join(td, "legacy")
-        shutil.copytree(index_small.path, legacy)
-        shutil.rmtree(os.path.join(legacy, "term_bigrams"))
-        from grenad_spark.index.build import IndexHandle
-
-        h = IndexHandle(legacy)
-        fallback = expand_fuzzy_queries(spark, h, queries)
-    assert persisted == fallback and len(persisted) > 0
-
-
 def test_wand_pruned_mode_equals_exhaustive(spark, index_small):
     """End-to-end two-pass metadata-pruned serving (pass 1 metadata-only θ +
     survivor set, pass 2 payload shuffle of survivors only) must be
@@ -264,10 +232,38 @@ def test_shared_batch_pruned_equals_exhaustive(spark, index_small):
     assert sp == ex and len(ex) > 0
 
 
-def test_fuzzy_short_terms_generate_and_test(spark, index_small):
-    """Short query terms (<4 chars) at one edit expand by GENERATING the
-    full 1-edit neighborhood and point-looking it up — no vocabulary scan of
-    any kind. Must equal a brute levenshtein sweep of the dictionary."""
+def _lev(a, b):
+    dp = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        prev, dp[0] = dp[0], i
+        for j, cb in enumerate(b, 1):
+            prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1, prev + (ca != cb))
+    return dp[-1]
+
+
+@pytest.fixture(scope="module", params=["driver", "table", "pre_table"])
+def typo_index(request, spark, index_small, tmp_path_factory):
+    """index_small forced down each candidate path of expand_fuzzy_queries:
+    the driver neighborhood test (df_map held), the persisted deletion table
+    (no df_map), and a copy built before the table existed (no df_map, rows
+    derived from term_dict)."""
+    if request.param == "driver":
+        assert index_small.df_map(spark) is not None
+        return index_small
+    path = index_small.path
+    if request.param == "pre_table":
+        path = str(tmp_path_factory.mktemp("pre_table") / "index")
+        shutil.copytree(index_small.path, path)
+        shutil.rmtree(os.path.join(path, "term_deletes"))
+    h = IndexHandle(path)
+    h._df_map = None
+    assert _done(os.path.join(path, "term_deletes")) == (request.param == "table")
+    return h
+
+
+def test_fuzzy_short_terms_generate_and_test(spark, typo_index):
+    """One-edit expansion of short (<4 chars) and long query terms must equal
+    a brute levenshtein sweep of the dictionary on every candidate path."""
     from grenad_spark.query.search import _edit1_neighborhood, expand_fuzzy_queries
 
     # neighborhood basics
@@ -275,20 +271,11 @@ def test_fuzzy_short_terms_generate_and_test(spark, index_small):
     assert {"cat", "at", "ct", "ca", "bat", "cut", "car", "cats", "scat"} <= nb
     assert "" not in nb and all(len(v) <= 4 for v in nb)
 
-    vocab = [r["term"] for r in index_small.term_dict(spark).select("term").collect()]
-
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1, prev + (ca != cb))
-        return dp[-1]
-
-    for short in ("ke", "sor", "x"):
-        got = {t for _, t in expand_fuzzy_queries(spark, index_small, [(1, short)])}
-        want = {t for t in vocab if lev(short, t) <= 1}
-        assert got == want, (short, got, want)
+    vocab = [r["term"] for r in typo_index.term_dict(spark).select("term").collect()]
+    for q in ("ke", "sor", "x", "sparky", "lineitme", "shipmode"):
+        got = {t for _, t in expand_fuzzy_queries(spark, typo_index, [(1, q)])}
+        want = {t for t in vocab if _lev(q, t) <= 1}
+        assert got == want, (q, got ^ want)
 
 
 def test_search_topk_auto_matches_exhaustive(spark, index_small):
@@ -336,6 +323,58 @@ def test_resumed_build_launches_no_jobs(spark, docs_small, tmp_path):
     assert idx.manifest["n_terms"] > 0  # handle fully usable from manifest
 
 
+def test_build_empty_and_punctuation_only_docs(spark, tmp_path):
+    """Documents with no tokens (empty, punctuation-only) build: they count
+    toward N and avgdl but add no segment rows, and serving agrees with the
+    raw-docs BM25 reference."""
+    from pyspark.sql import functions as F
+
+    docs = spark.createDataFrame(
+        [
+            (1, "hello world"),
+            (2, "!!!"),
+            (3, ""),
+            (4, "hello spark hello"),
+            (5, "world, world! spark"),
+            (6, " -- "),
+        ],
+        "doc_id long, text string",
+    )
+    idx = build_index(spark, docs, str(tmp_path / "empty_docs"), n_shards=2)
+    assert idx.n_docs == 6
+    bad = idx.segments(spark).filter(F.col("term").isNull() | (F.col("min_tf") < 1))
+    assert bad.count() == 0
+    qs = [(1, "hello"), (2, "world spark"), (3, "spark")]
+    got = _norm(search_topk(spark, idx, qs, k=10, mode="wand"))
+    assert got == _norm(bm25_topk(spark, docs, qs, k=10)) and len(got) > 0
+
+
+def test_failed_build_joins_docs_write(spark, docs_small, tmp_path, monkeypatch):
+    """A segments stage that raises surfaces its own error, and the
+    background docs/stats write is joined on the way out: no pool thread
+    left running, no cached doc-length table left behind."""
+    import threading
+
+    import grenad_spark.index.build as build_mod
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("segments stage failed")
+
+    monkeypatch.setattr(build_mod, "build_segments", boom)
+    before = set(threading.enumerate())
+    jsc = spark.sparkContext._jsc.sc()
+    n_cached = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match="segments stage failed"):
+        build_index(spark, docs_small, str(tmp_path / "failed"), n_shards=2)
+    left = [
+        t.name
+        for t in threading.enumerate()
+        if t not in before and t.name.startswith("ThreadPoolExecutor")
+    ]
+    assert left == []
+    assert jsc.getPersistentRDDs().size() == n_cached
+
+
 def test_search_prefix_handle_default_is_exact(spark, index_small):
     """IndexHandle.search_prefix defaults to exhaustive expansion (None) —
     the original public contract; capping is opt-in (serving tiers pass
@@ -352,48 +391,40 @@ def test_search_prefix_handle_default_is_exact(spark, index_small):
     assert got == want and len(want) > 0
 
 
-def test_fuzzy2_symspell_equals_brute_sweep(spark, index_small):
-    """max_edits=2 expansion through the persisted deletion table must equal
-    a brute Levenshtein sweep of the dictionary (the SymSpell deletion-
-    intersection superset + exact filter is lossless)."""
+def test_fuzzy2_symspell_equals_brute_sweep(spark, typo_index):
+    """max_edits=2 expansion through the deletion table must equal a brute
+    Levenshtein sweep of the dictionary (the SymSpell deletion-intersection
+    superset + exact filter is lossless) on every candidate path; budgets
+    beyond the table depth are refused."""
     from grenad_spark.query.search import expand_fuzzy_queries
 
-    vocab = [r["term"] for r in index_small.term_dict(spark).select("term").collect()]
-
-    def lev(a, b):
-        dp = list(range(len(b) + 1))
-        for i, ca in enumerate(a, 1):
-            prev, dp[0] = dp[0], i
-            for j, cb in enumerate(b, 1):
-                prev, dp[j] = dp[j], min(dp[j] + 1, dp[j - 1] + 1, prev + (ca != cb))
-        return dp[-1]
-
-    assert index_small.term_deletes(spark) is not None  # built at stage 3c
+    vocab = [r["term"] for r in typo_index.term_dict(spark).select("term").collect()]
     for q in ("sprak", "widnow", "dupzz", "vektr", "ke", "x"):
-        got = {t for _, t in expand_fuzzy_queries(spark, index_small, [(1, q)], max_edits=2)}
-        want = {t for t in vocab if lev(q, t) <= 2}
+        got = {t for _, t in expand_fuzzy_queries(spark, typo_index, [(1, q)], max_edits=2)}
+        want = {t for t in vocab if _lev(q, t) <= 2}
         assert got == want, (q, got ^ want)
+    with pytest.raises(ValueError):
+        expand_fuzzy_queries(spark, typo_index, [(1, "sprak")], max_edits=3)
 
 
 def test_fuzzy2_plan_scans_only_deletion_table(spark, index_small):
-    """The max_edits=2 candidate plan must be a delvar-IN-pruned scan of
-    term_deletes + broadcast join — no term_dict / vocabulary scan of any
-    kind (the r3 SCALE.md known limit, closed)."""
+    """The table-path candidate plan, at one and at two edits, must be a
+    delvar-IN-pruned scan of term_deletes + broadcast join — no term_dict /
+    vocabulary scan of any kind (the r3 SCALE.md known limit, closed)."""
     from grenad_spark.query.search import _symspell_candidates
 
     deletes = index_small.term_deletes(spark)
-    cand = _symspell_candidates(spark, deletes, [(1, "sprak")], 2)
-    plan = cand._jdf.queryExecution().executedPlan().toString()
-    # pushed delvar filter reaches the parquet scan (file pruning on the
-    # delvar-range-partitioned table)
-    assert "PushedFilters" in plan and "delvar" in plan, plan
-    # only ONE parquet source in the whole plan, and it's term_deletes
-    import re as _re
-
-    scans = _re.findall(r"Location:.*", plan)
-    assert scans and all("term_deletes" in s for s in scans), scans
-    assert "term_dict" not in plan, plan
-    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
+    for max_edits in (1, 2):
+        cand = _symspell_candidates(spark, deletes, [(1, "sprak")], max_edits)
+        plan = cand._jdf.queryExecution().executedPlan().toString()
+        # pushed delvar filter reaches the parquet scan (file pruning on the
+        # delvar-range-partitioned table)
+        assert "PushedFilters" in plan and "delvar" in plan, plan
+        # only ONE parquet source in the whole plan, and it's term_deletes
+        scans = re.findall(r"Location:.*", plan)
+        assert scans and all("term_deletes" in s for s in scans), scans
+        assert "term_dict" not in plan, plan
+        assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan, plan
 
 
 def test_distinct_attr_semantics(spark, docs_small, index_small):

@@ -83,8 +83,10 @@ def test_validation_rejects():
 def test_build_under_settings(spark, docs_small, tmp_path):
     """build_index(tokenizer=...) swaps BOTH tokenize stages: the custom
     terms exist in the dictionary, dl/avgdl reflect the custom stream, and
-    the manifest carries the settings tag."""
+    the manifest carries the settings tag. Typo expansion reaches terms
+    holding settings characters outside [a-z0-9]."""
     from grenad_spark.index.build import build_index
+    from grenad_spark.query.search import expand_fuzzy_queries
 
     docs = docs_small.withColumn(
         "text", F.expr("replace(text, 'merge sort', 'merge-sort')")
@@ -96,6 +98,7 @@ def test_build_under_settings(spark, docs_small, tmp_path):
     assert "merge-sort" in terms
     assert "merge" in terms  # still occurs outside the rewritten bigram
     assert idx.manifest.get("tokenizer_tag") == TS.tag()
+    assert (1, "merge-sort") in expand_fuzzy_queries(spark, idx, [(1, "mergesort")], 1)
     # dl parity: engine docs table vs the python tokenizer
     eng = {r.doc_id: r.dl for r in idx.docs(spark).collect()}
     for r in docs.select("doc_id", "text").limit(50).collect():
