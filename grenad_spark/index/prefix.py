@@ -55,6 +55,7 @@ from grenad_spark.index.build import (
     tokens_with_dl,
 )
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
+from grenad_spark.query.search import _isin, _sql_lit
 
 DEFAULT_MAX_LEN = 2
 DEFAULT_MIN_TERMS = 2
@@ -244,7 +245,7 @@ def prefix_doc_rows(
         prefs = sorted({p for _, p in pairs})
         have = {
             r["prefix"]
-            for r in pdict.filter(F.col("prefix").isin(prefs)).select("prefix").collect()
+            for r in pdict.filter(_isin("prefix", prefs)).select("prefix").collect()
         }
     mat = [(q, p) for q, p in pairs if p in have]
     miss = [(q, p) for q, p in pairs if p not in have]
@@ -253,7 +254,7 @@ def prefix_doc_rows(
         qdf = spark.createDataFrame(mat, "query_id int, prefix string")
         blocks = (
             index.prefix_segments(spark)
-            .filter(F.col("term").isin(sorted({p for _, p in mat})))
+            .filter(_isin("term", sorted({p for _, p in mat})))
             .join(F.broadcast(qdf), F.col("term") == F.col("prefix"))
             .select(
                 "query_id", "prefix", F.col("term").alias("key"), "shard",
@@ -266,10 +267,11 @@ def prefix_doc_rows(
         # coarse OR-of-startswith pushes to parquet as StringStartsWith and
         # prunes the range-partitioned-by-term files; the broadcast join
         # alone would leave both scans full (only IsNotNull pushed)
-        coarse = None
-        for p in sorted({p for _, p in miss}):
-            c = F.col("term").startswith(p)
-            coarse = c if coarse is None else (coarse | c)
+        coarse = F.expr(
+            " OR ".join(
+                f"startswith(term, {_sql_lit(p)})" for p in sorted({p for _, p in miss})
+            )
+        )
         td = index.term_dict(spark).select("term").filter(coarse)
         expand = td.join(
             F.broadcast(qdf), F.expr("startswith(term, prefix)")

@@ -34,7 +34,16 @@ from pyspark.sql.window import Window
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
 from grenad_spark.index.positions import POS_BITS, decode_position_blocks
 from grenad_spark.query.bm25 import SCORE_DECIMALS
-from grenad_spark.query.search import _grouped_apply, _driver_idf, _qshard_col, _tfpart
+from grenad_spark.query.search import (
+    _batch_groups,
+    _driver_idf,
+    _grouped_apply,
+    _isin,
+    _packed_in,
+    _prefix_ranges,
+    _qshard_col,
+    _tfpart,
+)
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
 
@@ -58,7 +67,7 @@ def _positions_blocks(spark, index, n_docs, pairs, use_dfm: bool):
     gated df map and rides inside the pairs; False takes the 10^9-term
     fallback (broadcast join against term_dict, idf as a column expr)."""
     terms = sorted({t for _, t, _ in pairs})
-    pos_tbl = index.positions(spark).filter(F.col("term").isin(terms))
+    pos_tbl = index.positions(spark).filter(_isin("term", terms))
     if use_dfm:
         if pairs:
             # literal-map attach (no broadcast join) — see search.py
@@ -71,7 +80,7 @@ def _positions_blocks(spark, index, n_docs, pairs, use_dfm: bool):
     qt = spark.createDataFrame(
         [(q, t) for q, t, _ in pairs], "query_id int, term string"
     )
-    td = index.term_dict(spark).filter(F.col("term").isin(terms)).select("term", "df")
+    td = index.term_dict(spark).filter(_isin("term", terms)).select("term", "df")
     return (
         pos_tbl.join(F.broadcast(td), "term")
         .join(F.broadcast(qt), "term")
@@ -179,9 +188,10 @@ def phrase_match_pairs(
     blocks = _positions_blocks(spark, index, n_docs, qt, dfm is not None)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_phrase_kernel(phrases, float(index.avgdl), index.payload_codec),
         _OUT_SCHEMA,
+        _batch_groups(spark, index, qt)[1],
     ))
     return per_shard.select("query_id", "doc_id")
 
@@ -279,31 +289,22 @@ def search_topk_phrase(
         if surv is not None:
             if not surv:
                 return spark.createDataFrame([], _OUT_SCHEMA)
-            if attach_noop:
-                pass  # every candidate group survives — serve unpruned
-            elif len(surv) <= 4096:
-                # small survivor set → push it back as ONE SQL IN literal
-                # (packed key → hashed InSet, O(1)/row; a literal MAP here
-                # measured 4× slower — map literals re-evaluate per row, and
-                # Column.isin(list) pays one py4j round trip per element).
-                # The shard-only IN conjunct is added when it shrinks the
-                # shard set: that one reaches the parquet scan as a pushed
-                # filter and skips files/row groups on localized corpora.
-                keys = sorted(q * (1 << 20) + s for q, s in surv)
-                blocks = blocks.filter(
-                    F.expr(
-                        "CAST(query_id AS BIGINT) * 1048576 + shard IN "
-                        f"({','.join(map(str, keys))})"
-                    )
+            # attach_noop: every candidate group survives — serve unpruned
+            if not attach_noop:
+                # survivor (query, shard) pairs come back as ONE packed-key
+                # SQL IN literal (hashed InSet, O(1)/row; a literal MAP here
+                # measured 4× slower — map literals re-evaluate per row), or
+                # as a broadcast of the same pairs above the literal cap or
+                # outside the key's bit ranges (_packed_in). The shard-only
+                # IN conjunct is added when it shrinks the shard set: that
+                # one reaches the parquet scan as a pushed filter and skips
+                # files/row groups on localized corpora.
+                blocks = _packed_in(
+                    spark, blocks, surv, ["query_id", "shard"], [31, 20], 4096
                 )
                 all_shards = sorted({s for _, s in surv})
                 if len(all_shards) < int(index.n_shards):
-                    blocks = blocks.filter(
-                        F.expr(f"shard IN ({','.join(map(str, all_shards))})")
-                    )
-            else:
-                sdf = spark.createDataFrame(surv, "query_id int, shard int")
-                blocks = blocks.join(F.broadcast(sdf), ["query_id", "shard"])
+                    blocks = blocks.filter(_isin("shard", all_shards))
         else:
             nt = spark.createDataFrame(
                 [(q, len(ts)) for q, ts in sorted(terms_by_q.items())],
@@ -320,8 +321,9 @@ def search_topk_phrase(
             blocks = blocks.join(F.broadcast(survivors), ["query_id", "shard"])
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -406,9 +408,10 @@ def search_topk_phrase_stopwords(
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
         _OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -730,8 +733,9 @@ def search_topk_proximity(
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_proximity_kernel(phrases, avgdl, codec), _PROX_OUT_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_proximity_kernel(phrases, avgdl, codec), _PROX_OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(
         F.asc("proximity"), F.desc("score"), F.asc("doc_id")
@@ -873,7 +877,7 @@ def search_topk_phrase_fresh(
     for i, h in enumerate(handles):
         s = (
             h.positions(spark)
-            .filter(F.col("term").isin(terms))
+            .filter(_isin("term", terms))
             .select("term", "n", "header", "positions")
             .withColumn("gen", F.lit(i))
         )
@@ -1069,8 +1073,9 @@ def _mixed_per_shard(
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     return blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
 
 
@@ -1200,18 +1205,14 @@ def _prefix_term_dfs(
     range-partitioned dictionary prunes partitions). The collect is bounded
     by the expansion count (capped per prefix by max_expansions, top-df
     first, like Meilisearch's precomputed prefix databases)."""
-    from grenad_spark.operators.seek import advance_str
-
     if not prefixes:
         return {}
-    cond = None
-    for p in prefixes:
-        succ = advance_str(p)
-        c = (F.col("term") >= p) & (F.col("term") < succ) if succ else (
-            F.col("term") >= p
-        )
-        cond = c if cond is None else cond | c
-    rows = index.term_dict(spark).filter(cond).select("term", "df").collect()
+    rows = (
+        index.term_dict(spark)
+        .filter(_prefix_ranges(prefixes))
+        .select("term", "df")
+        .collect()
+    )
     out: dict[str, dict[str, int]] = {p: {} for p in prefixes}
     for r in rows:
         for p in prefixes:
@@ -1289,8 +1290,9 @@ def search_topk_mixed_prefix(
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -1445,13 +1447,13 @@ SELECT query_id, doc_id, score FROM (
 def _make_phrase_shared_kernel(
     phrases: dict[int, list[str]], idfs: dict[str, float], avgdl: float, codec: str
 ):
-    """applyInPandas over one COALESCED shard group's position blocks for
-    the UNION of all phrase terms (no query column anywhere before the
-    exchange — queries and idfs ride in via this closure). The group may
-    hold several shards (qshard = shard % n_qshards): doc ranges ascend
-    with shard id and are disjoint, so sorting a term's blocks by first_doc
-    yields a globally doc-sorted stream across the whole group — one decode
-    and one intersection chain per term/query, no per-shard split."""
+    """Kernel over one partition of position blocks for the UNION of all
+    phrase terms (no query column anywhere before the exchange — queries
+    and idfs ride in via this closure). The partition may hold several
+    shards: doc ranges are disjoint across shards, so sorting a term's
+    blocks by first_doc yields a globally doc-sorted stream across the
+    whole partition — one decode and one intersection chain per
+    term/query, no per-shard split."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         decoded: dict[str, tuple] = {}
@@ -1532,19 +1534,19 @@ def search_topk_phrase_shared(
         return spark.createDataFrame([], _OUT_SCHEMA)
     terms = sorted({t for toks in phrases.values() for t in toks})
     idfs = {t: _driver_idf(n_docs, dfm[t]) for t in terms}
-    blocks = index.positions(spark).filter(F.col("term").isin(terms)).select(
-        "shard", "term", "n", "first_doc", "header", "positions"
+    # work-sized groups of consecutive doc-disjoint shards, like the shared
+    # posting path; the kernel sorts each term's blocks by first_doc, so
+    # any union of them (a whole partition) is exact
+    g, n_part = _batch_groups(
+        spark, index, [(q, t) for q, toks in phrases.items() for t in set(toks)]
     )
-    n_shards = int(index.n_shards)
-    # coalesce shards into ~core-count groups, like the shared posting path:
-    # shards are doc-disjoint so any shard grouping is exact
-    qshards = max(1, min(n_shards, spark.sparkContext.defaultParallelism))
-    per_shard = (
-        blocks.withColumn("qshard", F.col("shard") % qshards)
-        .groupBy("qshard")
-        .applyInPandas(
-            _make_phrase_shared_kernel(phrases, idfs, avgdl, codec), _OUT_SCHEMA
-        )
+    blocks = index.positions(spark).filter(_isin("term", terms)).select(
+        (F.col("shard") / g).cast("int").alias("qshard"),
+        "term", "n", "first_doc", "header", "positions",
+    )
+    per_shard = _grouped_apply(
+        blocks, ["qshard"], _make_phrase_shared_kernel(phrases, idfs, avgdl, codec),
+        _OUT_SCHEMA, n_part, slice_groups=False,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

@@ -57,6 +57,7 @@ from grenad_spark.index.positions import FIELD_BITS, FIELD_STRIDE, decode_positi
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
 from grenad_spark.query.phrase import _PROX_INF, _pair_min_dist, _positions_blocks
 from grenad_spark.query.search import (
+    _batch_groups,
     _driver_idf,
     _grouped_apply,
     _levenshtein,
@@ -199,9 +200,10 @@ def search_topk_attr_rule(
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_attr_kernel(qterms, float(index.avgdl), index.payload_codec),
         _ATTR_OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(
         F.asc("attr"), F.desc("score"), F.asc("doc_id")
@@ -376,9 +378,10 @@ def _ranked_stats(
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec),
         _RANKED_OUT_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     return per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
 

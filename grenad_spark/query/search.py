@@ -29,7 +29,7 @@ import math
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
@@ -127,8 +127,6 @@ def expand_prefix_queries(
     """
     import re
 
-    from grenad_spark.operators.seek import advance_str
-
     exact: list[tuple[int, str]] = []
     prefixes: list[tuple[int, str]] = []
     for qid, q in queries:
@@ -143,11 +141,7 @@ def expand_prefix_queries(
                     exact.append((qid, t))
     pairs = set(exact)
     if prefixes:
-        cond = None
-        for _, p in set(prefixes):
-            succ = advance_str(p)
-            c = (F.col("term") >= p) & (F.col("term") < succ) if succ else (F.col("term") >= p)
-            cond = c if cond is None else (cond | c)
+        cond = _prefix_ranges(p for _, p in prefixes)
         matched_df = index.term_dict(spark).filter(cond).select("term", "df")
         if max_expansions is not None:
             # per-prefix top-df cap. A term joins EVERY prefix it matches
@@ -275,7 +269,7 @@ def _symspell_candidates(
         F.levenshtein("term", "qterm") <= max_edits
     )
     return (
-        deletes.filter(F.col("delvar").isin(vset))
+        deletes.filter(_isin("delvar", vset))
         .join(F.broadcast(qdf), "delvar")
         .select("query_id", "qterm", "term")
         .distinct()
@@ -339,8 +333,9 @@ def conjunctive_matches(
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     return (
         per_shard.join(F.broadcast(nt), "query_id")
@@ -386,8 +381,9 @@ def search_topk_words(
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("hit_terms"), F.desc("score"), F.asc("doc_id")
@@ -527,6 +523,114 @@ def _query_blocks(
     return _query_blocks_from_pairs(spark, index, _tokenize_queries(queries))
 
 
+def _sql_lit(v) -> str:
+    """Spark SQL text of a driver value: str, int, float, list (→ array)
+    or dict (→ map). Driver literals are built as ONE SQL string and parsed
+    by ONE F.expr call: the per-element Column API (F.lit / F.create_map /
+    F.array / Column.isin(list)) pays one py4j round trip per element —
+    thousands per 64-query batch plan. Catalyst folds the parsed
+    expression to the same literals, so optimized plans do not change.
+
+    Strings are user input. Alphanumeric ones are quoted as they are;
+    anything else becomes CAST(X'<utf-8 hex>' AS STRING), which no quote
+    or backslash can break out of, which does not depend on
+    spark.sql.parser.escapedStringLiterals, and which ${...} variable
+    substitution cannot match."""
+    if isinstance(v, str):
+        hexed = v.encode("utf-8", "surrogateescape").hex()
+        return f"'{v}'" if v.isalnum() else f"CAST(X'{hexed}' AS STRING)"
+    if isinstance(v, float):
+        return f"{v!r}D"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, list):
+        return f"array({', '.join(map(_sql_lit, v))})"
+    if isinstance(v, dict):
+        return f"map({', '.join(f'{_sql_lit(k)}, {_sql_lit(x)}' for k, x in v.items())})"
+    raise TypeError(f"no SQL literal for {type(v).__name__}")
+
+
+def _isin(col: str, values) -> Column:
+    """`col IN (values)` as one F.expr call (see _sql_lit). An empty list
+    matches nothing, like Column.isin([])."""
+    values = list(values)
+    if not values:
+        return F.expr("false")
+    return F.expr(f"{col} IN ({', '.join(map(_sql_lit, values))})")
+
+
+def _packed_in(
+    spark: SparkSession,
+    df: DataFrame,
+    rows: list[tuple[int, ...]],
+    cols: list[str],
+    bits: list[int],
+    cap: int,
+) -> DataFrame:
+    """Restrict df to the collected key tuples `rows` over `cols`.
+
+    Small sets pack each tuple into one BIGINT — component i in bits[i]
+    bits, the last lowest — and come back as ONE SQL IN literal (hashed
+    InSet, no broadcast build, no join). The literal is analysis-bound: a
+    33k-element IN built 33k literal tree nodes before the InSet conversion
+    and doubled a batch (measured), so above `cap` distinct keys, or when a
+    component falls outside its bit range (keys would alias), the join side
+    is a broadcast DataFrame built from the SAME collected rows: the pass
+    that produced them never runs twice."""
+    rows = sorted({tuple(int(v) for v in r) for r in rows})
+    in_range = all(0 <= v < (1 << b) for r in rows for v, b in zip(r, bits))
+    if in_range and len(rows) <= cap:
+        keys = []  # ascending: tuple order is packed-key order in range
+        for r in rows:
+            key = 0
+            for v, b in zip(r, bits):
+                key = (key << b) | v
+            keys.append(key)
+        shift = sum(bits)
+        parts = []
+        for c, b in zip(cols, bits):
+            shift -= b
+            parts.append(f"shiftleft(CAST({c} AS BIGINT), {shift})" if shift else c)
+        return df.filter(F.expr(f"{' + '.join(parts)} IN ({','.join(map(str, keys))})"))
+    kdf = spark.createDataFrame(rows, ", ".join(f"{c} int" for c in cols))
+    return df.join(F.broadcast(kdf), cols)
+
+
+def _est_blocks(spark: SparkSession, index: IndexHandle, terms: list[str]) -> int | None:
+    """Upper bound on the block rows of `terms` (one entry per occurrence),
+    None without the driver df map. Blocks are chunked per (term, shard),
+    so a term of df postings spread over S shards holds at most
+    ceil(df / block_size) + S − 1 blocks, and never more than df. S comes
+    from the term → shard-set map when the handle already holds it (no job
+    is started for it here), else min(n_shards, df)."""
+    dfm = index.df_map(spark)
+    if dfm is None:
+        return None
+    bs = int(index.manifest.get("block_size") or 128)
+    tsm = index.__dict__.get("_term_shards")
+    n_shards = max(1, int(index.n_shards))
+    total = 0
+    for t in terms:
+        df = dfm.get(t, 0)
+        if df:
+            n_s = len(tsm.get(t, ())) if tsm is not None else min(n_shards, df)
+            total += min(df, -(-df // bs) + max(1, n_s) - 1)
+    return total
+
+
+def _prefix_ranges(prefixes) -> Column:
+    """term ∈ ⋃ [p, successor(p)) over `prefixes` — the PrefixIter key
+    ranges, pushed to the parquet scan — as one F.expr call."""
+    from grenad_spark.operators.seek import advance_str
+
+    conds = []
+    for p in sorted(set(prefixes)):
+        succ = advance_str(p)
+        lo = f"term >= {_sql_lit(p)}"
+        conds.append(f"({lo} AND term < {_sql_lit(succ)})" if succ else f"({lo})")
+    return F.expr(" OR ".join(conds))
+
+
 def _attach_query_terms(seg: DataFrame, rows: list[tuple[int, str, float]]) -> DataFrame:
     """Fan block rows out per query and attach idf WITHOUT a join.
 
@@ -535,26 +639,17 @@ def _attach_query_terms(seg: DataFrame, rows: list[tuple[int, str, float]]) -> D
     as a map lookup + explode. Equivalent to the inner broadcast join on
     term (NULL lookups are dropped by explode), but stays inside one
     whole-stage-codegen stage: no broadcast exchange, no relation build,
-    no extra job. Literal size is bounded by the batch's distinct query
-    terms (tens of entries), so the plan stays small."""
+    no extra job. Each map is one SQL string parsed by one F.expr call
+    (_sql_lit), so planning cost does not grow with the batch; literal
+    size is bounded by the batch's distinct query terms."""
     qids: dict[str, list[int]] = {}
     idfs: dict[str, float] = {}
     for q, t, i in rows:
         qids.setdefault(t, []).append(int(q))
         idfs[t] = float(i)
-    qid_map = F.create_map(
-        *[
-            x
-            for t, qs in qids.items()
-            for x in (F.lit(t), F.array(*[F.lit(q) for q in qs]))
-        ]
-    )
-    idf_map = F.create_map(
-        *[x for t, i in idfs.items() for x in (F.lit(t), F.lit(i))]
-    )
-    return seg.withColumn("query_id", F.explode(qid_map[F.col("term")])).withColumn(
-        "idf", idf_map[F.col("term")]
-    )
+    return seg.withColumn(
+        "query_id", F.expr(f"explode({_sql_lit(qids)}[term])")
+    ).withColumn("idf", F.expr(f"{_sql_lit(idfs)}[term]"))
 
 
 def _query_blocks_from_pairs(
@@ -572,7 +667,7 @@ def _query_blocks_from_pairs(
     (the metadata prune pass reads everything BUT the payload — parquet
     column pruning keeps payload bytes on disk)."""
     terms = sorted({t for _, t in qt})
-    seg = index.segments(spark).filter(F.col("term").isin(terms))
+    seg = index.segments(spark).filter(_isin("term", terms))
     if columns is not None:
         seg = seg.select(*columns)
     n_docs = float(index.n_docs)
@@ -597,7 +692,7 @@ def _query_blocks_from_pairs(
         blocks = seg.join(F.broadcast(qterms), "term")
         return blocks, qterms
     qterms = spark.createDataFrame(qt, "query_id int, term string")
-    td = index.term_dict(spark).filter(F.col("term").isin(terms)).select("term", "df")
+    td = index.term_dict(spark).filter(_isin("term", terms)).select("term", "df")
     blocks = (
         seg.join(F.broadcast(td), "term")
         .join(F.broadcast(qterms), "term")
@@ -670,16 +765,16 @@ def _overlap_mask(t: dict, sur_starts: np.ndarray, sur_ends: np.ndarray) -> np.n
 
 
 def _est_postings(
-    spark: SparkSession, index: IndexHandle, pairs: list[tuple[int, str]]
+    spark: SparkSession, index: IndexHandle, pairs: list[tuple]
 ) -> int | None:
-    """Σ df over the batch's (query, term) pairs from the driver df map —
+    """Σ df over the batch's (query, term, ...) pairs from the driver df map —
     the posting volume the scoring exchange will carry (each pair ships its
     term's blocks once per referencing query). None on huge vocabularies
     (no df map) — callers then fall back to core-count-sized groups."""
     dfm = index.df_map(spark)
     if dfm is None:
         return None
-    return sum(dfm.get(t, 0) for _, t in pairs)
+    return sum(dfm.get(p[1], 0) for p in pairs)
 
 
 def _group_params(
@@ -697,15 +792,26 @@ def _group_params(
     still one valid posting-list slice), widens WAND's pruning scope, and
     cuts per-group Python overhead by g×. n_groups right-sizes the explicit
     shuffle INTO the groups: the serving job's data is query-terms-only block
-    rows (KBs-MBs), so the default shuffle.partitions-wide exchange is pure
-    task-scheduling overhead. HashPartitioning(query_id, qshard) satisfies
-    applyInPandas's clustering requirement, so Catalyst inserts NO second
-    exchange."""
+    rows (KBs-MBs), so a session-wide exchange (32 partitions on 4 cores)
+    is pure task-scheduling overhead."""
     g, n_qshards = _qshard_params(spark, index, est_postings)
     n_groups = max(1, min(
         max(1, spark.sparkContext.defaultParallelism), n_queries * n_qshards
     ))
     return g, n_groups, n_qshards
+
+
+def _batch_groups(spark: SparkSession, index: IndexHandle, pairs: list[tuple]) -> tuple[int, int]:
+    """(g, n_part) for a kernel exchange over the block rows of `pairs`
+    ((query_id, term, ...) tuples): the coalescing factor and partition
+    count of _group_params under the batch's posting volume. The one
+    sizing rule of every serving kernel; n_part == 1 means the narrow
+    coalesce(1) in _grouped_apply, so a batch that fits one work-sized
+    group plans no exchange at all."""
+    g, n_groups, n_qshards = _group_params(
+        spark, index, len({p[0] for p in pairs}), _est_postings(spark, index, pairs)
+    )
+    return g, min(n_groups, n_qshards)
 
 
 def _rank_topk(per_shard: DataFrame, n_queries: int, kk: int) -> DataFrame:
@@ -758,10 +864,16 @@ def _grouped_apply(
     keys: list[str],
     fn,
     out_schema: str,
-    n_part: int | None = None,
+    n_part: int,
     slice_groups: bool = True,
 ) -> DataFrame:
     """groupBy(*keys).applyInPandas(fn, out_schema), built on mapInPandas.
+
+    n_part is required and comes from _batch_groups (_group_params under
+    the batch's posting volume): the exchange is sized by the data it
+    carries, never by the session's shuffle width. A session-wide default
+    here scheduled 32 Python tasks on 4 cores for an 8-query ranked batch
+    of ~60 block rows, and the task launches cost several times the kernel.
 
     Spark's grouped-map Arrow protocol costs ~125 ms/job more than the plain
     map protocol on identical data (measured on a one-partition single-query
@@ -786,8 +898,6 @@ def _grouped_apply(
     inputs here are query-term block rows whose volume per partition is
     bounded by (batch posting volume) / n_part — the same sizing rule
     (_qshard_params) that bounded per-group memory before."""
-    if n_part is None:
-        n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     part = df.coalesce(1) if n_part == 1 else df.repartition(n_part, *keys)
 
     def mfn(batches):
@@ -848,16 +958,13 @@ def _search_from_pairs(
         raise ValueError(f"unknown mode {mode!r}")
 
     n_queries = len({q for q, _ in pairs})
-    g, n_groups, n_qshards = _group_params(
-        spark, index, n_queries, _est_postings(spark, index, pairs)
-    )
+    g, n_part = _batch_groups(spark, index, pairs)
     sel = blocks.select(
         "query_id",
         (F.col("shard") / g).cast("int").alias("qshard"),
         "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
     )
-    n_part = min(n_groups, n_qshards)
     # _grouped_apply: map-protocol kernel dispatch (~125 ms/job cheaper than
     # grouped applyInPandas); at n_part == 1 the narrow coalesce keeps the
     # whole query in ONE stage — no exchange at all
@@ -915,72 +1022,31 @@ def _search_pruned(
     avgdl = float(index.avgdl)
     codec = index.payload_codec
     n_queries = len({q for q, _ in pairs})
-    g, n_groups, n_qshards = _group_params(
-        spark, index, n_queries, _est_postings(spark, index, pairs)
-    )
+    g, n_part = _batch_groups(spark, index, pairs)
 
     # survivor attach: a SUPERSET of the pass-1 survivors is always exact —
     # the scoring kernel re-derives its own θ and extra blocks only add
-    # correctly-scored candidates — so a small survivor set collects to the
-    # driver and comes back as ONE packed-key SQL IN literal (hashed InSet,
-    # no broadcast build/ship, no join). The packed key drops the term
-    # (query_id·2⁴⁰ + shard·2²⁰ + block_id): a colliding block of another
-    # query term ships too, which is exactly the harmless-superset case.
-    # Oversized survivor sets (or out-of-range components) keep the
-    # broadcast hash join — AQE alone would cost stage barriers
-    # (~0.5 s/batch measured). When a corpus/query mix prunes nothing,
-    # callers should serve with mode='wand' instead — or search_topk_auto.
+    # correctly-scored candidates. When the block bound says the survivors
+    # fit the IN literal, pass 1 runs ONCE as a collect and comes back as a
+    # packed-key IN (_packed_in); the packed key drops the term
+    # (query_id·2⁴⁰ + shard·2²⁰ + block_id), so a colliding block of another
+    # query term ships too — the harmless-superset case. Otherwise the lazy
+    # broadcast join keeps pass 1 inside the broadcast build (one run, zero
+    # extra jobs) — AQE alone would cost stage barriers (~0.5 s/batch
+    # measured). When a corpus/query mix prunes nothing, callers should
+    # serve with mode='wand' instead — or search_topk_auto.
     if survivors is None:
         survivors = survivor_blocks(spark, index, pairs, kk)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    # pass 1 materializes exactly ONCE (eager localCheckpoint — the
-    # search_topk_auto pattern); the attach then adapts: a SMALL survivor
-    # set collects and comes back as one packed-key SQL IN literal (hashed
-    # InSet, no broadcast build/ship, no join; supersets are exact — the
-    # kernel re-derives θ), larger sets broadcast the checkpointed rows
-    # (no recompute). The literal cap is ANALYSIS-bound: a 33k-element IN
-    # built 33k literal tree nodes before the InSet conversion and doubled
-    # the batch (measured) — small sets only.
-    pruned = None
-    bs = int(index.manifest.get("block_size") or 128)
-    dfm = index.df_map(spark)
-    est_blocks = (
-        sum(-(-dfm[t] // bs) for q, t in set(pairs) if t in dfm)
-        if dfm is not None
-        else None
-    )
-    if (
-        est_blocks is not None
-        and est_blocks <= 2048
-        and int(index.n_shards) < (1 << 20)
-    ):
-        # the upper bound on survivors is already literal-sized, so pass 1
-        # materializes via ONE collect and comes back as the packed-key IN
+    est_blocks = _est_blocks(spark, index, [t for _, t in set(pairs)])
+    if est_blocks is not None and est_blocks <= 2048:
         srows = survivors.select("query_id", "shard", "block_id").collect()
         if not srows:
             return spark.createDataFrame([], _OUT_SCHEMA)
-        if all(
-            0 <= r["query_id"] < (1 << 23) and 0 <= r["block_id"] < (1 << 20)
-            for r in srows
-        ):
-            keys = sorted(
-                {
-                    (int(r["query_id"]) << 40)
-                    | (int(r["shard"]) << 20)
-                    | int(r["block_id"])
-                    for r in srows
-                }
-            )
-            pruned = blocks.filter(
-                F.expr(
-                    "shiftleft(CAST(query_id AS BIGINT), 40) + "
-                    "shiftleft(CAST(shard AS BIGINT), 20) + block_id IN "
-                    f"({','.join(map(str, keys))})"
-                )
-            )
-    if pruned is None:
-        # big/unknown survivor sets: the original lazy broadcast — pass 1
-        # runs once inside the broadcast build, zero extra jobs
+        pruned = _packed_in(
+            spark, blocks, srows, ["query_id", "shard", "block_id"], [23, 20, 20], 2048
+        )
+    else:
         pruned = blocks.join(
             F.broadcast(survivors), ["query_id", "term", "shard", "block_id"]
         )
@@ -994,7 +1060,7 @@ def _search_pruned(
         ["qshard"],
         _make_per_query(_make_wand_batched(avgdl, kk, codec)),
         _OUT_SCHEMA,
-        min(n_groups, n_qshards),
+        n_part,
         slice_groups=False,
     )
     return _rank_topk(per_shard, n_queries, kk)
@@ -1029,10 +1095,7 @@ def survivor_blocks(
     metadata only. Requires the driver df map for the sparse split; falls
     back to pure metadata without it."""
     avgdl = float(index.avgdl)
-    n_queries = len({q for q, _ in pairs})
-    g, n_groups, n_qshards = _group_params(
-        spark, index, n_queries, _est_postings(spark, index, pairs)
-    )
+    g, n_part = _batch_groups(spark, index, pairs)
     dfm = index.df_map(spark)
     if dfm is not None:
         # DISTINCT-BLOCK pass 1: resolve the query structure driver-side
@@ -1056,12 +1119,12 @@ def survivor_blocks(
         meta = None
         if dense_terms:
             meta = (
-                seg.filter(F.col("term").isin(dense_terms))
+                seg.filter(_isin("term", dense_terms))
                 .select(*_META_COLS)
                 .withColumn("payload", F.lit(None).cast("binary"))
             )
         if sparse_terms:
-            ms = seg.filter(F.col("term").isin(sparse_terms)).select(
+            ms = seg.filter(_isin("term", sparse_terms)).select(
                 *_META_COLS, "payload"
             )
             meta = ms if meta is None else meta.unionByName(ms)
@@ -1076,7 +1139,7 @@ def survivor_blocks(
                 terms_by_q, idfs, avgdl, int(k), index.payload_codec
             ),
             _SURVIVOR_SCHEMA,
-            min(n_groups, n_qshards),
+            n_part,
             slice_groups=False,
         )
     sparse = {
@@ -1110,7 +1173,7 @@ def survivor_blocks(
         ["qshard"],
         _make_meta_prune(avgdl, int(k), index.payload_codec),
         _SURVIVOR_SCHEMA,
-        min(n_groups, n_qshards),
+        n_part,
         slice_groups=False,
     )
 
@@ -1141,7 +1204,7 @@ def search_topk_auto(
     nb = {
         r["term"]: int(r["n_blocks"])
         for r in index.term_dict(spark)
-        .filter(F.col("term").isin(terms))
+        .filter(_isin("term", terms))
         .select("term", "n_blocks")
         .collect()
     }
@@ -1666,7 +1729,7 @@ def search_topk_fresh(
     for i, h in enumerate(handles):
         s = (
             h.segments(spark)
-            .filter(F.col("term").isin(terms))
+            .filter(_isin("term", terms))
             .select("term", "shard", "block_id", "n", "payload")
             .withColumn("gen", F.lit(i))
         )
@@ -1757,36 +1820,23 @@ def search_topk_shared(
     if not terms:
         return spark.createDataFrame([], _OUT_SCHEMA)
 
-    g, n_qshards = _qshard_params(spark, index, _est_postings(spark, index, pairs))
+    g, n_part = _batch_groups(spark, index, pairs)
 
-    seg = index.segments(spark).filter(F.col("term").isin(terms))
+    seg = index.segments(spark).filter(_isin("term", terms))
     if prune and "min_tf" in seg.columns:
-        # pass 1 runs exactly ONCE (the collect); the attach is rebuilt
-        # from the collected rows either way. A SUPERSET of the survivors
-        # is exact here (every shipped block is scored exhaustively for all
-        # queries sharing its term), so the literal key can drop both
-        # query_id and term — (shard, block_id) collisions just ship the
-        # harmless extra block once.
+        # a SUPERSET of the survivors is exact here (every shipped block is
+        # scored exhaustively for all queries sharing its term), so the
+        # packed key can drop both query_id and term — (shard, block_id)
+        # collisions just ship the harmless extra block once. Pass 1 runs
+        # exactly ONCE either way: the collect, or the lazy broadcast build.
         surv_df = survivor_blocks(spark, index, pairs, kk)
-        bs = int(index.manifest.get("block_size") or 128)
-        est_blocks = sum(-(-dfm[t] // bs) for t in terms if t in dfm)
-        attached = False
-        if int(index.n_shards) < (1 << 20) and est_blocks <= 2048:
+        est_blocks = _est_blocks(spark, index, terms)
+        if est_blocks <= 2048:
             srows = surv_df.select("shard", "block_id").collect()
             if not srows:
                 return spark.createDataFrame([], _OUT_SCHEMA)
-            if all(0 <= r["block_id"] < (1 << 20) for r in srows):
-                keys = sorted(
-                    {(int(r["shard"]) << 20) | int(r["block_id"]) for r in srows}
-                )
-                seg = seg.filter(
-                    F.expr(
-                        "shiftleft(CAST(shard AS BIGINT), 20) + block_id IN "
-                        f"({','.join(map(str, keys))})"
-                    )
-                )
-                attached = True
-        if not attached:
+            seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20], 2048)
+        else:
             surv = F.broadcast(
                 surv_df.select("term", "shard", "block_id").distinct()
             )
@@ -1844,7 +1894,7 @@ def search_topk_shared(
     # single work-sized group: narrow coalesce, no exchange — same trick as
     # _search_from_pairs; map-protocol dispatch via _grouped_apply
     per_shard = _grouped_apply(
-        blocks, ["qshard"], fn, _OUT_SCHEMA, n_qshards, slice_groups=False
+        blocks, ["qshard"], fn, _OUT_SCHEMA, n_part, slice_groups=False
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -2403,8 +2453,9 @@ def search_topk_fuzzy_ranked(
     codec = index.payload_codec
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "payload"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_typo_ranked_kernel(slot_meta, avgdl, codec), _OUT_TYPO_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_typo_ranked_kernel(slot_meta, avgdl, codec), _OUT_TYPO_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
@@ -2444,9 +2495,10 @@ def search_topk_page(
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     cw = Window.partitionBy("query_id")
@@ -2567,7 +2619,7 @@ def typo_slot_expansion(
         present = {
             r["term"]
             for r in index.term_dict(spark)
-            .filter(F.col("term").isin(zero_terms))
+            .filter(_isin("term", zero_terms))
             .select("term")
             .collect()
         }
@@ -2622,11 +2674,12 @@ def search_topk_typo_settings(
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "payload"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_typo_ranked_kernel(
             slot_meta, float(index.avgdl), index.payload_codec
         ),
         _OUT_TYPO_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
@@ -2663,9 +2716,10 @@ def search_topk_filtered(
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     allowed = docs.filter(F.expr(filter_sql)).select("doc_id")
     j = per_shard.join(allowed, "doc_id")
@@ -2880,16 +2934,18 @@ def search_topk_negative(
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+        _batch_groups(spark, index, pos_pairs)[1],
     ))
     if neg_pairs:
         nblocks, _ = _query_blocks_from_pairs(spark, index, neg_pairs)
         excluded = nblocks.select(
             "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
             "max_tf", "min_dl", "payload",
-        ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-            _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA
+        ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+            _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+            _batch_groups(spark, index, neg_pairs)[1],
         )).select("query_id", "doc_id")
         per_shard = per_shard.join(excluded, ["query_id", "doc_id"], "left_anti")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -3012,8 +3068,9 @@ def search_topk_negative_phrases(
     per_shard = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+        _batch_groups(spark, index, pos_pairs)[1],
     ))
     exclusions: list[DataFrame] = []
     if neg_pairs:
@@ -3022,8 +3079,9 @@ def search_topk_negative_phrases(
             nblocks.select(
                 "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc",
                 "last_doc", "max_tf", "min_dl", "payload",
-            ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
-                _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA
+            ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+                _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+                _batch_groups(spark, index, neg_pairs)[1],
             )).select("query_id", "doc_id")
         )
     if ph_pairs:
@@ -3210,9 +3268,10 @@ def _matched_prefix_topk(
     matches = blocks.select(
         "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
         "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"], 
+    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
         _make_term_match_rows(float(index.avgdl), index.payload_codec),
         _TERM_MATCH_SCHEMA,
+        _batch_groups(spark, index, pairs)[1],
     ))
     slot_df = spark.createDataFrame(slot_rows, "query_id int, term string, slot int")
     scores = matches.groupBy("query_id", "doc_id").agg(F.sum("s").alias("score"))
@@ -3270,7 +3329,7 @@ def search_topk_matching_frequency(
     else:
         got = (
             index.term_dict(spark)
-            .filter(F.col("term").isin(terms))
+            .filter(_isin("term", terms))
             .select("term", "df")
             .collect()
         )

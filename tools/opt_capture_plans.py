@@ -1,42 +1,65 @@
-"""r6: capture explain('formatted') for every touched query path.
+"""Capture explain('formatted') for the serving and build query paths.
 
-Usage: python tools/opt_capture_plans.py <repo_root> <suffix> <out_dir>
-Run once with the round-start worktree (suffix 'before') and once with the
-current tree (suffix 'after'); indexes under /tmp are shared.
+Usage:
+    python tools/opt_capture_plans.py <repo_root> <suffix> <out_dir>
+        [--cpus N] [--shuffle-partitions N] [--index-root DIR]
+        [--build REPL] [--only NAME ...]
+
+Run once with a checkout of the base commit (suffix 'before') and once with
+the current tree (suffix 'after'); the indexes under --index-root are shared.
+They are the ones bench.py builds (bench_idx_h_large, bench_idx_pairprox,
+bench_idx_fielded); --build REPL builds any missing h_large / fielded index
+from sf0.1 replicated REPL (h_large) and REPL/4 (fielded) times, so a capture
+does not need a full bench run. Captures whose index is absent are skipped.
+
+--shuffle-partitions defaults to --cpus. Pass a larger value (the default
+session uses max(cpus, 32)) to see whether a kernel exchange is sized by the
+planner or by the session's shuffle width.
 """
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-REPO = sys.argv[1]
-SUFFIX = sys.argv[2]
-OUT = sys.argv[3]
-sys.path.insert(0, REPO)
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from grenad_spark.session import get_spark  # noqa: E402
-
-
-def dump(name: str, df) -> None:
-    txt = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    path = os.path.join(OUT, f"{name}_{SUFFIX}.txt")
-    with open(path, "w") as fh:
-        fh.write(txt)
-    print(f"wrote {path} ({len(txt)} bytes)")
+SF_DIR = "/root/testdata/sf0.1"
 
 
 def main() -> None:
-    os.makedirs(OUT, exist_ok=True)
+    ap = argparse.ArgumentParser()
+    ap.add_argument("repo")
+    ap.add_argument("suffix")
+    ap.add_argument("out")
+    ap.add_argument("--cpus", type=int, default=16)
+    ap.add_argument("--shuffle-partitions", type=int, default=None)
+    ap.add_argument("--index-root", default="/tmp")
+    ap.add_argument("--build", type=int, default=None, metavar="REPL")
+    ap.add_argument("--only", nargs="*", default=None)
+    args = ap.parse_args()
+    sys.path.insert(0, args.repo)
+
+    from grenad_spark.session import get_spark
+
+    os.makedirs(args.out, exist_ok=True)
     spark = get_spark(
-        f"plans-{SUFFIX}", cpus=16, shuffle_partitions=16,
+        f"plans-{args.suffix}", cpus=args.cpus,
+        shuffle_partitions=args.shuffle_partitions or args.cpus,
         extra_conf={"spark.sql.adaptive.enabled": "false"},
     )
-    from grenad_spark.index.build import IndexHandle, build_segments, tokens_with_dl
-    from grenad_spark.index.pairprox import pair_stream, search_topk_proximity_db
+
+    def dump(name: str, make_df) -> None:
+        if args.only is not None and name not in args.only:
+            return
+        df = make_df()
+        txt = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
+        with open(path, "w") as fh:
+            fh.write(txt)
+        print(f"wrote {path} ({len(txt)} bytes)")
+
+    from grenad_spark.index.build import IndexHandle, build_index, build_segments, tokens_with_dl
     from grenad_spark.operators.seek import seek_gte_postings
     from grenad_spark.query.bm25 import REFERENCE_QUERIES
     from grenad_spark.query.phrase import (
@@ -46,56 +69,88 @@ def main() -> None:
     )
     from grenad_spark.query.search import search_topk, search_topk_shared
 
-    idx = IndexHandle("/tmp/bench_idx_h_large")
-    pidx = IndexHandle("/tmp/bench_idx_pairprox")
+    sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    import bench
 
-    q1 = REFERENCE_QUERIES[2:3]
-    dump("bm25_wand_single", search_topk(spark, idx, q1, k=10, mode="wand"))
-    dump("bm25_wand_batch12", search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand"))
-    dump("bm25_shared_batch12", search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10))
-    dump("bm25_wand_pruned_batch12", search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned"))
+    def path(name: str) -> str | None:
+        p = os.path.join(args.index_root, name)
+        return p if os.path.exists(os.path.join(p, "manifest.json")) else None
 
-    dfm = idx.df_map(spark)
-    terms = sorted(dfm)
-    doc_space = idx.manifest["max_doc"] + 1
-    keys = [(i, terms[i % len(terms)], (i * 9973) % doc_space) for i in range(639)]
-    dump("seek_gte_batch639", seek_gte_postings(spark, idx, keys))
+    if args.build:
+        from grenad_spark.corpus import fielded_docs
+        from grenad_spark.index.positions import build_positions
 
-    phrase_qs = [
-        (1, "merge sort"), (2, "the fast"), (3, "key value stream"),
-        (4, "dup"), (5, "data batch data"), (6, "hash join"),
-        (7, "sort table scan"), (8, "group query row"), (9, "stream batch"),
-        (10, "window small"), (11, "customer line"), (12, "slow customer line"),
-    ]
-    dump("phrase_batch12", search_topk_phrase(spark, idx, phrase_qs, k=10))
-    dump("phrase_shared_batch12", search_topk_phrase_shared(spark, idx, phrase_qs, k=10))
+        for name, repl, fielded in (
+            ("bench_idx_h_large", args.build, False),
+            ("bench_idx_fielded", max(1, args.build // 4), True),
+        ):
+            if path(name) is not None:
+                continue
+            out = os.path.join(args.index_root, name)
+            docs, _ = bench.replicated_docs(spark, SF_DIR, repl)
+            build_index(spark, docs, out, overwrite=True, docs_per_shard=5000)
+            build_positions(
+                spark, fielded_docs(docs) if fielded else docs, out,
+                **({"fields": ["title", "body"]} if fielded else {}),
+            )
 
-    prox_qs = [
-        (1, "merge sort"), (2, "the join"), (3, "key value stream"),
-        (4, "dup spark"), (5, "data stream"), (6, "hash join"),
-        (7, "group query row"), (8, "window the batch"),
-    ]
-    dump("proximity_positions_batch8", search_topk_proximity(spark, pidx, prox_qs, k=10))
-    dump("proximity_pairdb_batch8", search_topk_proximity_db(spark, pidx, prox_qs, k=10))
+    if path("bench_idx_h_large"):
+        idx = IndexHandle(path("bench_idx_h_large"))
+        q1 = REFERENCE_QUERIES[2:3]
+        dump("bm25_wand_single", lambda: search_topk(spark, idx, q1, k=10, mode="wand"))
+        dump("bm25_wand_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand"))
+        dump("bm25_shared_batch12", lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10))
+        dump("bm25_wand_pruned_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned"))
 
-    fidx_path = "/tmp/bench_idx_fielded"
-    if os.path.exists(os.path.join(fidx_path, "manifest.json")):
+        def seek():
+            terms = sorted(idx.df_map(spark))
+            doc_space = idx.manifest["max_doc"] + 1
+            keys = [(i, terms[i % len(terms)], (i * 9973) % doc_space) for i in range(639)]
+            return seek_gte_postings(spark, idx, keys)
+
+        dump("seek_gte_batch639", seek)
+
+        phrase_qs = [
+            (1, "merge sort"), (2, "the fast"), (3, "key value stream"),
+            (4, "dup"), (5, "data batch data"), (6, "hash join"),
+            (7, "sort table scan"), (8, "group query row"), (9, "stream batch"),
+            (10, "window small"), (11, "customer line"), (12, "slow customer line"),
+        ]
+        dump("phrase_batch12", lambda: search_topk_phrase(spark, idx, phrase_qs, k=10))
+        dump("phrase_shared_batch12", lambda: search_topk_phrase_shared(spark, idx, phrase_qs, k=10))
+
+    if path("bench_idx_pairprox"):
+        from grenad_spark.index.pairprox import search_topk_proximity_db
+
+        pidx = IndexHandle(path("bench_idx_pairprox"))
+        prox_qs = [
+            (1, "merge sort"), (2, "the join"), (3, "key value stream"),
+            (4, "dup spark"), (5, "data stream"), (6, "hash join"),
+            (7, "group query row"), (8, "window the batch"),
+        ]
+        dump("proximity_positions_batch8", lambda: search_topk_proximity(spark, pidx, prox_qs, k=10))
+        dump("proximity_pairdb_batch8", lambda: search_topk_proximity_db(spark, pidx, prox_qs, k=10))
+
+    if path("bench_idx_fielded"):
         from grenad_spark.query.ranked import search_topk_ranked
 
-        fidx = IndexHandle(fidx_path)
+        fidx = IndexHandle(path("bench_idx_fielded"))
         ranked_qs = [
             (1, "data stream"), (2, "merge sort"), (3, "the fast join"),
             (4, "spark window"), (5, "big table"), (6, "key value"),
             (7, "hash join order"), (8, "filter column row"),
         ]
-        dump("ranked_batch8", search_topk_ranked(spark, fidx, ranked_qs, k=10))
+        dump("ranked_batch8", lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10))
 
     # build-side plans (pre-write pipelines)
-    import bench  # noqa: E402
+    from grenad_spark.index.pairprox import pair_stream
 
-    docs, n_docs = bench.replicated_docs(spark, "/root/testdata/sf0.1", 8)
-    dump("build_segments_encode", build_segments(tokens_with_dl(docs), n_docs, 32, 64))
-    dump("pair_stream_agg", pair_stream(docs))
+    def encode():
+        docs, n_docs = bench.replicated_docs(spark, SF_DIR, 8)
+        return build_segments(tokens_with_dl(docs), n_docs, 32, 64)
+
+    dump("build_segments_encode", encode)
+    dump("pair_stream_agg", lambda: pair_stream(bench.replicated_docs(spark, SF_DIR, 8)[0]))
     spark.stop()
 
 
