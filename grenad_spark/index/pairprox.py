@@ -56,6 +56,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grenad_spark.functions.literals import isin, sql_expr
 from grenad_spark.functions.tokenize import tokens_col
 from grenad_spark.index.build import (
     IndexHandle,
@@ -63,7 +64,6 @@ from grenad_spark.index.build import (
     build_segments,
     term_dict_from_segments,
 )
-from grenad_spark.query.search import _isin, _sql_lit
 
 # Meilisearch stores pairs up to proximity 7 and ranks a missing pair as 8
 # (one beyond the window) — same constants here.
@@ -293,24 +293,19 @@ def search_topk_proximity_db(
     # literal-map expressions instead of broadcast hash joins (each
     # broadcast relation build costs ~0.2 s/job; see search.py
     # _attach_query_terms for the measurement)
-    base_map = F.expr(
-        f"map({', '.join(f'{q}, {b}L' for q, b in sorted(base8.items()))})"
-    )
+    base_map = sql_expr(dict(sorted(base8.items())), "map<int, bigint>")
     if slots:
         by_pair: dict[str, list[tuple[int, int]]] = {}
         for q, p, m in slots:
             by_pair.setdefault(p, []).append((q, m))
-        entries = []
-        for p, lst in sorted(by_pair.items()):
-            structs = ", ".join(
-                f"named_struct('query_id', {q}, 'mult', {m})" for q, m in lst
-            )
-            entries.append(f"{_sql_lit(p)}, array({structs})")
-        slot_map = F.expr(f"map({', '.join(entries)})")
+        slot_map = sql_expr(
+            dict(sorted(by_pair.items())),
+            "map<string, array<struct<query_id: int, mult: int>>>",
+        )
         pair_keys = sorted(by_pair)
         blocks = (
             index.pair_segments(spark)
-            .filter(_isin("term", pair_keys))
+            .filter(isin("term", pair_keys))
             .select("term", "n", "payload")
         )
         dists = blocks.mapInPandas(
@@ -669,7 +664,7 @@ def search_topk_proximity_db_prefix(
     only_p = sorted(set(parsed) - set(with_full))
     if only_p:
         parts.append(
-            pr_scored.filter(_isin("query_id", only_p)).select(
+            pr_scored.filter(isin("query_id", only_p)).select(
                 "query_id", "doc_id",
                 F.round(F.col("s_p"), SCORE_DECIMALS).alias("score"),
             )
@@ -704,7 +699,7 @@ def search_topk_proximity_db_prefix(
         keys = sorted({k for _q, _s, k, _m in reg_slots})
         rows = (
             index.pair_segments(spark)
-            .filter(_isin("term", keys))
+            .filter(isin("term", keys))
             .select("term", "n", "payload")
             .mapInPandas(_make_decode_pair_rows(index.payload_codec), _PAIR_ROWS_SCHEMA)
         )
@@ -725,7 +720,7 @@ def search_topk_proximity_db_prefix(
             want = sorted({f"{w}{PAIR_SEP}{p}" for _q, _s, w, p in pfx_slots})
             got = {
                 r["pair"]
-                for r in ppd.filter(_isin("pair", want)).select("pair").collect()
+                for r in ppd.filter(isin("pair", want)).select("pair").collect()
             }
             have = {
                 (w, p) for _q, _s, w, p in pfx_slots if f"{w}{PAIR_SEP}{p}" in got
@@ -736,7 +731,7 @@ def search_topk_proximity_db_prefix(
             keys = sorted({f"{w}{PAIR_SEP}{p}" for _q, _s, w, p in mat})
             rows = (
                 index.prefix_pair_segments(spark)
-                .filter(_isin("term", keys))
+                .filter(isin("term", keys))
                 .select("term", "n", "payload")
                 .mapInPandas(
                     _make_decode_pair_rows(index.payload_codec), _PAIR_ROWS_SCHEMA
@@ -772,7 +767,7 @@ def search_topk_proximity_db_prefix(
                 keys = sorted({k for _q, _s, k, _m in exp_rows})
                 rows = (
                     index.pair_segments(spark)
-                    .filter(_isin("term", keys))
+                    .filter(isin("term", keys))
                     .select("term", "n", "payload")
                     .mapInPandas(
                         _make_decode_pair_rows(index.payload_codec),

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grenad_spark.functions.literals import isin, sql_lit
 from grenad_spark.index.build import (
     IndexHandle,
     _done,
@@ -55,7 +56,6 @@ from grenad_spark.index.build import (
     tokens_with_dl,
 )
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
-from grenad_spark.query.search import _isin, _sql_lit
 
 DEFAULT_MAX_LEN = 2
 DEFAULT_MIN_TERMS = 2
@@ -245,7 +245,7 @@ def prefix_doc_rows(
         prefs = sorted({p for _, p in pairs})
         have = {
             r["prefix"]
-            for r in pdict.filter(_isin("prefix", prefs)).select("prefix").collect()
+            for r in pdict.filter(isin("prefix", prefs)).select("prefix").collect()
         }
     mat = [(q, p) for q, p in pairs if p in have]
     miss = [(q, p) for q, p in pairs if p not in have]
@@ -254,7 +254,7 @@ def prefix_doc_rows(
         qdf = spark.createDataFrame(mat, "query_id int, prefix string")
         blocks = (
             index.prefix_segments(spark)
-            .filter(_isin("term", sorted({p for _, p in mat})))
+            .filter(isin("term", sorted({p for _, p in mat})))
             .join(F.broadcast(qdf), F.col("term") == F.col("prefix"))
             .select(
                 "query_id", "prefix", F.col("term").alias("key"), "shard",
@@ -269,7 +269,7 @@ def prefix_doc_rows(
         # alone would leave both scans full (only IsNotNull pushed)
         coarse = F.expr(
             " OR ".join(
-                f"startswith(term, {_sql_lit(p)})" for p in sorted({p for _, p in miss})
+                f"startswith(term, {sql_lit(p)})" for p in sorted({p for _, p in miss})
             )
         )
         td = index.term_dict(spark).select("term").filter(coarse)

@@ -50,8 +50,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grenad_spark.functions.literals import isin
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.query.search import _isin
 
 MIN_SPLIT_PART = 2  # shortest half a split may produce
 MAX_NGRAM = 3  # milli's ngram cap
@@ -109,7 +109,7 @@ def _split_vocab(spark: SparkSession, index, candidates: set[str]):
         return set()
     rows = (
         index.term_dict(spark)
-        .filter(_isin("term", sorted(candidates)))
+        .filter(isin("term", sorted(candidates)))
         .select("term")
         .collect()
     )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grenad_spark.functions.literals import isin, prefix_ranges
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
 from grenad_spark.index.positions import POS_BITS, decode_position_blocks
 from grenad_spark.query.bm25 import SCORE_DECIMALS
@@ -38,9 +39,7 @@ from grenad_spark.query.search import (
     _batch_groups,
     _driver_idf,
     _grouped_apply,
-    _isin,
     _packed_in,
-    _prefix_ranges,
     _qshard_col,
     _tfpart,
 )
@@ -67,7 +66,7 @@ def _positions_blocks(spark, index, n_docs, pairs, use_dfm: bool):
     gated df map and rides inside the pairs; False takes the 10^9-term
     fallback (broadcast join against term_dict, idf as a column expr)."""
     terms = sorted({t for _, t, _ in pairs})
-    pos_tbl = index.positions(spark).filter(_isin("term", terms))
+    pos_tbl = index.positions(spark).filter(isin("term", terms))
     if use_dfm:
         if pairs:
             # literal-map attach (no broadcast join) — see search.py
@@ -80,7 +79,7 @@ def _positions_blocks(spark, index, n_docs, pairs, use_dfm: bool):
     qt = spark.createDataFrame(
         [(q, t) for q, t, _ in pairs], "query_id int, term string"
     )
-    td = index.term_dict(spark).filter(_isin("term", terms)).select("term", "df")
+    td = index.term_dict(spark).filter(isin("term", terms)).select("term", "df")
     return (
         pos_tbl.join(F.broadcast(td), "term")
         .join(F.broadcast(qt), "term")
@@ -299,12 +298,10 @@ def search_topk_phrase(
                 # IN conjunct is added when it shrinks the shard set: that
                 # one reaches the parquet scan as a pushed filter and skips
                 # files/row groups on localized corpora.
-                blocks = _packed_in(
-                    spark, blocks, surv, ["query_id", "shard"], [31, 20], 4096
-                )
+                blocks = _packed_in(spark, blocks, surv, ["query_id", "shard"], [31, 20])
                 all_shards = sorted({s for _, s in surv})
                 if len(all_shards) < int(index.n_shards):
-                    blocks = blocks.filter(_isin("shard", all_shards))
+                    blocks = blocks.filter(isin("shard", all_shards))
         else:
             nt = spark.createDataFrame(
                 [(q, len(ts)) for q, ts in sorted(terms_by_q.items())],
@@ -877,7 +874,7 @@ def search_topk_phrase_fresh(
     for i, h in enumerate(handles):
         s = (
             h.positions(spark)
-            .filter(_isin("term", terms))
+            .filter(isin("term", terms))
             .select("term", "n", "header", "positions")
             .withColumn("gen", F.lit(i))
         )
@@ -1209,7 +1206,7 @@ def _prefix_term_dfs(
         return {}
     rows = (
         index.term_dict(spark)
-        .filter(_prefix_ranges(prefixes))
+        .filter(prefix_ranges(prefixes))
         .select("term", "df")
         .collect()
     )
@@ -1540,7 +1537,7 @@ def search_topk_phrase_shared(
     g, n_part = _batch_groups(
         spark, index, [(q, t) for q, toks in phrases.items() for t in set(toks)]
     )
-    blocks = index.positions(spark).filter(_isin("term", terms)).select(
+    blocks = index.positions(spark).filter(isin("term", terms)).select(
         (F.col("shard") / g).cast("int").alias("qshard"),
         "term", "n", "first_doc", "header", "positions",
     )

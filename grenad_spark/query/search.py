@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from grenad_spark.functions.literals import isin, prefix_ranges, sql_lit
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
 from grenad_spark.functions.varbyte import decode_block, decode_block_rows, decompress_payload, decompress_payloads
 from grenad_spark.index.build import MAX_DELETES, IndexHandle
@@ -141,7 +142,7 @@ def expand_prefix_queries(
                     exact.append((qid, t))
     pairs = set(exact)
     if prefixes:
-        cond = _prefix_ranges(p for _, p in prefixes)
+        cond = prefix_ranges(p for _, p in prefixes)
         matched_df = index.term_dict(spark).filter(cond).select("term", "df")
         if max_expansions is not None:
             # per-prefix top-df cap. A term joins EVERY prefix it matches
@@ -269,7 +270,7 @@ def _symspell_candidates(
         F.levenshtein("term", "qterm") <= max_edits
     )
     return (
-        deletes.filter(_isin("delvar", vset))
+        deletes.filter(isin("delvar", vset))
         .join(F.broadcast(qdf), "delvar")
         .select("query_id", "qterm", "term")
         .distinct()
@@ -523,40 +524,9 @@ def _query_blocks(
     return _query_blocks_from_pairs(spark, index, _tokenize_queries(queries))
 
 
-def _sql_lit(v) -> str:
-    """Spark SQL text of a driver value: str, int, float, list (→ array)
-    or dict (→ map). Driver literals are built as ONE SQL string and parsed
-    by ONE F.expr call: the per-element Column API (F.lit / F.create_map /
-    F.array / Column.isin(list)) pays one py4j round trip per element —
-    thousands per 64-query batch plan. Catalyst folds the parsed
-    expression to the same literals, so optimized plans do not change.
-
-    Strings are user input. Alphanumeric ones are quoted as they are;
-    anything else becomes CAST(X'<utf-8 hex>' AS STRING), which no quote
-    or backslash can break out of, which does not depend on
-    spark.sql.parser.escapedStringLiterals, and which ${...} variable
-    substitution cannot match."""
-    if isinstance(v, str):
-        hexed = v.encode("utf-8", "surrogateescape").hex()
-        return f"'{v}'" if v.isalnum() else f"CAST(X'{hexed}' AS STRING)"
-    if isinstance(v, float):
-        return f"{v!r}D"
-    if isinstance(v, int):
-        return str(v)
-    if isinstance(v, list):
-        return f"array({', '.join(map(_sql_lit, v))})"
-    if isinstance(v, dict):
-        return f"map({', '.join(f'{_sql_lit(k)}, {_sql_lit(x)}' for k, x in v.items())})"
-    raise TypeError(f"no SQL literal for {type(v).__name__}")
-
-
-def _isin(col: str, values) -> Column:
-    """`col IN (values)` as one F.expr call (see _sql_lit). An empty list
-    matches nothing, like Column.isin([])."""
-    values = list(values)
-    if not values:
-        return F.expr("false")
-    return F.expr(f"{col} IN ({', '.join(map(_sql_lit, values))})")
+# most distinct keys one packed-key IN literal carries (_packed_in); the
+# survivor attaches collect pass 1 only when their block bound fits it
+PACKED_IN_CAP = 2048
 
 
 def _packed_in(
@@ -565,7 +535,6 @@ def _packed_in(
     rows: list[tuple[int, ...]],
     cols: list[str],
     bits: list[int],
-    cap: int,
 ) -> DataFrame:
     """Restrict df to the collected key tuples `rows` over `cols`.
 
@@ -573,13 +542,13 @@ def _packed_in(
     bits, the last lowest — and come back as ONE SQL IN literal (hashed
     InSet, no broadcast build, no join). The literal is analysis-bound: a
     33k-element IN built 33k literal tree nodes before the InSet conversion
-    and doubled a batch (measured), so above `cap` distinct keys, or when a
+    and doubled a batch (measured), so above PACKED_IN_CAP distinct keys, or when a
     component falls outside its bit range (keys would alias), the join side
     is a broadcast DataFrame built from the SAME collected rows: the pass
     that produced them never runs twice."""
     rows = sorted({tuple(int(v) for v in r) for r in rows})
     in_range = all(0 <= v < (1 << b) for r in rows for v, b in zip(r, bits))
-    if in_range and len(rows) <= cap:
+    if in_range and len(rows) <= PACKED_IN_CAP:
         keys = []  # ascending: tuple order is packed-key order in range
         for r in rows:
             key = 0
@@ -599,36 +568,20 @@ def _packed_in(
 def _est_blocks(spark: SparkSession, index: IndexHandle, terms: list[str]) -> int | None:
     """Upper bound on the block rows of `terms` (one entry per occurrence),
     None without the driver df map. Blocks are chunked per (term, shard),
-    so a term of df postings spread over S shards holds at most
-    ceil(df / block_size) + S − 1 blocks, and never more than df. S comes
-    from the term → shard-set map when the handle already holds it (no job
-    is started for it here), else min(n_shards, df)."""
+    so a term of df postings spread over S ≤ min(n_shards, df) shards
+    holds at most ceil(df / block_size) + S − 1 blocks, and never more
+    than df."""
     dfm = index.df_map(spark)
     if dfm is None:
         return None
     bs = int(index.manifest.get("block_size") or 128)
-    tsm = index.__dict__.get("_term_shards")
     n_shards = max(1, int(index.n_shards))
     total = 0
     for t in terms:
         df = dfm.get(t, 0)
         if df:
-            n_s = len(tsm.get(t, ())) if tsm is not None else min(n_shards, df)
-            total += min(df, -(-df // bs) + max(1, n_s) - 1)
+            total += min(df, -(-df // bs) + min(n_shards, df) - 1)
     return total
-
-
-def _prefix_ranges(prefixes) -> Column:
-    """term ∈ ⋃ [p, successor(p)) over `prefixes` — the PrefixIter key
-    ranges, pushed to the parquet scan — as one F.expr call."""
-    from grenad_spark.operators.seek import advance_str
-
-    conds = []
-    for p in sorted(set(prefixes)):
-        succ = advance_str(p)
-        lo = f"term >= {_sql_lit(p)}"
-        conds.append(f"({lo} AND term < {_sql_lit(succ)})" if succ else f"({lo})")
-    return F.expr(" OR ".join(conds))
 
 
 def _attach_query_terms(seg: DataFrame, rows: list[tuple[int, str, float]]) -> DataFrame:
@@ -640,7 +593,7 @@ def _attach_query_terms(seg: DataFrame, rows: list[tuple[int, str, float]]) -> D
     term (NULL lookups are dropped by explode), but stays inside one
     whole-stage-codegen stage: no broadcast exchange, no relation build,
     no extra job. Each map is one SQL string parsed by one F.expr call
-    (_sql_lit), so planning cost does not grow with the batch; literal
+    (sql_lit), so planning cost does not grow with the batch; literal
     size is bounded by the batch's distinct query terms."""
     qids: dict[str, list[int]] = {}
     idfs: dict[str, float] = {}
@@ -648,8 +601,8 @@ def _attach_query_terms(seg: DataFrame, rows: list[tuple[int, str, float]]) -> D
         qids.setdefault(t, []).append(int(q))
         idfs[t] = float(i)
     return seg.withColumn(
-        "query_id", F.expr(f"explode({_sql_lit(qids)}[term])")
-    ).withColumn("idf", F.expr(f"{_sql_lit(idfs)}[term]"))
+        "query_id", F.expr(f"explode({sql_lit(qids)}[term])")
+    ).withColumn("idf", F.expr(f"{sql_lit(idfs)}[term]"))
 
 
 def _query_blocks_from_pairs(
@@ -667,7 +620,7 @@ def _query_blocks_from_pairs(
     (the metadata prune pass reads everything BUT the payload — parquet
     column pruning keeps payload bytes on disk)."""
     terms = sorted({t for _, t in qt})
-    seg = index.segments(spark).filter(_isin("term", terms))
+    seg = index.segments(spark).filter(isin("term", terms))
     if columns is not None:
         seg = seg.select(*columns)
     n_docs = float(index.n_docs)
@@ -692,7 +645,7 @@ def _query_blocks_from_pairs(
         blocks = seg.join(F.broadcast(qterms), "term")
         return blocks, qterms
     qterms = spark.createDataFrame(qt, "query_id int, term string")
-    td = index.term_dict(spark).filter(_isin("term", terms)).select("term", "df")
+    td = index.term_dict(spark).filter(isin("term", terms)).select("term", "df")
     blocks = (
         seg.join(F.broadcast(td), "term")
         .join(F.broadcast(qterms), "term")
@@ -1039,12 +992,12 @@ def _search_pruned(
         survivors = survivor_blocks(spark, index, pairs, kk)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     est_blocks = _est_blocks(spark, index, [t for _, t in set(pairs)])
-    if est_blocks is not None and est_blocks <= 2048:
+    if est_blocks is not None and est_blocks <= PACKED_IN_CAP:
         srows = survivors.select("query_id", "shard", "block_id").collect()
         if not srows:
             return spark.createDataFrame([], _OUT_SCHEMA)
         pruned = _packed_in(
-            spark, blocks, srows, ["query_id", "shard", "block_id"], [23, 20, 20], 2048
+            spark, blocks, srows, ["query_id", "shard", "block_id"], [23, 20, 20]
         )
     else:
         pruned = blocks.join(
@@ -1119,12 +1072,12 @@ def survivor_blocks(
         meta = None
         if dense_terms:
             meta = (
-                seg.filter(_isin("term", dense_terms))
+                seg.filter(isin("term", dense_terms))
                 .select(*_META_COLS)
                 .withColumn("payload", F.lit(None).cast("binary"))
             )
         if sparse_terms:
-            ms = seg.filter(_isin("term", sparse_terms)).select(
+            ms = seg.filter(isin("term", sparse_terms)).select(
                 *_META_COLS, "payload"
             )
             meta = ms if meta is None else meta.unionByName(ms)
@@ -1204,7 +1157,7 @@ def search_topk_auto(
     nb = {
         r["term"]: int(r["n_blocks"])
         for r in index.term_dict(spark)
-        .filter(_isin("term", terms))
+        .filter(isin("term", terms))
         .select("term", "n_blocks")
         .collect()
     }
@@ -1729,7 +1682,7 @@ def search_topk_fresh(
     for i, h in enumerate(handles):
         s = (
             h.segments(spark)
-            .filter(_isin("term", terms))
+            .filter(isin("term", terms))
             .select("term", "shard", "block_id", "n", "payload")
             .withColumn("gen", F.lit(i))
         )
@@ -1822,7 +1775,7 @@ def search_topk_shared(
 
     g, n_part = _batch_groups(spark, index, pairs)
 
-    seg = index.segments(spark).filter(_isin("term", terms))
+    seg = index.segments(spark).filter(isin("term", terms))
     if prune and "min_tf" in seg.columns:
         # a SUPERSET of the survivors is exact here (every shipped block is
         # scored exhaustively for all queries sharing its term), so the
@@ -1831,11 +1784,11 @@ def search_topk_shared(
         # exactly ONCE either way: the collect, or the lazy broadcast build.
         surv_df = survivor_blocks(spark, index, pairs, kk)
         est_blocks = _est_blocks(spark, index, terms)
-        if est_blocks <= 2048:
+        if est_blocks <= PACKED_IN_CAP:
             srows = surv_df.select("shard", "block_id").collect()
             if not srows:
                 return spark.createDataFrame([], _OUT_SCHEMA)
-            seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20], 2048)
+            seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20])
         else:
             surv = F.broadcast(
                 surv_df.select("term", "shard", "block_id").distinct()
@@ -2619,7 +2572,7 @@ def typo_slot_expansion(
         present = {
             r["term"]
             for r in index.term_dict(spark)
-            .filter(_isin("term", zero_terms))
+            .filter(isin("term", zero_terms))
             .select("term")
             .collect()
         }
@@ -3329,7 +3282,7 @@ def search_topk_matching_frequency(
     else:
         got = (
             index.term_dict(spark)
-            .filter(_isin("term", terms))
+            .filter(isin("term", terms))
             .select("term", "df")
             .collect()
         )

@@ -165,14 +165,14 @@ AWKWARD = ["'", "\\", "' OR '1'='1", "a\\'b", "é", "日本語", "", "${spark.ap
 def test_isin_literal_is_injection_safe(spark, escaped):
     from pyspark.sql import functions as F
 
-    from grenad_spark.query.search import _isin
+    from grenad_spark.functions.literals import isin
 
     df = spark.createDataFrame([(v,) for v in AWKWARD + ["other", None]], "term string")
     old = spark.conf.get("spark.sql.parser.escapedStringLiterals")
     spark.conf.set("spark.sql.parser.escapedStringLiterals", escaped)
     try:
         for vals in [[v] for v in AWKWARD] + [AWKWARD, AWKWARD[::2], []]:
-            got = sorted(r[0] for r in df.filter(_isin("term", vals)).collect())
+            got = sorted(r[0] for r in df.filter(isin("term", vals)).collect())
             want = sorted(r[0] for r in df.filter(F.col("term").isin(vals)).collect())
             assert got == want, vals
     finally:
@@ -182,23 +182,32 @@ def test_isin_literal_is_injection_safe(spark, escaped):
 def test_sql_literal_maps_round_trip(spark):
     from pyspark.sql import functions as F
 
-    from grenad_spark.query.search import _sql_lit
+    from grenad_spark.functions.literals import sql_expr, sql_lit
 
     idfs = {v: x for v, x in zip(AWKWARD, [0.1, 1 / 3, 1e-300, 1.7976931348623157e308,
                                             -2.5, 5e-324, 2.0, 123456789.123456789,
                                             0.0, 7.0, 1e22, 3.14, 2.718281828459045])}
     qids = {v: list(range(i + 1)) for i, v in enumerate(AWKWARD)}
-    row = spark.range(1).select(
-        F.expr(_sql_lit(idfs)).alias("i"),
-        F.expr(_sql_lit(qids)).alias("q"),
-    ).first()
-    assert row["i"] == idfs and row["q"] == qids
+    slots = {v: [(i, i + 1), (i + 2, 3)] for i, v in enumerate(AWKWARD)}
+    df = spark.range(1).select(
+        F.expr(sql_lit(idfs)).alias("i"),
+        F.expr(sql_lit(qids)).alias("q"),
+        sql_expr({1: 0, 2: 3}, "map<int, bigint>").alias("b"),
+        sql_expr(slots, "map<string, array<struct<query_id: int, mult: int>>>").alias("s"),
+    )
+    assert df.schema["b"].dataType.simpleString() == "map<int,bigint>"
+    assert df.schema["s"].dataType.simpleString() == (
+        "map<string,array<struct<query_id:int,mult:int>>>"
+    )
+    row = df.first()
+    assert row["i"] == idfs and row["q"] == qids and row["b"] == {1: 0, 2: 3}
+    assert {k: [(r["query_id"], r["mult"]) for r in v] for k, v in row["s"].items()} == slots
 
 
-def test_packed_in_branches_agree(spark):
+def test_packed_in_branches_agree(spark, monkeypatch):
     """The IN literal, the over-cap broadcast and the out-of-range broadcast
     select the same rows; the IN path plans no join."""
-    from grenad_spark.query.search import _packed_in
+    from grenad_spark.query import search as S
 
     rng = np.random.default_rng(9)
     data = [(int(q), int(s), int(b)) for q, s, b in rng.integers(0, 6, size=(200, 3))]
@@ -206,18 +215,20 @@ def test_packed_in_branches_agree(spark):
     cols, bits = ["query_id", "shard", "block_id"], [23, 20, 20]
     keys = data[::7] + data[::7]  # duplicates must not duplicate rows
     want = sorted(r for r in data if r in set(keys))
-    lit = _packed_in(spark, df, keys, cols, bits, 2048)
+    lit = S._packed_in(spark, df, keys, cols, bits)
     assert "Join" not in lit._jdf.queryExecution().optimizedPlan().toString()
-    over = _packed_in(spark, df, keys, cols, bits, 0)
-    bad = _packed_in(spark, df, keys + [(-1, 0, 0)], cols, bits, 2048)
+    bad = S._packed_in(spark, df, keys + [(-1, 0, 0)], cols, bits)
+    monkeypatch.setattr(S, "PACKED_IN_CAP", 0)
+    over = S._packed_in(spark, df, keys, cols, bits)
+    for out in (over, bad):
+        assert "Join" in out._jdf.queryExecution().optimizedPlan().toString()
     for out in (lit, over, bad):
         assert sorted(tuple(r[c] for c in cols) for r in out.collect()) == want
 
 
 def test_block_estimate_bounds_per_shard_chunking(spark, sized_index):
     """Blocks are chunked per (term, shard): the survivor-literal estimate
-    must bound the real block count with and without the handle's
-    term → shard map."""
+    must bound the real block count."""
     from grenad_spark.index.build import IndexHandle
     from grenad_spark.query.search import _est_blocks
 
@@ -230,8 +241,6 @@ def test_block_estimate_bounds_per_shard_chunking(spark, sized_index):
     # the fixture chunks per shard: ceil(df / block_size) alone undercounts
     dfm, bs = h.df_map(spark), int(h.manifest["block_size"])
     assert sum(-(-dfm[t] // bs) for t in terms) < sum(real.values())
-    assert _est_blocks(spark, h, terms) >= sum(real.values())
-    h.term_shards(spark)
     assert _est_blocks(spark, h, terms) >= sum(real.values())
     for t in terms:
         assert _est_blocks(spark, h, [t]) >= real[t]
