@@ -59,6 +59,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # Every task starts with importlib.invalidate_caches()
+        # (pyspark/worker_util.py:144), and on CPython 3.11 each zipimporter
+        # re-reads its whole archive for it (zipimport.py:329-336): ~0.2 s of
+        # worker CPU per task spent re-parsing an unchanged pyspark.zip. This
+        # daemon re-reads an archive only when its mtime or size changed.
+        .config("spark.python.daemon.module", "grenad_spark.worker_daemon")
         # NOTE: tested tmpfs (/dev/shm) as spark.local.dir — 1.8× SLOWER than
         # /tmp at 16 cores (synchronous memcpy vs page-cache-buffered ext4
         # writeback that never touches disk for short-lived shuffle files).
