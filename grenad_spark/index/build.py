@@ -44,6 +44,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from grenad_spark.functions import native
 from grenad_spark.functions.tokenize import term_doc_tf, tokens_col
 from grenad_spark.functions.varbyte import encode_posting_blocks
 
@@ -731,6 +732,9 @@ class IndexHandle:
             self.payload_codec: str = "none"
         else:
             self.payload_codec = self.manifest.get("payload_codec", "none")
+        # load (and on a cold cache compile) the native codec now: one-group
+        # calls decode on the driver, and gcc must not run inside one
+        native.lib()
 
     def _table(self, spark: SparkSession, name: str) -> DataFrame:
         # memoized per (session, table): reusing the DataFrame keeps the
@@ -743,6 +747,17 @@ class IndexHandle:
 
     def segments(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "segments")
+
+    def segments_dataset(self):
+        """pyarrow dataset over segments/ for driver-local reads, or None
+        when the directory is not on the driver's filesystem. Memoized like
+        _table: the file listing and footers' schema are read once."""
+        if not hasattr(self, "_segments_ds"):
+            import pyarrow.dataset as pads
+
+            p = os.path.join(self.path, "segments")
+            self._segments_ds = pads.dataset(p, format="parquet") if os.path.isdir(p) else None
+        return self._segments_ds
 
     def term_dict(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "term_dict")
@@ -863,10 +878,8 @@ class IndexHandle:
     def search(self, spark: SparkSession, queries, k: int = 10, mode: str = "wand") -> DataFrame:
         """Top-k BM25. mode: 'wand' (single-pass serving) | 'wand_pruned'
         (two-pass metadata prune — shuffle ∝ surviving blocks; best when
-        pruning bites, e.g. zipfian corpora) | 'exhaustive' | 'wand_cursor'
-        (algorithm-faithful reference/test variant; per-pivot Python, so
-        groups beyond WAND_CURSOR_MAX_POSTINGS delegate to the batched
-        kernel — don't pick it for serving)."""
+        pruning bites, e.g. zipfian corpora) | 'exhaustive' (the oracle
+        kernel: scores every posting)."""
         from grenad_spark.query.search import search_topk
 
         return search_topk(spark, self, queries, k=k, mode=mode)

@@ -25,9 +25,11 @@ ride in via the grouping DataFrame (broadcast-joined), not closures.
 from __future__ import annotations
 
 import math
+import os
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,7 +37,7 @@ from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin, prefix_ranges, sql_lit
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.functions.varbyte import decode_block, decode_block_rows, decompress_payload, decompress_payloads
+from grenad_spark.functions.varbyte import decode_block_rows, decompress_payloads
 from grenad_spark.index.build import MAX_DELETES, IndexHandle
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
 
@@ -657,6 +659,7 @@ def _query_blocks_from_pairs(
 
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
+_OUT_ARROW = pa.schema([("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())])
 
 
 def search_topk(
@@ -812,6 +815,67 @@ def _make_per_query(apply_fn):
     return fn
 
 
+def _serve_local(spark: SparkSession, index: IndexHandle, n_part: int) -> bool:
+    """Run a kernel call on the driver instead of in a Spark job?
+
+    Yes when the batch is one work-sized group (n_part == 1: the Spark plan
+    would be one single-threaded task over the same rows, so the driver does
+    the same work minus the job), the df map is held (idf comes from it),
+    segments/ is a directory on the driver's filesystem, and
+    GRENAD_SPARK_NO_LOCAL is unset. No threshold of its own:
+    TARGET_GROUP_POSTINGS, through _batch_groups, stays the one volume rule."""
+    return (
+        n_part == 1
+        and not os.environ.get("GRENAD_SPARK_NO_LOCAL")
+        and index.df_map(spark) is not None
+        and index.segments_dataset() is not None
+    )
+
+
+def _local_blocks(index: IndexHandle, terms: list[str], columns: list[str]) -> pd.DataFrame:
+    """The `term IN terms` block rows of segments/, read on the driver. The
+    files are range-written on term, so parquet min/max statistics prune the
+    read as they prune the Spark scan."""
+    import pyarrow.dataset as pads
+
+    return index.segments_dataset().to_table(
+        columns=columns, filter=pads.field("term").isin(terms)
+    ).to_pandas()
+
+
+def _local_query_blocks(
+    spark: SparkSession, index: IndexHandle, pairs: list[tuple[int, str]]
+) -> pd.DataFrame:
+    """_query_blocks_from_pairs on the driver: the block rows of each
+    (query_id, term) pair with the driver idf attached; terms absent from
+    the df map score nothing and drop, as in the literal-map attach."""
+    dfm = index.df_map(spark)
+    n_docs = float(index.n_docs)
+    qt = pd.DataFrame(
+        [(q, t, _driver_idf(n_docs, dfm[t])) for q, t in pairs if t in dfm],
+        columns=["query_id", "term", "idf"],
+    )
+    if qt.empty:
+        return qt
+    cols = ["term", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"]
+    return qt.merge(_local_blocks(index, sorted(set(qt["term"])), cols), on="term")
+
+
+def _rank_local(spark: SparkSession, out: pd.DataFrame, kk: int) -> DataFrame:
+    """_rank_topk on the driver: round, order by (query_id, score desc,
+    doc_id asc) — the row order the one-partition Spark plan collects —
+    and keep kk rows per query. The result is a local relation, so
+    collecting it runs no Spark job."""
+    out = out.assign(score=out["score"].round(SCORE_DECIMALS)).sort_values(
+        ["query_id", "score", "doc_id"], ascending=[True, False, True], kind="stable"
+    )
+    top = out.groupby("query_id", sort=False).head(kk)
+    # from an Arrow table: PySpark sends an EMPTY pandas frame through an
+    # RDD, whose collect runs a job
+    tbl = pa.Table.from_pandas(top, schema=_OUT_ARROW, preserve_index=False)
+    return spark.createDataFrame(tbl, _OUT_SCHEMA)
+
+
 def _grouped_apply(
     df: DataFrame,
     keys: list[str],
@@ -896,7 +960,6 @@ def _search_from_pairs(
 ) -> DataFrame:
     if mode == "wand_pruned":
         return _search_pruned(spark, index, pairs, k)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     avgdl = float(index.avgdl)
     kk = int(k)
     codec = index.payload_codec
@@ -905,13 +968,16 @@ def _search_from_pairs(
         apply_fn = _make_exhaustive(avgdl, kk, codec)
     elif mode == "wand":
         apply_fn = _make_wand_batched(avgdl, kk, codec)
-    elif mode == "wand_cursor":
-        apply_fn = _make_wand(avgdl, kk, codec)
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
     n_queries = len({q for q, _ in pairs})
     g, n_part = _batch_groups(spark, index, pairs)
+    if _serve_local(spark, index, n_part):
+        # the one task's work, on the driver: same rows, same kernel call
+        pdf = _local_query_blocks(spark, index, pairs)
+        return _rank_local(spark, _make_per_query(apply_fn)(pdf), kk)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     sel = blocks.select(
         "query_id",
         (F.col("shard") / g).cast("int").alias("qshard"),
@@ -1773,32 +1839,6 @@ def search_topk_shared(
     if not terms:
         return spark.createDataFrame([], _OUT_SCHEMA)
 
-    g, n_part = _batch_groups(spark, index, pairs)
-
-    seg = index.segments(spark).filter(isin("term", terms))
-    if prune and "min_tf" in seg.columns:
-        # a SUPERSET of the survivors is exact here (every shipped block is
-        # scored exhaustively for all queries sharing its term), so the
-        # packed key can drop both query_id and term — (shard, block_id)
-        # collisions just ship the harmless extra block once. Pass 1 runs
-        # exactly ONCE either way: the collect, or the lazy broadcast build.
-        surv_df = survivor_blocks(spark, index, pairs, kk)
-        est_blocks = _est_blocks(spark, index, terms)
-        if est_blocks <= PACKED_IN_CAP:
-            srows = surv_df.select("shard", "block_id").collect()
-            if not srows:
-                return spark.createDataFrame([], _OUT_SCHEMA)
-            seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20])
-        else:
-            surv = F.broadcast(
-                surv_df.select("term", "shard", "block_id").distinct()
-            )
-            seg = seg.join(surv, ["term", "shard", "block_id"])
-    blocks = seg.select(
-        (F.col("shard") / g).cast("int").alias("qshard"),
-        "term", "n", "payload",
-    )
-
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         # decode each term ONCE: (docs, tfpart) — idf applied per query-term
         decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
@@ -1843,6 +1883,34 @@ def search_topk_shared(
         if not outs:
             return _empty_out()
         return pd.concat(outs, ignore_index=True)
+
+    g, n_part = _batch_groups(spark, index, pairs)
+    if not prune and _serve_local(spark, index, n_part):
+        return _rank_local(spark, fn(_local_blocks(index, terms, ["term", "n", "payload"])), kk)
+
+    seg = index.segments(spark).filter(isin("term", terms))
+    if prune and "min_tf" in seg.columns:
+        # a SUPERSET of the survivors is exact here (every shipped block is
+        # scored exhaustively for all queries sharing its term), so the
+        # packed key can drop both query_id and term — (shard, block_id)
+        # collisions just ship the harmless extra block once. Pass 1 runs
+        # exactly ONCE either way: the collect, or the lazy broadcast build.
+        surv_df = survivor_blocks(spark, index, pairs, kk)
+        est_blocks = _est_blocks(spark, index, terms)
+        if est_blocks <= PACKED_IN_CAP:
+            srows = surv_df.select("shard", "block_id").collect()
+            if not srows:
+                return spark.createDataFrame([], _OUT_SCHEMA)
+            seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20])
+        else:
+            surv = F.broadcast(
+                surv_df.select("term", "shard", "block_id").distinct()
+            )
+            seg = seg.join(surv, ["term", "shard", "block_id"])
+    blocks = seg.select(
+        (F.col("shard") / g).cast("int").alias("qshard"),
+        "term", "n", "payload",
+    )
 
     # single work-sized group: narrow coalesce, no exchange — same trick as
     # _search_from_pairs; map-protocol dispatch via _grouped_apply
@@ -1936,9 +2004,8 @@ def _make_wand_batched(
 ):
     """Batched block-max pruning — the vectorized serving path.
 
-    The cursor WAND (_make_wand) is algorithmically faithful to grenad's
-    pull-based seek loop but pays per-pivot Python overhead. This variant
-    keeps the same block-max math with NO per-doc Python:
+    The block-max math of grenad's pull-based seek loop (per-term cursors
+    pivoting doc by doc) with NO per-doc Python:
 
       0. SPARSE terms (≤ sparse_postings_max postings in the group) decode
          upfront — cheap by the bound — and turn into exact unit-width
@@ -2110,172 +2177,6 @@ def _make_wand_batched(
         agg = np.zeros(uniq.size)
         np.add.at(agg, inv, scores)
         return _topk_rows(qid, uniq, agg, k)
-
-    return fn
-
-
-# wand_cursor guard: the cursor variant pays per-pivot PYTHON cost, so a
-# group beyond this many postings silently delegates to the batched kernel
-# (identical results — both are exact; asserted in tests). The bound keeps
-# the educational mode reachable for small corpora/tests while making the
-# O(docs)-Python loop unpickable at scale from the public IndexHandle API.
-WAND_CURSOR_MAX_POSTINGS = 100_000
-
-
-def _make_wand(avgdl: float, k: int, codec: str = "none"):
-    """Block-max WAND over one (query, shard) group — the ALGORITHM-FAITHFUL
-    educational variant (reference/test use only; not a default serving path).
-
-    Doc-at-a-time pivoting with per-term block cursors; a block is decoded
-    only when the pivot lands in it AND the sum of block upper bounds at the
-    pivot exceeds the running threshold θ. Block seek = np.searchsorted over
-    the block last_doc array (the sparse-footer binary search of
-    src/block.rs:214-255). This is grenad's pull-based seek loop verbatim in
-    spirit — and therefore per-pivot Python: groups beyond
-    WAND_CURSOR_MAX_POSTINGS delegate to _make_wand_batched, the vectorized
-    kernel with the same block-max math (and identical output — both exact).
-    """
-    batched = _make_wand_batched(avgdl, k, codec)
-    # snapshot at plan time (same worker-import caveat as _make_meta_prune)
-    max_postings = WAND_CURSOR_MAX_POSTINGS
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if int(pdf["n"].sum()) > max_postings:
-            return batched(pdf)
-        qid = int(pdf["query_id"].iloc[0])
-        # per-term cursor state
-        terms = []
-        for (_, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            g = g.sort_values("first_doc", kind="stable")
-            idf = float(idf)
-            ub_blocks = idf * _tfpart(
-                g["max_tf"].to_numpy().astype(np.float64),
-                g["min_dl"].to_numpy().astype(np.float64),
-                avgdl,
-            )
-            terms.append(
-                {
-                    "idf": idf,
-                    "first": g["first_doc"].to_numpy(),
-                    "last": g["last_doc"].to_numpy(),
-                    "payloads": list(g["payload"]),
-                    "ub_blocks": ub_blocks,
-                    "ub_term": float(ub_blocks.max()),
-                    "bi": 0,          # current block index
-                    "docs": None,      # decoded current block
-                    "scores": None,
-                    "pi": 0,           # position within decoded block
-                    "cur": None,       # current doc id (None = before first)
-                    "exhausted": False,
-                }
-            )
-        if not terms:
-            return _empty_out()
-
-        def load_block(t, bi):
-            d, tf, dl = decode_block(decompress_payload(t["payloads"][bi], codec))
-            t["bi"] = bi
-            t["docs"] = d
-            t["scores"] = t["idf"] * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            t["pi"] = 0
-            t["cur"] = int(d[0])
-
-        def next_geq(t, target):
-            """Advance cursor to first doc >= target (grenad
-            move_on_key_greater_than_or_equal_to, reader_cursor.rs:184-209)."""
-            if t["exhausted"]:
-                return
-            bi = int(np.searchsorted(t["last"], target))
-            if bi >= len(t["payloads"]):
-                t["exhausted"] = True
-                t["cur"] = None
-                return
-            if t["docs"] is None or bi != t["bi"]:
-                load_block(t, bi)
-            pi = int(np.searchsorted(t["docs"], target))
-            if pi >= t["docs"].size:  # target in gap after this block
-                if bi + 1 >= len(t["payloads"]):
-                    t["exhausted"] = True
-                    t["cur"] = None
-                    return
-                load_block(t, bi + 1)
-                pi = 0
-            t["pi"] = pi
-            t["cur"] = int(t["docs"][pi])
-
-        for t in terms:
-            next_geq(t, 0)
-
-        heap: list[tuple[float, int]] = []  # (score, doc_id) min-heap of top-k
-        import heapq
-
-        theta = -1.0
-        while True:
-            live = [t for t in terms if not t["exhausted"]]
-            if not live:
-                break
-            live.sort(key=lambda t: t["cur"])
-            # find pivot: smallest doc such that Σ ub_term of terms with
-            # cur <= doc can beat θ
-            acc = 0.0
-            pivot_idx = None
-            for i, t in enumerate(live):
-                acc += t["ub_term"]
-                # θ is a rounded score; a raw UB within PRUNE_EPS can still
-                # round-tie the kth slot and win by doc_id
-                if acc > theta - PRUNE_EPS:
-                    pivot_idx = i
-                    break
-            if pivot_idx is None:
-                break  # no doc can beat θ
-            pivot = live[pivot_idx]["cur"]
-            if live[0]["cur"] == pivot:
-                # block-max refinement: exact block UBs at the pivot, over
-                # EVERY term whose cursor sits at the pivot (terms beyond
-                # pivot_idx may also be at the pivot and contribute score —
-                # omitting them under-bounds and wrongly skips docs)
-                at_pivot = [t for t in live if t["cur"] == pivot]
-                block_ub = 0.0
-                for t in at_pivot:
-                    bi = int(np.searchsorted(t["last"], pivot))
-                    if bi < len(t["payloads"]) and t["first"][bi] <= pivot:
-                        block_ub += float(t["ub_blocks"][bi])
-                    else:
-                        block_ub += t["ub_term"]  # conservative
-                if block_ub > theta - PRUNE_EPS:
-                    score = 0.0
-                    for t in live:
-                        if t["cur"] == pivot:
-                            if t["docs"] is None:
-                                load_block(t, t["bi"])
-                            # ensure cursor decoded at pivot position
-                            pi = t["pi"]
-                            score += float(t["scores"][pi])
-                    # heap decisions on ROUNDED scores so the retained set
-                    # matches the oracle's (round → rank → doc_id tie-break)
-                    score = round(score, SCORE_DECIMALS)
-                    if len(heap) < k:
-                        heapq.heappush(heap, (score, -pivot))
-                        if len(heap) == k:
-                            theta = heap[0][0]
-                    elif score > heap[0][0] or (
-                        score == heap[0][0] and -pivot > heap[0][1]
-                    ):
-                        heapq.heapreplace(heap, (score, -pivot))
-                        theta = heap[0][0]
-                for t in live:
-                    if t["cur"] == pivot:
-                        next_geq(t, pivot + 1)
-            else:
-                # advance all pre-pivot cursors to the pivot
-                for t in live[:pivot_idx]:
-                    if t["cur"] < pivot:
-                        next_geq(t, pivot)
-        if not heap:
-            return _empty_out()
-        docs = np.array([-d for _, d in heap], dtype=np.int64)
-        scores = np.array([s for s, _ in heap])
-        return _topk_rows(qid, docs, scores, k)
 
     return fn
 

@@ -23,7 +23,7 @@ def main(argv: list[str] | None = None) -> None:
         "--mode",
         default="wand",
         choices=[
-            "wand", "wand_pruned", "exhaustive", "wand_cursor",
+            "wand", "wand_pruned", "exhaustive",
             "shared", "shared_pruned", "auto",
             "fuzzy", "fuzzy2", "prefix", "and",
             "phrase", "phrase_shared", "proximity", "mixed", "mixed_prefix",

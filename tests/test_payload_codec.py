@@ -65,7 +65,7 @@ def test_zlib_index_rank_identical(spark, docs_small, index_small, tmp_path):
     def norm(df):
         return sorted(map(tuple, df.toPandas().values.tolist()))
 
-    for mode in ("exhaustive", "wand", "wand_cursor"):
+    for mode in ("exhaustive", "wand"):
         a = norm(search_topk(spark, index_small, REFERENCE_QUERIES, mode=mode))
         b = norm(search_topk(spark, zidx, REFERENCE_QUERIES, mode=mode))
         assert a == b, mode

@@ -59,10 +59,8 @@ def test_three_paths_rank_identical(spark, docs_small, index_small):
     ref = _norm(bm25_topk(spark, docs_small))
     ex = _norm(search_topk(spark, index_small, REFERENCE_QUERIES, mode="exhaustive"))
     wd = _norm(search_topk(spark, index_small, REFERENCE_QUERIES, mode="wand"))
-    wc = _norm(search_topk(spark, index_small, REFERENCE_QUERIES, mode="wand_cursor"))
     assert ex == ref
     assert wd == ref  # batched block-max pruning
-    assert wc == ref  # cursor (grenad-seek-loop) block-max WAND
 
 
 def test_python_oracle_agrees(spark, docs_small, index_small):
@@ -290,20 +288,6 @@ def test_search_topk_auto_matches_exhaustive(spark, index_small):
             search_topk_auto(spark, index_small, REFERENCE_QUERIES, k=10, prune_ratio_max=ratio)
         )
         assert got == ex and len(got) > 0, ratio
-
-
-def test_wand_cursor_guard_delegates_to_batched(spark, index_small, monkeypatch):
-    """The per-pivot-Python cursor WAND is quarantined: beyond
-    WAND_CURSOR_MAX_POSTINGS per group it must delegate to the vectorized
-    batched kernel with identical results (the public API can't pick an
-    O(docs) Python loop at scale)."""
-    import grenad_spark.query.search as S
-
-    ref = _norm(search_topk(spark, index_small, REFERENCE_QUERIES, k=10, mode="wand"))
-    # force EVERY group over the bound: all groups take the delegation path
-    monkeypatch.setattr(S, "WAND_CURSOR_MAX_POSTINGS", 0)
-    wc = _norm(search_topk(spark, index_small, REFERENCE_QUERIES, k=10, mode="wand_cursor"))
-    assert wc == ref and len(ref) > 0
 
 
 def test_resumed_build_launches_no_jobs(spark, docs_small, tmp_path):
