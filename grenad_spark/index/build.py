@@ -749,14 +749,13 @@ class IndexHandle:
         return self._table(spark, "segments")
 
     def segments_dataset(self):
-        """pyarrow dataset over segments/ for driver-local reads, or None
-        when the directory is not on the driver's filesystem. Memoized like
-        _table: the file listing and footers' schema are read once."""
+        """pyarrow dataset over segments/ for driver-local reads. Memoized
+        like _table: the file listing and footers' schema are read once."""
         if not hasattr(self, "_segments_ds"):
             import pyarrow.dataset as pads
 
             p = os.path.join(self.path, "segments")
-            self._segments_ds = pads.dataset(p, format="parquet") if os.path.isdir(p) else None
+            self._segments_ds = pads.dataset(p, format="parquet")
         return self._segments_ds
 
     def term_dict(self, spark: SparkSession) -> DataFrame:

@@ -25,7 +25,6 @@ ride in via the grouping DataFrame (broadcast-joined), not closures.
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -628,11 +627,7 @@ def _query_blocks_from_pairs(
     n_docs = float(index.n_docs)
     dfm = index.df_map(spark)
     if dfm is not None:
-        rows = [
-            (q, t, _driver_idf(n_docs, dfm[t]))
-            for q, t in qt
-            if t in dfm
-        ]
+        rows = _idf_rows(index, dfm, qt)
         if rows:
             # (query_id, idf) attach via LITERAL MAP expressions instead of a
             # broadcast hash join: building + shipping even a one-row
@@ -815,21 +810,25 @@ def _make_per_query(apply_fn):
     return fn
 
 
-def _serve_local(spark: SparkSession, index: IndexHandle, n_part: int) -> bool:
+def _serve_local(spark: SparkSession, index: IndexHandle, pairs: list[tuple]) -> bool:
     """Run a kernel call on the driver instead of in a Spark job?
 
-    Yes when the batch is one work-sized group (n_part == 1: the Spark plan
-    would be one single-threaded task over the same rows, so the driver does
-    the same work minus the job), the df map is held (idf comes from it),
-    segments/ is a directory on the driver's filesystem, and
-    GRENAD_SPARK_NO_LOCAL is unset. No threshold of its own:
-    TARGET_GROUP_POSTINGS, through _batch_groups, stays the one volume rule."""
-    return (
-        n_part == 1
-        and not os.environ.get("GRENAD_SPARK_NO_LOCAL")
-        and index.df_map(spark) is not None
-        and index.segments_dataset() is not None
-    )
+    Yes when the df map is held (idf and the volume estimate come from it)
+    and the batch's posting volume fits one TARGET_GROUP_POSTINGS group:
+    _batch_groups then plans one single-threaded task over the same rows,
+    so the driver does the same work minus the job. No threshold of its
+    own, and a 1-shard index or a 1-core session whose batch is bigger
+    than one group still scores in an executor task."""
+    est = _est_postings(spark, index, pairs)
+    return est is not None and est <= TARGET_GROUP_POSTINGS
+
+
+def _idf_rows(index: IndexHandle, dfm: dict, pairs: list[tuple[int, str]]) -> list[tuple[int, str, float]]:
+    """(query_id, term, idf) for each (query_id, term) pair, idf from the
+    driver df map; terms absent from the vocabulary score nothing and drop.
+    The one resolution rule of the Spark and driver-local plans."""
+    n_docs = float(index.n_docs)
+    return [(q, t, _driver_idf(n_docs, dfm[t])) for q, t in pairs if t in dfm]
 
 
 def _local_blocks(index: IndexHandle, terms: list[str], columns: list[str]) -> pd.DataFrame:
@@ -847,13 +846,9 @@ def _local_query_blocks(
     spark: SparkSession, index: IndexHandle, pairs: list[tuple[int, str]]
 ) -> pd.DataFrame:
     """_query_blocks_from_pairs on the driver: the block rows of each
-    (query_id, term) pair with the driver idf attached; terms absent from
-    the df map score nothing and drop, as in the literal-map attach."""
-    dfm = index.df_map(spark)
-    n_docs = float(index.n_docs)
+    (query_id, term) pair with the driver idf attached."""
     qt = pd.DataFrame(
-        [(q, t, _driver_idf(n_docs, dfm[t])) for q, t in pairs if t in dfm],
-        columns=["query_id", "term", "idf"],
+        _idf_rows(index, index.df_map(spark), pairs), columns=["query_id", "term", "idf"]
     )
     if qt.empty:
         return qt
@@ -971,12 +966,12 @@ def _search_from_pairs(
     else:
         raise ValueError(f"unknown mode {mode!r}")
 
-    n_queries = len({q for q, _ in pairs})
-    g, n_part = _batch_groups(spark, index, pairs)
-    if _serve_local(spark, index, n_part):
+    if _serve_local(spark, index, pairs):
         # the one task's work, on the driver: same rows, same kernel call
         pdf = _local_query_blocks(spark, index, pairs)
         return _rank_local(spark, _make_per_query(apply_fn)(pdf), kk)
+    n_queries = len({q for q, _ in pairs})
+    g, n_part = _batch_groups(spark, index, pairs)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     sel = blocks.select(
         "query_id",
@@ -1824,17 +1819,10 @@ def search_topk_shared(
     dfm = index.df_map(spark)
     if dfm is None:  # 10^9-term vocab: no driver idf map — per-query path
         return _search_from_pairs(spark, index, pairs, k, "wand")
-    n_docs = float(index.n_docs)
     avgdl = float(index.avgdl)
     codec = index.payload_codec
     kk = int(k)
-    # (query_id, term, idf) resolved driver-side; terms absent from the
-    # vocabulary score nothing and drop here
-    qinfo = [
-        (q, t, _driver_idf(n_docs, dfm[t]))
-        for q, t in pairs
-        if t in dfm
-    ]
+    qinfo = _idf_rows(index, dfm, pairs)
     terms = sorted({t for _, t, _ in qinfo})
     if not terms:
         return spark.createDataFrame([], _OUT_SCHEMA)
@@ -1884,9 +1872,9 @@ def search_topk_shared(
             return _empty_out()
         return pd.concat(outs, ignore_index=True)
 
-    g, n_part = _batch_groups(spark, index, pairs)
-    if not prune and _serve_local(spark, index, n_part):
+    if not prune and _serve_local(spark, index, pairs):
         return _rank_local(spark, fn(_local_blocks(index, terms, ["term", "n", "payload"])), kk)
+    g, n_part = _batch_groups(spark, index, pairs)
 
     seg = index.segments(spark).filter(isin("term", terms))
     if prune and "min_tf" in seg.columns:

@@ -2,19 +2,19 @@
 
 When a call's posting volume fits one kernel group, `search_topk` (wand,
 exhaustive) and `search_topk_shared(prune=False)` read the block rows with
-pyarrow and run the kernel on the driver; GRENAD_SPARK_NO_LOCAL=1 forces
-the Spark plan. Both branches must collect identical rows in identical
-order, ties included; a one-group call must run no Spark job, and a call
-sized to several groups must still plan the Spark kernel."""
+pyarrow and run the kernel on the driver; turning the `_serve_local` gate
+off forces the Spark plan. Both branches must collect identical rows in
+identical order, ties included; a one-group call must run no Spark job, and
+a call whose volume exceeds one group must still plan the Spark kernel."""
 
-import os
 import shutil
 from contextlib import contextmanager
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
+import grenad_spark.query.search as S
 from grenad_spark.index.build import IndexHandle, build_index
 from grenad_spark.query.search import search_topk, search_topk_auto, search_topk_shared
 
@@ -24,15 +24,14 @@ ABSENT = "zzabsent"
 
 @contextmanager
 def _no_local(on: bool):
-    old = os.environ.pop("GRENAD_SPARK_NO_LOCAL", None)
+    """Force the Spark plan (on=True) by turning the driver-local gate off."""
+    gate = S._serve_local
     if on:
-        os.environ["GRENAD_SPARK_NO_LOCAL"] = "1"
+        S._serve_local = lambda *a: False
     try:
         yield
     finally:
-        os.environ.pop("GRENAD_SPARK_NO_LOCAL", None)
-        if old is not None:
-            os.environ["GRENAD_SPARK_NO_LOCAL"] = old
+        S._serve_local = gate
 
 
 def _calls(spark, idx, queries, k):
@@ -70,41 +69,56 @@ def batch(draw):
 
 
 @given(corpus(), batch(), st.integers(1, 3), st.sampled_from([1, 3, 10]))
+# a vocabulary word the corpus lacks, spelled twice: the batch scores nothing
+@example(rows=[(d, "spark merge") for d in range(12)], queries=[(1, "slow slow")], n_shards=1, k=1)
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
 def test_local_equals_spark(spark, tmp_path_factory, rows, queries, n_shards, k):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path_factory.mktemp("loc") / "idx")
     idx = build_index(spark, docs, out, n_shards=n_shards, block_size=4, overwrite=True)
+    dfm = idx.df_map(spark)
     for qs in (queries, queries[:1], [(7, ABSENT)]):
+        # a batch with no term in the vocabulary scores nothing on either
+        # branch (shared returns before its gate), so only its rows compare
+        scored = any(t in dfm for _, text in qs for t in text.split())
         for name, call in _calls(spark, idx, qs, k).items():
             got = {}
             for forced in (False, True):
                 with _no_local(forced):
                     df = call()
                     got[forced] = [tuple(r) for r in df.collect()]
-                if name != "auto" and qs[0][1] != ABSENT:
+                if name != "auto" and scored:
                     assert ("LocalTableScan" in _plan(df)) != forced, (name, forced)
             assert got[False] == got[True], (name, qs)
 
 
-@pytest.fixture(scope="module")
-def multi_shard_index(spark, tmp_path_factory):
+def _build(spark, out, n_shards):
     rows = [(d, " ".join(VOCAB[(d * j) % len(VOCAB)] for j in range(1, 8))) for d in range(120)]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    out = str(tmp_path_factory.mktemp("loc_ms") / "idx")
-    return build_index(spark, docs, out, n_shards=4, block_size=8)
+    return build_index(spark, docs, out, n_shards=n_shards, block_size=8)
+
+
+@pytest.fixture(scope="module")
+def multi_shard_index(spark, tmp_path_factory):
+    return _build(spark, str(tmp_path_factory.mktemp("loc_ms") / "idx"), 4)
 
 
 QUERIES = [(1, "spark merge"), (2, "dup key value"), (3, "slow")]
 
 
-def test_several_groups_keep_the_spark_plan(spark, multi_shard_index, monkeypatch):
-    import grenad_spark.query.search as S
-
-    monkeypatch.setattr(S, "TARGET_GROUP_POSTINGS", 1)
-    for name, call in _calls(spark, multi_shard_index, QUERIES, 5).items():
-        plan = _plan(call())
-        assert "MapInPandas" in plan and "LocalTableScan" not in plan, (name, plan)
+def test_over_volume_calls_keep_the_spark_plan(spark, multi_shard_index, tmp_path, monkeypatch):
+    """A call bigger than one TARGET_GROUP_POSTINGS group scores in executor
+    tasks: several groups on a 4-shard index, and one task (n_part == 1) on
+    a 1-shard index, whose work still stays out of driver memory."""
+    for idx in (multi_shard_index, _build(spark, str(tmp_path / "one"), 1)):
+        want = {n: [tuple(r) for r in c().collect()] for n, c in _calls(spark, idx, QUERIES, 5).items()}
+        with monkeypatch.context() as m:
+            m.setattr(S, "TARGET_GROUP_POSTINGS", 1)
+            for name, call in _calls(spark, idx, QUERIES, 5).items():
+                df = call()
+                plan = _plan(df)
+                assert "MapInPandas" in plan and "LocalTableScan" not in plan, (idx.n_shards, name, plan)
+                assert [tuple(r) for r in df.collect()] == want[name], (idx.n_shards, name)
 
 
 def test_one_group_call_runs_no_job(spark, multi_shard_index):
@@ -134,7 +148,6 @@ def test_handle_open_loads_native_codec(spark, multi_shard_index, tmp_path, monk
 
     want = [tuple(r) for r in search_topk(spark, multi_shard_index, QUERIES, k=5).collect()]
     monkeypatch.delenv("GRENAD_SPARK_NO_NATIVE", raising=False)
-    monkeypatch.delenv("GRENAD_SPARK_NO_LOCAL", raising=False)
     monkeypatch.setenv("GRENAD_SPARK_NATIVE_DIR", str(tmp_path / "native"))
     monkeypatch.setattr(native, "_LIB", None)
     monkeypatch.setattr(native, "_TRIED", False)
