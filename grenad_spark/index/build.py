@@ -714,6 +714,7 @@ class IndexHandle:
     def __init__(self, path: str):
         self.path = path
         self._dfs: dict[str, DataFrame] = {}
+        self._datasets: dict = {}
         with open(os.path.join(path, "manifest.json")) as fh:
             self.manifest = json.load(fh)
         self.format_version: int = int(self.manifest.get("format_version", 0))
@@ -748,15 +749,16 @@ class IndexHandle:
     def segments(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "segments")
 
-    def segments_dataset(self):
-        """pyarrow dataset over segments/ for driver-local reads. Memoized
-        like _table: the file listing and footers' schema are read once."""
-        if not hasattr(self, "_segments_ds"):
+    def dataset(self, name: str):
+        """pyarrow dataset over the table `name` (segments, positions) for
+        driver-local reads. Memoized like _table: the file listing and the
+        footers' schema are read once."""
+        if name not in self._datasets:
             import pyarrow.dataset as pads
 
-            p = os.path.join(self.path, "segments")
-            self._segments_ds = pads.dataset(p, format="parquet")
-        return self._segments_ds
+            p = os.path.join(self.path, name)
+            self._datasets[name] = pads.dataset(p, format="parquet")
+        return self._datasets[name]
 
     def term_dict(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "term_dict")

@@ -35,16 +35,23 @@ from grenad_spark.functions.literals import isin, prefix_ranges
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
 from grenad_spark.index.positions import POS_BITS, decode_position_blocks
 from grenad_spark.query.bm25 import SCORE_DECIMALS
+from grenad_spark.query import search
 from grenad_spark.query.search import (
+    _BM25_ORDER,
+    _apply_per_query_shard,
     _batch_groups,
     _driver_idf,
+    _empty_result,
     _grouped_apply,
+    _local_blocks,
     _packed_in,
-    _qshard_col,
+    _rank_local,
     _tfpart,
 )
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
+# positions block columns (after idf is attached) the per-query kernels read
+_POS_COLS = ["term", "idf", "n", "first_doc", "header", "positions"]
 
 
 def _tokenize_phrases(queries: list[tuple[int, str]]) -> dict[int, list[str]]:
@@ -169,7 +176,7 @@ def phrase_match_pairs(
     downstream filters and negative-phrase exclusions consume."""
     phrases = {q: t for q, t in _tokenize_phrases(pairs).items() if t}
     if not phrases:
-        return spark.createDataFrame([], "query_id int, doc_id long")
+        return _empty_result(spark, "query_id int, doc_id long")
     n_docs = float(index.n_docs)
     dfm = index.df_map(spark)
     if dfm is not None:
@@ -178,20 +185,18 @@ def phrase_match_pairs(
             if all(t in dfm for t in toks)
         }
         if not phrases:
-            return spark.createDataFrame([], "query_id int, doc_id long")
+            return _empty_result(spark, "query_id int, doc_id long")
     qt = [
         (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
         for qid, toks in sorted(phrases.items())
         for t in sorted(set(toks))
     ]
     blocks = _positions_blocks(spark, index, n_docs, qt, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, qt, _POS_COLS,
         _make_phrase_kernel(phrases, float(index.avgdl), index.payload_codec),
         _OUT_SCHEMA,
-        _batch_groups(spark, index, qt)[1],
-    ))
+    )
     return per_shard.select("query_id", "doc_id")
 
 
@@ -244,7 +249,7 @@ def search_topk_phrase(
         else:
             pairs.extend((qid, t, float("nan")) for t in set(toks))
     if not pairs:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
     if prune_shards:
         terms_by_q: dict[int, set] = {}
@@ -287,7 +292,7 @@ def search_topk_phrase(
             attach_noop = len(surv) == len(grows)
         if surv is not None:
             if not surv:
-                return spark.createDataFrame([], _OUT_SCHEMA)
+                return _empty_result(spark, _OUT_SCHEMA)
             # attach_noop: every candidate group survives — serve unpruned
             if not attach_noop:
                 # survivor (query, shard) pairs come back as ONE packed-key
@@ -316,12 +321,10 @@ def search_topk_phrase(
                 .select("query_id", "shard")
             )
             blocks = blocks.join(F.broadcast(survivors), ["query_id", "shard"])
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
@@ -401,15 +404,13 @@ def search_topk_phrase_stopwords(
         else:
             pairs.extend((qid, t, float("nan")) for t in sorted(terms))
     if not pairs:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
         _OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
@@ -726,14 +727,12 @@ def search_topk_proximity(
         else:
             pairs.extend((qid, t, float("nan")) for t in set(toks))
     if not pairs:
-        return spark.createDataFrame([], _PROX_OUT_SCHEMA)
+        return _empty_result(spark, _PROX_OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_proximity_kernel(phrases, avgdl, codec), _PROX_OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.asc("proximity"), F.desc("score"), F.asc("doc_id")
     )
@@ -866,7 +865,7 @@ def search_topk_phrase_fresh(
     phrases = _tokenize_phrases(queries)
     phrases = {q: t for q, t in phrases.items() if t}
     if not phrases:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     terms = sorted({t for toks in phrases.values() for t in toks})
     codecs = [h.payload_codec for h in handles]
 
@@ -882,7 +881,7 @@ def search_topk_phrase_fresh(
 
     resolved = _resolve_live(spark, handles, paths, live_dir)
     if resolved is None:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     live, n_docs, avgdl = resolved
 
     decoded = pos_union.mapInPandas(
@@ -1068,12 +1067,10 @@ def _mixed_per_shard(
     if not pairs or not parsed:
         return None
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    return blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    return _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
 
 
 def search_topk_mixed(
@@ -1091,7 +1088,7 @@ def search_topk_mixed(
     full posting blocks, so free-term scoring needs no second scan)."""
     per_shard = _mixed_per_shard(spark, index, queries)
     if per_shard is None:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
@@ -1108,7 +1105,7 @@ def mixed_matches(spark: SparkSession, index, query: str) -> DataFrame:
     matches any doc holding >=1 query term."""
     per_shard = _mixed_per_shard(spark, index, [(1, query)])
     if per_shard is None:
-        return spark.createDataFrame([], "doc_id long")
+        return _empty_result(spark, "doc_id long")
     return per_shard.select("doc_id")
 
 
@@ -1246,7 +1243,7 @@ def search_topk_mixed_prefix(
         qid: pfl for qid, pfl in parsed0.items() if pfl[0] or pfl[1] or pfl[2]
     }
     if not parsed0:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     expansions = _prefix_term_dfs(
         spark, index, {p for _, _, p in parsed0.values() if p}, max_expansions
     )
@@ -1283,14 +1280,12 @@ def search_topk_mixed_prefix(
             pairs.extend((qid, t, float("nan")) for t in sorted(terms_q))
         parsed[qid] = (phrases_q, all_free)
     if not pairs or not parsed:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
@@ -1510,12 +1505,15 @@ def search_topk_phrase_shared(
     exchange exactly once (shuffle ∝ index slice, not queries × slice), and
     every phrase query is evaluated inside the kernel against the decoded
     shard. Requires the driver df map (vocabulary-gated, like
-    search_topk_shared); falls back to the per-query plan beyond it."""
+    search_topk_shared); falls back to the per-query plan beyond it. A
+    batch whose posting volume fits one kernel group (search._serve_local)
+    reads its position blocks with pyarrow and runs the same kernel on the
+    driver: no Spark job."""
     phrases = {
         q: t for q, t in _tokenize_phrases(queries).items() if t
     }
     if not phrases:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     dfm = index.df_map(spark)
     if dfm is None:
         return search_topk_phrase(spark, index, queries, k=k)
@@ -1528,22 +1526,24 @@ def search_topk_phrase_shared(
         if all(t in dfm for t in toks)  # OOV phrase term: can never match
     }
     if not phrases:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     terms = sorted({t for toks in phrases.values() for t in toks})
     idfs = {t: _driver_idf(n_docs, dfm[t]) for t in terms}
+    kernel = _make_phrase_shared_kernel(phrases, idfs, avgdl, codec)
+    pairs = [(q, t) for q, toks in phrases.items() for t in set(toks)]
+    cols = ["term", "n", "first_doc", "header", "positions"]
+    if search._serve_local(spark, index, pairs):
+        pdf = _local_blocks(index, "positions", terms, cols)
+        return _rank_local(spark, kernel(pdf), int(k), _BM25_ORDER, _OUT_SCHEMA)
     # work-sized groups of consecutive doc-disjoint shards, like the shared
     # posting path; the kernel sorts each term's blocks by first_doc, so
     # any union of them (a whole partition) is exact
-    g, n_part = _batch_groups(
-        spark, index, [(q, t) for q, toks in phrases.items() for t in set(toks)]
-    )
+    g, n_part = _batch_groups(spark, index, pairs)
     blocks = index.positions(spark).filter(isin("term", terms)).select(
-        (F.col("shard") / g).cast("int").alias("qshard"),
-        "term", "n", "first_doc", "header", "positions",
+        (F.col("shard") / g).cast("int").alias("qshard"), *cols
     )
     per_shard = _grouped_apply(
-        blocks, ["qshard"], _make_phrase_shared_kernel(phrases, idfs, avgdl, codec),
-        _OUT_SCHEMA, n_part, slice_groups=False,
+        blocks, ["qshard"], kernel, _OUT_SCHEMA, n_part, slice_groups=False
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (

@@ -55,13 +55,18 @@ from pyspark.sql.window import Window
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.index.positions import FIELD_BITS, FIELD_STRIDE, decode_position_blocks
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query.phrase import _PROX_INF, _pair_min_dist, _positions_blocks
+from grenad_spark.query import search
+from grenad_spark.query.phrase import _POS_COLS, _PROX_INF, _pair_min_dist, _positions_blocks
 from grenad_spark.query.search import (
+    _apply_groups,
+    _apply_per_query_shard,
     _batch_groups,
     _driver_idf,
-    _grouped_apply,
+    _empty_result,
     _levenshtein,
-    _qshard_col,
+    _local_blocks,
+    _local_relation,
+    _rank_local,
     _tfpart,
     _tokenize_queries,
     expand_fuzzy_queries,
@@ -196,15 +201,13 @@ def search_topk_attr_rule(
         else:
             pairs.extend((qid, t, float("nan")) for t in terms)
     if not pairs:
-        return spark.createDataFrame([], _ATTR_OUT_SCHEMA)
+        return _empty_result(spark, _ATTR_OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_attr_kernel(qterms, float(index.avgdl), index.payload_codec),
         _ATTR_OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.asc("attr"), F.desc("score"), F.asc("doc_id")
     )
@@ -339,21 +342,23 @@ def _make_ranked_kernel(
     return fn
 
 
-def _ranked_stats(
+def _ranked_rows(
     spark: SparkSession,
     index,
     queries: list[tuple[int, str]],
     max_edits: int = 1,
-) -> DataFrame:
+) -> DataFrame | pd.DataFrame:
     """Every rule statistic for every matching (query, doc) pair — the
     UNRANKED output of the composed kernel (one pruned positions scan, one
-    exchange), before any rule ORDER is applied. Both the default pipeline
-    and custom rule orders are windows over this same DataFrame; score is
-    already rounded to SCORE_DECIMALS."""
+    exchange), before any rule ORDER is applied; score is already rounded
+    to SCORE_DECIMALS. A pandas frame when the call is served on the driver
+    (search._serve_local: the derivation terms' position blocks read with
+    pyarrow, the same kernel over the same (query_id, shard DIV g) groups),
+    else the Spark plan."""
     _require_fielded(index)
     pairs0 = expand_fuzzy_queries(spark, index, queries, max_edits)
     if not pairs0:
-        return spark.createDataFrame([], _RANKED_OUT_SCHEMA)
+        return _empty_result(spark, _RANKED_OUT_SCHEMA)
     qslots: dict[int, list[str]] = {}
     for qid, qterm in _tokenize_queries(queries):
         qslots.setdefault(qid, []).append(qterm)
@@ -374,16 +379,37 @@ def _ranked_stats(
         for t in sorted(per_q)
     ]
     if not pairs:
-        return spark.createDataFrame([], _RANKED_OUT_SCHEMA)
+        return _empty_result(spark, _RANKED_OUT_SCHEMA)
+    kernel = _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec)
+    if search._serve_local(spark, index, pairs):
+        qt = pd.DataFrame(pairs, columns=["query_id", "term", "idf"])
+        cols = ["term", "shard", "n", "first_doc", "header", "positions"]
+        pdf = qt.merge(_local_blocks(index, "positions", sorted(set(qt["term"])), cols), on="term")
+        g, _ = _batch_groups(spark, index, pairs)
+        out = _apply_groups(pdf.assign(shard=pdf["shard"] // g), ["query_id", "shard"], kernel)
+        if out is None:
+            return _empty_result(spark, _RANKED_OUT_SCHEMA)
+        return out.assign(score=out["score"].round(SCORE_DECIMALS))
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
-        _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec),
-        _RANKED_OUT_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS, kernel, _RANKED_OUT_SCHEMA
+    )
     return per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
+
+
+def _ranked_stats(
+    spark: SparkSession,
+    index,
+    queries: list[tuple[int, str]],
+    max_edits: int = 1,
+) -> DataFrame:
+    """_ranked_rows as a DataFrame (a local relation when served on the
+    driver): both the default pipeline and custom rule orders are windows
+    over it."""
+    rows = _ranked_rows(spark, index, queries, max_edits)
+    if isinstance(rows, pd.DataFrame):
+        return _local_relation(spark, rows, _RANKED_OUT_SCHEMA)
+    return rows
 
 
 def search_topk_ranked(
@@ -400,28 +426,30 @@ def search_topk_ranked(
     Requires FIELD-AWARE positions (build_positions fields=[...]).
     Returns every rule's statistic so consumers (and the oracle) can verify
     each tier: (query_id, doc_id, words, typos, proximity, attribute,
-    exactness, score)."""
-    per_shard = _ranked_stats(spark, index, queries, max_edits)
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("words"), F.asc("typos"), F.asc("proximity"), F.asc("attribute"),
-        F.desc("exactness"), F.desc("score"), F.asc("doc_id"),
-    )
+    exactness, score). A call served on the driver ranks there too, in the
+    same order, and returns a local relation (no Spark job)."""
+    rows = _ranked_rows(spark, index, queries, max_edits)
+    if isinstance(rows, pd.DataFrame):
+        return _rank_local(spark, rows, int(k), _RANKED_ORDER, _RANKED_OUT_SCHEMA)
+    w = Window.partitionBy("query_id").orderBy(*_default_order_cols())
     return (
-        per_shard.withColumn("rn", F.row_number().over(w))
+        rows.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= int(k))
-        .select(
-            "query_id", "doc_id", "words", "typos", "proximity", "attribute",
-            "exactness", "score",
-        )
+        .select(*_RANKED_OUT_COLS)
     )
+
+
+# the default rule order: (stats column, ascending) pairs
+_RANKED_ORDER = [
+    ("words", False), ("typos", True), ("proximity", True), ("attribute", True),
+    ("exactness", False), ("score", False), ("doc_id", True),
+]
 
 
 def _default_order_cols():
     # built lazily — Column constructors need an active SparkContext
-    return [
-        F.desc("words"), F.asc("typos"), F.asc("proximity"), F.asc("attribute"),
-        F.desc("exactness"), F.desc("score"), F.asc("doc_id"),
-    ]
+    return [F.asc(c) if a else F.desc(c) for c, a in _RANKED_ORDER]
+
 
 _RANKED_OUT_COLS = [
     "query_id", "doc_id", "words", "typos", "proximity", "attribute",
@@ -963,10 +991,7 @@ def search_topk_score_threshold(
     scored = _with_score_components(
         stats, _qn_df(spark, queries), len(fields), max_edits
     ).filter(F.col("ranking_score") >= float(threshold))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("words"), F.asc("typos"), F.asc("proximity"), F.asc("attribute"),
-        F.desc("exactness"), F.desc("score"), F.asc("doc_id"),
-    )
+    w = Window.partitionBy("query_id").orderBy(*_default_order_cols())
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= int(k))

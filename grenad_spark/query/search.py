@@ -24,6 +24,7 @@ ride in via the grouping DataFrame (broadcast-joined), not closures.
 
 from __future__ import annotations
 
+import functools
 import math
 
 import numpy as np
@@ -86,7 +87,12 @@ def _qshard_col(spark: SparkSession, index: "IndexHandle"):
     re-sort blocks by first_doc — so relabeling is exact while cutting the
     pandas-group count (and its per-group Arrow→pandas overhead) by g×:
     a 12-query batch over 128 build shards went from 1536 kernel groups to
-    192 with no plan change elsewhere."""
+    192 with no plan change elsewhere.
+
+    g here comes from the core count. Its only callers are the grouped
+    applyInPandas sites (fields, derivations, geo, matches); every
+    _grouped_apply path takes g from _batch_groups instead
+    (_apply_per_query_shard), by the same exactness argument."""
     g, _ = _qshard_params(spark, index)
     return (F.col("shard") / g).cast("int").alias("shard")
 
@@ -332,13 +338,10 @@ def conjunctive_matches(
     codec = index.payload_codec
     nt = spark.createDataFrame(list(n_terms.items()), "query_id int, n_terms int")
 
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     return (
         per_shard.join(F.broadcast(nt), "query_id")
         .filter(F.col("hit_terms") == F.col("n_terms"))
@@ -380,13 +383,10 @@ def search_topk_words(
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     avgdl = float(index.avgdl)
     codec = index.payload_codec
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("hit_terms"), F.desc("score"), F.asc("doc_id")
     )
@@ -654,7 +654,8 @@ def _query_blocks_from_pairs(
 
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
-_OUT_ARROW = pa.schema([("query_id", pa.int32()), ("doc_id", pa.int64()), ("score", pa.float64())])
+# the BM25 rank order within a query: (column, ascending) pairs
+_BM25_ORDER = [("score", False), ("doc_id", True)]
 
 
 def search_topk(
@@ -793,19 +794,8 @@ def _make_per_query(apply_fn):
     slice is exactly the (query, qshard) group the kernel saw before."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return _empty_out()
-        pdf = pdf.sort_values("query_id", kind="stable")
-        q_np = pdf["query_id"].to_numpy()
-        qstarts = np.concatenate(
-            ([0], np.flatnonzero(q_np[1:] != q_np[:-1]) + 1, [q_np.size])
-        )
-        outs = []
-        for qi in range(qstarts.size - 1):
-            out = apply_fn(pdf.iloc[int(qstarts[qi]) : int(qstarts[qi + 1])])
-            if len(out):
-                outs.append(out)
-        return pd.concat(outs, ignore_index=True) if outs else _empty_out()
+        out = _apply_groups(pdf, ["query_id"], apply_fn)
+        return _empty_out() if out is None else out
 
     return fn
 
@@ -831,13 +821,15 @@ def _idf_rows(index: IndexHandle, dfm: dict, pairs: list[tuple[int, str]]) -> li
     return [(q, t, _driver_idf(n_docs, dfm[t])) for q, t in pairs if t in dfm]
 
 
-def _local_blocks(index: IndexHandle, terms: list[str], columns: list[str]) -> pd.DataFrame:
-    """The `term IN terms` block rows of segments/, read on the driver. The
-    files are range-written on term, so parquet min/max statistics prune the
-    read as they prune the Spark scan."""
+def _local_blocks(
+    index: IndexHandle, table: str, terms: list[str], columns: list[str]
+) -> pd.DataFrame:
+    """The `term IN terms` block rows of the index table `table` (segments
+    or positions), read on the driver. Parquet min/max term statistics
+    prune the read as they prune the Spark scan."""
     import pyarrow.dataset as pads
 
-    return index.segments_dataset().to_table(
+    return index.dataset(table).to_table(
         columns=columns, filter=pads.field("term").isin(terms)
     ).to_pandas()
 
@@ -853,22 +845,80 @@ def _local_query_blocks(
     if qt.empty:
         return qt
     cols = ["term", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"]
-    return qt.merge(_local_blocks(index, sorted(set(qt["term"])), cols), on="term")
+    return qt.merge(_local_blocks(index, "segments", sorted(set(qt["term"])), cols), on="term")
 
 
-def _rank_local(spark: SparkSession, out: pd.DataFrame, kk: int) -> DataFrame:
-    """_rank_topk on the driver: round, order by (query_id, score desc,
-    doc_id asc) — the row order the one-partition Spark plan collects —
-    and keep kk rows per query. The result is a local relation, so
-    collecting it runs no Spark job."""
+@functools.lru_cache(maxsize=None)
+def _arrow_schema(schema: str) -> pa.Schema:
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import _parse_datatype_string
+
+    return to_arrow_schema(_parse_datatype_string(schema))
+
+
+def _local_relation(spark: SparkSession, rows: pd.DataFrame | None, schema: str) -> DataFrame:
+    """A DataFrame over driver-held rows (None: no rows), built from an
+    Arrow table so it plans a LocalTableScan and collecting it runs no
+    Spark job. createDataFrame of an empty list or an empty pandas frame
+    goes through an RDD instead, and its collect runs one."""
+    arrow = _arrow_schema(schema)
+    if rows is None:
+        tbl = arrow.empty_table()
+    else:
+        tbl = pa.Table.from_pandas(rows, schema=arrow, preserve_index=False)
+    return spark.createDataFrame(tbl, schema)
+
+
+def _empty_result(spark: SparkSession, schema: str) -> DataFrame:
+    """The no-rows result of a call: a local relation, no Spark job."""
+    return _local_relation(spark, None, schema)
+
+
+def _rank_local(
+    spark: SparkSession,
+    out: pd.DataFrame,
+    kk: int,
+    order: list[tuple[str, bool]],
+    schema: str,
+) -> DataFrame:
+    """The top-k window on the driver: round the score, order each query's
+    rows by `order` ((column, ascending) pairs) after query_id — the row
+    order the one-partition Spark plan collects — and keep kk rows per
+    query, as a local relation of `schema`."""
     out = out.assign(score=out["score"].round(SCORE_DECIMALS)).sort_values(
-        ["query_id", "score", "doc_id"], ascending=[True, False, True], kind="stable"
+        ["query_id"] + [c for c, _ in order],
+        ascending=[True] + [a for _, a in order],
+        kind="stable",
     )
-    top = out.groupby("query_id", sort=False).head(kk)
-    # from an Arrow table: PySpark sends an EMPTY pandas frame through an
-    # RDD, whose collect runs a job
-    tbl = pa.Table.from_pandas(top, schema=_OUT_ARROW, preserve_index=False)
-    return spark.createDataFrame(tbl, _OUT_SCHEMA)
+    return _local_relation(spark, out.groupby("query_id", sort=False).head(kk), schema)
+
+
+def _apply_groups(pdf: pd.DataFrame, keys: list[str], fn, slice_groups: bool = True):
+    """Call `fn` once per distinct `keys` combination of `pdf` (stable
+    lexsort + boundary scan; the whole frame in one call when slice_groups
+    is False) and concatenate the outputs. None when nothing came out. The
+    per-group body of _grouped_apply, shared with the driver-local paths."""
+    if not len(pdf):
+        return None
+    if not slice_groups:
+        out = fn(pdf)
+        return out if out is not None and len(out) else None
+    arrs = [pdf[c].to_numpy() for c in keys]
+    order = np.lexsort(arrs[::-1])
+    pdf = pdf.take(order)
+    arrs = [a[order] for a in arrs]
+    change = np.zeros(len(pdf) - 1, dtype=bool)
+    for a in arrs:
+        change |= a[1:] != a[:-1]
+    starts = np.concatenate(([0], np.flatnonzero(change) + 1, [len(pdf)]))
+    outs = []
+    for i in range(starts.size - 1):
+        out = fn(pdf.iloc[int(starts[i]) : int(starts[i + 1])])
+        if out is not None and len(out):
+            outs.append(out)
+    if not outs:
+        return None
+    return pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
 
 
 def _grouped_apply(
@@ -917,33 +967,39 @@ def _grouped_apply(
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        if not len(pdf):
-            return
-        if not slice_groups:
-            out = fn(pdf)
-            if out is not None and len(out):
-                yield out
-            return
-        arrs = [pdf[c].to_numpy() for c in keys]
-        order = np.lexsort(arrs[::-1])
-        pdf = pdf.take(order)
-        arrs = [a[order] for a in arrs]
-        if len(pdf) > 1:
-            change = np.zeros(len(pdf) - 1, dtype=bool)
-            for a in arrs:
-                change |= a[1:] != a[:-1]
-            starts = np.concatenate(([0], np.flatnonzero(change) + 1, [len(pdf)]))
-        else:
-            starts = np.array([0, len(pdf)])
-        outs = []
-        for i in range(starts.size - 1):
-            out = fn(pdf.iloc[int(starts[i]) : int(starts[i + 1])])
-            if out is not None and len(out):
-                outs.append(out)
-        if outs:
-            yield pd.concat(outs, ignore_index=True) if len(outs) > 1 else outs[0]
+        out = _apply_groups(pdf, keys, fn, slice_groups)
+        if out is not None:
+            yield out
 
     return part.mapInPandas(mfn, out_schema)
+
+
+# block columns (after idf is attached) the BM25 kernels read; the typo
+# kernels read only the payloads
+_SCORE_COLS = ["term", "idf", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"]
+_PAYLOAD_COLS = ["term", "idf", "n", "payload"]
+
+
+def _apply_per_query_shard(
+    spark: SparkSession,
+    index: IndexHandle,
+    blocks: DataFrame,
+    pairs: list[tuple],
+    columns: list[str],
+    fn,
+    out_schema: str,
+) -> DataFrame:
+    """A per-(query_id, shard) kernel `fn` over `blocks` restricted to
+    `columns`, with g consecutive doc-disjoint build shards merged into one
+    group (shard DIV g, aliased back to `shard`) and g, n_part from the one
+    volume rule, _batch_groups over `pairs`. Exact by _qshard_col's
+    argument: kernels only group by the shard value and re-sort blocks by
+    first_doc."""
+    g, n_part = _batch_groups(spark, index, pairs)
+    sel = blocks.select(
+        "query_id", (F.col("shard") / g).cast("int").alias("shard"), *columns
+    )
+    return _grouped_apply(sel, ["query_id", "shard"], fn, out_schema, n_part)
 
 
 def _search_from_pairs(
@@ -969,15 +1025,12 @@ def _search_from_pairs(
     if _serve_local(spark, index, pairs):
         # the one task's work, on the driver: same rows, same kernel call
         pdf = _local_query_blocks(spark, index, pairs)
-        return _rank_local(spark, _make_per_query(apply_fn)(pdf), kk)
+        return _rank_local(spark, _make_per_query(apply_fn)(pdf), kk, _BM25_ORDER, _OUT_SCHEMA)
     n_queries = len({q for q, _ in pairs})
     g, n_part = _batch_groups(spark, index, pairs)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     sel = blocks.select(
-        "query_id",
-        (F.col("shard") / g).cast("int").alias("qshard"),
-        "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
+        "query_id", (F.col("shard") / g).cast("int").alias("qshard"), *_SCORE_COLS
     )
     # _grouped_apply: map-protocol kernel dispatch (~125 ms/job cheaper than
     # grouped applyInPandas); at n_part == 1 the narrow coalesce keeps the
@@ -1028,9 +1081,12 @@ def _search_pruned(
     argument as the in-UDF range mask, asserted in tests/test_wand_property
     and the bm25_topk_wand_pruned contract gate).
 
-    Pre-v2 indexes (no min_tf/max_dl block metadata) fall back to the
-    single-pass wand plan."""
-    if "min_tf" not in index.segments(spark).columns:
+    A call served on the driver (_serve_local) has no exchange for pass 1
+    to shrink, so it runs the single-pass wand plan there: the batched WAND
+    kernel derives its own θ and skips the blocks that cannot reach it, and
+    both plans are exact, so the rows are the same. Pre-v2 indexes (no
+    min_tf/max_dl block metadata) also serve single-pass."""
+    if _serve_local(spark, index, pairs) or "min_tf" not in index.segments(spark).columns:
         return _search_from_pairs(spark, index, pairs, k, "wand")
     kk = int(k)
     avgdl = float(index.avgdl)
@@ -1056,7 +1112,7 @@ def _search_pruned(
     if est_blocks is not None and est_blocks <= PACKED_IN_CAP:
         srows = survivors.select("query_id", "shard", "block_id").collect()
         if not srows:
-            return spark.createDataFrame([], _OUT_SCHEMA)
+            return _empty_result(spark, _OUT_SCHEMA)
         pruned = _packed_in(
             spark, blocks, srows, ["query_id", "shard", "block_id"], [23, 20, 20]
         )
@@ -1066,10 +1122,7 @@ def _search_pruned(
         )
     per_shard = _grouped_apply(
         pruned.select(
-            "query_id",
-            (F.col("shard") / g).cast("int").alias("qshard"),
-            "term", "idf", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "payload",
+            "query_id", (F.col("shard") / g).cast("int").alias("qshard"), *_SCORE_COLS
         ),
         ["qshard"],
         _make_per_query(_make_wand_batched(avgdl, kk, codec)),
@@ -1124,7 +1177,7 @@ def survivor_blocks(
                 terms_by_q.setdefault(q, []).append(t)
         all_terms = sorted({t for ts in terms_by_q.values() for t in ts})
         if not all_terms:
-            return spark.createDataFrame([], _SURVIVOR_SCHEMA)
+            return _empty_result(spark, _SURVIVOR_SCHEMA)
         n_docs = float(index.n_docs)
         idfs = {t: _driver_idf(n_docs, dfm[t]) for t in all_terms}
         sparse_terms = sorted(t for t in all_terms if dfm[t] <= sparse_df_max)
@@ -1162,7 +1215,7 @@ def survivor_blocks(
     sparse_pairs = [(q, t) for q, t in pairs if t in sparse]
     dense_pairs = [(q, t) for q, t in pairs if t not in sparse]
     if not sparse_pairs and not dense_pairs:
-        return spark.createDataFrame([], _SURVIVOR_SCHEMA)
+        return _empty_result(spark, _SURVIVOR_SCHEMA)
     meta = None
     if dense_pairs:
         md, _ = _query_blocks_from_pairs(spark, index, dense_pairs, columns=_META_COLS)
@@ -1208,9 +1261,13 @@ def search_topk_auto(
     an eager localCheckpoint (one materialization, nothing left cached);
     the denominator comes from term_dict's per-term n_blocks — a
     vocabulary-pruned lookup of |query terms| rows, not a metadata rescan.
+
+    Pass 1 runs only on the Spark path: a call served on the driver
+    (_serve_local) has no exchange for it to shrink, and serves the
+    single-pass plan there with no job (same rows — both plans are exact).
     Pre-v2 indexes serve single-pass directly."""
     pairs = _tokenize_queries(queries)
-    if "min_tf" not in index.segments(spark).columns:
+    if _serve_local(spark, index, pairs) or "min_tf" not in index.segments(spark).columns:
         return _search_from_pairs(spark, index, pairs, k, "wand")
     surv = survivor_blocks(spark, index, pairs, int(k)).localCheckpoint()
     n_surv = surv.count()
@@ -1751,7 +1808,7 @@ def search_topk_fresh(
 
     resolved = _resolve_live(spark, handles, paths, live_dir)
     if resolved is None:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     live, n_docs, avgdl = resolved
 
     decoded = seg_union.mapInPandas(_make_decode_partition(codecs), _DECODED_SCHEMA)
@@ -1813,6 +1870,10 @@ def search_topk_shared(
     never enter q's top-k even on a rounded tie. Requires v2 block metadata;
     silently serves unpruned otherwise.
 
+    A call whose posting volume fits one kernel group (_serve_local) runs on
+    the driver with no Spark job, pruned or not: pass 1 exists to keep
+    payload bytes out of the exchange, and a driver-local call has none.
+
     Requires the driver-held df map (vocab-gated); falls back to the
     per-query batched WAND path on huge vocabularies."""
     pairs = _tokenize_queries(queries)
@@ -1825,7 +1886,7 @@ def search_topk_shared(
     qinfo = _idf_rows(index, dfm, pairs)
     terms = sorted({t for _, t, _ in qinfo})
     if not terms:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         # decode each term ONCE: (docs, tfpart) — idf applied per query-term
@@ -1872,8 +1933,9 @@ def search_topk_shared(
             return _empty_out()
         return pd.concat(outs, ignore_index=True)
 
-    if not prune and _serve_local(spark, index, pairs):
-        return _rank_local(spark, fn(_local_blocks(index, terms, ["term", "n", "payload"])), kk)
+    if _serve_local(spark, index, pairs):
+        pdf = _local_blocks(index, "segments", terms, ["term", "n", "payload"])
+        return _rank_local(spark, fn(pdf), kk, _BM25_ORDER, _OUT_SCHEMA)
     g, n_part = _batch_groups(spark, index, pairs)
 
     seg = index.segments(spark).filter(isin("term", terms))
@@ -1888,7 +1950,7 @@ def search_topk_shared(
         if est_blocks <= PACKED_IN_CAP:
             srows = surv_df.select("shard", "block_id").collect()
             if not srows:
-                return spark.createDataFrame([], _OUT_SCHEMA)
+                return _empty_result(spark, _OUT_SCHEMA)
             seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20])
         else:
             surv = F.broadcast(
@@ -2274,7 +2336,7 @@ def search_topk_fuzzy_ranked(
     (block rows never duplicate per slot)."""
     pairs = expand_fuzzy_queries(spark, index, queries, max_edits)
     if not pairs:
-        return spark.createDataFrame([], _OUT_TYPO_SCHEMA)
+        return _empty_result(spark, _OUT_TYPO_SCHEMA)
     qslots: dict[int, list[str]] = {}
     for qid, qterm in _tokenize_queries(queries):
         qslots.setdefault(qid, []).append(qterm)
@@ -2289,16 +2351,14 @@ def search_topk_fuzzy_ranked(
             slot_meta.setdefault(qid, {})[term] = tl
     pairs = [(q, t) for q, t in pairs if t in slot_meta.get(q, {})]
     if not pairs:
-        return spark.createDataFrame([], _OUT_TYPO_SCHEMA)
+        return _empty_result(spark, _OUT_TYPO_SCHEMA)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     avgdl = float(index.avgdl)
     codec = index.payload_codec
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "payload"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _PAYLOAD_COLS,
         _make_typo_ranked_kernel(slot_meta, avgdl, codec), _OUT_TYPO_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
     )
@@ -2330,18 +2390,15 @@ def search_topk_page(
     top-k path, search_topk with k = offset + limit)."""
     pairs = _tokenize_queries(queries)
     if not pairs:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double, rank int, total_hits long"
+        return _empty_result(
+            spark, "query_id int, doc_id long, score double, rank int, total_hits long"
         )
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     cw = Window.partitionBy("query_id")
     return (
@@ -2512,17 +2569,13 @@ def search_topk_typo_settings(
     settings = settings or TypoSettings()
     qslots, slot_meta, pairs = typo_slot_expansion(spark, index, queries, settings)
     if not pairs:
-        return spark.createDataFrame([], _OUT_TYPO_SCHEMA)
+        return _empty_result(spark, _OUT_TYPO_SCHEMA)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "payload"
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
-        _make_typo_ranked_kernel(
-            slot_meta, float(index.avgdl), index.payload_codec
-        ),
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _PAYLOAD_COLS,
+        _make_typo_ranked_kernel(slot_meta, float(index.avgdl), index.payload_codec),
         _OUT_TYPO_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
     )
@@ -2553,16 +2606,13 @@ def search_topk_filtered(
     (query_id, doc_id, score)."""
     pairs = _tokenize_queries(queries)
     if not pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return _empty_result(spark, "query_id int, doc_id long, score double")
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     allowed = docs.filter(F.expr(filter_sql)).select("doc_id")
     j = per_shard.join(allowed, "doc_id")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
@@ -2601,7 +2651,7 @@ def search_topk_synonyms(
                 seen.add((qid, t))
                 pairs.append((qid, t))
     if not pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return _empty_result(spark, "query_id int, doc_id long, score double")
     return _search_from_pairs(spark, index, pairs, k, mode)
 
 
@@ -2686,8 +2736,8 @@ def search_topk_stopwords(
         if toks:
             filtered.append((qid, " ".join(toks)))
     if not filtered:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, hit_terms int, score double"
+        return _empty_result(
+            spark, "query_id int, doc_id long, hit_terms int, score double"
         )
     return search_topk_words(spark, index, filtered, k=k)
 
@@ -2769,26 +2819,20 @@ def search_topk_negative(
                 seen.add((qid, t, True))
                 neg_pairs.append((qid, t))
     if not pos_pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return _empty_result(spark, "query_id int, doc_id long, score double")
     avgdl = float(index.avgdl)
     codec = index.payload_codec
     blocks, _ = _query_blocks_from_pairs(spark, index, pos_pairs)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pos_pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-        _batch_groups(spark, index, pos_pairs)[1],
-    ))
+    )
     if neg_pairs:
         nblocks, _ = _query_blocks_from_pairs(spark, index, neg_pairs)
-        excluded = nblocks.select(
-            "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "payload",
-        ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+        excluded = _apply_per_query_shard(
+            spark, index, nblocks, neg_pairs, _SCORE_COLS,
             _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-            _batch_groups(spark, index, neg_pairs)[1],
-        )).select("query_id", "doc_id")
+        ).select("query_id", "doc_id")
         per_shard = per_shard.join(excluded, ["query_id", "doc_id"], "left_anti")
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -2903,28 +2947,22 @@ def search_topk_negative_phrases(
         for p in sorted(set(phrases)):
             ph_pairs.append((qid, p))
     if not pos_pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return _empty_result(spark, "query_id int, doc_id long, score double")
     avgdl = float(index.avgdl)
     codec = index.payload_codec
     blocks, _ = _query_blocks_from_pairs(spark, index, pos_pairs)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pos_pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-        _batch_groups(spark, index, pos_pairs)[1],
-    ))
+    )
     exclusions: list[DataFrame] = []
     if neg_pairs:
         nblocks, _ = _query_blocks_from_pairs(spark, index, neg_pairs)
         exclusions.append(
-            nblocks.select(
-                "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc",
-                "last_doc", "max_tf", "min_dl", "payload",
-            ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+            _apply_per_query_shard(
+                spark, index, nblocks, neg_pairs, _SCORE_COLS,
                 _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-                _batch_groups(spark, index, neg_pairs)[1],
-            )).select("query_id", "doc_id")
+            ).select("query_id", "doc_id")
         )
     if ph_pairs:
         # phrase ids collide across queries only if the same qid repeats a
@@ -3103,18 +3141,15 @@ def _matched_prefix_topk(
     pairs and a (query, term → slot) drop-ORDER map (slot 0 = dropped
     last), rank docs by longest gap-free leading slot run, BM25, doc_id."""
     if not pairs:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, matched_prefix int, score double"
+        return _empty_result(
+            spark, "query_id int, doc_id long, matched_prefix int, score double"
         )
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    matches = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).transform(lambda _d: _grouped_apply(_d, ["query_id", "shard"],
+    matches = _apply_per_query_shard(
+        spark, index, blocks, pairs, _SCORE_COLS,
         _make_term_match_rows(float(index.avgdl), index.payload_codec),
         _TERM_MATCH_SCHEMA,
-        _batch_groups(spark, index, pairs)[1],
-    ))
+    )
     slot_df = spark.createDataFrame(slot_rows, "query_id int, term string, slot int")
     scores = matches.groupBy("query_id", "doc_id").agg(F.sum("s").alias("score"))
     slots = (
@@ -3161,8 +3196,8 @@ def search_topk_matching_frequency(
     score)."""
     pairs = _tokenize_queries(queries)
     if not pairs:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, matched_prefix int, score double"
+        return _empty_result(
+            spark, "query_id int, doc_id long, matched_prefix int, score double"
         )
     terms = sorted({t for _, t in pairs})
     dfm = index.df_map(spark)
@@ -3366,8 +3401,8 @@ def search_topk_highlight(
         if ts:
             qrows.append((qid, ts))
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double, formatted string"
+        return _empty_result(
+            spark, "query_id int, doc_id long, score double, formatted string"
         )
     qdf = spark.createDataFrame(qrows, "query_id int, qterms array<string>")
     pre, post = F.lit(pre_tag), F.lit(post_tag)
@@ -3458,8 +3493,8 @@ def search_topk_crop(
         if ts:
             qrows.append((qid, ts))
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id long, score double, cropped string"
+        return _empty_result(
+            spark, "query_id int, doc_id long, score double, cropped string"
         )
     qdf = spark.createDataFrame(qrows, "query_id int, qterms array<string>")
     half = (int(crop_length) - 1) // 2

@@ -1,14 +1,17 @@
-"""One-group BM25 calls served on the driver vs through Spark.
+"""One-group batch calls served on the driver vs through Spark.
 
-When a call's posting volume fits one kernel group, `search_topk` (wand,
-exhaustive) and `search_topk_shared(prune=False)` read the block rows with
-pyarrow and run the kernel on the driver; turning the `_serve_local` gate
-off forces the Spark plan. Both branches must collect identical rows in
-identical order, ties included; a one-group call must run no Spark job, and
-a call whose volume exceeds one group must still plan the Spark kernel."""
+When a call's posting volume fits one kernel group, every batch serving
+path — `search_topk` (wand, exhaustive, wand_pruned), `search_topk_auto`,
+`search_topk_shared` (pruned or not), `search_topk_phrase_shared` and
+`search_topk_ranked` — reads its block rows with pyarrow and runs its
+kernel on the driver; turning the `_serve_local` gate off forces the Spark
+plan. Both branches must collect identical rows in identical order, ties
+included; a one-group call must run no Spark job, and a call whose volume
+exceeds one group must still plan the Spark kernel."""
 
 import shutil
 from contextlib import contextmanager
+from functools import partial
 
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -16,6 +19,9 @@ from hypothesis import strategies as st
 
 import grenad_spark.query.search as S
 from grenad_spark.index.build import IndexHandle, build_index
+from grenad_spark.index.positions import build_positions
+from grenad_spark.query.phrase import search_topk_phrase_shared
+from grenad_spark.query.ranked import search_topk_ranked
 from grenad_spark.query.search import search_topk, search_topk_auto, search_topk_shared
 
 VOCAB = ["spark", "merge", "sort", "dup", "key", "value", "fast", "slow", "grenad"]
@@ -38,9 +44,27 @@ def _calls(spark, idx, queries, k):
     return {
         "wand": lambda: search_topk(spark, idx, queries, k=k, mode="wand"),
         "exhaustive": lambda: search_topk(spark, idx, queries, k=k, mode="exhaustive"),
+        "wand_pruned": lambda: search_topk(spark, idx, queries, k=k, mode="wand_pruned"),
         "shared": lambda: search_topk_shared(spark, idx, queries, k=k),
+        "shared_pruned": lambda: search_topk_shared(spark, idx, queries, k=k, prune=True),
         "auto": lambda: search_topk_auto(spark, idx, queries, k=k),
+        "phrase_shared": lambda: search_topk_phrase_shared(spark, idx, queries, k=k),
+        "ranked": lambda: search_topk_ranked(spark, idx, queries, k=k),
     }
+
+
+def _index(spark, rows, out, n_shards, block_size):
+    """An index over (doc_id, text) rows with FIELD-AWARE positions: the
+    first two tokens of each text are its title, the rest its body."""
+    fielded = []
+    for d, text in rows:
+        toks = text.split()
+        fielded.append((d, " ".join(toks[:2]), " ".join(toks[2:]), text))
+    docs = spark.createDataFrame(fielded, "doc_id long, title string, body string, text string")
+    build_index(spark, docs.select("doc_id", "text"), out, n_shards=n_shards,
+                block_size=block_size, overwrite=True)
+    build_positions(spark, docs, out, fields=["title", "body"], block_size=block_size)
+    return IndexHandle(out)  # a fresh handle reads the fielded manifest
 
 
 def _plan(df) -> str:
@@ -73,29 +97,29 @@ def batch(draw):
 @example(rows=[(d, "spark merge") for d in range(12)], queries=[(1, "slow slow")], n_shards=1, k=1)
 @settings(max_examples=5, deadline=None, suppress_health_check=list(HealthCheck))
 def test_local_equals_spark(spark, tmp_path_factory, rows, queries, n_shards, k):
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path_factory.mktemp("loc") / "idx")
-    idx = build_index(spark, docs, out, n_shards=n_shards, block_size=4, overwrite=True)
-    dfm = idx.df_map(spark)
+    idx = _index(spark, rows, out, n_shards, 4)
     for qs in (queries, queries[:1], [(7, ABSENT)]):
-        # a batch with no term in the vocabulary scores nothing on either
-        # branch (shared returns before its gate), so only its rows compare
-        scored = any(t in dfm for _, text in qs for t in text.split())
         for name, call in _calls(spark, idx, qs, k).items():
             got = {}
             for forced in (False, True):
                 with _no_local(forced):
                     df = call()
                     got[forced] = [tuple(r) for r in df.collect()]
-                if name != "auto" and scored:
-                    assert ("LocalTableScan" in _plan(df)) != forced, (name, forced)
+                # a call that returns rows shows its branch in its plan (one
+                # that scores nothing may return before the gate, or after
+                # a pass 1 that keeps no block, with an empty local relation)
+                if got[forced]:
+                    plan = _plan(df)
+                    assert "MapInPandas" in plan if forced else plan.startswith(
+                        "LocalTableScan"
+                    ), (name, forced, plan)
             assert got[False] == got[True], (name, qs)
 
 
 def _build(spark, out, n_shards):
     rows = [(d, " ".join(VOCAB[(d * j) % len(VOCAB)] for j in range(1, 8))) for d in range(120)]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    return build_index(spark, docs, out, n_shards=n_shards, block_size=8)
+    return _index(spark, rows, out, n_shards, 8)
 
 
 @pytest.fixture(scope="module")
@@ -103,7 +127,7 @@ def multi_shard_index(spark, tmp_path_factory):
     return _build(spark, str(tmp_path_factory.mktemp("loc_ms") / "idx"), 4)
 
 
-QUERIES = [(1, "spark merge"), (2, "dup key value"), (3, "slow")]
+QUERIES = [(1, "dup key value"), (2, "spark merge"), (3, "slow")]
 
 
 def test_over_volume_calls_keep_the_spark_plan(spark, multi_shard_index, tmp_path, monkeypatch):
@@ -121,21 +145,60 @@ def test_over_volume_calls_keep_the_spark_plan(spark, multi_shard_index, tmp_pat
                 assert [tuple(r) for r in df.collect()] == want[name], (idx.n_shards, name)
 
 
+def _job_free(spark, group, call):
+    """(rows, plan, job ids) of one call and its collect() under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, "one-group call must be job-free")
+    try:
+        df = call()
+        rows = df.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    return rows, _plan(df), list(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_one_group_call_runs_no_job(spark, multi_shard_index):
     idx = multi_shard_index
     idx.df_map(spark)  # the handle's driver map loads once, outside the group
-    sc = spark.sparkContext
-    for name in ("wand", "exhaustive", "shared"):
-        for qs in (QUERIES, QUERIES[:1]):
-            group = f"local-{name}-{len(qs)}"
-            sc.setJobGroup(group, "one-group call must be job-free")
-            try:
-                df = _calls(spark, idx, qs, 5)[name]()
-                rows = df.collect()
-            finally:
-                sc.setJobGroup(None, None)
-            assert rows and _plan(df).startswith("LocalTableScan"), (name, _plan(df))
-            assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], name
+    for qs in (QUERIES, QUERIES[:1]):
+        for name, call in _calls(spark, idx, qs, 5).items():
+            rows, plan, jobs = _job_free(spark, f"local-{name}-{len(qs)}", call)
+            assert rows and plan.startswith("LocalTableScan"), (name, plan)
+            assert jobs == [], name
+
+
+def test_out_of_vocabulary_batch_runs_no_job(spark, multi_shard_index):
+    """A batch with no term in the vocabulary returns an empty local
+    relation before any plan is built: no job, Spark path or not."""
+    idx = multi_shard_index
+    idx.df_map(spark)
+    qs = [(1, ABSENT), (2, f"{ABSENT} zzother")]
+    calls = _calls(spark, idx, qs, 5)
+    for forced in (False, True):
+        with _no_local(forced):
+            for name in ("shared", "shared_pruned", "phrase_shared", "ranked"):
+                rows, plan, jobs = _job_free(spark, f"oov-{name}-{forced}", calls[name])
+                assert rows == [] and plan.startswith("LocalTableScan"), (name, plan)
+                assert jobs == [], (name, forced)
+
+
+def test_over_volume_auto_keeps_the_two_pass_plan(spark, tmp_path, monkeypatch):
+    """On a corpus where pass 1 prunes (a rare term in the first docs of
+    every shard, next to one in every doc), an auto call bigger than one
+    group still runs pass 1 and serves the two-pass plan: the survivors
+    come back as a packed-key IN filter."""
+    rows = [(d, "common rare" if d % 100 < 3 else "common filler") for d in range(400)]
+    idx = _index(spark, rows, str(tmp_path / "prune"), 4, 8)
+    qs = [(1, "common rare")]
+    want = [tuple(r) for r in search_topk(spark, idx, qs, k=3, mode="exhaustive").collect()]
+    monkeypatch.setattr(S, "TARGET_GROUP_POSTINGS", 1)
+    # every term dense (metadata-only pass 1): at this corpus size every df
+    # sits under SPARSE_DF_MAX, and sparse blocks always ship
+    monkeypatch.setattr(S, "survivor_blocks", partial(S.survivor_blocks, sparse_df_max=0))
+    df = search_topk_auto(spark, idx, qs, k=3)
+    plan = _plan(df)
+    assert "MapInPandas" in plan and "shiftleft" in plan, plan
+    assert [tuple(r) for r in df.collect()] == want and len(want) == 3
 
 
 @pytest.mark.skipif(shutil.which("gcc") is None, reason="no C compiler")

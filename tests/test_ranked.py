@@ -199,13 +199,16 @@ def test_ranked_oov_queries_empty(spark, fielded_index):
     assert search_topk_attr_rule(spark, idx, [(1, "alpha qqqqqqqq")], k=5).count() == 0
 
 
-def test_ranked_plan_shape(spark, fielded_index):
+def test_ranked_plan_shape(spark, fielded_index, monkeypatch):
     """The composed pipeline keeps the house serving-plan shape: the
     positions scan carries a pushed In(term) filter over the expansion set,
     scans ONLY the positions table, and has exactly one shuffle exchange
-    into the kernel (plus the top-k window's)."""
+    into the kernel (plus the top-k window's). A one-group call is served
+    on the driver, so the driver-local gate is turned off here."""
+    import grenad_spark.query.search as S
     from grenad_spark.query.ranked import search_topk_ranked
 
+    monkeypatch.setattr(S, "_serve_local", lambda *a: False)
     idx, _rows = fielded_index
     df = search_topk_ranked(spark, idx, [(1, "alpha beta")], k=10)
     plan = df._jdf.queryExecution().executedPlan().toString()
