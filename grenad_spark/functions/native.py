@@ -179,7 +179,8 @@ def encode(vals: np.ndarray) -> bytes | None:
     v = np.ascontiguousarray(vals, dtype=np.uint64)
     if v.size == 0:
         return b""
-    buf = np.empty(v.size * 10, dtype=np.uint8)
+    # every value fits in the widest value's length (≤ 10 bytes for a u64)
+    buf = np.empty(v.size * max(1, -(-int(v.max()).bit_length() // 7)), dtype=np.uint8)
     cnt = L.vb_encode(
         v.ctypes.data_as(ctypes.POINTER(ctypes.c_uint64)), v.size,
         buf.ctypes.data_as(ctypes.POINTER(ctypes.c_uint8)),

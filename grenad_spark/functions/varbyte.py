@@ -101,76 +101,150 @@ def varbyte_decode(data: bytes) -> np.ndarray:
 # posting blocks (strided: doc gap + per-posting int columns)
 # ---------------------------------------------------------------------------
 
-def _interleave(doc_ids: np.ndarray, cols: list[np.ndarray], block_size: int = BLOCK_SIZE) -> np.ndarray:
-    n = doc_ids.size
-    stride = 1 + len(cols)
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = doc_ids[0]
-    gaps[1:] = np.diff(doc_ids).astype(np.uint64)
-    starts = np.arange(0, n, block_size)
-    gaps[starts] = doc_ids[starts].astype(np.uint64)  # block restart points
-    flat = np.empty(stride * n, dtype=np.uint64)
-    flat[0::stride] = gaps
-    for i, c in enumerate(cols):
-        flat[i + 1 :: stride] = c.astype(np.uint64)
-    return flat
+def _slice_binary(buf: bytes, offsets: np.ndarray) -> np.ndarray:
+    """Object array of the byte strings buf[offsets[i]:offsets[i+1]]: one
+    Arrow binary column over the shared buffer, no per-slice Python."""
+    import pyarrow as pa
+
+    arr = pa.Array.from_buffers(
+        pa.large_binary(),
+        offsets.size - 1,
+        [None, pa.py_buffer(offsets.astype(np.int64)), pa.py_buffer(buf)],
+    )
+    return arr.to_numpy(zero_copy_only=False)
 
 
-def encode_posting_blocks(
-    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, block_size: int = BLOCK_SIZE
-) -> list[tuple[int, int, int, int, int, int, int, int, bytes]]:
-    """Encode one term's postings as independent per-block payloads.
+def _byte_offsets(lens: np.ndarray, cuts: np.ndarray) -> np.ndarray:
+    """Byte offsets of the value runs that start at `cuts` (plus the end),
+    given each value's encoded length."""
+    cum = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=cum[1:])
+    return np.append(cum[cuts], cum[-1])
 
-    Returns [(n, first_doc, last_doc, max_tf, min_dl, min_tf, max_dl, sum_tf,
-    payload), ...] in doc order. max_tf + min_dl give the block-max WAND
-    UPPER bound: the BM25 tf-part is increasing in tf and decreasing in dl,
-    so score_ub(block) = idf * tfpart(max_tf, min_dl) dominates every doc in
+
+def encode_blocks(
+    doc_ids: np.ndarray,
+    tfs: np.ndarray,
+    dls: np.ndarray,
+    group_start: np.ndarray | None = None,
+    block_size: int = BLOCK_SIZE,
+    positions: np.ndarray | None = None,
+    payload_codec: str = "none",
+) -> dict[str, np.ndarray]:
+    """Encode the postings of many groups as independent blocks, in one
+    vectorized pass (grenad's write_chunk → BlockWriter stream,
+    src/sorter.rs:541-561 and src/block_writer.rs:95-134).
+
+    Postings are one row per (group, doc), grouped and doc-ordered;
+    group_start[i] is True at each group's first posting (None = one
+    group). Within a group doc_ids must be strictly increasing (the
+    Writer::insert key-order assertion, src/block_writer.rs:109 — violated
+    input is a build bug, so InvalidKeyOrder); across a group boundary they
+    may drop. A block starts wherever a posting's index within its group is
+    a multiple of block_size, so block_id restarts at 0 per group.
+
+    Steps: one gap/tf/dl interleave whose gap restarts (absolute doc) at
+    every block start, ONE varbyte_encode call, block metadata by reduceat,
+    and the payload column sliced from the single buffer by byte offsets.
+    positions (flat, doc-major, Σ tfs values) adds one position-delta pass
+    — absolute at each doc's first occurrence, so blocks decode
+    independently — split at each block's first occurrence. Only a
+    non-"none" payload_codec runs a per-block compress_payload loop.
+
+    Returns per-block columns: start (index of the block's first posting),
+    block_id, n, first_doc, last_doc, max_tf, min_dl, min_tf, max_dl,
+    sum_tf, payload (object array of bytes) and, given positions,
+    positions. max_tf + min_dl give the block-max WAND UPPER bound: the
+    BM25 tf-part is increasing in tf and decreasing in dl, so
+    score_ub(block) = idf * tfpart(max_tf, min_dl) dominates every doc in
     the block (grenad block footer metadata analog,
     src/block_writer.rs:126-134). min_tf + max_dl give the dual LOWER bound
     — score_lb(block) = idf * tfpart(min_tf, max_dl) is GUARANTEED by every
     doc in the block, which is what lets the serving plan compute a valid
     top-k threshold θ from metadata alone and prune blocks BEFORE their
     payloads cross the shuffle (query/search.py metadata prune pass).
-    doc_ids must be strictly increasing (Writer::insert key-order assertion,
-    src/block_writer.rs:109 — violated input is a build bug, so we assert).
     """
     doc_ids = np.asarray(doc_ids, dtype=np.int64)
     tfs = np.asarray(tfs, dtype=np.int64)
     dls = np.asarray(dls, dtype=np.int64)
     n = doc_ids.size
-    if n == 0:
-        return []
-    if n > 1 and not (np.diff(doc_ids) > 0).all():
+    if group_start is None:
+        group_start = np.zeros(n, dtype=bool)
+        group_start[:1] = True
+    if n > 1 and not ((doc_ids[1:] > doc_ids[:-1]) | group_start[1:]).all():
         from grenad_spark.errors import InvalidKeyOrder
 
         raise InvalidKeyOrder("doc_ids must be strictly increasing")
-    flat = _interleave(doc_ids, [tfs, dls], block_size)
-    lens = varbyte_lengths(flat)
-    byte_cum = np.concatenate(([0], np.cumsum(lens)))
-    payload = varbyte_encode(flat)
-    starts = np.arange(0, n, block_size)
-    ends = np.minimum(starts + block_size, n)
-    bstart = byte_cum[STRIDE * starts]
-    bend = np.append(bstart[1:], byte_cum[-1])
-    max_tf = np.maximum.reduceat(tfs, starts)
-    min_dl = np.minimum.reduceat(dls, starts)
-    min_tf = np.minimum.reduceat(tfs, starts)
-    max_dl = np.maximum.reduceat(dls, starts)
-    sum_tf = np.add.reduceat(tfs, starts)
-    return [
-        (
-            int(ends[i] - starts[i]),
-            int(doc_ids[starts[i]]),
-            int(doc_ids[ends[i] - 1]),
-            int(max_tf[i]),
-            int(min_dl[i]),
-            int(min_tf[i]),
-            int(max_dl[i]),
-            int(sum_tf[i]),
-            payload[int(bstart[i]) : int(bend[i])],
+    group_first = np.flatnonzero(group_start)
+    in_group = np.arange(n) - group_first[np.cumsum(group_start) - 1]
+    starts = np.flatnonzero(in_group % block_size == 0)
+    ends = np.append(starts[1:], n) if n else starts
+    flat = np.empty((n, STRIDE), dtype=np.int64)
+    flat[:, 0] = doc_ids
+    flat[1:, 0] -= doc_ids[:-1]
+    flat[starts, 0] = doc_ids[starts]  # block restart points
+    flat[:, 1] = tfs
+    flat[:, 2] = dls
+    flat = flat.ravel().view(np.uint64)
+    offsets = _byte_offsets(
+        varbyte_lengths(flat).reshape(n, STRIDE).sum(axis=1), starts
+    )
+    cols = {
+        "start": starts,
+        "block_id": in_group[starts] // block_size,
+        "n": ends - starts,
+        "first_doc": doc_ids[starts],
+        "last_doc": doc_ids[ends - 1],
+        "max_tf": np.maximum.reduceat(tfs, starts),
+        "min_dl": np.minimum.reduceat(dls, starts),
+        "min_tf": np.minimum.reduceat(tfs, starts),
+        "max_dl": np.maximum.reduceat(dls, starts),
+        "sum_tf": np.add.reduceat(tfs, starts),
+        "payload": _slice_binary(varbyte_encode(flat), offsets),
+    }
+    del flat
+    if positions is not None:
+        positions = np.asarray(positions)
+        occ_starts = np.zeros(n, dtype=np.int64)
+        np.cumsum(tfs[:-1], out=occ_starts[1:])
+        vals = positions.astype(np.int64)
+        vals[1:] -= positions[:-1]
+        vals[occ_starts] = positions[occ_starts]  # per-doc restart points
+        vals = vals.view(np.uint64)
+        offsets = _byte_offsets(varbyte_lengths(vals), occ_starts[starts])
+        cols["positions"] = _slice_binary(varbyte_encode(vals), offsets)
+    if payload_codec != "none":
+        for c in ("payload", "positions"):
+            if c in cols:
+                cols[c] = np.array(
+                    [compress_payload(p, payload_codec) for p in cols[c]],
+                    dtype=object,
+                )
+    return cols
+
+
+def encode_posting_blocks(
+    doc_ids: np.ndarray, tfs: np.ndarray, dls: np.ndarray, block_size: int = BLOCK_SIZE
+) -> list[tuple[int, int, int, int, int, int, int, int, bytes]]:
+    """Encode one term's postings as independent per-block payloads — the
+    one-group call of encode_blocks (which documents the layout, metadata
+    and key-order contract).
+
+    Returns [(n, first_doc, last_doc, max_tf, min_dl, min_tf, max_dl,
+    sum_tf, payload), ...] in doc order; block_id is the list index.
+    """
+    cols = encode_blocks(doc_ids, tfs, dls, block_size=block_size)
+    return list(
+        zip(
+            *(
+                cols[c].tolist()
+                for c in (
+                    "n", "first_doc", "last_doc", "max_tf", "min_dl",
+                    "min_tf", "max_dl", "sum_tf", "payload",
+                )
+            )
         )
-        for i in range(starts.size)
-    ]
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from grenad_spark.functions import native
 from grenad_spark.functions.tokenize import term_doc_tf, tokens_col
-from grenad_spark.functions.varbyte import encode_posting_blocks
 
 SEGMENT_SCHEMA = (
     "term string, shard int, block_id int, n int, first_doc long, last_doc long, "
@@ -86,6 +85,43 @@ def _make_encode_stream(
     return fn
 
 
+def _partition_rows(batches) -> "pd.DataFrame | None":
+    """One shuffle partition as one frame (None when it holds no rows)."""
+    pdfs = list(batches)
+    if not pdfs:
+        return None
+    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    return pdf if len(pdf) else None
+
+
+def _doc_runs(pdf: "pd.DataFrame"):
+    """Merge a sorted (term, shard, doc_id[, tf]) partition into postings.
+
+    Returns (first, group_start, tf): the row index of each (term, shard,
+    doc) run's first row, True where that run opens a new (term, shard)
+    group, and the run's tf — its length for a raw occurrence stream, or
+    the sum of an input tf column (compaction feeds pre-aggregated rows).
+    One boundary mask, NOT np.unique: unique re-sorts what the upstream
+    sortWithinPartitions already ordered. A doc-order drop inside a group
+    cannot slip through: it leaves a smaller doc after a larger one, which
+    encode_blocks' key-order check rejects."""
+    import numpy as np
+
+    terms = pdf["term"].to_numpy()
+    shards = pdf["shard"].to_numpy()
+    doc = pdf["doc_id"].to_numpy()
+    new_group = np.ones(len(pdf), dtype=bool)
+    new_group[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
+    run = new_group.copy()
+    run[1:] |= doc[1:] != doc[:-1]
+    first = np.flatnonzero(run)
+    if "tf" in pdf.columns:
+        tf = np.add.reduceat(pdf["tf"].to_numpy(), first)
+    else:
+        tf = np.diff(np.append(first, len(pdf)))
+    return first, new_group[first], tf
+
+
 def _encode_partition_stream(
     batches,
     payload_codec: str = "none",
@@ -97,79 +133,42 @@ def _encode_partition_stream(
 
     Input: Arrow batches of one shuffle partition of the RAW token stream
     (term, shard, doc_id, dl) — one row per token OCCURRENCE, pre-sorted by
-    (term, shard, doc_id). Duplicate (term, doc) rows are adjacent after the
-    sort, so tf is a run length — exactly grenad's group-adjacent-equal-keys
-    merge during write_chunk (src/sorter.rs:541-561), done with one
-    np.unique pass. No pandas groupby, no per-group DataFrame construction;
-    Python touches each GROUP once (the vectorized encode call), never each
-    row. block_id is local to (term, shard): shards are doc-range disjoint
-    and ascending, so (shard, block_id) is already the global doc order —
-    no cross-group renumbering pass is needed.
+    (term, shard, doc_id) — or of pre-aggregated rows with a tf column.
+    Duplicate (term, doc) rows are adjacent after the sort, so tf is a run
+    length — exactly grenad's group-adjacent-equal-keys merge during
+    write_chunk (src/sorter.rs:541-561). The whole partition then encodes
+    in ONE vectorized encode_blocks call: Python touches the partition, not
+    each (term, shard) group or row, so a zipfian vocabulary of 1-3-posting
+    groups costs no per-group call. block_id is local to (term, shard):
+    shards are doc-range disjoint and ascending, so (shard, block_id) is
+    already the global doc order — no cross-group renumbering pass.
+
+    Memory: the partition frame (the concat of its batches) plus O(1)
+    NumPy columns per row or posting — the same partition-sized bound as
+    the frame itself.
     """
-    import numpy as np
+    from grenad_spark.functions.varbyte import BLOCK_SIZE, encode_blocks
 
-    pdfs = [p for p in batches]
-    if not pdfs:
+    pdf = _partition_rows(batches)
+    if pdf is None:
         return
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    if len(pdf) == 0:
-        return
-    terms = pdf["term"].to_numpy()
-    shards = pdf["shard"].to_numpy()
-    doc = pdf["doc_id"].to_numpy()
-    dl = pdf["dl"].to_numpy()
-    # raw token stream has no tf column (tf = run length); the compaction
-    # path feeds pre-aggregated rows WITH tf (summed per doc run below)
-    tf_col = pdf["tf"].to_numpy() if "tf" in pdf.columns else None
-    change = np.flatnonzero((terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [len(pdf)]))
-    rows = []
-    for s, e in zip(starts, ends):
-        # run-length tf: docs sorted within the group, duplicates adjacent.
-        # Boundary-diff, NOT np.unique: unique re-sorts its input (O(n log n)
-        # plus a copy) when the upstream sortWithinPartitions already
-        # guarantees order — in the memory-bandwidth-bound encode phase the
-        # redundant sort is pure bus traffic. Unsorted input cannot slip
-        # through silently: the diff pass would emit duplicate docs and
-        # encode_posting_blocks' strictly-increasing assertion (the grenad
-        # Writer::insert key-order contract) fires.
-        d = doc[s:e]
-        run_bounds = np.flatnonzero(d[1:] != d[:-1]) + 1
-        first_idx = np.concatenate(([0], run_bounds))
-        uniq_docs = d[first_idx]
-        if tf_col is None:
-            tf = np.diff(np.concatenate((first_idx, [d.size])))
-        else:
-            tf = np.add.reduceat(tf_col[s:e], first_idx)
-        for block_id, (
-            n, first, last, max_tf, min_dl, min_tf, max_dl, sum_tf, payload
-        ) in enumerate(
-            encode_posting_blocks(
-                uniq_docs, tf, dl[s:e][first_idx],
-                *( [block_size] if block_size else [] ),
-            )
-        ):
-            if payload_codec != "none":
-                from grenad_spark.functions.varbyte import compress_payload
-
-                payload = compress_payload(payload, payload_codec)
-            rows.append(
-                (
-                    terms[s], int(shards[s]), block_id, n, first, last,
-                    max_tf, min_dl, min_tf, max_dl, sum_tf, payload,
-                )
-            )
-    if acc_bytes is not None and rows:
-        acc_bytes.add(sum(len(r[11]) for r in rows))
-        acc_postings.add(sum(r[3] for r in rows))
-    yield pd.DataFrame(
-        rows,
-        columns=[
-            "term", "shard", "block_id", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "min_tf", "max_dl", "sum_tf", "payload",
-        ],
+    first, group_start, tf = _doc_runs(pdf)
+    blocks = encode_blocks(
+        pdf["doc_id"].to_numpy()[first], tf, pdf["dl"].to_numpy()[first],
+        group_start, block_size or BLOCK_SIZE, payload_codec=payload_codec,
     )
+    row = first[blocks.pop("start")]
+    out = pd.DataFrame(
+        {
+            "term": pdf["term"].to_numpy()[row],
+            "shard": pdf["shard"].to_numpy()[row],
+            **blocks,
+        }
+    )
+    if acc_bytes is not None:
+        acc_bytes.add(int(sum(map(len, out["payload"]))))
+        acc_postings.add(int(out["n"].sum()))
+    yield out
 
 
 def tokens_with_dl(docs: DataFrame, tokens_fn=None) -> DataFrame:
@@ -646,39 +645,31 @@ MAX_DELETES = 2
 def term_delete_rows(vocab: DataFrame) -> DataFrame:
     """(term, delvar) SymSpell deletion rows of a (term, …) vocabulary: every
     string reachable from a term by deleting ≤ MAX_DELETES characters
-    (including the term itself at 0 deletions), distinct. 100% JVM-side —
-    two explode+substring passes, no Python. ~1 + L + L(L-1)/2 rows per
-    term of length L (≈40 rows at L=8)."""
-    t0 = vocab.select("term")
-    # one deletion: position i ∈ [1, L] (SQL substring is 1-based)
-    d1 = t0.select(
-        "term",
-        F.explode(F.sequence(F.lit(1), F.length("term"))).alias("i"),
-    ).select(
-        "term",
-        F.concat(
-            F.expr("substring(term, 1, i - 1)"), F.expr("substring(term, i + 1)")
-        ).alias("d1"),
-    )
-    # two deletions: delete again from each 1-deletion variant
-    d2 = (
-        d1.filter(F.length("d1") > 0)
-        .select(
-            "term", "d1",
-            F.explode(F.sequence(F.lit(1), F.length("d1"))).alias("j"),
+    (including the term itself at 0 deletions), distinct. 100% JVM-side and
+    row-local: each term's variants are built as arrays (two transform +
+    substring passes), de-duplicated with array_distinct and exploded.
+    Every duplicate (term, delvar) pair comes from one term's own row, so
+    this is the global distinct with no exchange. ~1 + L + L(L-1)/2 rows
+    per term of length L (≈40 rows at L=8)."""
+
+    def deletions(s: str) -> str:
+        # one deletion at each position i ∈ [1, L] (SQL substring is 1-based)
+        return (
+            f"transform(sequence(1, length({s})), i -> "
+            f"concat(substring({s}, 1, i - 1), substring({s}, i + 1)))"
         )
-        .select(
-            "term",
-            F.concat(
-                F.expr("substring(d1, 1, j - 1)"), F.expr("substring(d1, j + 1)")
-            ).alias("delvar"),
-        )
-    )
-    return (
-        t0.select("term", F.col("term").alias("delvar"))
-        .unionByName(d1.select("term", F.col("d1").alias("delvar")))
-        .unionByName(d2)
-        .distinct()
+
+    d1 = vocab.select("term", F.expr(deletions("term")).alias("d1"))
+    # two deletions: delete again from each non-empty 1-deletion variant (a
+    # one-character term still emits "" at one deletion)
+    return d1.select(
+        "term",
+        F.explode(
+            F.expr(
+                "array_distinct(concat(array(term), d1, flatten(transform("
+                f"filter(d1, x -> length(x) > 0), x -> {deletions('x')}))))"
+            )
+        ).alias("delvar"),
     )
 
 

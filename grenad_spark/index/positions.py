@@ -41,12 +41,10 @@ from pyspark.sql import functions as F
 from grenad_spark.functions.tokenize import tokens_col
 from grenad_spark.functions.varbyte import (
     BLOCK_SIZE,
-    compress_payload,
     decode_block_rows,
     decompress_payloads,
+    encode_blocks,
     varbyte_decode,
-    varbyte_encode,
-    varbyte_lengths,
 )
 
 POSITIONS_SCHEMA = (
@@ -135,6 +133,14 @@ def tokens_with_pos(docs: DataFrame) -> DataFrame:
     ).select("term", "doc_id", "dl", "pos")
 
 
+def _check_positions(positions: np.ndarray) -> None:
+    if positions.size and int(positions.max()) > MAX_POS:
+        raise ValueError(
+            f"token position {int(positions.max())} exceeds MAX_POS={MAX_POS} "
+            f"(doc longer than 2^{POS_BITS} tokens)"
+        )
+
+
 def encode_position_blocks(
     doc_ids: np.ndarray,
     tfs: np.ndarray,
@@ -142,91 +148,63 @@ def encode_position_blocks(
     positions: np.ndarray,
     block_size: int = BLOCK_SIZE,
 ) -> list[tuple[int, int, int, bytes, bytes]]:
-    """Encode one (term, shard) group. doc_ids strictly increasing (one row
-    per doc), positions = flat per-occurrence array, doc-major and ascending
-    within each doc, with sum(tfs) == positions.size.
+    """Encode one (term, shard) group — the one-group call of the
+    partition encoder (functions/varbyte.py encode_blocks), so postings
+    and positions share one block layout. doc_ids strictly increasing (one
+    row per doc), positions = flat per-occurrence array, doc-major and
+    ascending within each doc, with sum(tfs) == positions.size.
     Returns [(n, first_doc, last_doc, header, positions)] in doc order;
     block_id is the list index."""
-    from grenad_spark.functions.varbyte import encode_posting_blocks
-
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    tfs = np.asarray(tfs, dtype=np.int64)
     positions = np.asarray(positions, dtype=np.int64)
-    if positions.size and int(positions.max()) > MAX_POS:
-        raise ValueError(
-            f"token position {int(positions.max())} exceeds MAX_POS={MAX_POS} "
-            f"(doc longer than 2^{POS_BITS} tokens)"
+    _check_positions(positions)
+    cols = encode_blocks(
+        doc_ids, tfs, dls, block_size=block_size, positions=positions
+    )
+    return list(
+        zip(
+            *(
+                cols[c].tolist()
+                for c in ("n", "first_doc", "last_doc", "payload", "positions")
+            )
         )
-    headers = encode_posting_blocks(doc_ids, tfs, dls, block_size)
-    # per-occurrence deltas with an absolute restart at each doc's first
-    # position (doc boundaries are also block boundaries, so blocks decode
-    # independently for free)
-    occ_starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-    vals = np.empty(positions.size, dtype=np.uint64)
-    if positions.size:
-        vals[0] = positions[0]
-        vals[1:] = (positions[1:] - positions[:-1]).astype(np.uint64)
-        vals[occ_starts] = positions[occ_starts].astype(np.uint64)
-    lens = varbyte_lengths(vals) if vals.size else np.empty(0, dtype=np.int64)
-    byte_cum = np.concatenate(([0], np.cumsum(lens)))
-    payload = varbyte_encode(vals)
-    out = []
-    d0 = 0
-    # header tuples are encode_posting_blocks' 9-tuples; the metadata fields
-    # between last_doc and the payload are unused here (phrase matching has
-    # no block-max bound — adjacency is exact, not score-bounded)
-    for n, first, last, *_meta, header in headers:
-        # occurrence span of this block's docs
-        o0 = int(byte_cum[int(occ_starts[d0])])
-        d1 = d0 + n
-        o1 = int(byte_cum[int(occ_starts[d1])]) if d1 < doc_ids.size else int(byte_cum[-1])
-        out.append((n, first, last, header, payload[o0:o1]))
-        d0 = d1
-    return out
+    )
 
 
 def _encode_positions_stream(batches, payload_codec: str = "none", block_size: int | None = None):
     """mapInPandas kernel: one shuffle partition of the raw occurrence stream
     (term, shard, doc_id, dl, pos), pre-sorted by (term, shard, doc_id, pos).
-    Same group-at-a-time discipline as the postings encoder: Python touches
-    each (term, shard) GROUP once, never each row."""
-    bs = block_size or BLOCK_SIZE
-    pdfs = [p for p in batches]
-    if not pdfs:
+    Same partition-at-a-time discipline as the postings encoder
+    (index/build.py _encode_partition_stream): one boundary mask merges
+    occurrences into postings (tf = run length) and ONE encode_blocks call
+    encodes every group's header and position blocks — the header is the
+    standard posting payload, the positions one varbyte pass of per-doc
+    deltas split at each block's first occurrence. Memory: the partition
+    frame plus O(1) NumPy columns per occurrence."""
+    from grenad_spark.index.build import _doc_runs, _partition_rows
+
+    pdf = _partition_rows(batches)
+    if pdf is None:
         return
-    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-    if len(pdf) == 0:
-        return
-    terms = pdf["term"].to_numpy()
-    shards = pdf["shard"].to_numpy()
-    doc = pdf["doc_id"].to_numpy()
-    dl = pdf["dl"].to_numpy()
     pos = pdf["pos"].to_numpy()
-    change = np.flatnonzero((terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [len(pdf)]))
-    rows = []
-    for s, e in zip(starts, ends):
-        d = doc[s:e]
-        run_bounds = np.flatnonzero(d[1:] != d[:-1]) + 1
-        first_idx = np.concatenate(([0], run_bounds))
-        uniq_docs = d[first_idx]
-        tf = np.diff(np.concatenate((first_idx, [d.size])))
-        for block_id, (n, first, last, header, ppay) in enumerate(
-            encode_position_blocks(uniq_docs, tf, dl[s:e][first_idx], pos[s:e], bs)
-        ):
-            if payload_codec != "none":
-                header = compress_payload(header, payload_codec)
-                ppay = compress_payload(ppay, payload_codec)
-            rows.append(
-                (terms[s], int(shards[s]), block_id, n, first, last, header, ppay)
-            )
+    _check_positions(pos)
+    first, group_start, tf = _doc_runs(pdf)
+    blocks = encode_blocks(
+        pdf["doc_id"].to_numpy()[first], tf, pdf["dl"].to_numpy()[first],
+        group_start, block_size or BLOCK_SIZE, positions=pos,
+        payload_codec=payload_codec,
+    )
+    row = first[blocks["start"]]
     yield pd.DataFrame(
-        rows,
-        columns=[
-            "term", "shard", "block_id", "n", "first_doc", "last_doc",
-            "header", "positions",
-        ],
+        {
+            "term": pdf["term"].to_numpy()[row],
+            "shard": pdf["shard"].to_numpy()[row],
+            **{
+                c: blocks[c]
+                for c in ("block_id", "n", "first_doc", "last_doc")
+            },
+            "header": blocks["payload"],
+            "positions": blocks["positions"],
+        }
     )
 
 

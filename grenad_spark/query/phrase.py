@@ -245,9 +245,9 @@ def search_topk_phrase(
         if dfm is not None:
             if any(t not in dfm for t in toks):
                 continue  # OOV term => phrase cannot match anywhere
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in set(toks))
+            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in sorted(set(toks)))
         else:
-            pairs.extend((qid, t, float("nan")) for t in set(toks))
+            pairs.extend((qid, t, float("nan")) for t in sorted(set(toks)))
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
@@ -723,9 +723,9 @@ def search_topk_proximity(
         if dfm is not None:
             if any(t not in dfm for t in toks):
                 continue
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in set(toks))
+            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in sorted(set(toks)))
         else:
-            pairs.extend((qid, t, float("nan")) for t in set(toks))
+            pairs.extend((qid, t, float("nan")) for t in sorted(set(toks)))
     if not pairs:
         return _empty_result(spark, _PROX_OUT_SCHEMA)
     blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)

@@ -1084,8 +1084,9 @@ def _search_pruned(
     A call served on the driver (_serve_local) has no exchange for pass 1
     to shrink, so it runs the single-pass wand plan there: the batched WAND
     kernel derives its own θ and skips the blocks that cannot reach it, and
-    both plans are exact, so the rows are the same. Pre-v2 indexes (no
-    min_tf/max_dl block metadata) also serve single-pass."""
+    both plans are exact, so the rows are the same. So does a batch whose
+    query terms are all sparse (survivor_blocks: pass 1 would keep every
+    block), and pre-v2 indexes (no min_tf/max_dl block metadata)."""
     if _serve_local(spark, index, pairs) or "min_tf" not in index.segments(spark).columns:
         return _search_from_pairs(spark, index, pairs, k, "wand")
     kk = int(k)
@@ -1107,6 +1108,8 @@ def _search_pruned(
     # serve with mode='wand' instead — or search_topk_auto.
     if survivors is None:
         survivors = survivor_blocks(spark, index, pairs, kk)
+    if _keeps_every_block(survivors):
+        return _search_from_pairs(spark, index, pairs, k, "wand")
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     est_blocks = _est_blocks(spark, index, [t for _, t in set(pairs)])
     if est_blocks is not None and est_blocks <= PACKED_IN_CAP:
@@ -1160,7 +1163,14 @@ def survivor_blocks(
     Low-df (sparse) query terms contribute their PAYLOADS to the metadata
     pass (bounded by sparse_df_max postings per term); high-df terms ship
     metadata only. Requires the driver df map for the sparse split; falls
-    back to pure metadata without it."""
+    back to pure metadata without it.
+
+    A query with no dense term keeps every block (its θ comes from dense
+    block metadata), so when the df map shows no in-vocabulary query term
+    with df > sparse_df_max — every term of an index under sparse_df_max
+    docs — pass 1 cannot prune. The result is then the lazy scan of every
+    query-term block key, built with no job and marked so the two-pass
+    callers serve their single-pass plan instead (_keeps_every_block)."""
     avgdl = float(index.avgdl)
     g, n_part = _batch_groups(spark, index, pairs)
     dfm = index.df_map(spark)
@@ -1178,10 +1188,18 @@ def survivor_blocks(
         all_terms = sorted({t for ts in terms_by_q.values() for t in ts})
         if not all_terms:
             return _empty_result(spark, _SURVIVOR_SCHEMA)
-        n_docs = float(index.n_docs)
-        idfs = {t: _driver_idf(n_docs, dfm[t]) for t in all_terms}
         sparse_terms = sorted(t for t in all_terms if dfm[t] <= sparse_df_max)
         dense_terms = sorted(t for t in all_terms if dfm[t] > sparse_df_max)
+        if not dense_terms:
+            every, _ = _query_blocks_from_pairs(
+                spark, index, sorted(set(pairs)),
+                columns=["term", "shard", "block_id"],
+            )
+            every = every.select("query_id", "term", "shard", "block_id")
+            every._keeps_every_block = True
+            return every
+        n_docs = float(index.n_docs)
+        idfs = {t: _driver_idf(n_docs, dfm[t]) for t in all_terms}
         seg = index.segments(spark)
         meta = None
         if dense_terms:
@@ -1245,6 +1263,12 @@ def survivor_blocks(
     )
 
 
+def _keeps_every_block(survivors: DataFrame) -> bool:
+    """True when survivor_blocks decided from the df map that pass 1 keeps
+    every query-term block: a two-pass plan would only add its cost."""
+    return getattr(survivors, "_keeps_every_block", False)
+
+
 def search_topk_auto(
     spark: SparkSession,
     index: IndexHandle,
@@ -1265,11 +1289,15 @@ def search_topk_auto(
     Pass 1 runs only on the Spark path: a call served on the driver
     (_serve_local) has no exchange for it to shrink, and serves the
     single-pass plan there with no job (same rows — both plans are exact).
-    Pre-v2 indexes serve single-pass directly."""
+    So does a batch whose query terms are all sparse (survivor_blocks says
+    so from the df map, with no job), and a pre-v2 index."""
     pairs = _tokenize_queries(queries)
     if _serve_local(spark, index, pairs) or "min_tf" not in index.segments(spark).columns:
         return _search_from_pairs(spark, index, pairs, k, "wand")
-    surv = survivor_blocks(spark, index, pairs, int(k)).localCheckpoint()
+    surv = survivor_blocks(spark, index, pairs, int(k))
+    if _keeps_every_block(surv):
+        return _search_from_pairs(spark, index, pairs, k, "wand")
+    surv = surv.localCheckpoint()
     n_surv = surv.count()
     terms = sorted({t for _, t in pairs})
     nb = {
@@ -1868,7 +1896,8 @@ def search_topk_shared(
     for query q only held docs whose full q-score is below q's θ − ε, so the
     partial scores those docs may get from blocks other queries kept can
     never enter q's top-k even on a rounded tie. Requires v2 block metadata;
-    silently serves unpruned otherwise.
+    serves unpruned otherwise, and when every query term is sparse (pass 1
+    would keep every block — survivor_blocks).
 
     A call whose posting volume fits one kernel group (_serve_local) runs on
     the driver with no Spark job, pruned or not: pass 1 exists to keep
@@ -1939,15 +1968,16 @@ def search_topk_shared(
     g, n_part = _batch_groups(spark, index, pairs)
 
     seg = index.segments(spark).filter(isin("term", terms))
+    surv_df = None
     if prune and "min_tf" in seg.columns:
+        surv_df = survivor_blocks(spark, index, pairs, kk)
+    if surv_df is not None and not _keeps_every_block(surv_df):
         # a SUPERSET of the survivors is exact here (every shipped block is
         # scored exhaustively for all queries sharing its term), so the
         # packed key can drop both query_id and term — (shard, block_id)
         # collisions just ship the harmless extra block once. Pass 1 runs
         # exactly ONCE either way: the collect, or the lazy broadcast build.
-        surv_df = survivor_blocks(spark, index, pairs, kk)
-        est_blocks = _est_blocks(spark, index, terms)
-        if est_blocks <= PACKED_IN_CAP:
+        if _est_blocks(spark, index, terms) <= PACKED_IN_CAP:
             srows = surv_df.select("shard", "block_id").collect()
             if not srows:
                 return _empty_result(spark, _OUT_SCHEMA)

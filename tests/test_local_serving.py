@@ -201,6 +201,46 @@ def test_over_volume_auto_keeps_the_two_pass_plan(spark, tmp_path, monkeypatch):
     assert [tuple(r) for r in df.collect()] == want and len(want) == 3
 
 
+def test_all_sparse_batch_skips_pass_one(spark, multi_shard_index, monkeypatch):
+    """Every query term sparse (df ≤ SPARSE_DF_MAX, as on any index under
+    65,536 docs): pass 1 would keep every block, and the df map says so
+    with no job. Forced onto Spark, the pruned calls plan their single-pass
+    kernel — no job while the call is planned, no survivor filter in the
+    plan — and return the rows of the two-pass plan, which runs when every
+    term is made dense."""
+    idx = multi_shard_index
+    idx.df_map(spark)  # the handle's maps and tables load once, outside the groups
+    idx.segments(spark)
+    sc = spark.sparkContext
+
+    def planned(group, call):
+        sc.setJobGroup(group, "pass 1 must not run")
+        try:
+            df = call()
+        finally:
+            sc.setJobGroup(None, None)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == [], group
+        return df
+
+    pairs = S._tokenize_queries(QUERIES)
+    surv = planned("sparse-survivors", lambda: S.survivor_blocks(spark, idx, pairs, 5))
+    n_blocks = {r["term"]: r["n_blocks"] for r in idx.term_dict(spark).collect()}
+    assert surv.count() == sum(n_blocks.get(t, 0) for _, t in pairs)
+    with _no_local(True):
+        got = {}
+        for name in ("wand_pruned", "shared_pruned", "auto"):
+            df = planned(f"sparse-{name}", _calls(spark, idx, QUERIES, 5)[name])
+            plan = _plan(df)
+            assert "MapInPandas" in plan and "shiftleft" not in plan, (name, plan)
+            got[name] = [tuple(r) for r in df.collect()]
+        monkeypatch.setattr(S, "survivor_blocks", partial(S.survivor_blocks, sparse_df_max=0))
+        for name in ("wand_pruned", "shared_pruned"):
+            df = _calls(spark, idx, QUERIES, 5)[name]()
+            assert "shiftleft" in _plan(df), name  # the two-pass plan
+            assert [tuple(r) for r in df.collect()] == got[name] != [], name
+    assert got["auto"] == got["wand_pruned"]
+
+
 @pytest.mark.skipif(shutil.which("gcc") is None, reason="no C compiler")
 def test_handle_open_loads_native_codec(spark, multi_shard_index, tmp_path, monkeypatch):
     """Opening a handle compiles and loads the native codec, so a serving

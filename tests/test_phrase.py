@@ -285,6 +285,30 @@ def test_proximity_phrase_docs_get_minimal_proximity(spark, phrase_index):
     assert all(p >= 1 for p in prox.values())
 
 
+def test_phrase_literal_map_key_order_is_pinned(spark, phrase_index, monkeypatch):
+    """The term → query-ids literal map that phrase and proximity attach
+    (and with it the plan text) lists each query's terms in sorted order,
+    queries in input order — not string-hash order, which changes between
+    processes."""
+    import grenad_spark.query.search as S
+    from grenad_spark.query.phrase import search_topk_phrase, search_topk_proximity
+
+    seen = []
+    attach = S._attach_query_terms
+
+    def spy(seg, rows):
+        seen.append(list(dict.fromkeys(t for _, t, _ in rows)))
+        return attach(seg, rows)
+
+    monkeypatch.setattr(S, "_attach_query_terms", spy)
+    idx, _rows = phrase_index
+    qs = [(1, "theta eta zeta eps delta gamma"), (2, "beta alpha gamma")]
+    search_topk_phrase(spark, idx, qs, k=5)
+    search_topk_proximity(spark, idx, qs, k=5)
+    want = ["delta", "eps", "eta", "gamma", "theta", "zeta", "alpha", "beta"]
+    assert seen == [want, want]
+
+
 def test_phrase_after_compaction_equals_direct_build(spark, tmp_path):
     """LSM story for positions: two generations (base + re-crawl delta, with
     one deletion) compact into an index whose phrase results are identical
