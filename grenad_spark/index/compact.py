@@ -150,33 +150,28 @@ def _make_decode_partition(codecs: list[str]):
 
 
 def _decode_partition(batches: Iterator[pd.DataFrame], codecs: list[str]) -> Iterator[pd.DataFrame]:
-    """Vectorized block decode: one varbyte pass per (term, gen) run, each
-    generation decompressed with ITS OWN codec (a zlib payload parsed as raw
-    varbyte would yield garbage postings silently)."""
+    """Vectorized block decode: one varbyte pass per generation present in
+    the batch, each decompressed with ITS OWN codec (a zlib payload parsed
+    as raw varbyte would yield garbage postings silently). Every block
+    restarts at an absolute doc id (functions/varbyte.py layout), so the
+    blocks decode in any order; each posting takes its block's term."""
     for pdf in batches:
-        out_term, out_doc, out_tf, out_dl, out_gen = [], [], [], [], []
-        for (term, gen), g in pdf.groupby(["term", "gen"], sort=False):
-            g = g.sort_values(["shard", "block_id"], kind="stable")
+        for gen, g in pdf.groupby("gen", sort=False):
+            n = g["n"].to_numpy()
             d, tf, dl = decode_block_rows(
-                decompress_payloads(list(g["payload"]), codecs[int(gen)]),
-                g["n"].to_numpy(),
+                decompress_payloads(list(g["payload"]), codecs[int(gen)]), n
             )
-            out_term.append(np.full(d.size, term, dtype=object))
-            out_doc.append(d)
-            out_tf.append(tf)
-            out_dl.append(dl)
-            out_gen.append(np.full(d.size, gen, dtype=np.int32))
-        if not out_doc:
-            continue
-        yield pd.DataFrame(
-            {
-                "term": np.concatenate(out_term),
-                "doc_id": np.concatenate(out_doc),
-                "tf": np.concatenate(out_tf).astype(np.int32),
-                "dl": np.concatenate(out_dl).astype(np.int32),
-                "gen": np.concatenate(out_gen),
-            }
-        )
+            if not d.size:
+                continue
+            yield pd.DataFrame(
+                {
+                    "term": np.repeat(g["term"].to_numpy(), n),
+                    "doc_id": d,
+                    "tf": tf.astype(np.int32),
+                    "dl": dl.astype(np.int32),
+                    "gen": np.full(d.size, gen, dtype=np.int32),
+                }
+            )
 
 
 def compact_indexes(

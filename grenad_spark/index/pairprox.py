@@ -64,6 +64,7 @@ from grenad_spark.index.build import (
     build_segments,
     term_dict_from_segments,
 )
+from grenad_spark.query.search import _PROXIMITY_ORDER, _n_queries, _rank_topk
 
 # Meilisearch stores pairs up to proximity 7 and ranks a missing pair as 8
 # (one beyond the window) — same constants here.
@@ -337,13 +338,9 @@ def search_topk_proximity_db(
             "query_id", "doc_id",
             base_map[F.col("query_id")].alias("proximity"), "score",
         )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("proximity"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        costed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "proximity", "score")
+    return _rank_topk(
+        costed, _n_queries(queries), int(k), _PROXIMITY_ORDER,
+        ["query_id", "doc_id", "proximity", "score"],
     )
 
 
@@ -810,13 +807,9 @@ def search_topk_proximity_db_prefix(
             "score",
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("proximity"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        costed.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "proximity", "score")
+    return _rank_topk(
+        costed, _n_queries(queries), int(k), _PROXIMITY_ORDER,
+        ["query_id", "doc_id", "proximity", "score"],
     )
 
 

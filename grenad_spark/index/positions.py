@@ -327,33 +327,29 @@ _POS_DECODED_SCHEMA = "term string, doc_id long, dl int, pos int, gen int"
 
 def _make_decode_positions_partition(codecs: list[str]):
     """mapInPandas kernel: generation position blocks → occurrence rows
-    (term, doc_id, dl, pos, gen). Python touches (gen, term) GROUPS; the
-    decode + explode per group is vectorized (mirrors compact.py's posting
-    decode kernel, which emits a row per posting — here a row per
-    occurrence, the position stream's native granularity)."""
+    (term, doc_id, dl, pos, gen), one decode_position_blocks call per
+    generation present in the batch, with its own codec (mirrors
+    compact.py's posting decode kernel, which emits a row per posting —
+    here a row per occurrence, the position stream's native granularity).
+    Blocks decode independently, so their order does not matter."""
 
     def fn(batches):
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            parts = []
-            for (gen, term), g in pdf.groupby(["gen", "term"], sort=False):
+            for gen, g in pdf.groupby("gen", sort=False):
+                n = g["n"].to_numpy()
                 d, tf, dl, pos, _occ = decode_position_blocks(
-                    list(g["header"]), list(g["positions"]),
-                    g["n"].to_numpy(), codecs[int(gen)],
+                    list(g["header"]), list(g["positions"]), n, codecs[int(gen)]
                 )
-                parts.append(
-                    pd.DataFrame(
-                        {
-                            "term": term,
-                            "doc_id": np.repeat(d, tf),
-                            "dl": np.repeat(dl, tf).astype("int32"),
-                            "pos": pos.astype("int32"),
-                            "gen": np.int32(gen),
-                        }
-                    )
+                if not pos.size:
+                    continue
+                yield pd.DataFrame(
+                    {
+                        "term": np.repeat(np.repeat(g["term"].to_numpy(), n), tf),
+                        "doc_id": np.repeat(d, tf),
+                        "dl": np.repeat(dl, tf).astype("int32"),
+                        "pos": pos.astype("int32"),
+                        "gen": np.full(pos.size, gen, dtype=np.int32),
+                    }
                 )
-            if parts:
-                yield pd.concat(parts, ignore_index=True)
 
     return fn

@@ -56,6 +56,7 @@ from grenad_spark.index.build import (
     tokens_with_dl,
 )
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
+from grenad_spark.query.search import _n_queries, _rank_topk
 
 DEFAULT_MAX_LEN = 2
 DEFAULT_MIN_TERMS = 2
@@ -181,47 +182,32 @@ _PREF_ROWS_SCHEMA = "query_id int, prefix string, doc_id long, tf int, dl int"
 
 
 def _make_decode_pref_rows(codec: str):
-    """Kernel: joined block rows → (query_id, prefix, doc_id, tf, dl).
-    Groups arrive per (query_id, shard); blocks of one (prefix|term) decode
-    vectorized. Sort by first_doc inside each key: multi-file scans scramble
-    block order and the varbyte delta chain requires it."""
+    """mapInPandas kernel: joined block rows → (query_id, prefix, doc_id,
+    tf, dl). Every block restarts at an absolute doc id (functions/varbyte.py
+    layout), so a whole batch of blocks, in any order, decodes in one call;
+    each posting takes its block's query_id and prefix."""
     from grenad_spark.functions.varbyte import (
         decode_block_rows,
         decompress_payloads,
     )
 
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = []
-        for (qid, prefix, key), g in pdf.groupby(
-            ["query_id", "prefix", "key"], sort=False
-        ):
-            g = g.sort_values("first_doc", kind="stable")
+    def fn(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            n = pdf["n"].to_numpy()
             d, tf, dl = decode_block_rows(
-                decompress_payloads(list(g["payload"]), codec),
-                g["n"].to_numpy(),
+                decompress_payloads(list(pdf["payload"]), codec), n
             )
-            out.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.int32(qid),
-                        "prefix": prefix,
-                        "doc_id": d,
-                        "tf": tf.astype(np.int32),
-                        "dl": dl.astype(np.int32),
-                    }
-                )
-            )
-        if not out:
-            return pd.DataFrame(
+            yield pd.DataFrame(
                 {
-                    "query_id": pd.Series(dtype="int32"),
-                    "prefix": pd.Series(dtype="object"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "tf": pd.Series(dtype="int32"),
-                    "dl": pd.Series(dtype="int32"),
+                    "query_id": np.repeat(pdf["query_id"].to_numpy(), n),
+                    "prefix": np.repeat(pdf["prefix"].to_numpy(), n),
+                    "doc_id": d,
+                    "tf": tf.astype(np.int32),
+                    "dl": dl.astype(np.int32),
                 }
             )
-        return pd.concat(out, ignore_index=True)
 
     return fn
 
@@ -256,10 +242,7 @@ def prefix_doc_rows(
             index.prefix_segments(spark)
             .filter(isin("term", sorted({p for _, p in mat})))
             .join(F.broadcast(qdf), F.col("term") == F.col("prefix"))
-            .select(
-                "query_id", "prefix", F.col("term").alias("key"), "shard",
-                "first_doc", "n", "payload",
-            )
+            .select("query_id", "prefix", "n", "payload")
         )
         parts.append(blocks)
     if miss:
@@ -280,16 +263,13 @@ def prefix_doc_rows(
             index.segments(spark)
             .filter(coarse)
             .join(expand.hint("broadcast"), "term")
-            .select(
-                "query_id", "prefix", F.col("term").alias("key"), "shard",
-                "first_doc", "n", "payload",
-            )
+            .select("query_id", "prefix", "n", "payload")
         )
         parts.append(blocks)
     allb = parts[0] if len(parts) == 1 else parts[0].unionByName(parts[1])
-    rows = allb.groupBy("query_id", "shard").applyInPandas(
-        _make_decode_pref_rows(codec), _PREF_ROWS_SCHEMA
-    )
+    # no exchange into the decode: its rows re-aggregate per
+    # (query_id, prefix, doc_id) below
+    rows = allb.mapInPandas(_make_decode_pref_rows(codec), _PREF_ROWS_SCHEMA)
     return rows.groupBy("query_id", "prefix", "doc_id").agg(
         F.sum("tf").cast("double").alias("tf"), F.first("dl").alias("dl")
     )
@@ -327,14 +307,9 @@ def search_topk_prefix_db(
         agg.withColumn("df", F.count("*").over(wdf).cast("double"))
         .withColumn("s", prefix_score_col(index))
         .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("s"), SCORE_DECIMALS).alias("score"))
+        .agg(F.sum("s").alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(scored, _n_queries(pairs), int(k))
 
 
 def sql_prefix_db_topk(queries: list[tuple[int, str]], k: int = 10) -> str:

@@ -48,7 +48,6 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
@@ -211,19 +210,17 @@ def search_topk_word_splits(
     BM25(half1)+BM25(half2) to that document, on top of the ordinary
     word-part score. Requires the positional tables (build_positions) for
     the adjacency check. (query_id, doc_id, score)."""
-    from grenad_spark.query.bm25 import SCORE_DECIMALS
-    from grenad_spark.query.phrase import (
-        _make_phrase_kernel,
-        _positions_blocks,
-    )
+    from grenad_spark.query.phrase import _POS_COLS, _make_phrase_kernel
     from grenad_spark.query.phrase import _OUT_SCHEMA as _PHRASE_OUT
     from grenad_spark.query.search import (
         _OUT_AND_SCHEMA,
         _OUT_SCHEMA,
-        _driver_idf,
+        _SCORE_COLS,
+        _apply_per_query_shard,
         _make_exhaustive_with_termcount,
-        _qshard_col,
+        _n_queries,
         _query_blocks_from_pairs,
+        _rank_topk,
     )
 
     word_pairs, chains = _split_derivations(spark, index, queries)
@@ -233,39 +230,19 @@ def search_topk_word_splits(
 
     if word_pairs:
         blocks, _ = _query_blocks_from_pairs(spark, index, word_pairs)
-        word_scores = (
-            blocks.select(
-                "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc",
-                "last_doc", "max_tf", "min_dl", "payload",
-            )
-            .groupBy("query_id", "shard")
-            .applyInPandas(
-                _make_exhaustive_with_termcount(
-                    float(index.avgdl), index.payload_codec
-                ),
-                _OUT_AND_SCHEMA,
-            )
-            .select("query_id", "doc_id", "score")
-        )
+        word_scores = _apply_per_query_shard(
+            spark, index, blocks, word_pairs, _SCORE_COLS,
+            _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
+            _OUT_AND_SCHEMA,
+        ).select("query_id", "doc_id", "score")
         parts.append(word_scores)
 
     if chains:
-        n_docs = float(index.n_docs)
-        dfm = index.df_map(spark)
-        ppairs: list[tuple[int, str, float]] = []
-        for subqid, toks in chains.items():
-            for t in set(toks):
-                ppairs.append(
-                    (subqid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-                )
-        pblocks = _positions_blocks(spark, index, n_docs, ppairs, dfm is not None)
+        ppairs = [(subqid, t) for subqid, toks in chains.items() for t in set(toks)]
+        pblocks, _ = _query_blocks_from_pairs(spark, index, ppairs, table="positions")
         split_scores = (
-            pblocks.select(
-                "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc",
-                "header", "positions",
-            )
-            .groupBy("query_id", "shard")
-            .applyInPandas(
+            _apply_per_query_shard(
+                spark, index, pblocks, ppairs, _POS_COLS,
                 _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
                 _PHRASE_OUT,
             )
@@ -281,18 +258,15 @@ def search_topk_word_splits(
     all_scores = parts[0]
     for p in parts[1:]:
         all_scores = all_scores.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     # one exchange serves both the (query_id, doc_id) part-sum and the
     # per-query window: hash(query_id) clusters every finer key too, so
     # Catalyst inserts no second shuffle (rows here are ∝ matches)
-    return (
+    summed = (
         all_scores.repartition("query_id")
         .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum("score"), SCORE_DECIMALS).alias("score"))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
+        .agg(F.sum("score").alias("score"))
     )
+    return _rank_topk(summed, _n_queries(queries), int(k))
 
 
 def sql_word_splits_topk(queries: list[tuple[int, str]], k: int = 10) -> str:

@@ -43,16 +43,22 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf, tokens_col
 from grenad_spark.index.positions import FIELD_BITS, POS_BITS
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query.phrase import _positions_blocks
+from grenad_spark.query.phrase import _POS_COLS
 from grenad_spark.query.ranked import _decode_groups, _member_mask, _require_fielded
 from grenad_spark.query.search import (
-    _driver_idf,
-    _qshard_col,
+    _BM25_ORDER,
+    _PROXIMITY_ORDER,
+    _TYPO_COLS,
+    _TYPO_ORDER,
+    _apply_per_query_shard,
+    _n_queries,
+    _query_blocks_from_pairs,
+    _rank_topk,
+    _scoring_pairs,
     _tfpart,
     _tokenize_queries,
 )
@@ -76,6 +82,9 @@ EXACT_FIELD_QUERIES: list[tuple[int, str]] = [
 
 _SEARCH_ON_SCHEMA = "query_id int, doc_id long, score double"
 _EXACT_SCHEMA = "query_id int, doc_id long, chain int, score double"
+# rank orders of the exactness tiers, (column, ascending) pairs
+_EXACT_ORDER = [("exact", False), *_BM25_ORDER]
+_TIER_ORDER = [("tier", False), *_BM25_ORDER]
 
 
 def _allowed_fids(index, fields: list[str]) -> list[int]:
@@ -144,30 +153,16 @@ def search_topk_search_on(
     occurrences whose fid is in the allowed set; tf counts those occurrences
     only, while df/dl/avgdl remain index-global (see module docstring)."""
     allowed = _allowed_fids(index, fields)
-    qt = _tokenize_queries(queries)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, t in qt
-        if dfm is None or t in dfm
-    ]
+    pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
         return spark.createDataFrame([], _SEARCH_ON_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).groupBy("query_id", "shard").applyInPandas(
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_search_on_kernel(allowed, float(index.avgdl), index.payload_codec),
         _SEARCH_ON_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 def sql_search_on_topk(
@@ -343,20 +338,12 @@ def search_topk_exact_field(
         for qid, q in queries
     }
     qterms = {qid: ts for qid, ts in qterms.items() if ts}
-    qt = _tokenize_queries(queries)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, t in qt
-        if dfm is None or t in dfm
-    ]
+    pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
         return spark.createDataFrame([], "query_id int, doc_id long, exact int, score double")
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).groupBy("query_id", "shard").applyInPandas(
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_exact_kernel(qterms, fid, float(index.avgdl), index.payload_codec),
         _EXACT_SCHEMA,
     )
@@ -368,10 +355,7 @@ def search_topk_exact_field(
     qn = spark.createDataFrame(
         [(qid, len(ts)) for qid, ts in qterms.items()], "query_id int, n_terms int"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("exact"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
+    exact = (
         per_shard.join(wc, "doc_id", "left")
         .join(F.broadcast(qn), "query_id")
         .withColumn(
@@ -381,10 +365,10 @@ def search_topk_exact_field(
                 F.lit(0),
             ),
         )
-        .withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "exact", "score")
+    )
+    return _rank_topk(
+        exact, _n_queries(pairs), int(k), _EXACT_ORDER,
+        ["query_id", "doc_id", "exact", "score"],
     )
 
 
@@ -479,20 +463,12 @@ def search_topk_exact_tiers(
         for qid, q in queries
     }
     qterms = {qid: ts for qid, ts in qterms.items() if ts}
-    qt = _tokenize_queries(queries)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, t in qt
-        if dfm is None or t in dfm
-    ]
+    pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
         return spark.createDataFrame([], "query_id int, doc_id long, tier int, score double")
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).groupBy("query_id", "shard").applyInPandas(
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_exact_kernel(qterms, fid, float(index.avgdl), index.payload_codec),
         _EXACT_SCHEMA,
     )
@@ -504,10 +480,7 @@ def search_topk_exact_tiers(
     qn = spark.createDataFrame(
         [(qid, len(ts)) for qid, ts in qterms.items()], "query_id int, n_terms int"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("tier"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
+    tiers = (
         per_shard.join(wc, "doc_id", "left")
         .join(F.broadcast(qn), "query_id")
         .withColumn(
@@ -522,10 +495,10 @@ def search_topk_exact_tiers(
                 F.lit(0),
             ),
         )
-        .withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "tier", "score")
+    )
+    return _rank_topk(
+        tiers, _n_queries(pairs), int(k), _TIER_ORDER,
+        ["query_id", "doc_id", "tier", "score"],
     )
 
 
@@ -684,34 +657,19 @@ def search_topk_proximity_attr(
         toks = [t for t in re.split(TOKEN_SPLIT_RE, q.lower()) if t]
         if toks:
             qtoks[int(qid)] = toks
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs: list[tuple[int, str, float]] = []
-    for qid, toks in sorted(qtoks.items()):
-        uniq = sorted(set(toks))
-        if dfm is not None:
-            if any(t not in dfm for t in uniq):
-                continue
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in uniq)
-        else:
-            pairs.extend((qid, t, float("nan")) for t in uniq)
+    pairs = [(qid, t) for qid, toks in sorted(qtoks.items()) for t in sorted(set(toks))]
+    pairs = _scoring_pairs(spark, index, pairs, required=pairs)
     if not pairs:
         return spark.createDataFrame([], _PROX_ATTR_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).groupBy("query_id", "shard").applyInPandas(
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_prox_attr_kernel(qtoks, float(index.avgdl), index.payload_codec),
         _PROX_ATTR_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("proximity"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "proximity", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k), _PROXIMITY_ORDER,
+        ["query_id", "doc_id", "proximity", "score"],
     )
 
 
@@ -927,29 +885,16 @@ def search_topk_typo_disable_attrs(
     qslots, slot_meta, pairs = typo_slot_expansion(spark, index, queries, settings)
     if not pairs:
         return spark.createDataFrame([], _TYPO_ATTR_SCHEMA)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    tri = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, t in pairs
-    ]
-    blocks = _positions_blocks(spark, index, n_docs, tri, dfm is not None)
-    per_shard = blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).groupBy("query_id", "shard").applyInPandas(
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
+    per_shard = _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
         _make_typo_attr_kernel(
             qslots, slot_meta, allowed, float(index.avgdl), index.payload_codec
         ),
         _TYPO_ATTR_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "hit_terms", "typos", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k), _TYPO_ORDER, _TYPO_COLS
     )
 
 

@@ -35,9 +35,19 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from grenad_spark.query.bm25 import SCORE_DECIMALS
+from grenad_spark.query.search import (
+    _OUT_AND_SCHEMA,
+    _SCORE_COLS,
+    _apply_per_query_shard,
+    _make_exhaustive_with_termcount,
+    _n_queries,
+    _query_blocks_from_pairs,
+    _rank_topk,
+    _tokenize_queries,
+    conjunctive_matches,
+)
 
 EARTH_RADIUS_KM = 6371.0
 
@@ -71,22 +81,12 @@ def _haversine_km(lat_col, lng_col, lat0: float, lng0: float):
 def _scored_matches(spark, index, queries):
     """Disjunctive full per-shard score set (query_id, doc_id, score) —
     exclusion/sort happens BEFORE top-k, exactly like the filtered path."""
-    from grenad_spark.query.search import (
-        _make_exhaustive_with_termcount,
-        _OUT_AND_SCHEMA,
-        _qshard_col,
-        _query_blocks_from_pairs,
-        _tokenize_queries,
-    )
-
     pairs = _tokenize_queries(queries)
     if not pairs:
         return None
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    return blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "last_doc",
-        "max_tf", "min_dl", "payload",
-    ).groupBy("query_id", "shard").applyInPandas(
+    return _apply_per_query_shard(
+        spark, index, blocks, pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
     )
@@ -115,13 +115,9 @@ def geo_radius_topk(
             _haversine_km(F.col("lat"), F.col("lng"), center[0], center[1]), 4
         ).alias("dist_km"),
     ).filter(F.col("dist_km") <= float(radius_km))
-    j = per_shard.join(geo, "doc_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        j.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "dist_km", "score")
+    return _rank_topk(
+        per_shard.join(geo, "doc_id"), _n_queries(queries), int(k),
+        cols=["query_id", "doc_id", "dist_km", "score"],
     )
 
 
@@ -148,14 +144,7 @@ def geo_bbox_topk(
         (F.col("lat") <= float(lat_hi)) & (F.col("lat") >= float(lat_lo))
         & (F.col("lng") >= float(lng_lo)) & (F.col("lng") <= float(lng_hi))
     ).select("doc_id")
-    j = per_shard.join(geo, "doc_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        j.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard.join(geo, "doc_id"), _n_queries(queries), int(k))
 
 
 def geo_sort_topk(
@@ -171,8 +160,6 @@ def geo_sort_topk(
     haversine distance from `point` (BM25 rides along, doc_id breaks ties)
     — the geo counterpart of search_topk_sorted. (query_id, doc_id,
     dist_km, score)."""
-    from grenad_spark.query.search import conjunctive_matches
-
     matches = conjunctive_matches(spark, index, queries)
     geo = with_geo(docs).select(
         "doc_id",
@@ -180,13 +167,10 @@ def geo_sort_topk(
             _haversine_km(F.col("lat"), F.col("lng"), point[0], point[1]), 4
         ).alias("dist_km"),
     )
-    j = matches.join(geo, "doc_id")
-    key = F.asc("dist_km") if ascending else F.desc("dist_km")
-    w = Window.partitionBy("query_id").orderBy(key, F.asc("doc_id"))
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "dist_km", "score")
+    return _rank_topk(
+        matches.join(geo, "doc_id"), _n_queries(queries), int(k),
+        [("dist_km", ascending), ("doc_id", True)],
+        ["query_id", "doc_id", "dist_km", "score"],
     )
 
 

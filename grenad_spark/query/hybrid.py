@@ -51,6 +51,7 @@ from pyspark.sql.window import Window
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.operators.ann import _cos as _cosine
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
+from grenad_spark.query.search import _n_queries, _rank_topk, search_topk
 
 SEMANTIC_RATIO = 0.5
 HYBRID_DECIMALS = 6
@@ -110,11 +111,9 @@ def hybrid_topk(
         F.col("vec_id").alias("doc_id"),
         F.round(_cosine(F.col("qv"), F.col("v")), HYBRID_DECIMALS).alias("cos"),
     )
-    wsem = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("doc_id"))
-    sem_top = (
-        cos_all.withColumn("rn", F.row_number().over(wsem))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id")
+    sem_top = _rank_topk(
+        cos_all, _n_queries(queries), int(k), [("cos", False), ("doc_id", True)],
+        ["query_id", "doc_id"],
     )
     kw = _scored_kw(spark, index, [(qid, q) for qid, q, _ in queries])
     if kw is None:
@@ -241,8 +240,6 @@ def federated_topk(
     into one ranking (score DESC, doc_id ASC); output
     (query_id, index_name, doc_id, score). Per-index top-k feeds the merge —
     lossless, and each index's serving plan is the standard pruned one."""
-    from grenad_spark.query.search import search_topk
-
     parts = []
     for name, idx in indexes:
         parts.append(
@@ -253,11 +250,8 @@ def federated_topk(
     hits = parts[0]
     for p in parts[1:]:
         hits = hits.unionByName(p)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        hits.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "index_name", "doc_id", "score")
+    return _rank_topk(
+        hits, _n_queries(queries), int(k), cols=["query_id", "index_name", "doc_id", "score"]
     )
 
 

@@ -31,9 +31,14 @@ from pyspark.sql import functions as F
 
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query.phrase import _positions_blocks
+from grenad_spark.query.phrase import _POS_COLS
 from grenad_spark.query.ranked import _decode_groups
-from grenad_spark.query.search import _driver_idf, _qshard_col, _tokenize_queries
+from grenad_spark.query.search import (
+    _apply_per_query_shard,
+    _query_blocks_from_pairs,
+    _scoring_pairs,
+    _tokenize_queries,
+)
 
 MATCHES_QUERIES: list[tuple[int, str]] = [
     (1, "merge sort"),
@@ -108,17 +113,12 @@ def search_topk_matches(
     hits: dict[int, dict[int, float]] = {}
     for r in top:
         hits.setdefault(r.query_id, {})[r.doc_id] = r.score
-    qt = _tokenize_queries(queries)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, t in qt
-        if (dfm is None or t in dfm) and qid in hits
-    ]
+    pairs = _scoring_pairs(
+        spark, index, [(q, t) for q, t in _tokenize_queries(queries) if q in hits]
+    )
     if not pairs:
         return spark.createDataFrame([], _OUT_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     # block-range prune: a block can contain a hit only if its doc range
     # overlaps the query's hit span (hits are k docs; spans are tight)
     spans = spark.createDataFrame(
@@ -128,10 +128,9 @@ def search_topk_matches(
     blocks = blocks.join(F.broadcast(spans), "query_id").filter(
         (F.col("first_doc") <= F.col("hi")) & (F.col("last_doc") >= F.col("lo"))
     )
-    return blocks.select(
-        "query_id", _qshard_col(spark, index), "term", "idf", "n", "first_doc", "header", "positions"
-    ).groupBy("query_id", "shard").applyInPandas(
-        _make_matches_kernel(hits, index.payload_codec), _OUT_SCHEMA
+    return _apply_per_query_shard(
+        spark, index, blocks, pairs, _POS_COLS,
+        _make_matches_kernel(hits, index.payload_codec), _OUT_SCHEMA,
     )
 
 

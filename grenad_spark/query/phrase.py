@@ -29,7 +29,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin, prefix_ranges
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
@@ -38,14 +37,19 @@ from grenad_spark.query.bm25 import SCORE_DECIMALS
 from grenad_spark.query import search
 from grenad_spark.query.search import (
     _BM25_ORDER,
+    _PROXIMITY_ORDER,
     _apply_per_query_shard,
     _batch_groups,
     _driver_idf,
     _empty_result,
     _grouped_apply,
     _local_blocks,
+    _n_queries,
     _packed_in,
+    _query_blocks_from_pairs,
     _rank_local,
+    _rank_topk,
+    _scoring_pairs,
     _tfpart,
 )
 
@@ -66,37 +70,12 @@ def _tokenize_phrases(queries: list[tuple[int, str]]) -> dict[int, list[str]]:
     return out
 
 
-def _positions_blocks(spark, index, n_docs, pairs, use_dfm: bool):
-    """Positions-table analog of search.py's _query_blocks_from_pairs:
-    pruned In(term) scan joined with the (query_id, term, idf) broadcast.
-    use_dfm=True means idf was computed driver-side from the vocabulary-
-    gated df map and rides inside the pairs; False takes the 10^9-term
-    fallback (broadcast join against term_dict, idf as a column expr)."""
-    terms = sorted({t for _, t, _ in pairs})
-    pos_tbl = index.positions(spark).filter(isin("term", terms))
-    if use_dfm:
-        if pairs:
-            # literal-map attach (no broadcast join) — see search.py
-            # _attach_query_terms for the measured ~0.2 s/job rationale
-            from grenad_spark.query.search import _attach_query_terms
-
-            return _attach_query_terms(pos_tbl, pairs)
-        qt = spark.createDataFrame(pairs, "query_id int, term string, idf double")
-        return pos_tbl.join(F.broadcast(qt), "term")
-    qt = spark.createDataFrame(
-        [(q, t) for q, t, _ in pairs], "query_id int, term string"
-    )
-    td = index.term_dict(spark).filter(isin("term", terms)).select("term", "df")
-    return (
-        pos_tbl.join(F.broadcast(td), "term")
-        .join(F.broadcast(qt), "term")
-        # Spark-expr idf, NOT the NumPy _idf (a Column has no .log); must stay
-        # formula-identical to _driver_idf / _query_blocks_from_pairs
-        .withColumn(
-            "idf",
-            F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5)),
-        )
-    )
+def _phrase_pairs(spark: SparkSession, index, phrases: dict[int, list[str]]) -> list[tuple[int, str]]:
+    """(query_id, term) over each phrase's distinct terms in sorted order,
+    by the conjunctive rule: a phrase with an out-of-vocabulary term can
+    never match and drops."""
+    pairs = [(q, t) for q, toks in phrases.items() for t in sorted(set(toks))]
+    return _scoring_pairs(spark, index, pairs, required=pairs)
 
 
 def _make_phrase_kernel(
@@ -174,24 +153,11 @@ def phrase_match_pairs(
     for the whole batch. Phrases with an OOV term (driver df-map probe)
     match nothing and never reach the scan. What facet restrictions,
     downstream filters and negative-phrase exclusions consume."""
-    phrases = {q: t for q, t in _tokenize_phrases(pairs).items() if t}
-    if not phrases:
+    phrases = _tokenize_phrases(pairs)
+    qt = _phrase_pairs(spark, index, phrases)
+    if not qt:
         return _empty_result(spark, "query_id int, doc_id long")
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    if dfm is not None:
-        phrases = {
-            q: toks for q, toks in phrases.items()
-            if all(t in dfm for t in toks)
-        }
-        if not phrases:
-            return _empty_result(spark, "query_id int, doc_id long")
-    qt = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, toks in sorted(phrases.items())
-        for t in sorted(set(toks))
-    ]
-    blocks = _positions_blocks(spark, index, n_docs, qt, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, qt, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, qt, _POS_COLS,
         _make_phrase_kernel(phrases, float(index.avgdl), index.payload_codec),
@@ -234,26 +200,15 @@ def search_topk_phrase(
     returns empty for any group missing a term; pruning removes exactly
     those groups."""
     phrases = _tokenize_phrases(queries)
-    n_docs = float(index.n_docs)
     avgdl = float(index.avgdl)
     codec = index.payload_codec
-    dfm = index.df_map(spark)
-    pairs: list[tuple[int, str, float]] = []
-    for qid, toks in phrases.items():
-        if not toks:
-            continue
-        if dfm is not None:
-            if any(t not in dfm for t in toks):
-                continue  # OOV term => phrase cannot match anywhere
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in sorted(set(toks)))
-        else:
-            pairs.extend((qid, t, float("nan")) for t in sorted(set(toks)))
+    pairs = _phrase_pairs(spark, index, phrases)
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     if prune_shards:
         terms_by_q: dict[int, set] = {}
-        for q, t, _ in pairs:
+        for q, t in pairs:
             terms_by_q.setdefault(q, set()).add(t)
         tsm = index.term_shards(spark)
         surv: list[tuple[int, int]] | None = None
@@ -325,13 +280,7 @@ def search_topk_phrase(
         spark, index, blocks, pairs, _POS_COLS,
         _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 # ---------------------------------------------------------------------------
@@ -392,32 +341,17 @@ def search_topk_phrase_stopwords(
         ch = _stopword_chain(toks, stop_words)
         if ch is not None:
             chains[qid] = ch
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs: list[tuple[int, str, float]] = []
-    for qid, ch in chains.items():
-        terms = {t for _, t in ch}
-        if dfm is not None:
-            if any(t not in dfm for t in terms):
-                continue  # OOV surviving term => phrase cannot match
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in sorted(terms))
-        else:
-            pairs.extend((qid, t, float("nan")) for t in sorted(terms))
+    # an OOV surviving term => the phrase cannot match
+    pairs = _phrase_pairs(spark, index, {q: [t for _, t in ch] for q, ch in chains.items()})
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
         _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
         _OUT_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 def sql_phrase_stopwords_topk(
@@ -712,35 +646,18 @@ def search_topk_proximity(
     |position distance| in the doc (an exact-phrase doc scores m-1). Same
     plan shape and scaling story as search_topk_phrase."""
     phrases = _tokenize_phrases(queries)
-    n_docs = float(index.n_docs)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    dfm = index.df_map(spark)
-    pairs: list[tuple[int, str, float]] = []
-    for qid, toks in phrases.items():
-        if not toks:
-            continue
-        if dfm is not None:
-            if any(t not in dfm for t in toks):
-                continue
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in sorted(set(toks)))
-        else:
-            pairs.extend((qid, t, float("nan")) for t in sorted(set(toks)))
+    pairs = _phrase_pairs(spark, index, phrases)
     if not pairs:
         return _empty_result(spark, _PROX_OUT_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
-        _make_proximity_kernel(phrases, avgdl, codec), _PROX_OUT_SCHEMA,
+        _make_proximity_kernel(phrases, float(index.avgdl), index.payload_codec),
+        _PROX_OUT_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("proximity"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "proximity", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k), _PROXIMITY_ORDER,
+        ["query_id", "doc_id", "proximity", "score"],
     )
 
 
@@ -930,15 +847,8 @@ def search_topk_phrase_fresh(
             ).alias("s"),
         )
     )
-    scored = per_term.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("s"), SCORE_DECIMALS).alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    scored = per_term.groupBy("query_id", "doc_id").agg(F.sum("s").alias("score"))
+    return _rank_topk(scored, len(phrases), int(k))
 
 
 # ---------------------------------------------------------------------------
@@ -1042,35 +952,28 @@ def _mixed_per_shard(
     parsed = {
         qid: pf for qid, pf in parsed.items() if pf[0] or pf[1]
     }
-    if not parsed:
+    pairs = _mixed_pairs(spark, index, parsed)
+    if not pairs:
         return None
-    n_docs = float(index.n_docs)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    dfm = index.df_map(spark)
-    pairs: list[tuple[int, str, float]] = []
-    for qid, (phrases_q, free_q) in list(parsed.items()):
-        terms_q = {t for toks in phrases_q for t in toks} | set(free_q)
-        if dfm is not None:
-            if any(
-                t not in dfm for toks in phrases_q for t in toks
-            ):
-                del parsed[qid]  # OOV phrase term: query can never match
-                continue
-            pairs.extend(
-                (qid, t, _driver_idf(n_docs, dfm[t]))
-                for t in sorted(terms_q)
-                if t in dfm  # OOV FREE terms just don't contribute
-            )
-        else:
-            pairs.extend((qid, t, float("nan")) for t in sorted(terms_q))
-    if not pairs or not parsed:
-        return None
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     return _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
-        _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA,
+        _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA,
     )
+
+
+def _mixed_pairs(
+    spark: SparkSession, index, parsed: dict[int, tuple[list[list[str]], list[str]]]
+) -> list[tuple[int, str]]:
+    """(query_id, term) over each mixed query's phrase and free terms in
+    sorted order: an OOV phrase term drops the whole query (it can never
+    match), an OOV free term only itself (it does not contribute)."""
+    pairs, phrase_pairs = [], []
+    for qid, (phrases_q, free_q) in parsed.items():
+        terms_q = {t for toks in phrases_q for t in toks} | set(free_q)
+        pairs.extend((qid, t) for t in sorted(terms_q))
+        phrase_pairs.extend((qid, t) for toks in phrases_q for t in toks)
+    return _scoring_pairs(spark, index, pairs, required=phrase_pairs)
 
 
 def search_topk_mixed(
@@ -1089,13 +992,7 @@ def search_topk_mixed(
     per_shard = _mixed_per_shard(spark, index, queries)
     if per_shard is None:
         return _empty_result(spark, _OUT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(queries), int(k))
 
 
 def mixed_matches(spark: SparkSession, index, query: str) -> DataFrame:
@@ -1259,40 +1156,20 @@ def search_topk_mixed_prefix(
         if fq:
             for qid, term in expand_fuzzy_queries(spark, index, fq, max_edits):
                 fuzzy_exp.setdefault(qid, []).append(term)
-    n_docs = float(index.n_docs)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    dfm = index.df_map(spark)
     parsed: dict[int, tuple[list[list[str]], list[str]]] = {}
-    pairs: list[tuple[int, str, float]] = []
     for qid, (phrases_q, free_q, prefix) in parsed0.items():
         exp = sorted(expansions.get(prefix, {})) if prefix else []
         all_free = list(dict.fromkeys(free_q + sorted(fuzzy_exp.get(qid, [])) + exp))
-        terms_q = {t for toks in phrases_q for t in toks} | set(all_free)
-        if dfm is not None:
-            if any(t not in dfm for toks in phrases_q for t in toks):
-                continue  # OOV phrase term: query can never match
-            kept = sorted(t for t in terms_q if t in dfm)
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in kept)
-        else:
-            # expansion dfs came from the term_dict scan; other terms ride
-            # the NaN/use_dfm=False broadcast-join path
-            pairs.extend((qid, t, float("nan")) for t in sorted(terms_q))
         parsed[qid] = (phrases_q, all_free)
-    if not pairs or not parsed:
+    pairs = _mixed_pairs(spark, index, parsed)
+    if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
-        _make_mixed_kernel(parsed, avgdl, codec), _OUT_SCHEMA,
+        _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 def sql_mixed_prefix_topk(queries: list[tuple[int, str]], k: int = 10) -> str:
@@ -1545,10 +1422,4 @@ def search_topk_phrase_shared(
     per_shard = _grouped_apply(
         blocks, ["qshard"], kernel, _OUT_SCHEMA, n_part, slice_groups=False
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, len(phrases), int(k))

@@ -56,17 +56,21 @@ from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.index.positions import FIELD_BITS, FIELD_STRIDE, decode_position_blocks
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
 from grenad_spark.query import search
-from grenad_spark.query.phrase import _POS_COLS, _PROX_INF, _pair_min_dist, _positions_blocks
+from grenad_spark.query.phrase import _POS_COLS, _PROX_INF, _pair_min_dist
 from grenad_spark.query.search import (
+    _BM25_ORDER,
     _apply_groups,
     _apply_per_query_shard,
     _batch_groups,
-    _driver_idf,
     _empty_result,
     _levenshtein,
-    _local_blocks,
+    _local_query_blocks,
     _local_relation,
+    _n_queries,
+    _query_blocks_from_pairs,
     _rank_local,
+    _rank_topk,
+    _scoring_pairs,
     _tfpart,
     _tokenize_queries,
     expand_fuzzy_queries,
@@ -92,6 +96,8 @@ RANKED_QUERIES: list[tuple[int, str]] = [
 ]
 
 _ATTR_OUT_SCHEMA = "query_id int, doc_id long, attr long, score double"
+# the attribute rule's rank order, (column, ascending) pairs
+_ATTR_ORDER = [("attr", True), *_BM25_ORDER]
 _RANKED_OUT_SCHEMA = (
     "query_id int, doc_id long, words int, typos long, proximity long, "
     "attribute long, exactness int, score double"
@@ -189,33 +195,19 @@ def search_topk_attr_rule(
     qterms: dict[int, list[str]] = {}
     for qid, t in qt:
         qterms.setdefault(qid, []).append(t)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs: list[tuple[int, str, float]] = []
-    for qid, terms in list(qterms.items()):
-        if dfm is not None:
-            if any(t not in dfm for t in terms):
-                del qterms[qid]  # conjunctive: an OOV term can never match
-                continue
-            pairs.extend((qid, t, _driver_idf(n_docs, dfm[t])) for t in terms)
-        else:
-            pairs.extend((qid, t, float("nan")) for t in terms)
+    # conjunctive: a query with an OOV term can never match
+    pairs = _scoring_pairs(spark, index, qt, required=qt)
     if not pairs:
         return _empty_result(spark, _ATTR_OUT_SCHEMA)
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
         _make_attr_kernel(qterms, float(index.avgdl), index.payload_codec),
         _ATTR_OUT_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.asc("attr"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "attr", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k), _ATTR_ORDER,
+        ["query_id", "doc_id", "attr", "score"],
     )
 
 
@@ -350,8 +342,8 @@ def _ranked_rows(
 ) -> DataFrame | pd.DataFrame:
     """Every rule statistic for every matching (query, doc) pair — the
     UNRANKED output of the composed kernel (one pruned positions scan, one
-    exchange), before any rule ORDER is applied; score is already rounded
-    to SCORE_DECIMALS. A pandas frame when the call is served on the driver
+    exchange), before any rule ORDER is applied; score is not rounded yet.
+    A pandas frame when the call is served on the driver
     (search._serve_local: the derivation terms' position blocks read with
     pyarrow, the same kernel over the same (query_id, shard DIV g) groups),
     else the Spark plan."""
@@ -371,30 +363,22 @@ def _ranked_rows(
                 tl.append((slot, d))
         if tl:
             slot_meta.setdefault(qid, {})[term] = tl
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    pairs = [
-        (qid, t, _driver_idf(n_docs, dfm[t]) if dfm is not None else float("nan"))
-        for qid, per_q in slot_meta.items()
-        for t in sorted(per_q)
-    ]
+    pairs = [(qid, t) for qid, per_q in slot_meta.items() for t in sorted(per_q)]
     if not pairs:
         return _empty_result(spark, _RANKED_OUT_SCHEMA)
     kernel = _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec)
     if search._serve_local(spark, index, pairs):
-        qt = pd.DataFrame(pairs, columns=["query_id", "term", "idf"])
-        cols = ["term", "shard", "n", "first_doc", "header", "positions"]
-        pdf = qt.merge(_local_blocks(index, "positions", sorted(set(qt["term"])), cols), on="term")
+        pdf = _local_query_blocks(
+            spark, index, pairs, "positions",
+            ["term", "shard", "n", "first_doc", "header", "positions"],
+        )
         g, _ = _batch_groups(spark, index, pairs)
         out = _apply_groups(pdf.assign(shard=pdf["shard"] // g), ["query_id", "shard"], kernel)
-        if out is None:
-            return _empty_result(spark, _RANKED_OUT_SCHEMA)
-        return out.assign(score=out["score"].round(SCORE_DECIMALS))
-    blocks = _positions_blocks(spark, index, n_docs, pairs, dfm is not None)
-    per_shard = _apply_per_query_shard(
+        return _empty_result(spark, _RANKED_OUT_SCHEMA) if out is None else out
+    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
+    return _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS, kernel, _RANKED_OUT_SCHEMA
     )
-    return per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
 
 
 def _ranked_stats(
@@ -403,13 +387,14 @@ def _ranked_stats(
     queries: list[tuple[int, str]],
     max_edits: int = 1,
 ) -> DataFrame:
-    """_ranked_rows as a DataFrame (a local relation when served on the
-    driver): both the default pipeline and custom rule orders are windows
-    over it."""
+    """_ranked_rows as a DataFrame with its score rounded to
+    SCORE_DECIMALS (a local relation when served on the driver): the
+    filtered, distinct, custom-order and threshold pages rank over it."""
     rows = _ranked_rows(spark, index, queries, max_edits)
     if isinstance(rows, pd.DataFrame):
+        rows = rows.assign(score=rows["score"].round(SCORE_DECIMALS))
         return _local_relation(spark, rows, _RANKED_OUT_SCHEMA)
-    return rows
+    return rows.withColumn("score", F.round("score", SCORE_DECIMALS))
 
 
 def search_topk_ranked(
@@ -431,26 +416,14 @@ def search_topk_ranked(
     rows = _ranked_rows(spark, index, queries, max_edits)
     if isinstance(rows, pd.DataFrame):
         return _rank_local(spark, rows, int(k), _RANKED_ORDER, _RANKED_OUT_SCHEMA)
-    w = Window.partitionBy("query_id").orderBy(*_default_order_cols())
-    return (
-        rows.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select(*_RANKED_OUT_COLS)
-    )
+    return _rank_topk(rows, _n_queries(queries), int(k), _RANKED_ORDER, _RANKED_OUT_COLS)
 
 
 # the default rule order: (stats column, ascending) pairs
 _RANKED_ORDER = [
     ("words", False), ("typos", True), ("proximity", True), ("attribute", True),
-    ("exactness", False), ("score", False), ("doc_id", True),
+    ("exactness", False), *_BM25_ORDER,
 ]
-
-
-def _default_order_cols():
-    # built lazily — Column constructors need an active SparkContext
-    return [F.asc(c) if a else F.desc(c) for c, a in _RANKED_ORDER]
-
-
 _RANKED_OUT_COLS = [
     "query_id", "doc_id", "words", "typos", "proximity", "attribute",
     "exactness", "score",
@@ -474,12 +447,9 @@ def search_topk_ranked_filtered(
     search_topk_ranked."""
     stats = _ranked_stats(spark, index, queries, max_edits)
     allowed = docs.filter(F.expr(filter_sql)).select("doc_id")
-    w = Window.partitionBy("query_id").orderBy(*_default_order_cols())
-    return (
-        stats.join(allowed, "doc_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select(*_RANKED_OUT_COLS)
+    return _rank_topk(
+        stats.join(allowed, "doc_id"), _n_queries(queries), int(k),
+        _RANKED_ORDER, _RANKED_OUT_COLS,
     )
 
 
@@ -502,15 +472,16 @@ def search_topk_ranked_distinct(
     attrs = docs.select(
         "doc_id", F.col(distinct_attr).cast("string").alias("value")
     )
-    wv = Window.partitionBy("query_id", "value").orderBy(*_default_order_cols())
-    w = Window.partitionBy("query_id").orderBy(*_default_order_cols())
-    return (
+    wv = Window.partitionBy("query_id", "value").orderBy(
+        *[F.asc(c) if a else F.desc(c) for c, a in _RANKED_ORDER]
+    )
+    best = (
         stats.join(attrs, "doc_id")
         .withColumn("vr", F.row_number().over(wv))
         .filter(F.col("vr") == 1)
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select(*_RANKED_OUT_COLS, "value")
+    )
+    return _rank_topk(
+        best, _n_queries(queries), int(k), _RANKED_ORDER, [*_RANKED_OUT_COLS, "value"]
     )
 
 
@@ -637,17 +608,9 @@ def search_topk_custom_rules(
         per_shard = per_shard.join(
             docs.select("doc_id", *custom_cols), "doc_id"
         )
-    order = [
-        F.asc(c) if d == "asc" else F.desc(c) for c, d, _ in parsed
-    ] + [F.asc("doc_id")]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    return (
-        per_shard.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select(
-            "query_id", "doc_id", "words", "typos", "proximity", "attribute",
-            "exactness", "score", *custom_cols,
-        )
+    order = [(c, d == "asc") for c, d, _ in parsed] + [("doc_id", True)]
+    return _rank_topk(
+        per_shard, _n_queries(queries), int(k), order, [*_RANKED_OUT_COLS, *custom_cols]
     )
 
 
@@ -991,14 +954,9 @@ def search_topk_score_threshold(
     scored = _with_score_components(
         stats, _qn_df(spark, queries), len(fields), max_edits
     ).filter(F.col("ranking_score") >= float(threshold))
-    w = Window.partitionBy("query_id").orderBy(*_default_order_cols())
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select(
-            "query_id", "doc_id", "words", "typos", "proximity", "attribute",
-            "exactness", "score", "ranking_score",
-        )
+    return _rank_topk(
+        scored, _n_queries(queries), int(k), _RANKED_ORDER,
+        [*_RANKED_OUT_COLS, "ranking_score"],
     )
 
 

@@ -79,24 +79,6 @@ def _qshard_params(
     return g, -(-n_shards // g)
 
 
-def _qshard_col(spark: SparkSession, index: "IndexHandle"):
-    """Coalesced scoring-shard column, aliased back to `shard`: shard DIV g
-    merges g consecutive doc-range-disjoint build shards into one scoring
-    group (the _group_params coalescing, applied at the column level).
-    Serving kernels never read the shard VALUE — they only group by it and
-    re-sort blocks by first_doc — so relabeling is exact while cutting the
-    pandas-group count (and its per-group Arrow→pandas overhead) by g×:
-    a 12-query batch over 128 build shards went from 1536 kernel groups to
-    192 with no plan change elsewhere.
-
-    g here comes from the core count. Its only callers are the grouped
-    applyInPandas sites (fields, derivations, geo, matches); every
-    _grouped_apply path takes g from _batch_groups instead
-    (_apply_per_query_shard), by the same exactness argument."""
-    g, _ = _qshard_params(spark, index)
-    return (F.col("shard") / g).cast("int").alias("shard")
-
-
 def _tfpart(tf, dl, avgdl):
     return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
 
@@ -360,12 +342,7 @@ def search_conjunctive(
     posting-list intersection of SURVEY §2.7; relationally a semi-join chain,
     here one aggregate with a term-count filter)."""
     matches = conjunctive_matches(spark, index, queries)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        matches.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(matches, _n_queries(queries), int(k))
 
 
 def search_topk_words(
@@ -387,14 +364,9 @@ def search_topk_words(
         spark, index, blocks, pairs, _SCORE_COLS,
         _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("hit_terms"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "hit_terms", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k),
+        [("hit_terms", False), *_BM25_ORDER], ["query_id", "doc_id", "hit_terms", "score"],
     )
 
 
@@ -418,12 +390,9 @@ def search_topk_sorted(
     lives in the documents table and the match set comes from the index."""
     matches = conjunctive_matches(spark, index, queries)
     j = matches.join(docs.select("doc_id", sort_col), "doc_id")
-    key = F.asc(sort_col) if ascending else F.desc(sort_col)
-    w = Window.partitionBy("query_id").orderBy(key, F.asc("doc_id"))
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", sort_col, "score")
+    return _rank_topk(
+        j, _n_queries(queries), int(k),
+        [(sort_col, ascending), ("doc_id", True)], ["query_id", "doc_id", sort_col, "score"],
     )
 
 
@@ -446,11 +415,9 @@ def search_topk_distinct_attr(
         F.desc("score"), F.asc("doc_id")
     )
     best = j.withColumn("grn", F.row_number().over(w_grp)).filter(F.col("grn") == 1)
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        best.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", distinct_col, "score")
+    return _rank_topk(
+        best, _n_queries(queries), int(k),
+        cols=["query_id", "doc_id", distinct_col, "score"],
     )
 
 
@@ -611,17 +578,21 @@ def _query_blocks_from_pairs(
     index: IndexHandle,
     qt: list[tuple[int, str]],
     columns: list[str] | None = None,
+    table: str = "segments",
 ) -> tuple[DataFrame, DataFrame]:
-    """Pruned (query_id × matching block rows) with idf attached.
+    """Pruned (query_id × matching block rows) of the index table `table`
+    (segments or positions) with idf attached, for (query_id, term) pairs.
 
     Fast path: the handle's driver-held df map (vocabulary-gated) computes
-    idf locally and ships it INSIDE the qterms broadcast — one Spark job per
-    query instead of two (no term_dict scan). Fallback for 10^9-term vocabs:
-    broadcast join against term_dict. columns restricts the segment scan
-    (the metadata prune pass reads everything BUT the payload — parquet
-    column pruning keeps payload bytes on disk)."""
+    idf locally (_idf_rows: out-of-vocabulary pairs drop) and ships it
+    INSIDE the attach — one Spark job per query instead of two (no
+    term_dict scan). Fallback for 10^9-term vocabs: broadcast join against
+    term_dict, idf as a Spark expression. columns restricts the scan (the
+    metadata prune pass reads everything BUT the payload — parquet column
+    pruning keeps payload bytes on disk). Returns (blocks, qterms); qterms
+    is None on the literal-map attach."""
     terms = sorted({t for _, t in qt})
-    seg = index.segments(spark).filter(isin("term", terms))
+    seg = getattr(index, table)(spark).filter(isin("term", terms))
     if columns is not None:
         seg = seg.select(*columns)
     n_docs = float(index.n_docs)
@@ -646,6 +617,7 @@ def _query_blocks_from_pairs(
     blocks = (
         seg.join(F.broadcast(td), "term")
         .join(F.broadcast(qterms), "term")
+        # Spark-expr idf: formula-identical to _driver_idf
         .withColumn(
             "idf", F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
         )
@@ -653,9 +625,33 @@ def _query_blocks_from_pairs(
     return blocks, qterms
 
 
+def _scoring_pairs(
+    spark: SparkSession,
+    index: IndexHandle,
+    pairs: list[tuple[int, str]],
+    required: list[tuple[int, str]] = (),
+) -> list[tuple[int, str]]:
+    """The (query_id, term) pairs of `pairs` that can match, in order. With
+    the df map held, an out-of-vocabulary term drops (the disjunctive
+    rule), and so does every pair of a query with an out-of-vocabulary
+    `required` pair: pass `pairs` itself for the conjunctive rule (a query
+    with an OOV term can never match). Without the df map every pair passes;
+    the term_dict join drops OOV terms and the kernels see no blocks for
+    them."""
+    dfm = index.df_map(spark)
+    if dfm is None:
+        return list(pairs)
+    dead = {q for q, t in required if t not in dfm}
+    return [(q, t) for q, t in pairs if t in dfm and q not in dead]
+
+
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
-# the BM25 rank order within a query: (column, ascending) pairs
+_OUT_COLS = ["query_id", "doc_id", "score"]
+# rank orders within a query, (column, ascending) pairs for _rank_topk and
+# _rank_local: BM25, then the rule tiers that sort ahead of it
 _BM25_ORDER = [("score", False), ("doc_id", True)]
+_TYPO_ORDER = [("hit_terms", False), ("typos", True), *_BM25_ORDER]
+_PROXIMITY_ORDER = [("proximity", True), *_BM25_ORDER]
 
 
 def search_topk(
@@ -766,22 +762,37 @@ def _batch_groups(spark: SparkSession, index: IndexHandle, pairs: list[tuple]) -
     return g, min(n_groups, n_qshards)
 
 
-def _rank_topk(per_shard: DataFrame, n_queries: int, kk: int) -> DataFrame:
-    rounded = per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
+def _n_queries(pairs: list[tuple]) -> int:
+    """Distinct query_ids of (query_id, ...) tuples: the n_queries of
+    _rank_topk."""
+    return len({p[0] for p in pairs})
+
+
+def _rank_topk(
+    df: DataFrame,
+    n_queries: int,
+    kk: int,
+    order: list[tuple[str, bool]] = _BM25_ORDER,
+    cols: list[str] = _OUT_COLS,
+) -> DataFrame:
+    """The top-k of every serving path: keep the kk first rows of each
+    query under `order` ((column, ascending) pairs, as _rank_local takes)
+    and project `cols`, with a `score` column among them rounded to
+    SCORE_DECIMALS first (rounding is idempotent: an input scored already
+    rounded keeps its values). n_queries bounds the distinct query_ids of
+    `df`; a single query plans ORDER BY + LIMIT, which compiles to
+    TakeOrderedAndProject — no window exchange, the candidate rows reduce
+    in the same job. A batch ranks in one row_number window per query."""
+    if "score" in cols:
+        df = df.withColumn("score", F.round("score", SCORE_DECIMALS))
+    sort = [F.asc(c) if a else F.desc(c) for c, a in order]
     if n_queries == 1:
-        # single-query serving: ORDER BY + LIMIT compiles to
-        # TakeOrderedAndProject — no window exchange, the k·shards candidate
-        # rows reduce driver-side in the same job
-        return (
-            rounded.orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(kk)
-            .select("query_id", "doc_id", "score")
-        )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+        return df.orderBy(*sort).limit(kk).select(*cols)
+    w = Window.partitionBy("query_id").orderBy(*sort)
     return (
-        rounded.withColumn("rn", F.row_number().over(w))
+        df.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= kk)
-        .select("query_id", "doc_id", "score")
+        .select(*cols)
     )
 
 
@@ -835,17 +846,20 @@ def _local_blocks(
 
 
 def _local_query_blocks(
-    spark: SparkSession, index: IndexHandle, pairs: list[tuple[int, str]]
+    spark: SparkSession,
+    index: IndexHandle,
+    pairs: list[tuple[int, str]],
+    table: str = "segments",
+    columns: list[str] = ("term", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"),
 ) -> pd.DataFrame:
-    """_query_blocks_from_pairs on the driver: the block rows of each
-    (query_id, term) pair with the driver idf attached."""
+    """_query_blocks_from_pairs on the driver: the `columns` of the `table`
+    block rows of each (query_id, term) pair with the driver idf attached."""
     qt = pd.DataFrame(
         _idf_rows(index, index.df_map(spark), pairs), columns=["query_id", "term", "idf"]
     )
     if qt.empty:
         return qt
-    cols = ["term", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"]
-    return qt.merge(_local_blocks(index, "segments", sorted(set(qt["term"])), cols), on="term")
+    return qt.merge(_local_blocks(index, table, sorted(set(qt["term"])), list(columns)), on="term")
 
 
 @functools.lru_cache(maxsize=None)
@@ -929,7 +943,11 @@ def _grouped_apply(
     n_part: int,
     slice_groups: bool = True,
 ) -> DataFrame:
-    """groupBy(*keys).applyInPandas(fn, out_schema), built on mapInPandas.
+    """Call `fn` once per distinct `keys` group of `df` (the grouped-map
+    semantics of Spark's applyInPandas) on the map protocol, mapInPandas.
+    Every serving kernel dispatches through here: the per-(query_id, shard)
+    kernels through _apply_per_query_shard, the qshard-keyed scoring,
+    prune and shared kernels directly.
 
     n_part is required and comes from _batch_groups (_group_params under
     the batch's posting volume): the exchange is sized by the data it
@@ -989,12 +1007,15 @@ def _apply_per_query_shard(
     fn,
     out_schema: str,
 ) -> DataFrame:
-    """A per-(query_id, shard) kernel `fn` over `blocks` restricted to
-    `columns`, with g consecutive doc-disjoint build shards merged into one
-    group (shard DIV g, aliased back to `shard`) and g, n_part from the one
-    volume rule, _batch_groups over `pairs`. Exact by _qshard_col's
-    argument: kernels only group by the shard value and re-sort blocks by
-    first_doc."""
+    """The one dispatch of a per-(query_id, shard) kernel `fn` over
+    `blocks` restricted to `columns`. g consecutive doc-disjoint build
+    shards merge into one group (shard DIV g, aliased back to `shard`), and
+    g and n_part come from the one volume rule, _batch_groups over `pairs`.
+    Relabeling is exact: shards are doc-range disjoint and ascending, and
+    kernels never read the shard value — they only group by it and re-sort
+    blocks by first_doc — so a merged group is still one valid posting-list
+    slice, with g× fewer Arrow→pandas groups (a 12-query batch over 128
+    build shards went from 1536 kernel groups to 192)."""
     g, n_part = _batch_groups(spark, index, pairs)
     sel = blocks.select(
         "query_id", (F.col("shard") / g).cast("int").alias("shard"), *columns
@@ -1026,7 +1047,7 @@ def _search_from_pairs(
         # the one task's work, on the driver: same rows, same kernel call
         pdf = _local_query_blocks(spark, index, pairs)
         return _rank_local(spark, _make_per_query(apply_fn)(pdf), kk, _BM25_ORDER, _OUT_SCHEMA)
-    n_queries = len({q for q, _ in pairs})
+    n_queries = _n_queries(pairs)
     g, n_part = _batch_groups(spark, index, pairs)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
     sel = blocks.select(
@@ -1092,7 +1113,7 @@ def _search_pruned(
     kk = int(k)
     avgdl = float(index.avgdl)
     codec = index.payload_codec
-    n_queries = len({q for q, _ in pairs})
+    n_queries = _n_queries(pairs)
     g, n_part = _batch_groups(spark, index, pairs)
 
     # survivor attach: a SUPERSET of the pass-1 survivors is always exact —
@@ -1861,15 +1882,8 @@ def search_topk_fresh(
             ).alias("s"),
         )
     )
-    scored = per_term.groupBy("query_id", "doc_id").agg(
-        F.round(F.sum("s"), SCORE_DECIMALS).alias("score")
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    scored = per_term.groupBy("query_id", "doc_id").agg(F.sum("s").alias("score"))
+    return _rank_topk(scored, _n_queries(pairs), int(k))
 
 
 def search_topk_shared(
@@ -1997,13 +2011,7 @@ def search_topk_shared(
     per_shard = _grouped_apply(
         blocks, ["qshard"], fn, _OUT_SCHEMA, n_part, slice_groups=False
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= kk)
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pairs), kk)
 
 
 def _empty_out() -> pd.DataFrame:
@@ -2269,6 +2277,7 @@ def _make_wand_batched(
 # ---------------------------------------------------------------------------
 
 _OUT_TYPO_SCHEMA = "query_id int, doc_id long, hit_terms int, typos long, score double"
+_TYPO_COLS = ["query_id", "doc_id", "hit_terms", "typos", "score"]
 
 
 def _levenshtein(a: str, b: str) -> int:
@@ -2389,14 +2398,8 @@ def search_topk_fuzzy_ranked(
         spark, index, blocks, pairs, _PAYLOAD_COLS,
         _make_typo_ranked_kernel(slot_meta, avgdl, codec), _OUT_TYPO_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "hit_terms", "typos", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k), _TYPO_ORDER, _TYPO_COLS
     )
 
 
@@ -2606,14 +2609,8 @@ def search_topk_typo_settings(
         _make_typo_ranked_kernel(slot_meta, float(index.avgdl), index.payload_codec),
         _OUT_TYPO_SCHEMA,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("hit_terms"), F.asc("typos"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "hit_terms", "typos", "score")
+    return _rank_topk(
+        per_shard, _n_queries(pairs), int(k), _TYPO_ORDER, _TYPO_COLS
     )
 
 
@@ -2645,13 +2642,7 @@ def search_topk_filtered(
     )
     allowed = docs.filter(F.expr(filter_sql)).select("doc_id")
     j = per_shard.join(allowed, "doc_id")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        j.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(j, _n_queries(pairs), int(k))
 
 
 # ---------------------------------------------------------------------------
@@ -2864,13 +2855,7 @@ def search_topk_negative(
             _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
         ).select("query_id", "doc_id")
         per_shard = per_shard.join(excluded, ["query_id", "doc_id"], "left_anti")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pos_pairs), int(k))
 
 
 def sql_negative_topk(queries: list[tuple[int, str]], k: int = 10) -> str:
@@ -3000,13 +2985,7 @@ def search_topk_negative_phrases(
         exclusions.append(phrase_match_pairs(spark, index, ph_pairs))
     for exc in exclusions:
         per_shard = per_shard.join(exc, ["query_id", "doc_id"], "left_anti")
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        per_shard.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "score")
-    )
+    return _rank_topk(per_shard, _n_queries(pos_pairs), int(k))
 
 
 def sql_negative_phrases_topk(queries: list[tuple[int, str]], k: int = 10) -> str:
@@ -3194,14 +3173,10 @@ def _matched_prefix_topk(
     j = slots.filter(F.col("matched_prefix") >= 1).join(
         scores, ["query_id", "doc_id"]
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("matched_prefix"), F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        j.withColumn("score", F.round("score", SCORE_DECIMALS))
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= int(k))
-        .select("query_id", "doc_id", "matched_prefix", "score")
+    return _rank_topk(
+        j, _n_queries(pairs), int(k),
+        [("matched_prefix", False), *_BM25_ORDER],
+        ["query_id", "doc_id", "matched_prefix", "score"],
     )
 
 

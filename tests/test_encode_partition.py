@@ -347,3 +347,56 @@ def test_fixed_corpus_rows_are_pinned(codec):
     assert _digest(seg_raw) == _digest(seg_agg)
     assert _digest(seg_raw) == PINNED[("segments", codec)]
     assert _digest(pos) == PINNED[("positions", codec)]
+
+
+# ---------------------------------------------------------------------------
+# compaction decode: whole batches, one call per generation
+# ---------------------------------------------------------------------------
+
+
+def test_generation_decode_is_order_free():
+    """Compaction's decode kernels read each generation's blocks in one
+    call, in whatever order the scan delivers them: 2 generations (codecs
+    none and zlib) × 3 terms × 3 doc-range shards, rows shuffled and split
+    across batches, decode back to exactly the encoded postings and
+    occurrences."""
+    from grenad_spark.functions.varbyte import compress_payload
+    from grenad_spark.index.compact import _decode_partition
+    from grenad_spark.index.positions import (
+        _make_decode_positions_partition,
+        encode_position_blocks,
+    )
+
+    rng = np.random.default_rng(11)
+    codecs = ["none", "zlib"]
+    seg_rows, pos_rows, want_post, want_occ = [], [], [], []
+    for gen, codec in enumerate(codecs):
+        for term in ("alpha", "beta", "gamma"):
+            for shard in range(3):
+                docs = np.sort(rng.choice(np.arange(shard * 100, shard * 100 + 100),
+                                          size=int(rng.integers(1, 30)), replace=False))
+                tfs = rng.integers(1, 4, size=docs.size)
+                dls = tfs + rng.integers(0, 50, size=docs.size)
+                pos = np.concatenate([np.sort(rng.choice(int(dl), size=int(tf), replace=False))
+                                      for tf, dl in zip(tfs, dls)])
+                for b, (n, _f, _l, header, positions) in enumerate(
+                    encode_position_blocks(docs, tfs, dls, pos, block_size=4)
+                ):
+                    hdr = compress_payload(header, codec)
+                    seg_rows.append((term, gen, shard, b, n, hdr))
+                    pos_rows.append((gen, term, n, hdr, compress_payload(positions, codec)))
+                want_post += [(term, int(d), int(t), int(l), gen)
+                              for d, t, l in zip(docs, tfs, dls)]
+                want_occ += [(term, int(d), int(l), int(p), gen)
+                             for d, l, p in zip(np.repeat(docs, tfs), np.repeat(dls, tfs), pos)]
+    order = rng.permutation(len(seg_rows))
+    seg = pd.DataFrame([seg_rows[i] for i in order],
+                       columns=["term", "gen", "shard", "block_id", "n", "payload"])
+    pos = pd.DataFrame([pos_rows[i] for i in order],
+                       columns=["gen", "term", "n", "header", "positions"])
+
+    got_post = _run(_decode_partition, _batches(seg, 17), codecs)
+    assert sorted(map(tuple, got_post.itertuples(index=False))) == sorted(want_post)
+    got_occ = _run(lambda it: _make_decode_positions_partition(codecs)(it), _batches(pos, 17))
+    assert list(got_occ.columns) == ["term", "doc_id", "dl", "pos", "gen"]
+    assert sorted(map(tuple, got_occ.itertuples(index=False))) == sorted(want_occ)

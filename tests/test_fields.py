@@ -301,3 +301,48 @@ def test_typo_disable_attrs_bruteforce(spark, fields_index):
             key=lambda x: (-x[1], x[2], -x[3], x[0]),
         )[:10]
         assert got.get(qid, []) == want, qid
+
+
+def test_field_paths_large_vocab_fallback(spark, fields_index, monkeypatch):
+    """Force the >IDF_MAP_MAX_TERMS fallback (df_map() -> None): the fields
+    family, matches, geo, the attribute rule and the ranked pipeline take
+    their idf from the term_dict broadcast of the shared block attach and
+    must return the rows of the df-map plan, OOV and conjunctive queries
+    included."""
+    from grenad_spark.index.build import IndexHandle
+    from grenad_spark.query import fields as FL, geo as G, matches as M, ranked as R
+    from grenad_spark.query.search import TypoSettings
+
+    idx, rows = fields_index
+    docs = spark.createDataFrame([(r[0],) for r in rows], "doc_id long")
+    qs = [(1, "alpha beta"), (2, "zeta alpha"), (3, "gamma nosuchword"), (4, "eps")]
+    typos = [(1, "alpka"), (2, "zeta bEta"), (3, "gamma")]
+
+    def run_all():
+        calls = {
+            "search_on": lambda: FL.search_topk_search_on(spark, idx, qs, ["title"], k=50),
+            "exact_field": lambda: FL.search_topk_exact_field(spark, idx, qs, k=50),
+            "exact_tiers": lambda: FL.search_topk_exact_tiers(spark, idx, qs, k=50),
+            "proximity_attr": lambda: FL.search_topk_proximity_attr(spark, idx, qs, k=50),
+            "typo_disable_attrs": lambda: FL.search_topk_typo_disable_attrs(
+                spark, idx, typos, TypoSettings(one_typo=3, two_typos=6), k=50
+            ),
+            "matches": lambda: M.search_topk_matches(spark, idx, qs, k=5),
+            "geo_radius": lambda: G.geo_radius_topk(
+                spark, idx, docs, qs, (0.0, 0.0), 9000.0, k=50
+            ),
+            "geo_sort": lambda: G.geo_sort_topk(spark, idx, docs, qs, (10.0, 20.0), k=50),
+            "attr_rule": lambda: R.search_topk_attr_rule(spark, idx, qs, k=50),
+            "ranked": lambda: R.search_topk_ranked(spark, idx, typos, k=50),
+        }
+        return {name: sorted(map(tuple, fn().collect())) for name, fn in calls.items()}
+
+    baseline = run_all()
+    assert all(baseline.values()), baseline
+    monkeypatch.setattr(IndexHandle, "IDF_MAP_MAX_TERMS", 0)
+    monkeypatch.delattr(idx, "_df_map", raising=False)  # bust the handle cache
+    assert idx.df_map(spark) is None
+    try:
+        assert run_all() == baseline
+    finally:
+        monkeypatch.delattr(idx, "_df_map", raising=False)  # don't leak None

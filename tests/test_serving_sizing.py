@@ -36,6 +36,7 @@ def sized_index(wide_spark, tmp_path_factory):
     terms span several blocks in several shards."""
     from grenad_spark.index.build import IndexHandle, build_index
     from grenad_spark.index.positions import build_positions
+    from grenad_spark.query.fields import build_field_word_counts
 
     rng = np.random.default_rng(17)
     rows = []
@@ -50,6 +51,7 @@ def sized_index(wide_spark, tmp_path_factory):
     build_index(wide_spark, docs.select("doc_id", "text"), out,
                 n_shards=N_SHARDS, block_size=8)
     build_positions(wide_spark, docs, out, fields=["title", "body"], block_size=8)
+    build_field_word_counts(wide_spark, docs, out, fields=["title", "body"])
     return IndexHandle(out), rows
 
 
@@ -77,18 +79,36 @@ TYPOS = [(1, "alpah beta"), (2, "gamm"), (3, "deltaa eps"), (4, "thetta iota"),
          (5, "kapa mu"), (6, "omicorn pi"), (7, "zeta"), (8, "lamda nu xi")]
 
 
+# split-word queries: each glues two vocabulary words (derivations.py)
+SPLITS = [(1, "alphabeta gamma"), (2, "deltaeps"), (3, "zetaeta theta"), (4, "iota")]
+
+
 def _calls(rows):
+    from grenad_spark.query import derivations as D, fields as FL, geo as G, matches as M
     from grenad_spark.query.phrase import search_topk_phrase, search_topk_phrase_shared
     from grenad_spark.query.ranked import search_topk_ranked
     from grenad_spark.query.search import search_conjunctive, search_topk_fuzzy_ranked
 
     qs, ph = _queries(12), _phrases(rows)
+
+    def geo(sp, ix):
+        docs = sp.createDataFrame([(r[0],) for r in rows], "doc_id long")
+        return G.geo_radius_topk(sp, ix, docs, qs, (0.0, 0.0), 9000.0, k=5)
+
     return {
         "ranked": lambda sp, ix: search_topk_ranked(sp, ix, TYPOS, k=5),
         "phrase": lambda sp, ix: search_topk_phrase(sp, ix, ph, k=5),
         "phrase_shared": lambda sp, ix: search_topk_phrase_shared(sp, ix, ph, k=5),
         "typo_ranked": lambda sp, ix: search_topk_fuzzy_ranked(sp, ix, TYPOS, k=5),
         "conjunctive": lambda sp, ix: search_conjunctive(sp, ix, qs, k=5),
+        "search_on": lambda sp, ix: FL.search_topk_search_on(sp, ix, qs, ["title"], k=5),
+        "exact_field": lambda sp, ix: FL.search_topk_exact_field(sp, ix, qs, k=5),
+        "exact_tiers": lambda sp, ix: FL.search_topk_exact_tiers(sp, ix, qs, k=5),
+        "proximity_attr": lambda sp, ix: FL.search_topk_proximity_attr(sp, ix, qs, k=5),
+        "typo_disable_attrs": lambda sp, ix: FL.search_topk_typo_disable_attrs(sp, ix, TYPOS, k=5),
+        "matches": lambda sp, ix: M.search_topk_matches(sp, ix, qs, k=5),
+        "geo_radius": geo,
+        "word_splits": lambda sp, ix: D.search_topk_word_splits(sp, ix, SPLITS, k=5),
     }
 
 
@@ -96,7 +116,12 @@ _BY_NUM = re.compile(r"hashpartitioning\([^)]*, (\d+)\), REPARTITION_BY_NUM")
 
 
 @pytest.mark.parametrize(
-    "call", ["ranked", "phrase", "phrase_shared", "typo_ranked", "conjunctive"]
+    "call",
+    [
+        "ranked", "phrase", "phrase_shared", "typo_ranked", "conjunctive",
+        "search_on", "exact_field", "exact_tiers", "proximity_attr",
+        "typo_disable_attrs", "matches", "geo_radius", "word_splits",
+    ],
 )
 def test_kernel_exchange_sized_by_volume(wide_spark, sized_index, monkeypatch, call):
     import grenad_spark.query.search as S
