@@ -64,7 +64,7 @@ from grenad_spark.index.build import (
     build_segments,
     term_dict_from_segments,
 )
-from grenad_spark.query.search import _PROXIMITY_ORDER, _n_queries, _rank_topk
+from grenad_spark.query.search import _PROXIMITY_ORDER, _empty_result, _n_queries, _rank_topk
 
 # Meilisearch stores pairs up to proximity 7 and ranks a missing pair as 8
 # (one beyond the window) — same constants here.
@@ -633,7 +633,7 @@ def search_topk_proximity_db_prefix(
     parsed = _parse_prefix_queries(queries)
     out_schema = "query_id int, doc_id long, proximity long, score double"
     if not parsed:
-        return spark.createDataFrame([], out_schema)
+        return _empty_result(spark, out_schema)
 
     # ---- score side: prefix-as-one-word rows (df over ALL docs with the
     # prefix — collection statistics are never match-set-restricted)
@@ -794,7 +794,7 @@ def search_topk_proximity_db_prefix(
             )
         )
     else:
-        disc = spark.createDataFrame([], "query_id int, doc_id long, disc long")
+        disc = _empty_result(spark, "query_id int, doc_id long, disc long")
     base_df = F.broadcast(
         spark.createDataFrame(sorted(base8.items()), "query_id int, base long")
     )

@@ -56,7 +56,7 @@ from grenad_spark.index.build import (
     tokens_with_dl,
 )
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
-from grenad_spark.query.search import _n_queries, _rank_topk
+from grenad_spark.query.search import _empty_result, _n_queries, _rank_topk
 
 DEFAULT_MAX_LEN = 2
 DEFAULT_MIN_TERMS = 2
@@ -300,7 +300,7 @@ def search_topk_prefix_db(
     rows either way (prefix_doc_rows). (query_id, doc_id, score)."""
     pairs = sorted({(int(q), p.lower().strip()) for q, p in queries if p.strip()})
     if not pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, score double")
+        return _empty_result(spark, "query_id int, doc_id long, score double")
     agg = prefix_doc_rows(spark, index, pairs)
     wdf = Window.partitionBy("query_id", "prefix")
     scored = (

@@ -95,11 +95,12 @@ def seek_gte_postings(spark, index, keys: list[tuple[int, str, int]]) -> DataFra
     import pandas as pd
 
     from grenad_spark.functions.varbyte import decode_block, decompress_payload
+    from grenad_spark.query.search import _empty_result
 
     codec = index.payload_codec
     out_schema = "seek_id int, term string, doc_id long, tf int"
     if not keys:
-        return spark.createDataFrame([], out_schema)
+        return _empty_result(spark, out_schema)
     terms = sorted({t for _, t, _ in keys})
     seg = index.segments(spark).filter(F.col("term").isin(terms))
     kdf = spark.createDataFrame(keys, "seek_id int, term string, target long")

@@ -127,13 +127,13 @@ def search_topk_ngram_concat(
     try their concatenation as a candidate term ("val ue" → "value").
     Driver-side rewrite only; OOV candidates die in the pruned scan.
     (query_id, doc_id, score)."""
-    from grenad_spark.query.search import _OUT_SCHEMA, _search_from_pairs
+    from grenad_spark.query.search import _OUT_SCHEMA, _empty_result, _search_from_pairs
 
     pairs: list[tuple[int, str]] = []
     for qid, q in queries:
         pairs.extend((qid, t) for t in ngram_candidates(_raw_tokens(q), max_ngram))
     if not pairs:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     return _search_from_pairs(spark, index, pairs, k, mode)
 
 
@@ -210,22 +210,26 @@ def search_topk_word_splits(
     BM25(half1)+BM25(half2) to that document, on top of the ordinary
     word-part score. Requires the positional tables (build_positions) for
     the adjacency check. (query_id, doc_id, score)."""
-    from grenad_spark.query.phrase import _POS_COLS, _make_phrase_kernel
+    from grenad_spark.query.phrase import _make_phrase_kernel
     from grenad_spark.query.phrase import _OUT_SCHEMA as _PHRASE_OUT
     from grenad_spark.query.search import (
         _OUT_AND_SCHEMA,
         _OUT_SCHEMA,
+        _POS_COLS,
         _SCORE_COLS,
         _apply_per_query_shard,
+        _empty_result,
         _make_exhaustive_with_termcount,
         _n_queries,
         _query_blocks_from_pairs,
         _rank_topk,
+        _scoring_pairs,
     )
 
     word_pairs, chains = _split_derivations(spark, index, queries)
+    word_pairs = _scoring_pairs(spark, index, word_pairs)
     if not word_pairs and not chains:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     parts: list[DataFrame] = []
 
     if word_pairs:

@@ -47,19 +47,27 @@ from pyspark.sql import functions as F
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf, tokens_col
 from grenad_spark.index.positions import FIELD_BITS, POS_BITS
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query.phrase import _POS_COLS
-from grenad_spark.query.ranked import _decode_groups, _member_mask, _require_fielded
+from grenad_spark.query.kernels import (
+    bm25,
+    conjunctive_docs,
+    decode_positions,
+    empty_frame,
+    matched_bm25,
+    member_mask,
+)
+from grenad_spark.query.ranked import _require_fielded
 from grenad_spark.query.search import (
     _BM25_ORDER,
+    _POS_COLS,
     _PROXIMITY_ORDER,
     _TYPO_COLS,
     _TYPO_ORDER,
     _apply_per_query_shard,
+    _empty_result,
     _n_queries,
     _query_blocks_from_pairs,
     _rank_topk,
     _scoring_pairs,
-    _tfpart,
     _tokenize_queries,
 )
 
@@ -99,12 +107,24 @@ def _allowed_fids(index, fields: list[str]) -> list[int]:
 # attributesToSearchOn
 # ---------------------------------------------------------------------------
 
+def _doc_sums_frame(docs_parts: list, score_parts: list) -> pd.DataFrame:
+    """(doc_id, score) per-doc sums of the field kernels' term parts.
+    pandas' groupby sum is compensated (Kahan) summation, unlike
+    kernels.doc_sums, and these kernels have always scored with it: a
+    plain sum of 3+ terms can differ in the last bit."""
+    return (
+        pd.DataFrame({"doc_id": np.concatenate(docs_parts), "score": np.concatenate(score_parts)})
+        .groupby("doc_id", as_index=False)["score"]
+        .sum()
+    )
+
+
 def _make_search_on_kernel(allowed: list[int], avgdl: float, codec: str):
     allowed_arr = np.asarray(sorted(allowed), dtype=np.int64)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
-        decoded, idfs = _decode_groups(pdf, codec)
+        decoded, idfs = decode_positions(pdf, codec)
         docs_parts, score_parts = [], []
         for term, (d, tf, dl, pos, occ) in decoded.items():
             if d.size == 0:
@@ -116,25 +136,10 @@ def _make_search_on_kernel(allowed: list[int], avgdl: float, codec: str):
             if not sel.any():
                 continue
             docs_parts.append(d[sel])
-            score_parts.append(
-                idfs[term]
-                * _tfpart(cnt[sel].astype(np.float64), dl[sel].astype(np.float64), avgdl)
-            )
+            score_parts.append(bm25(idfs[term], cnt[sel], dl[sel], avgdl))
         if not docs_parts:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int32"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
-        out = (
-            pd.DataFrame(
-                {"doc_id": np.concatenate(docs_parts), "score": np.concatenate(score_parts)}
-            )
-            .groupby("doc_id", as_index=False)["score"]
-            .sum()
-        )
+            return empty_frame(_SEARCH_ON_SCHEMA)
+        out = _doc_sums_frame(docs_parts, score_parts)
         out.insert(0, "query_id", qid)
         return out
 
@@ -155,7 +160,7 @@ def search_topk_search_on(
     allowed = _allowed_fids(index, fields)
     pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
-        return spark.createDataFrame([], _SEARCH_ON_SCHEMA)
+        return _empty_result(spark, _SEARCH_ON_SCHEMA)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
@@ -258,36 +263,19 @@ def _make_exact_kernel(
     base = np.int64(fid) << np.int64(FIELD_BITS)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "chain": pd.Series(dtype="int32"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         toks = qterms[qid]
-        decoded, idfs = _decode_groups(pdf, codec)
+        decoded, idfs = decode_positions(pdf, codec)
         # disjunctive BM25 over distinct matched terms
         docs_parts, score_parts = [], []
         for term, (d, tf, dl, pos, occ) in decoded.items():
             if d.size == 0:
                 continue
             docs_parts.append(d)
-            score_parts.append(
-                idfs[term]
-                * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            )
+            score_parts.append(bm25(idfs[term], tf, dl, avgdl))
         if not docs_parts:
-            return empty
-        agg = (
-            pd.DataFrame(
-                {"doc_id": np.concatenate(docs_parts), "score": np.concatenate(score_parts)}
-            )
-            .groupby("doc_id", as_index=False)["score"]
-            .sum()
-        )
+            return empty_frame(_EXACT_SCHEMA)
+        agg = _doc_sums_frame(docs_parts, score_parts)
         docs = agg["doc_id"].to_numpy()
         # chain: token i of the query occurs at in-field position i of `fid`
         # (packed occurrence keys are globally sorted: docs ascend, positions
@@ -315,18 +303,11 @@ def _make_exact_kernel(
     return fn
 
 
-def search_topk_exact_field(
-    spark: SparkSession,
-    index,
-    queries: list[tuple[int, str]],
-    field: str = "title",
-    k: int = 10,
-) -> DataFrame:
-    """Exactness whole-field tier: disjunctive BM25 matches ranked by
-    (exact DESC, score DESC, doc_id ASC), where exact = 1 iff the query is
-    the ENTIRE `field` of the doc — query tokens occupy in-field positions
-    0..n-1 (positions kernel) AND the field's word count equals n (the
-    field_word_counts table). Output (query_id, doc_id, exact, score)."""
+def _exact_matches(spark: SparkSession, index, queries: list[tuple[int, str]], field: str):
+    """(rows, pairs) of the exactness tiers over `field`, or None when no
+    query term is in the vocabulary: rows are the exact kernel's disjunctive
+    matches (query_id, doc_id, chain, score) with the field's word count
+    `wc` and the query's token count `n_terms` joined on."""
     import re
 
     fid = _allowed_fids(index, [field])[0]
@@ -340,7 +321,7 @@ def search_topk_exact_field(
     qterms = {qid: ts for qid, ts in qterms.items() if ts}
     pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, exact int, score double")
+        return None
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
@@ -355,16 +336,31 @@ def search_topk_exact_field(
     qn = spark.createDataFrame(
         [(qid, len(ts)) for qid, ts in qterms.items()], "query_id int, n_terms int"
     )
-    exact = (
-        per_shard.join(wc, "doc_id", "left")
-        .join(F.broadcast(qn), "query_id")
-        .withColumn(
-            "exact",
-            F.coalesce(
-                ((F.col("chain") == 1) & (F.col("wc") == F.col("n_terms"))).cast("int"),
-                F.lit(0),
-            ),
-        )
+    return per_shard.join(wc, "doc_id", "left").join(F.broadcast(qn), "query_id"), pairs
+
+
+def search_topk_exact_field(
+    spark: SparkSession,
+    index,
+    queries: list[tuple[int, str]],
+    field: str = "title",
+    k: int = 10,
+) -> DataFrame:
+    """Exactness whole-field tier: disjunctive BM25 matches ranked by
+    (exact DESC, score DESC, doc_id ASC), where exact = 1 iff the query is
+    the ENTIRE `field` of the doc — query tokens occupy in-field positions
+    0..n-1 (positions kernel) AND the field's word count equals n (the
+    field_word_counts table). Output (query_id, doc_id, exact, score)."""
+    got = _exact_matches(spark, index, queries, field)
+    if got is None:
+        return _empty_result(spark, "query_id int, doc_id long, exact int, score double")
+    rows, pairs = got
+    exact = rows.withColumn(
+        "exact",
+        F.coalesce(
+            ((F.col("chain") == 1) & (F.col("wc") == F.col("n_terms"))).cast("int"),
+            F.lit(0),
+        ),
     )
     return _rank_topk(
         exact, _n_queries(pairs), int(k), _EXACT_ORDER,
@@ -455,46 +451,17 @@ def search_topk_exact_tiers(
     positions 0..n-1 — the chain alone), tier 0 = any other match. Ranked
     (tier DESC, BM25 DESC, doc_id ASC); output (query_id, doc_id, tier,
     score). Same kernel and word-count DB as search_topk_exact_field."""
-    import re
-
-    fid = _allowed_fids(index, [field])[0]
-    qterms: dict[int, list[str]] = {
-        qid: [t for t in re.split(TOKEN_SPLIT_RE, q.lower()) if t]
-        for qid, q in queries
-    }
-    qterms = {qid: ts for qid, ts in qterms.items() if ts}
-    pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
-    if not pairs:
-        return spark.createDataFrame([], "query_id int, doc_id long, tier int, score double")
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
-        _make_exact_kernel(qterms, fid, float(index.avgdl), index.payload_codec),
-        _EXACT_SCHEMA,
-    )
-    wc = (
-        spark.read.parquet(field_word_counts_path(index.path))
-        .filter(F.col("fid") == int(fid))
-        .select("doc_id", "wc")
-    )
-    qn = spark.createDataFrame(
-        [(qid, len(ts)) for qid, ts in qterms.items()], "query_id int, n_terms int"
-    )
-    tiers = (
-        per_shard.join(wc, "doc_id", "left")
-        .join(F.broadcast(qn), "query_id")
-        .withColumn(
-            "tier",
-            F.coalesce(
-                F.col("chain")
-                * (
-                    F.lit(1)
-                    + (F.col("wc") == F.col("n_terms")).cast("int")
-                ),
-                F.col("chain"),
-                F.lit(0),
-            ),
-        )
+    got = _exact_matches(spark, index, queries, field)
+    if got is None:
+        return _empty_result(spark, "query_id int, doc_id long, tier int, score double")
+    rows, pairs = got
+    tiers = rows.withColumn(
+        "tier",
+        F.coalesce(
+            F.col("chain") * (F.lit(1) + (F.col("wc") == F.col("n_terms")).cast("int")),
+            F.col("chain"),
+            F.lit(0),
+        ),
     )
     return _rank_topk(
         tiers, _n_queries(pairs), int(k), _TIER_ORDER,
@@ -581,25 +548,13 @@ def _make_prox_attr_kernel(qtoks: dict[int, list[str]], avgdl: float, codec: str
     from grenad_spark.index.positions import MAX_FIELDS
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "proximity": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         toks = qtoks[qid]
         uniq = sorted(set(toks))
-        decoded, idfs = _decode_groups(pdf, codec)
-        if any(t not in decoded for t in uniq):
-            return empty
-        matched = decoded[uniq[0]][0]
-        for t in uniq[1:]:
-            matched = np.intersect1d(matched, decoded[t][0], assume_unique=True)
-            if matched.size == 0:
-                return empty
+        decoded, idfs = decode_positions(pdf, codec)
+        matched = conjunctive_docs(decoded, uniq)
+        if matched.size == 0:
+            return empty_frame(_PROX_ATTR_SCHEMA)
         # per term: unique (doc, fid) keys, and the >=2-occurrences subset
         # (a same-term pair needs two occurrences in one field)
         keys: dict[str, np.ndarray] = {}
@@ -620,15 +575,9 @@ def _make_prox_attr_kernel(qtoks: dict[int, list[str]], avgdl: float, codec: str
             else:
                 shared = np.intersect1d(keys[a], keys[b], assume_unique=True)
             docs_ok = np.unique(shared // np.int64(MAX_FIELDS))
-            hit, _ = _member_mask(docs_ok, matched)
+            hit, _ = member_mask(docs_ok, matched)
             prox += np.where(hit, 1, _PROX_ABSENT)
-        scores = np.zeros(matched.size, dtype=np.float64)
-        for t in uniq:
-            d, tf, dl, _pos, _occ = decoded[t]
-            sel = np.searchsorted(d, matched)
-            scores += idfs[t] * _tfpart(
-                tf[sel].astype(np.float64), dl[sel].astype(np.float64), avgdl
-            )
+        scores = matched_bm25(decoded, idfs, uniq, matched, avgdl)
         return pd.DataFrame(
             {"query_id": qid, "doc_id": matched, "proximity": prox, "score": scores}
         )
@@ -660,7 +609,7 @@ def search_topk_proximity_attr(
     pairs = [(qid, t) for qid, toks in sorted(qtoks.items()) for t in sorted(set(toks))]
     pairs = _scoring_pairs(spark, index, pairs, required=pairs)
     if not pairs:
-        return spark.createDataFrame([], _PROX_ATTR_SCHEMA)
+        return _empty_result(spark, _PROX_ATTR_SCHEMA)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,
@@ -791,18 +740,9 @@ def _make_typo_attr_kernel(
     allowed_arr = np.asarray(sorted(allowed), dtype=np.int64)
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "hit_terms": pd.Series(dtype="int32"),
-                "typos": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         meta = slot_meta.get(qid, {})
-        decoded, idfs = _decode_groups(pdf, codec)
+        decoded, idfs = decode_positions(pdf, codec)
         # per (term, doc): tf_full and tf restricted to allowed fids
         all_docs = np.unique(
             np.concatenate([d for d, *_ in decoded.values()])
@@ -822,9 +762,7 @@ def _make_typo_attr_kernel(
                 tf_allowed.astype(np.float64)
             )
             pos_tf = tf_used > 0
-            scores[sel[pos_tf]] += idfs[term] * _tfpart(
-                tf_used[pos_tf], dl[pos_tf].astype(np.float64), avgdl
-            )
+            scores[sel[pos_tf]] += bm25(idfs[term], tf_used[pos_tf], dl[pos_tf], avgdl)
             for slot, dist in meta[term]:
                 if dist == 0:
                     cover = np.ones(d.size, dtype=bool)
@@ -840,7 +778,7 @@ def _make_typo_attr_kernel(
         hit = covered.sum(axis=1).astype(np.int64)
         keep = hit > 0
         if not keep.any():
-            return empty
+            return empty_frame(_TYPO_ATTR_SCHEMA)
         typos = np.where(covered, slot_min, 0).sum(axis=1)
         return pd.DataFrame(
             {
@@ -884,7 +822,7 @@ def search_topk_typo_disable_attrs(
     settings = settings or TypoSettings()
     qslots, slot_meta, pairs = typo_slot_expansion(spark, index, queries, settings)
     if not pairs:
-        return spark.createDataFrame([], _TYPO_ATTR_SCHEMA)
+        return _empty_result(spark, _TYPO_ATTR_SCHEMA)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     per_shard = _apply_per_query_shard(
         spark, index, blocks, pairs, _POS_COLS,

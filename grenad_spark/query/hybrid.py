@@ -51,7 +51,7 @@ from pyspark.sql.window import Window
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.operators.ann import _cos as _cosine
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query.search import _n_queries, _rank_topk, search_topk
+from grenad_spark.query.search import _empty_result, _n_queries, _rank_topk, search_topk
 
 SEMANTIC_RATIO = 0.5
 HYBRID_DECIMALS = 6
@@ -117,7 +117,7 @@ def hybrid_topk(
     )
     kw = _scored_kw(spark, index, [(qid, q) for qid, q, _ in queries])
     if kw is None:
-        kw = spark.createDataFrame([], "query_id int, doc_id long, kw double")
+        kw = _empty_result(spark, "query_id int, doc_id long, kw double")
     max_kw = kw.groupBy("query_id").agg(F.max("kw").alias("mx"))
     cand = kw.select("query_id", "doc_id").union(sem_top).distinct()
     # candidate-side cosine: join only candidate rows against embeddings

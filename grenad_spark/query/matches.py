@@ -31,10 +31,11 @@ from pyspark.sql import functions as F
 
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query.phrase import _POS_COLS
-from grenad_spark.query.ranked import _decode_groups
+from grenad_spark.query.kernels import decode_positions, empty_frame
 from grenad_spark.query.search import (
+    _POS_COLS,
     _apply_per_query_shard,
+    _empty_result,
     _query_blocks_from_pairs,
     _scoring_pairs,
     _tokenize_queries,
@@ -53,22 +54,13 @@ def _make_matches_kernel(hits: dict[int, dict[int, float]], codec: str):
     """hits: query_id -> {doc_id: score} (the collected top-k)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "term": pd.Series(dtype="object"),
-                "pos": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         want = hits.get(qid)
         if not want:
-            return empty
+            return empty_frame(_OUT_SCHEMA)
         wdocs = np.fromiter(want.keys(), dtype=np.int64)
         wdocs.sort()
-        decoded, _ = _decode_groups(pdf, codec)
+        decoded, _ = decode_positions(pdf, codec)
         out = []
         for term, (d, tf, dl, pos, occ) in decoded.items():
             if d.size == 0:
@@ -92,7 +84,7 @@ def _make_matches_kernel(hits: dict[int, dict[int, float]], codec: str):
                     }
                 )
             )
-        return pd.concat(out, ignore_index=True) if out else empty
+        return pd.concat(out, ignore_index=True) if out else empty_frame(_OUT_SCHEMA)
 
     return fn
 
@@ -117,7 +109,7 @@ def search_topk_matches(
         spark, index, [(q, t) for q, t in _tokenize_queries(queries) if q in hits]
     )
     if not pairs:
-        return spark.createDataFrame([], _OUT_SCHEMA)
+        return _empty_result(spark, _OUT_SCHEMA)
     blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
     # block-range prune: a block can contain a hit only if its doc range
     # overlaps the query's hit span (hits are k docs; spans are tight)

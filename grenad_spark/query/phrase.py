@@ -32,11 +32,19 @@ from pyspark.sql import functions as F
 
 from grenad_spark.functions.literals import isin, prefix_ranges
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.index.positions import POS_BITS, decode_position_blocks
-from grenad_spark.query.bm25 import SCORE_DECIMALS
 from grenad_spark.query import search
+from grenad_spark.query.kernels import (
+    PROX_INF,
+    conjunctive_docs,
+    decode_positions,
+    empty_frame,
+    matched_bm25,
+    pair_min_dist,
+    phrase_docs,
+)
 from grenad_spark.query.search import (
     _BM25_ORDER,
+    _POS_COLS,
     _PROXIMITY_ORDER,
     _apply_per_query_shard,
     _batch_groups,
@@ -50,12 +58,9 @@ from grenad_spark.query.search import (
     _rank_local,
     _rank_topk,
     _scoring_pairs,
-    _tfpart,
 )
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
-# positions block columns (after idf is attached) the per-query kernels read
-_POS_COLS = ["term", "idf", "n", "first_doc", "header", "positions"]
 
 
 def _tokenize_phrases(queries: list[tuple[int, str]]) -> dict[int, list[str]]:
@@ -94,52 +99,16 @@ def _make_phrase_kernel(
     }
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         chain = chains[qid]
-        toks = [t for _, t in chain]
-        # decode each distinct term once. Sort blocks by first_doc WITHIN the
-        # term: multi-file parquet scans scramble row order, and the packed
-        # (doc, pos) keys below must be globally sorted for searchsorted /
-        # intersect1d (blocks are doc-range disjoint, so first_doc order IS
-        # global doc order — the same discipline as the WAND kernels).
-        decoded: dict[str, tuple] = {}
-        idfs: dict[str, float] = {}
-        for (term, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            g = g.sort_values("first_doc", kind="stable")
-            decoded[term] = decode_position_blocks(
-                list(g["header"]), list(g["positions"]), g["n"].to_numpy(), codec
-            )
-            idfs[term] = float(idf)
-        if any(t not in decoded for t in toks):
-            return empty  # a phrase term absent from this shard => no match here
-        # offset-chain intersection on packed (doc, pos - i) keys
-        keys = None
-        for i, t in chain:
-            d, tf, _dl, pos, _occ = decoded[t]
-            dk = np.repeat(d, tf) << np.int64(POS_BITS)
-            adj = pos - i
-            k = (dk + adj)[adj >= 0]
-            keys = k if keys is None else np.intersect1d(keys, k, assume_unique=False)
-            if keys.size == 0:
-                return empty
-        matched = np.unique(keys >> np.int64(POS_BITS))
+        decoded, idfs = decode_positions(pdf, codec)
+        # a phrase term absent from this shard => no match here
+        matched = phrase_docs(decoded, chain)
+        if matched.size == 0:
+            return empty_frame(_OUT_SCHEMA)
         # BM25 over distinct phrase terms, restricted to matched docs
-        uniq_terms = list(dict.fromkeys(toks))
-        scores = np.zeros(matched.size, dtype=np.float64)
-        for t in uniq_terms:
-            d, tf, dl, _pos, _occ = decoded[t]
-            sel = np.searchsorted(d, matched)
-            # matched ⊆ d for every phrase term (conjunctive), so sel is exact
-            scores += idfs[t] * _tfpart(
-                tf[sel].astype(np.float64), dl[sel].astype(np.float64), avgdl
-            )
+        terms = list(dict.fromkeys(t for _, t in chain))
+        scores = matched_bm25(decoded, idfs, terms, matched, avgdl)
         return pd.DataFrame({"query_id": qid, "doc_id": matched, "score": scores})
 
     return fn
@@ -537,96 +506,31 @@ FROM tpos
 # ---------------------------------------------------------------------------
 
 _PROX_OUT_SCHEMA = "query_id int, doc_id long, proximity long, score double"
-_PROX_INF = np.int64(1) << np.int64(40)
-
-
-def _pair_min_dist(a, b, same_term: bool):
-    """Per-doc min |pos_b - pos_a| between two decoded terms' occurrence
-    streams. a/b = (doc_ids, tfs, dls, pos, occ_starts) decode tuples.
-    same_term=True computes min over DISTINCT occurrences (consecutive-diff
-    within doc; docs with a single occurrence get INF).
-    Returns (docs, min_dist) for every doc present in a (INF where no valid
-    partner)."""
-    docsA, tfA, _dlA, posA, _ = a
-    PA = (np.repeat(docsA, tfA) << np.int64(POS_BITS)) + posA
-    docA_occ = PA >> np.int64(POS_BITS)
-    bounds = np.flatnonzero(docA_occ[1:] != docA_occ[:-1]) + 1
-    starts = np.concatenate(([0], bounds))
-    if same_term:
-        d = np.full(PA.size, _PROX_INF, dtype=np.int64)
-        if PA.size > 1:
-            diffs = PA[1:] - PA[:-1]
-            same_doc = docA_occ[1:] == docA_occ[:-1]
-            d[1:][same_doc] = diffs[same_doc]
-        return docsA, np.minimum.reduceat(d, starts)
-    docsB, tfB, _dlB, posB, _ = b
-    PB = (np.repeat(docsB, tfB) << np.int64(POS_BITS)) + posB
-    idx = np.searchsorted(PB, PA)
-    d = np.full(PA.size, _PROX_INF, dtype=np.int64)
-    has_r = idx < PB.size
-    r = np.minimum(idx, PB.size - 1)
-    rv = PB[r]
-    ok_r = has_r & ((rv >> np.int64(POS_BITS)) == docA_occ)
-    d[ok_r] = (rv - PA)[ok_r]
-    has_l = idx > 0
-    l = np.maximum(idx - 1, 0)
-    lv = PB[l]
-    ok_l = has_l & ((lv >> np.int64(POS_BITS)) == docA_occ)
-    d[ok_l] = np.minimum(d[ok_l], (PA - lv)[ok_l])
-    return docsA, np.minimum.reduceat(d, starts)
 
 
 def _make_proximity_kernel(phrases: dict[int, list[str]], avgdl: float, codec: str):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "proximity": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         toks = phrases[qid]
-        decoded: dict[str, tuple] = {}
-        idfs: dict[str, float] = {}
-        for (term, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            # first_doc order = global doc order (doc-range-disjoint blocks);
-            # required by every searchsorted/intersect1d below
-            g = g.sort_values("first_doc", kind="stable")
-            decoded[term] = decode_position_blocks(
-                list(g["header"]), list(g["positions"]), g["n"].to_numpy(), codec
-            )
-            idfs[term] = float(idf)
-        if any(t not in decoded for t in toks):
-            return empty
+        decoded, idfs = decode_positions(pdf, codec)
         uniq_terms = list(dict.fromkeys(toks))
-        # conjunctive candidate set
-        matched = decoded[uniq_terms[0]][0]
-        for t in uniq_terms[1:]:
-            matched = np.intersect1d(matched, decoded[t][0], assume_unique=True)
-            if matched.size == 0:
-                return empty
+        matched = conjunctive_docs(decoded, uniq_terms)
+        if matched.size == 0:
+            return empty_frame(_PROX_OUT_SCHEMA)
         prox = np.zeros(matched.size, dtype=np.int64)
         for i in range(len(toks) - 1):
             ta, tb = toks[i], toks[i + 1]
-            docs_a, mind = _pair_min_dist(decoded[ta], decoded[tb], ta == tb)
+            docs_a, mind = pair_min_dist(decoded[ta], decoded[tb], ta == tb)
             sel = np.searchsorted(docs_a, matched)  # matched ⊆ docs_a
             prox += mind[sel]
         # equal-adjacent-term pairs need two occurrences: INF ⇒ no valid
         # reading of the query in that doc ⇒ drop it (mirrors the oracle's
         # inner join on a.pos <> b.pos pairs)
-        keep = prox < _PROX_INF
+        keep = prox < PROX_INF
         matched, prox = matched[keep], prox[keep]
         if matched.size == 0:
-            return empty
-        scores = np.zeros(matched.size, dtype=np.float64)
-        for t in uniq_terms:
-            d, tf, dl, _pos, _occ = decoded[t]
-            sel = np.searchsorted(d, matched)
-            scores += idfs[t] * _tfpart(
-                tf[sel].astype(np.float64), dl[sel].astype(np.float64), avgdl
-            )
+            return empty_frame(_PROX_OUT_SCHEMA)
+        scores = matched_bm25(decoded, idfs, uniq_terms, matched, avgdl)
         return pd.DataFrame(
             {"query_id": qid, "doc_id": matched, "proximity": prox, "score": scores}
         )
@@ -878,64 +782,28 @@ def _make_mixed_kernel(parsed: dict[int, tuple], avgdl: float, codec: str):
     Score = Σ over ALL distinct query terms present in the doc."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         phrases_q, free_q = parsed[qid]
-        decoded: dict[str, tuple] = {}
-        idfs: dict[str, float] = {}
-        for (term, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            g = g.sort_values("first_doc", kind="stable")
-            decoded[term] = decode_position_blocks(
-                list(g["header"]), list(g["positions"]), g["n"].to_numpy(), codec
-            )
-            idfs[term] = float(idf)
+        decoded, idfs = decode_positions(pdf, codec)
         matched = None
         for toks in phrases_q:
-            if any(t not in decoded for t in toks):
-                return empty  # a phrase term absent here => no match in shard
-            keys = None
-            for i, t in enumerate(toks):
-                d, tf, _dl, pos, _occ = decoded[t]
-                dk = np.repeat(d, tf) << np.int64(POS_BITS)
-                adj = pos - i
-                kk = (dk + adj)[adj >= 0]
-                keys = kk if keys is None else np.intersect1d(keys, kk)
-                if keys.size == 0:
-                    return empty
-            pm = np.unique(keys >> np.int64(POS_BITS))
+            pm = phrase_docs(decoded, list(enumerate(toks)))
             matched = pm if matched is None else np.intersect1d(
                 matched, pm, assume_unique=True
             )
             if matched.size == 0:
-                return empty
+                return empty_frame(_OUT_SCHEMA)
         all_terms = sorted(
             {t for toks in phrases_q for t in toks} | set(free_q)
         )
         present = [t for t in all_terms if t in decoded]
+        if not present:
+            return empty_frame(_OUT_SCHEMA)
         if matched is None:
             # no phrase constraint: disjunctive — union of term doc sets
-            if not present:
-                return empty
             matched = np.unique(np.concatenate([decoded[t][0] for t in present]))
-        if matched.size == 0 or not present:
-            return empty
-        scores = np.zeros(matched.size, dtype=np.float64)
-        for t in present:
-            d, tf, dl, _pos, _occ = decoded[t]
-            sel = np.minimum(np.searchsorted(d, matched), d.size - 1)
-            hit = d[sel] == matched  # free terms may be absent from a doc
-            if hit.any():
-                scores[hit] += idfs[t] * _tfpart(
-                    tf[sel[hit]].astype(np.float64),
-                    dl[sel[hit]].astype(np.float64),
-                    avgdl,
-                )
+        # free terms may be absent from a doc
+        scores = matched_bm25(decoded, idfs, present, matched, avgdl)
         return pd.DataFrame({"query_id": qid, "doc_id": matched, "score": scores})
 
     return fn
@@ -1325,47 +1193,18 @@ def _make_phrase_shared_kernel(
     term/query, no per-shard split."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        decoded: dict[str, tuple] = {}
-        for term, g in pdf.groupby("term", sort=False):
-            g = g.sort_values("first_doc", kind="stable")
-            decoded[term] = decode_position_blocks(
-                list(g["header"]), list(g["positions"]), g["n"].to_numpy(), codec
-            )
+        decoded, _ = decode_positions(pdf, codec)
         outs = []
         for qid, toks in phrases.items():
-            if any(t not in decoded for t in toks):
-                continue
-            keys = None
-            for i, t in enumerate(toks):
-                d, tf, _dl, pos, _occ = decoded[t]
-                dk = np.repeat(d, tf) << np.int64(POS_BITS)
-                adj = pos - i
-                kk = (dk + adj)[adj >= 0]
-                keys = kk if keys is None else np.intersect1d(keys, kk)
-                if keys.size == 0:
-                    break
-            if keys is None or keys.size == 0:
-                continue
-            matched = np.unique(keys >> np.int64(POS_BITS))
-            uniq_terms = list(dict.fromkeys(toks))
-            scores = np.zeros(matched.size, dtype=np.float64)
-            for t in uniq_terms:
-                d, tf, dl, _pos, _occ = decoded[t]
-                sel = np.searchsorted(d, matched)
-                scores += idfs[t] * _tfpart(
-                    tf[sel].astype(np.float64), dl[sel].astype(np.float64), avgdl
+            matched = phrase_docs(decoded, list(enumerate(toks)))
+            if matched.size:
+                terms = list(dict.fromkeys(toks))
+                scores = matched_bm25(decoded, idfs, terms, matched, avgdl)
+                outs.append(
+                    pd.DataFrame({"query_id": qid, "doc_id": matched, "score": scores})
                 )
-            outs.append(
-                pd.DataFrame({"query_id": qid, "doc_id": matched, "score": scores})
-            )
         if not outs:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int32"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
+            return empty_frame(_OUT_SCHEMA)
         return pd.concat(outs, ignore_index=True)
 
     return fn

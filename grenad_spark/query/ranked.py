@@ -53,25 +53,34 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
-from grenad_spark.index.positions import FIELD_BITS, FIELD_STRIDE, decode_position_blocks
+from grenad_spark.index.positions import FIELD_BITS, FIELD_STRIDE
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
 from grenad_spark.query import search
-from grenad_spark.query.phrase import _POS_COLS, _PROX_INF, _pair_min_dist
+from grenad_spark.query.kernels import (
+    PROX_INF,
+    conjunctive_docs,
+    decode_positions,
+    empty_frame,
+    matched_bm25,
+    member_mask,
+    pair_min_dist,
+)
 from grenad_spark.query.search import (
     _BM25_ORDER,
+    _POS_COLS,
     _apply_groups,
     _apply_per_query_shard,
     _batch_groups,
     _empty_result,
-    _levenshtein,
     _local_query_blocks,
     _local_relation,
     _n_queries,
     _query_blocks_from_pairs,
+    _query_slots,
     _rank_local,
     _rank_topk,
     _scoring_pairs,
-    _tfpart,
+    _slot_meta,
     _tokenize_queries,
     expand_fuzzy_queries,
 )
@@ -115,64 +124,25 @@ def _require_fielded(index) -> list[str]:
     return fields
 
 
-def _decode_groups(pdf: pd.DataFrame, codec: str):
-    """(term -> decode tuple, term -> idf) for one kernel group, with the
-    first_doc sort that multi-file parquet scans require."""
-    decoded: dict[str, tuple] = {}
-    idfs: dict[str, float] = {}
-    for (term, idf), g in pdf.groupby(["term", "idf"], sort=False):
-        g = g.sort_values("first_doc", kind="stable")
-        decoded[term] = decode_position_blocks(
-            list(g["header"]), list(g["positions"]), g["n"].to_numpy(), codec
-        )
-        idfs[term] = float(idf)
-    return decoded, idfs
-
-
-def _member_mask(sorted_docs: np.ndarray, all_docs: np.ndarray):
-    """(hit_mask, clipped_index) of all_docs within a sorted doc array."""
-    if sorted_docs.size == 0:
-        return np.zeros(all_docs.size, dtype=bool), np.zeros(all_docs.size, dtype=np.int64)
-    sel = np.minimum(np.searchsorted(sorted_docs, all_docs), sorted_docs.size - 1)
-    return sorted_docs[sel] == all_docs, sel
-
-
 # ---------------------------------------------------------------------------
 # attribute rule — conjunctive matches ranked by summed best-field ids
 # ---------------------------------------------------------------------------
 
 def _make_attr_kernel(qterms: dict[int, list[str]], avgdl: float, codec: str):
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "attr": pd.Series(dtype="int64"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         terms = qterms[qid]
-        decoded, idfs = _decode_groups(pdf, codec)
-        if any(t not in decoded for t in terms):
-            return empty
-        matched = decoded[terms[0]][0]
-        for t in terms[1:]:
-            matched = np.intersect1d(matched, decoded[t][0], assume_unique=True)
-            if matched.size == 0:
-                return empty
+        decoded, idfs = decode_positions(pdf, codec)
+        matched = conjunctive_docs(decoded, terms)
+        if matched.size == 0:
+            return empty_frame(_ATTR_OUT_SCHEMA)
         attr = np.zeros(matched.size, dtype=np.int64)
-        scores = np.zeros(matched.size, dtype=np.float64)
         for t in terms:
-            d, tf, dl, pos, occ = decoded[t]
+            d, _tf, _dl, pos, occ = decoded[t]
             # positions ascend per doc and fid is the high bits, so the first
             # occurrence's fid IS the minimum fid for the (doc, term) pair
-            fid_doc = pos[occ] >> np.int64(FIELD_BITS)
-            sel = np.searchsorted(d, matched)  # matched ⊆ d (conjunctive)
-            attr += fid_doc[sel]
-            scores += idfs[t] * _tfpart(
-                tf[sel].astype(np.float64), dl[sel].astype(np.float64), avgdl
-            )
+            attr += (pos[occ] >> np.int64(FIELD_BITS))[np.searchsorted(d, matched)]
+        scores = matched_bm25(decoded, idfs, terms, matched, avgdl)
         return pd.DataFrame(
             {"query_id": qid, "doc_id": matched, "attr": attr, "score": scores}
         )
@@ -192,9 +162,7 @@ def search_topk_attr_rule(
     first; BM25 then doc_id break ties. (query_id, doc_id, attr, score)."""
     _require_fielded(index)
     qt = _tokenize_queries(queries)
-    qterms: dict[int, list[str]] = {}
-    for qid, t in qt:
-        qterms.setdefault(qid, []).append(t)
+    qterms = _query_slots(queries)
     # conjunctive: a query with an OOV term can never match
     pairs = _scoring_pairs(spark, index, qt, required=qt)
     if not pairs:
@@ -225,25 +193,11 @@ def _make_ranked_kernel(
     derivation may credit several slots, like the typo-ranked kernel)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "doc_id": pd.Series(dtype="int64"),
-                "words": pd.Series(dtype="int32"),
-                "typos": pd.Series(dtype="int64"),
-                "proximity": pd.Series(dtype="int64"),
-                "attribute": pd.Series(dtype="int64"),
-                "exactness": pd.Series(dtype="int32"),
-                "score": pd.Series(dtype="float64"),
-            }
-        )
         qid = int(pdf["query_id"].iloc[0])
         slots = qslots[qid]
         meta = slot_meta[qid]
         m = len(slots)
-        decoded, idfs = _decode_groups(pdf, codec)
-        if not decoded:
-            return empty
+        decoded, idfs = decode_positions(pdf, codec)
         # per-slot doc sets with min-typo / min-fid aggregation over the
         # slot's matched derivations
         slot_docs: dict[int, np.ndarray] = {}
@@ -270,14 +224,14 @@ def _make_ranked_kernel(
             slot_typo[slot] = tmin
             slot_fid[slot] = fmin
         if not slot_docs:
-            return empty
+            return empty_frame(_RANKED_OUT_SCHEMA)
         all_docs = np.unique(np.concatenate(list(slot_docs.values())))
         words = np.zeros(all_docs.size, dtype=np.int64)
         typos = np.zeros(all_docs.size, dtype=np.int64)
         attr = np.zeros(all_docs.size, dtype=np.int64)
         member: dict[int, np.ndarray] = {}
         for slot, u in slot_docs.items():
-            hit, sel = _member_mask(u, all_docs)
+            hit, sel = member_mask(u, all_docs)
             member[slot] = hit
             words += hit
             typos[hit] += slot_typo[slot][sel[hit]]
@@ -286,7 +240,7 @@ def _make_ranked_kernel(
         exact = np.zeros(all_docs.size, dtype=np.int64)
         for qterm in slots:
             if qterm in decoded:
-                hit, _ = _member_mask(decoded[qterm][0], all_docs)
+                hit, _ = member_mask(decoded[qterm][0], all_docs)
                 exact += hit
         # proximity over adjacent slot pairs, min over derivation combos
         prox = np.zeros(all_docs.size, dtype=np.int64)
@@ -298,26 +252,18 @@ def _make_ranked_kernel(
             cat_d, cat_m = [], []
             for ta in da:
                 for tb in db:
-                    docs_a, mind = _pair_min_dist(decoded[ta], decoded[tb], ta == tb)
+                    docs_a, mind = pair_min_dist(decoded[ta], decoded[tb], ta == tb)
                     cat_d.append(docs_a)
                     cat_m.append(mind)
             dc = np.concatenate(cat_d)
             u, inv = np.unique(dc, return_inverse=True)
-            mm = np.full(u.size, _PROX_INF, dtype=np.int64)
+            mm = np.full(u.size, PROX_INF, dtype=np.int64)
             np.minimum.at(mm, inv, np.concatenate(cat_m))
-            hit, sel = _member_mask(u, all_docs)
-            ok = hit & (mm[sel] < _PROX_INF) & member[i] & member[i + 1]
+            hit, sel = member_mask(u, all_docs)
+            ok = hit & (mm[sel] < PROX_INF) & member[i] & member[i + 1]
             prox[ok] += mm[sel][ok]
         # relevance: BM25 over all distinct matched derivation terms
-        score = np.zeros(all_docs.size, dtype=np.float64)
-        for term, (d, tf, dl, _pos, _occ) in decoded.items():
-            hit, sel = _member_mask(d, all_docs)
-            if hit.any():
-                score[hit] += idfs[term] * _tfpart(
-                    tf[sel[hit]].astype(np.float64),
-                    dl[sel[hit]].astype(np.float64),
-                    avgdl,
-                )
+        score = matched_bm25(decoded, idfs, list(decoded), all_docs, avgdl)
         return pd.DataFrame(
             {
                 "query_id": qid,
@@ -351,18 +297,8 @@ def _ranked_rows(
     pairs0 = expand_fuzzy_queries(spark, index, queries, max_edits)
     if not pairs0:
         return _empty_result(spark, _RANKED_OUT_SCHEMA)
-    qslots: dict[int, list[str]] = {}
-    for qid, qterm in _tokenize_queries(queries):
-        qslots.setdefault(qid, []).append(qterm)
-    slot_meta: dict[int, dict[str, list[tuple[int, int]]]] = {}
-    for qid, term in pairs0:
-        tl = []
-        for slot, qterm in enumerate(qslots[qid]):
-            d = _levenshtein(term, qterm)
-            if d <= max_edits:
-                tl.append((slot, d))
-        if tl:
-            slot_meta.setdefault(qid, {})[term] = tl
+    qslots = _query_slots(queries)
+    slot_meta = _slot_meta(qslots, pairs0, lambda _w: max_edits)
     pairs = [(qid, t) for qid, per_q in slot_meta.items() for t in sorted(per_q)]
     if not pairs:
         return _empty_result(spark, _RANKED_OUT_SCHEMA)
@@ -886,7 +822,7 @@ def _with_score_components(
 
 def _qn_df(spark: SparkSession, queries: list[tuple[int, str]]) -> DataFrame:
     return spark.createDataFrame(
-        [(qid, len(ts)) for qid, ts in _slots_of(queries).items()],
+        [(qid, len(ts)) for qid, ts in _query_slots(queries).items()],
         "query_id int, n int",
     )
 
@@ -960,13 +896,6 @@ def search_topk_score_threshold(
     )
 
 
-def _slots_of(queries: list[tuple[int, str]]) -> dict[int, list[str]]:
-    slots: dict[int, list[str]] = {}
-    for qid, t in _tokenize_queries(queries):
-        slots.setdefault(qid, []).append(t)
-    return slots
-
-
 def sql_ranking_score_topk(
     queries: list[tuple[int, str]] | None = None,
     k: int = 10,
@@ -977,7 +906,7 @@ def sql_ranking_score_topk(
     """DuckDB oracle: the ranked oracle as a subquery plus the identical
     normalization arithmetic."""
     queries = queries if queries is not None else RANKED_QUERIES
-    slots = _slots_of(queries)
+    slots = _query_slots(queries)
     nrows = ", ".join(f"({qid}, {len(ts)})" for qid, ts in slots.items())
     b = _RS_BASE
     wsum = b**5 + b**4 + b**3 + b**2 + b + 1.0
@@ -1025,7 +954,7 @@ def sql_score_details_topk(
     """DuckDB oracle for search_topk_score_details — per-rule normalized
     components + the folded ranking_score over the top-k page."""
     queries = queries if queries is not None else RANKED_QUERIES
-    slots = _slots_of(queries)
+    slots = _query_slots(queries)
     nrows = ", ".join(f"({qid}, {len(ts)})" for qid, ts in slots.items())
     b = _RS_BASE
     wsum = b**5 + b**4 + b**3 + b**2 + b + 1.0
@@ -1062,7 +991,7 @@ def sql_score_threshold_topk(
     the FULL match set (global max BM25 normalization), threshold filter,
     then the default pipeline window."""
     queries = queries if queries is not None else RANKED_QUERIES
-    slots = _slots_of(queries)
+    slots = _query_slots(queries)
     nrows = ", ".join(f"({qid}, {len(ts)})" for qid, ts in slots.items())
     b = _RS_BASE
     wsum = b**5 + b**4 + b**3 + b**2 + b + 1.0

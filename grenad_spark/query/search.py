@@ -37,9 +37,18 @@ from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin, prefix_ranges, sql_lit
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.functions.varbyte import decode_block_rows, decompress_payloads
 from grenad_spark.index.build import MAX_DELETES, IndexHandle
-from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS
+from grenad_spark.query.bm25 import SCORE_DECIMALS
+from grenad_spark.query.kernels import (
+    bm25,
+    decode_blocks,
+    decode_postings,
+    disjunctive_bm25,
+    doc_sums,
+    empty_frame,
+    tfpart,
+    topk_rows,
+)
 
 
 PRUNE_EPS = 10.0 ** -SCORE_DECIMALS  # rounded-tie slack for WAND prune gates
@@ -77,14 +86,6 @@ def _qshard_params(
         par = max(1, min(par, desired))
     g = max(1, -(-n_shards // par))
     return g, -(-n_shards // g)
-
-
-def _tfpart(tf, dl, avgdl):
-    return tf * (K1 + 1.0) / (tf + K1 * (1.0 - B + B * dl / avgdl))
-
-
-def _idf(n_docs: float, df):
-    return np.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
 
 
 def _tokenize_queries(queries: list[tuple[int, str]]) -> list[tuple[int, str]]:
@@ -429,33 +430,11 @@ def _make_exhaustive_with_termcount(avgdl: float, codec: str = "none"):
     does NOT truncate to k (the AND filter happens before ranking)."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        doc_parts, score_parts = [], []
-        for (_, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            d, tf, dl = decode_block_rows(
-                decompress_payloads(list(g["payload"]), codec), g["n"].to_numpy()
-            )
-            s = float(idf) * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            doc_parts.append(d)
-            score_parts.append(s)
-        if not doc_parts:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int32"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                    "hit_terms": pd.Series(dtype="int32"),
-                }
-            )
-        docs = np.concatenate(doc_parts)
-        scores = np.concatenate(score_parts)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        agg = np.zeros(uniq.size)
-        np.add.at(agg, inv, scores)
-        hits = np.zeros(uniq.size, dtype=np.int64)
-        np.add.at(hits, inv, 1)
+        decoded, idfs = decode_postings(pdf, codec)
+        docs, scores, hits = disjunctive_bm25(decoded, idfs, avgdl)
         return pd.DataFrame(
-            {"query_id": qid, "doc_id": uniq, "score": agg, "hit_terms": hits}
+            {"query_id": int(pdf["query_id"].iloc[0]), "doc_id": docs,
+             "score": scores, "hit_terms": hits}
         )
 
     return fn
@@ -479,17 +458,6 @@ def search_topk_prefix(
     uncapped, exact — what the contract query runs on the small vocab)."""
     pairs = expand_prefix_queries(spark, index, queries, max_expansions)
     return _search_from_pairs(spark, index, pairs, k, mode)
-
-
-def _query_blocks(
-    spark: SparkSession, index: IndexHandle, queries: list[tuple[int, str]]
-) -> tuple[DataFrame, DataFrame]:
-    """Pruned (query_id × matching block rows) with idf attached.
-
-    Returns (blocks_df, qterms_df). df (hence idf) comes from term_dict —
-    a broadcast join of at most |query terms| rows.
-    """
-    return _query_blocks_from_pairs(spark, index, _tokenize_queries(queries))
 
 
 # most distinct keys one packed-key IN literal carries (_packed_in); the
@@ -806,7 +774,7 @@ def _make_per_query(apply_fn):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         out = _apply_groups(pdf, ["query_id"], apply_fn)
-        return _empty_out() if out is None else out
+        return empty_frame(_OUT_SCHEMA) if out is None else out
 
     return fn
 
@@ -993,9 +961,10 @@ def _grouped_apply(
 
 
 # block columns (after idf is attached) the BM25 kernels read; the typo
-# kernels read only the payloads
+# kernels read only the payloads, the positional kernels position blocks
 _SCORE_COLS = ["term", "idf", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"]
 _PAYLOAD_COLS = ["term", "idf", "n", "payload"]
+_POS_COLS = ["term", "idf", "n", "first_doc", "header", "positions"]
 
 
 def _apply_per_query_shard(
@@ -1366,14 +1335,7 @@ def _make_meta_prune(avgdl: float, k: int, codec: str = "none"):
     cross_term = CROSS_TERM_THETA
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "term": pd.Series(dtype="object"),
-                "shard": pd.Series(dtype="int32"),
-                "block_id": pd.Series(dtype="int32"),
-            }
-        )
+        empty = empty_frame(_SURVIVOR_SCHEMA)
         if len(pdf) == 0:
             return empty
         # one qshard group holds EVERY query of the batch: sort once, slice
@@ -1419,14 +1381,7 @@ def _make_meta_prune_shared(
     cross_term = CROSS_TERM_THETA
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "query_id": pd.Series(dtype="int32"),
-                "term": pd.Series(dtype="object"),
-                "shard": pd.Series(dtype="int32"),
-                "block_id": pd.Series(dtype="int32"),
-            }
-        )
+        empty = empty_frame(_SURVIVOR_SCHEMA)
         if len(pdf) == 0:
             return empty
         pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
@@ -1455,12 +1410,8 @@ def _make_meta_prune_shared(
                 "bid": bid_np[s:e],
             }
             if pay_np[s] is not None:
-                d, tf, dl = decode_block_rows(
-                    decompress_payloads(list(pay_np[s:e]), codec), ns_np[s:e]
-                )
-                c = idf * _tfpart(
-                    tf.astype(np.float64), dl.astype(np.float64), avgdl
-                )
+                d, tf, dl = decode_blocks(pay_np[s:e], ns_np[s:e], codec)
+                c = bm25(idf, tf, dl, avgdl)
                 entry["first"] = d
                 entry["last"] = d
                 entry["ub"] = c
@@ -1468,10 +1419,10 @@ def _make_meta_prune_shared(
                 entry["nb"] = np.ones(d.size, dtype=np.int64)
                 entry["sparse"] = True
             else:
-                lb = idf * _tfpart(min_tf[s:e], max_dl[s:e], avgdl)
+                lb = idf * tfpart(min_tf[s:e], max_dl[s:e], avgdl)
                 entry["first"] = first_np[s:e]
                 entry["last"] = last_np[s:e]
-                entry["ub"] = idf * _tfpart(max_tf[s:e], min_dl[s:e], avgdl)
+                entry["ub"] = idf * tfpart(max_tf[s:e], min_dl[s:e], avgdl)
                 entry["lb"] = lb
                 entry["nb"] = ns_np[s:e]
                 entry["sparse"] = False
@@ -1672,12 +1623,12 @@ def _prune_one_query(
         pdf["payload"].to_numpy() if "payload" in pdf.columns
         else np.full(t_np.size, None, dtype=object)
     )
-    ub_all = idf_np * _tfpart(
+    ub_all = idf_np * tfpart(
         pdf["max_tf"].to_numpy().astype(np.float64),
         pdf["min_dl"].to_numpy().astype(np.float64),
         avgdl,
     )
-    lb_all = idf_np * _tfpart(
+    lb_all = idf_np * tfpart(
         pdf["min_tf"].to_numpy().astype(np.float64),
         pdf["max_dl"].to_numpy().astype(np.float64),
         avgdl,
@@ -1701,14 +1652,10 @@ def _prune_one_query(
             ck = (t_np[s], int(shard_np[s]), int(bid_np[s]), e - s)
             hit = decoded_cache.get(ck)
             if hit is None:
-                hit = decode_block_rows(
-                    decompress_payloads(list(pay_np[s:e]), codec), ns_np[s:e]
-                )
+                hit = decode_blocks(pay_np[s:e], ns_np[s:e], codec)
                 decoded_cache[ck] = hit
             d, tf, dl = hit
-            c = float(idf_np[s]) * _tfpart(
-                tf.astype(np.float64), dl.astype(np.float64), avgdl
-            )
+            c = bm25(float(idf_np[s]), tf, dl, avgdl)
             entry["first"] = d
             entry["last"] = d
             entry["ub"] = c
@@ -1933,47 +1880,23 @@ def search_topk_shared(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         # decode each term ONCE: (docs, tfpart) — idf applied per query-term
-        decoded: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for term, gdf in pdf.groupby("term", sort=False):
-            d, tf, dl = decode_block_rows(
-                decompress_payloads(list(gdf["payload"]), codec), gdf["n"].to_numpy()
-            )
-            decoded[term] = (d, _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl))
-        if not decoded:
-            return _empty_out()
-        sizes = [d.size for d, _ in decoded.values() if d.size]
-        if not sizes:
-            return _empty_out()
-        # block rows arrive in shuffle order (NOT doc order) — min/max, not
-        # first/last elements
-        lo = min(int(d.min()) for d, _ in decoded.values() if d.size)
-        hi = max(int(d.max()) for d, _ in decoded.values() if d.size)
-        width = hi - lo + 1
-        use_dense = width <= max(65536, 8 * sum(sizes))
-        outs = []
+        decoded = {
+            t: (d, bm25(1.0, tf, dl, avgdl))
+            for t, (d, tf, dl) in decode_postings(pdf, codec)[0].items()
+        }
         by_query: dict[int, list[tuple[str, float]]] = {}
         for q, t, idf in qinfo:
             if t in decoded:
                 by_query.setdefault(q, []).append((t, idf))
-        dense = np.zeros(width) if use_dense else None
+        outs = []
         for q, tlist in by_query.items():
-            if use_dense:
-                dense[:] = 0.0
-                for t, idf in tlist:
-                    d, tfp = decoded[t]
-                    np.add.at(dense, d - lo, idf * tfp)
-                cand = np.flatnonzero(dense > 0.0)
-                if cand.size:
-                    outs.append(_topk_rows(q, cand.astype(np.int64) + lo, dense[cand], kk))
-            else:  # sparse group over a huge doc range: sort-merge path
-                ds = np.concatenate([decoded[t][0] for t, _ in tlist])
-                ss = np.concatenate([i * decoded[t][1] for t, i in tlist])
-                uniq, inv = np.unique(ds, return_inverse=True)
-                agg = np.zeros(uniq.size)
-                np.add.at(agg, inv, ss)
-                outs.append(_topk_rows(q, uniq, agg, kk))
+            docs, scores, _ = doc_sums(
+                np.concatenate([decoded[t][0] for t, _ in tlist]),
+                np.concatenate([idf * decoded[t][1] for t, idf in tlist]),
+            )
+            outs.append(topk_rows(q, docs, scores, kk))
         if not outs:
-            return _empty_out()
+            return empty_frame(_OUT_SCHEMA)
         return pd.concat(outs, ignore_index=True)
 
     if _serve_local(spark, index, pairs):
@@ -2014,65 +1937,12 @@ def search_topk_shared(
     return _rank_topk(per_shard, _n_queries(pairs), kk)
 
 
-def _empty_out() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "query_id": pd.Series(dtype="int32"),
-            "doc_id": pd.Series(dtype="int64"),
-            "score": pd.Series(dtype="float64"),
-        }
-    )
-
-
-def _topk_rows(qid: int, doc_ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
-    # full (score desc, doc_id asc) ordering — NOT argpartition: partitioning
-    # on score alone drops tied candidates arbitrarily, and the doc-id
-    # tie-break is part of the ranking contract (Hypothesis-caught: a shard
-    # top-k that keeps doc 4 but drops doc 1 at equal score is wrong even
-    # though the global window re-sorts survivors)
-    # round BEFORE the shard-level truncation: the global window (and the
-    # DuckDB oracle) rank on round(score, SCORE_DECIMALS); truncating on raw
-    # scores could drop a doc that round-ties the kth score with a smaller
-    # doc_id — shard-level and global ordering must use the same key
-    scores = np.round(scores, SCORE_DECIMALS)
-    order = np.lexsort((doc_ids, -scores))[:k]
-    return pd.DataFrame(
-        {"query_id": qid, "doc_id": doc_ids[order], "score": scores[order]}
-    )
-
-
 def _make_exhaustive(avgdl: float, k: int, codec: str = "none"):
     """Fully vectorized scatter-add scoring of one (query, shard) group."""
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        qid = int(pdf["query_id"].iloc[0])
-        # one vectorized decode across ALL terms' blocks, then per-term
-        # segment-aware scoring via np.add.at on dense doc offsets
-        doc_parts, score_parts = [], []
-        for (_, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            d, tf, dl = decode_block_rows(decompress_payloads(list(g["payload"]), codec), g["n"].to_numpy())
-            s = float(idf) * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            doc_parts.append(d)
-            score_parts.append(s)
-        if not doc_parts:
-            return _empty_out()
-        docs = np.concatenate(doc_parts)
-        scores = np.concatenate(score_parts)
-        # dense scatter when the group's doc range is bounded (same guard and
-        # same input-order accumulation as the WAND kernel — bit-identical
-        # sums); a sparse group over a huge doc range falls back to the
-        # O(n log n) unique merge
-        lo = int(docs.min())
-        width = int(docs.max()) - lo + 1
-        if width <= max(65536, 8 * docs.size):
-            dense = np.zeros(width)
-            np.add.at(dense, docs - lo, scores)
-            cand = np.flatnonzero(dense > 0.0)
-            return _topk_rows(qid, cand.astype(np.int64) + lo, dense[cand], k)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        agg = np.zeros(uniq.size)
-        np.add.at(agg, inv, scores)
-        return _topk_rows(qid, uniq, agg, k)
+        docs, scores, _ = disjunctive_bm25(*decode_postings(pdf, codec), avgdl)
+        return topk_rows(int(pdf["query_id"].iloc[0]), docs, scores, k)
 
     return fn
 
@@ -2116,7 +1986,7 @@ def _make_wand_batched(
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
-            return _empty_out()
+            return empty_frame(_OUT_SCHEMA)
         qid = int(pdf["query_id"].iloc[0])
         # ONE sort + numpy boundary slicing instead of pandas groupby +
         # per-group sort_values: per-group metadata prep was the dominant
@@ -2128,7 +1998,7 @@ def _make_wand_batched(
         last_np = pdf["last_doc"].to_numpy()
         ns_np = pdf["n"].to_numpy()
         pay_np = pdf["payload"].to_numpy()
-        ub_all = idf_np * _tfpart(
+        ub_all = idf_np * tfpart(
             pdf["max_tf"].to_numpy().astype(np.float64),
             pdf["min_dl"].to_numpy().astype(np.float64),
             avgdl,
@@ -2150,7 +2020,7 @@ def _make_wand_batched(
                 }
             )
         if not terms:
-            return _empty_out()
+            return empty_frame(_OUT_SCHEMA)
 
         def decode_term_blocks(t, bidx):
             """Decode selected blocks of one term -> (docs, scores). A
@@ -2161,11 +2031,8 @@ def _make_wand_batched(
             if "decoded" in t:
                 d, s = t["decoded"]
                 return d[bidx], s[bidx]
-            d, tf, dl = decode_block_rows(
-                decompress_payloads([t["payloads"][i] for i in bidx], codec), t["ns"][bidx]
-            )
-            s = t["idf"] * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            return d, s
+            d, tf, dl = decode_blocks([t["payloads"][i] for i in bidx], t["ns"][bidx], codec)
+            return d, bm25(t["idf"], tf, dl, avgdl)
 
         # --- phase 0: sparse terms -> exact unit pseudo-blocks
         if len(terms) > 1:
@@ -2219,12 +2086,7 @@ def _make_wand_batched(
         # _range_survivors for the θ-tie/PRUNE_EPS reasoning)
         sur_starts, sur_ends = _range_survivors(terms, theta)
 
-        # --- phase 3: decode surviving blocks, mask, score, top-k.
-        # Scoring uses a DENSE scatter over the group's doc range (known
-        # exactly from the block first/last metadata — a block-max payoff):
-        # dense[d - lo] += s is a branchless O(postings) accumulate with no
-        # sort, vs the O(n log n) np.unique merge. Guarded by a width cap so
-        # a sparse group over a huge doc range falls back to the merge path.
+        # --- phase 3: decode surviving blocks, mask, score (doc_sums), top-k
         doc_parts, score_parts = [], []
         for t in terms:
             # a block survives if any surviving range overlaps it
@@ -2239,32 +2101,16 @@ def _make_wand_batched(
                 doc_parts.append(d[ok])
                 score_parts.append(s[ok])
         if not doc_parts:
-            return _empty_out()
-        n_post = sum(p.size for p in doc_parts)
-        lo = int(min(int(p[0]) for p in doc_parts))
-        hi = int(max(int(p[-1]) for p in doc_parts))
-        width = hi - lo + 1
-        if width <= max(65536, 8 * n_post):
-            dense = np.zeros(width)
-            for d, s in zip(doc_parts, score_parts):
-                np.add.at(dense, d - lo, s)
-            # θ-filter before the ranking sort: every true top-k doc scores
-            # ≥ θ (θ is a lower bound on the kth score), so keeping
-            # score > θ - PRUNE_EPS (rounded-tie slack) is lossless and cuts
-            # the lexsort to the contender set
-            # clamp at 0 so absent docs (exact 0.0 in the dense array) can
-            # never pass the filter
-            filter_thr = max(theta - PRUNE_EPS, 0.0)
-            cand = np.flatnonzero(dense > filter_thr)
-            if filter_thr > 0.0 and cand.size < k:
-                cand = np.flatnonzero(dense > 0.0)
-            return _topk_rows(qid, cand.astype(np.int64) + lo, dense[cand], k)
-        docs = np.concatenate(doc_parts)
-        scores = np.concatenate(score_parts)
-        uniq, inv = np.unique(docs, return_inverse=True)
-        agg = np.zeros(uniq.size)
-        np.add.at(agg, inv, scores)
-        return _topk_rows(qid, uniq, agg, k)
+            return empty_frame(_OUT_SCHEMA)
+        docs, scores, _ = doc_sums(np.concatenate(doc_parts), np.concatenate(score_parts))
+        # θ-filter before the ranking sort: every true top-k doc scores
+        # ≥ θ (θ is a lower bound on the kth score), so keeping
+        # score > θ - PRUNE_EPS (rounded-tie slack) is lossless and cuts
+        # the lexsort to the contender set
+        keep = scores > theta - PRUNE_EPS
+        if np.count_nonzero(keep) >= k:
+            docs, scores = docs[keep], scores[keep]
+        return topk_rows(qid, docs, scores, k)
 
     return fn
 
@@ -2293,6 +2139,32 @@ def _levenshtein(a: str, b: str) -> int:
     return prev[-1]
 
 
+def _query_slots(queries: list[tuple[int, str]]) -> dict[int, list[str]]:
+    """qid -> the query's distinct words in order: its typo slots."""
+    qslots: dict[int, list[str]] = {}
+    for qid, qterm in _tokenize_queries(queries):
+        qslots.setdefault(qid, []).append(qterm)
+    return qslots
+
+
+def _slot_meta(
+    qslots: dict[int, list[str]], pairs: list[tuple[int, str]], budget
+) -> dict[int, dict[str, list[tuple[int, int]]]]:
+    """qid -> {expansion term -> [(slot, edit distance)]} of (qid, term)
+    pairs: a term covers slot i iff lev(term, word_i) <= budget(word_i);
+    a term that covers no slot is left out."""
+    slot_meta: dict[int, dict[str, list[tuple[int, int]]]] = {}
+    for qid, term in pairs:
+        tl = []
+        for slot, qterm in enumerate(qslots[qid]):
+            d = _levenshtein(term, qterm)
+            if d <= budget(qterm):
+                tl.append((slot, d))
+        if tl:
+            slot_meta.setdefault(qid, {})[term] = tl
+    return slot_meta
+
+
 def _make_typo_ranked_kernel(
     slot_meta: dict[int, dict[str, list[tuple[int, int]]]],
     avgdl: float,
@@ -2305,29 +2177,15 @@ def _make_typo_ranked_kernel(
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
         meta = slot_meta[qid]
-        doc_parts, score_parts = [], []
+        decoded, idfs = decode_postings(pdf, codec)
         cov_docs, cov_slots, cov_typos = [], [], []
-        for (term, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            d, tf, dl = decode_block_rows(
-                decompress_payloads(list(g["payload"]), codec), g["n"].to_numpy()
-            )
-            s = float(idf) * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            doc_parts.append(d)
-            score_parts.append(s)
+        for term, (d, _tf, _dl) in decoded.items():
             for slot, typo in meta[term]:
                 cov_docs.append(d)
                 cov_slots.append(np.full(d.size, slot, dtype=np.int64))
                 cov_typos.append(np.full(d.size, typo, dtype=np.int64))
-        if not doc_parts:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int32"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "hit_terms": pd.Series(dtype="int32"),
-                    "typos": pd.Series(dtype="int64"),
-                    "score": pd.Series(dtype="float64"),
-                }
-            )
+        if not cov_docs:
+            return empty_frame(_OUT_TYPO_SCHEMA)
         n_slots = 1 + max(s for tl in meta.values() for s, _ in tl)
         packed = np.concatenate(cov_docs) * np.int64(n_slots) + np.concatenate(cov_slots)
         tarr = np.concatenate(cov_typos)
@@ -2340,13 +2198,9 @@ def _make_typo_ranked_kernel(
         np.add.at(hits, dinv, 1)
         tsum = np.zeros(du.size, dtype=np.int64)
         np.add.at(tsum, dinv, mintypo)
-        # BM25 over the distinct expansion terms, aggregated per doc
-        docs_all = np.concatenate(doc_parts)
-        scores_all = np.concatenate(score_parts)
-        su, sinv = np.unique(docs_all, return_inverse=True)
-        sagg = np.zeros(su.size)
-        np.add.at(sagg, sinv, scores_all)
-        # su == du: both are the docs matching >= 1 expansion term
+        # BM25 over the distinct expansion terms, aggregated per doc; its
+        # docs == du: both are the docs matching >= 1 expansion term
+        _, sagg, _ = disjunctive_bm25(decoded, idfs, avgdl)
         return pd.DataFrame(
             {
                 "query_id": qid,
@@ -2376,18 +2230,7 @@ def search_topk_fuzzy_ranked(
     pairs = expand_fuzzy_queries(spark, index, queries, max_edits)
     if not pairs:
         return _empty_result(spark, _OUT_TYPO_SCHEMA)
-    qslots: dict[int, list[str]] = {}
-    for qid, qterm in _tokenize_queries(queries):
-        qslots.setdefault(qid, []).append(qterm)
-    slot_meta: dict[int, dict[str, list[tuple[int, int]]]] = {}
-    for qid, term in pairs:
-        tl = []
-        for slot, qterm in enumerate(qslots[qid]):
-            d = _levenshtein(term, qterm)
-            if d <= max_edits:
-                tl.append((slot, d))
-        if tl:
-            slot_meta.setdefault(qid, {})[term] = tl
+    slot_meta = _slot_meta(_query_slots(queries), pairs, lambda _w: max_edits)
     pairs = [(q, t) for q, t in pairs if t in slot_meta.get(q, {})]
     if not pairs:
         return _empty_result(spark, _OUT_TYPO_SCHEMA)
@@ -2536,9 +2379,7 @@ def typo_slot_expansion(
     1- and 2-edit words expand through expand_fuzzy_queries (the driver
     neighborhood test or the SymSpell deletion table) — no bucket scans the
     vocabulary."""
-    qslots: dict[int, list[str]] = {}
-    for qid, qterm in _tokenize_queries(queries):
-        qslots.setdefault(qid, []).append(qterm)
+    qslots = _query_slots(queries)
     if not qslots:
         return {}, {}, []
     by_budget: dict[int, dict[int, list[str]]] = {0: {}, 1: {}, 2: {}}
@@ -2568,17 +2409,8 @@ def typo_slot_expansion(
     pairs = sorted(set(pairs))
     if not pairs:
         return qslots, {}, []
-    # slot metadata under PER-SLOT budgets: expansion term t covers slot
-    # (qid, i) iff lev(t, word_i) <= budget(word_i)
-    slot_meta: dict[int, dict[str, list[tuple[int, int]]]] = {}
-    for qid, term in pairs:
-        tl = []
-        for slot, qterm in enumerate(qslots[qid]):
-            d = _levenshtein(term, qterm)
-            if d <= settings.budget(qterm):
-                tl.append((slot, d))
-        if tl:
-            slot_meta.setdefault(qid, {})[term] = tl
+    # slot metadata under PER-SLOT budgets
+    slot_meta = _slot_meta(qslots, pairs, settings.budget)
     pairs = [(q, t) for q, t in pairs if t in slot_meta.get(q, {})]
     return qslots, slot_meta, pairs
 
@@ -3084,25 +2916,17 @@ def _make_term_match_rows(avgdl: float, codec: str = "none"):
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         qid = int(pdf["query_id"].iloc[0])
-        out = []
-        for (term, idf), g in pdf.groupby(["term", "idf"], sort=False):
-            d, tf, dl = decode_block_rows(
-                decompress_payloads(list(g["payload"]), codec), g["n"].to_numpy()
-            )
-            s = float(idf) * _tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
-            out.append(
-                pd.DataFrame({"query_id": qid, "doc_id": d, "term": term, "s": s})
-            )
-        if not out:
-            return pd.DataFrame(
-                {
-                    "query_id": pd.Series(dtype="int32"),
-                    "doc_id": pd.Series(dtype="int64"),
-                    "term": pd.Series(dtype="object"),
-                    "s": pd.Series(dtype="float64"),
-                }
-            )
-        return pd.concat(out, ignore_index=True)
+        decoded, idfs = decode_postings(pdf, codec)
+        return pd.concat(
+            [
+                pd.DataFrame(
+                    {"query_id": qid, "doc_id": d, "term": t,
+                     "s": bm25(idfs[t], tf, dl, avgdl)}
+                )
+                for t, (d, tf, dl) in decoded.items()
+            ],
+            ignore_index=True,
+        )
 
     return fn
 

@@ -182,6 +182,36 @@ def test_out_of_vocabulary_batch_runs_no_job(spark, multi_shard_index):
                 assert jobs == [], (name, forced)
 
 
+def test_out_of_vocabulary_field_paths_run_no_job(spark, multi_shard_index):
+    """The fielded, matches and word-split paths answer an all-out-of-
+    vocabulary batch with an empty local relation too: a LocalTableScan
+    whose collect runs no job (spark.createDataFrame([]) runs one)."""
+    from grenad_spark.query.derivations import search_topk_word_splits
+    from grenad_spark.query.fields import (
+        search_topk_exact_field,
+        search_topk_exact_tiers,
+        search_topk_proximity_attr,
+        search_topk_search_on,
+    )
+    from grenad_spark.query.matches import search_topk_matches
+
+    idx = multi_shard_index
+    idx.df_map(spark)
+    qs = [(1, ABSENT), (2, f"{ABSENT} zzother")]
+    calls = {
+        "search_on": lambda: search_topk_search_on(spark, idx, qs, ["title"], k=5),
+        "exact_field": lambda: search_topk_exact_field(spark, idx, qs, k=5),
+        "exact_tiers": lambda: search_topk_exact_tiers(spark, idx, qs, k=5),
+        "proximity_attr": lambda: search_topk_proximity_attr(spark, idx, qs, k=5),
+        "matches": lambda: search_topk_matches(spark, idx, qs, k=5),
+        "word_splits": lambda: search_topk_word_splits(spark, idx, qs, k=5),
+    }
+    for name, call in calls.items():
+        rows, plan, jobs = _job_free(spark, f"oov-field-{name}", call)
+        assert rows == [] and plan.startswith("LocalTableScan"), (name, plan)
+        assert jobs == [], name
+
+
 def test_over_volume_auto_keeps_the_two_pass_plan(spark, tmp_path, monkeypatch):
     """On a corpus where pass 1 prunes (a rare term in the first docs of
     every shard, next to one in every doc), an auto call bigger than one

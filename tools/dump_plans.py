@@ -26,7 +26,7 @@ def main() -> None:
     from grenad_spark.entrypoints import build_or_get_index
     from grenad_spark.index.build import build_segments, tokens_with_dl
     from grenad_spark.query.bm25 import REFERENCE_QUERIES
-    from grenad_spark.query.search import _query_blocks
+    from grenad_spark.query.search import _query_blocks_from_pairs, _tokenize_queries
     from grenad_spark.session import get_spark
 
     spark = get_spark("plans", cpus=8, shuffle_partitions=8)
@@ -47,7 +47,9 @@ def main() -> None:
     )
 
     idx = build_or_get_index(spark, sf)
-    blocks, _ = _query_blocks(spark, idx, REFERENCE_QUERIES[:2])
+    blocks, _ = _query_blocks_from_pairs(
+        spark, idx, _tokenize_queries(REFERENCE_QUERIES[:2])
+    )
     sections.append(
         (
             "Query: pruned segment scan + broadcast term joins",

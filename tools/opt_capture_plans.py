@@ -15,6 +15,11 @@ does not need a full bench run. Captures whose index is absent are skipped.
 --shuffle-partitions defaults to --cpus. Pass a larger value (the default
 session uses max(cpus, 32)) to see whether a kernel exchange is sized by the
 planner or by the session's shuffle width.
+
+bm25_wand_single and ranked_batch8 fit one kernel group and would be served
+on the driver (a bare LocalTableScan); they are captured with the driver-local
+gate (search._serve_local) off, as the tests force it, so the capture shows
+their Spark plan: block attach, kernel dispatch, top-k.
 """
 from __future__ import annotations
 
@@ -67,7 +72,21 @@ def main() -> None:
         search_topk_phrase_shared,
         search_topk_proximity,
     )
+    from grenad_spark.query import search
     from grenad_spark.query.search import search_topk, search_topk_shared
+
+    def spark_plan(make_df):
+        """make_df with the driver-local gate off: the call's Spark plan."""
+
+        def run():
+            gate = search._serve_local
+            search._serve_local = lambda *a: False
+            try:
+                return make_df()
+            finally:
+                search._serve_local = gate
+
+        return run
 
     sys.path.append(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import bench
@@ -97,7 +116,7 @@ def main() -> None:
     if path("bench_idx_h_large"):
         idx = IndexHandle(path("bench_idx_h_large"))
         q1 = REFERENCE_QUERIES[2:3]
-        dump("bm25_wand_single", lambda: search_topk(spark, idx, q1, k=10, mode="wand"))
+        dump("bm25_wand_single", spark_plan(lambda: search_topk(spark, idx, q1, k=10, mode="wand")))
         dump("bm25_wand_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand"))
         dump("bm25_shared_batch12", lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10))
         dump("bm25_wand_pruned_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned"))
@@ -140,7 +159,7 @@ def main() -> None:
             (4, "spark window"), (5, "big table"), (6, "key value"),
             (7, "hash join order"), (8, "filter column row"),
         ]
-        dump("ranked_batch8", lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10))
+        dump("ranked_batch8", spark_plan(lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10)))
 
     # build-side plans (pre-write pipelines)
     from grenad_spark.index.pairprox import pair_stream
