@@ -216,14 +216,12 @@ def search_topk_word_splits(
         _OUT_AND_SCHEMA,
         _OUT_SCHEMA,
         _POS_COLS,
-        _SCORE_COLS,
-        _apply_per_query_shard,
         _empty_result,
         _make_exhaustive_with_termcount,
         _n_queries,
-        _query_blocks_from_pairs,
         _rank_topk,
         _scoring_pairs,
+        _serve_kernel,
     )
 
     word_pairs, chains = _split_derivations(spark, index, queries)
@@ -233,9 +231,8 @@ def search_topk_word_splits(
     parts: list[DataFrame] = []
 
     if word_pairs:
-        blocks, _ = _query_blocks_from_pairs(spark, index, word_pairs)
-        word_scores = _apply_per_query_shard(
-            spark, index, blocks, word_pairs, _SCORE_COLS,
+        word_scores = _serve_kernel(
+            spark, index, word_pairs,
             _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
             _OUT_AND_SCHEMA,
         ).select("query_id", "doc_id", "score")
@@ -243,12 +240,11 @@ def search_topk_word_splits(
 
     if chains:
         ppairs = [(subqid, t) for subqid, toks in chains.items() for t in set(toks)]
-        pblocks, _ = _query_blocks_from_pairs(spark, index, ppairs, table="positions")
         split_scores = (
-            _apply_per_query_shard(
-                spark, index, pblocks, ppairs, _POS_COLS,
+            _serve_kernel(
+                spark, index, ppairs,
                 _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
-                _PHRASE_OUT,
+                _PHRASE_OUT, table="positions", columns=_POS_COLS,
             )
             # fold the derivation slot back onto its owning query
             .withColumn(

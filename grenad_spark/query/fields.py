@@ -62,12 +62,11 @@ from grenad_spark.query.search import (
     _PROXIMITY_ORDER,
     _TYPO_COLS,
     _TYPO_ORDER,
-    _apply_per_query_shard,
     _empty_result,
     _n_queries,
-    _query_blocks_from_pairs,
     _rank_topk,
     _scoring_pairs,
+    _serve_kernel,
     _tokenize_queries,
 )
 
@@ -161,13 +160,11 @@ def search_topk_search_on(
     pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
         return _empty_result(spark, _SEARCH_ON_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_search_on_kernel(allowed, float(index.avgdl), index.payload_codec),
-        _SEARCH_ON_SCHEMA,
+        _SEARCH_ON_SCHEMA, k, table="positions", columns=_POS_COLS,
     )
-    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 def sql_search_on_topk(
@@ -322,11 +319,10 @@ def _exact_matches(spark: SparkSession, index, queries: list[tuple[int, str]], f
     pairs = _scoring_pairs(spark, index, _tokenize_queries(queries))
     if not pairs:
         return None
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    per_shard = _serve_kernel(
+        spark, index, pairs,
         _make_exact_kernel(qterms, fid, float(index.avgdl), index.payload_codec),
-        _EXACT_SCHEMA,
+        _EXACT_SCHEMA, table="positions", columns=_POS_COLS,
     )
     wc = (
         spark.read.parquet(field_word_counts_path(index.path))
@@ -610,15 +606,11 @@ def search_topk_proximity_attr(
     pairs = _scoring_pairs(spark, index, pairs, required=pairs)
     if not pairs:
         return _empty_result(spark, _PROX_ATTR_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_prox_attr_kernel(qtoks, float(index.avgdl), index.payload_codec),
-        _PROX_ATTR_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k), _PROXIMITY_ORDER,
-        ["query_id", "doc_id", "proximity", "score"],
+        _PROX_ATTR_SCHEMA, k, _PROXIMITY_ORDER, ["query_id", "doc_id", "proximity", "score"],
+        table="positions", columns=_POS_COLS,
     )
 
 
@@ -823,16 +815,12 @@ def search_topk_typo_disable_attrs(
     qslots, slot_meta, pairs = typo_slot_expansion(spark, index, queries, settings)
     if not pairs:
         return _empty_result(spark, _TYPO_ATTR_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_typo_attr_kernel(
             qslots, slot_meta, allowed, float(index.avgdl), index.payload_codec
         ),
-        _TYPO_ATTR_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k), _TYPO_ORDER, _TYPO_COLS
+        _TYPO_ATTR_SCHEMA, k, _TYPO_ORDER, _TYPO_COLS, table="positions", columns=_POS_COLS,
     )
 
 

@@ -39,12 +39,10 @@ from pyspark.sql import functions as F
 from grenad_spark.query.bm25 import SCORE_DECIMALS
 from grenad_spark.query.search import (
     _OUT_AND_SCHEMA,
-    _SCORE_COLS,
-    _apply_per_query_shard,
     _make_exhaustive_with_termcount,
     _n_queries,
-    _query_blocks_from_pairs,
     _rank_topk,
+    _serve_kernel,
     _tokenize_queries,
     conjunctive_matches,
 )
@@ -84,9 +82,8 @@ def _scored_matches(spark, index, queries):
     pairs = _tokenize_queries(queries)
     if not pairs:
         return None
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    return _apply_per_query_shard(
-        spark, index, blocks, pairs, _SCORE_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
     )

@@ -34,10 +34,9 @@ from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
 from grenad_spark.query.kernels import decode_positions, empty_frame
 from grenad_spark.query.search import (
     _POS_COLS,
-    _apply_per_query_shard,
     _empty_result,
-    _query_blocks_from_pairs,
     _scoring_pairs,
+    _serve_kernel,
     _tokenize_queries,
 )
 
@@ -110,19 +109,23 @@ def search_topk_matches(
     )
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    # block-range prune: a block can contain a hit only if its doc range
-    # overlaps the query's hit span (hits are k docs; spans are tight)
-    spans = spark.createDataFrame(
-        [(qid, int(min(ds)), int(max(ds))) for qid, ds in hits.items()],
-        "query_id int, lo long, hi long",
-    )
-    blocks = blocks.join(F.broadcast(spans), "query_id").filter(
-        (F.col("first_doc") <= F.col("hi")) & (F.col("last_doc") >= F.col("lo"))
-    )
-    return _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
-        _make_matches_kernel(hits, index.payload_codec), _OUT_SCHEMA,
+
+    def span_prune(blocks: DataFrame) -> DataFrame:
+        # block-range prune of the Spark branch: a block can contain a hit
+        # only if its doc range overlaps the query's hit span (hits are k
+        # docs; spans are tight). The kernel keeps hit docs only, so the
+        # driver branch reads every block of the terms and gets the same rows.
+        spans = spark.createDataFrame(
+            [(qid, int(min(ds)), int(max(ds))) for qid, ds in hits.items()],
+            "query_id int, lo long, hi long",
+        )
+        return blocks.join(F.broadcast(spans), "query_id").filter(
+            (F.col("first_doc") <= F.col("hi")) & (F.col("last_doc") >= F.col("lo"))
+        )
+
+    return _serve_kernel(
+        spark, index, pairs, _make_matches_kernel(hits, index.payload_codec), _OUT_SCHEMA,
+        table="positions", columns=_POS_COLS, prepass=span_prune,
     )
 
 

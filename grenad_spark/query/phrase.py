@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from grenad_spark.functions.literals import isin, prefix_ranges
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.query import search
 from grenad_spark.query.kernels import (
     PROX_INF,
     conjunctive_docs,
@@ -43,21 +42,16 @@ from grenad_spark.query.kernels import (
     phrase_docs,
 )
 from grenad_spark.query.search import (
-    _BM25_ORDER,
     _POS_COLS,
     _PROXIMITY_ORDER,
-    _apply_per_query_shard,
-    _batch_groups,
     _driver_idf,
     _empty_result,
-    _grouped_apply,
     _local_blocks,
-    _n_queries,
     _packed_in,
-    _query_blocks_from_pairs,
     _rank_local,
     _rank_topk,
     _scoring_pairs,
+    _serve_kernel,
 )
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
@@ -126,13 +120,11 @@ def phrase_match_pairs(
     qt = _phrase_pairs(spark, index, phrases)
     if not qt:
         return _empty_result(spark, "query_id int, doc_id long")
-    blocks, _ = _query_blocks_from_pairs(spark, index, qt, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, qt, _POS_COLS,
+    return _serve_kernel(
+        spark, index, qt,
         _make_phrase_kernel(phrases, float(index.avgdl), index.payload_codec),
-        _OUT_SCHEMA,
-    )
-    return per_shard.select("query_id", "doc_id")
+        _OUT_SCHEMA, table="positions", columns=_POS_COLS,
+    ).select("query_id", "doc_id")
 
 
 def phrase_matches(
@@ -174,8 +166,19 @@ def search_topk_phrase(
     pairs = _phrase_pairs(spark, index, phrases)
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    if prune_shards:
+    return _serve_kernel(
+        spark, index, pairs, _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA, k,
+        table="positions", columns=_POS_COLS,
+        prepass=_shard_prune(spark, index, pairs) if prune_shards else None,
+    )
+
+
+def _shard_prune(spark: SparkSession, index, pairs: list[tuple[int, str]]):
+    """The phrase shard prune, a prepass of the Spark branch: position
+    blocks -> the blocks of the (query, shard) groups where every phrase
+    term has a block (None: no group survives)."""
+
+    def prune(blocks: DataFrame) -> DataFrame | None:
         terms_by_q: dict[int, set] = {}
         for q, t in pairs:
             terms_by_q.setdefault(q, set()).add(t)
@@ -216,7 +219,7 @@ def search_topk_phrase(
             attach_noop = len(surv) == len(grows)
         if surv is not None:
             if not surv:
-                return _empty_result(spark, _OUT_SCHEMA)
+                return None
             # attach_noop: every candidate group survives — serve unpruned
             if not attach_noop:
                 # survivor (query, shard) pairs come back as ONE packed-key
@@ -245,11 +248,9 @@ def search_topk_phrase(
                 .select("query_id", "shard")
             )
             blocks = blocks.join(F.broadcast(survivors), ["query_id", "shard"])
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
-        _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA,
-    )
-    return _rank_topk(per_shard, _n_queries(pairs), int(k))
+        return blocks
+
+    return prune
 
 
 # ---------------------------------------------------------------------------
@@ -314,13 +315,11 @@ def search_topk_phrase_stopwords(
     pairs = _phrase_pairs(spark, index, {q: [t for _, t in ch] for q, ch in chains.items()})
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
-        _OUT_SCHEMA,
+        _OUT_SCHEMA, k, table="positions", columns=_POS_COLS,
     )
-    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 def sql_phrase_stopwords_topk(
@@ -553,15 +552,11 @@ def search_topk_proximity(
     pairs = _phrase_pairs(spark, index, phrases)
     if not pairs:
         return _empty_result(spark, _PROX_OUT_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_proximity_kernel(phrases, float(index.avgdl), index.payload_codec),
-        _PROX_OUT_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k), _PROXIMITY_ORDER,
-        ["query_id", "doc_id", "proximity", "score"],
+        _PROX_OUT_SCHEMA, k, _PROXIMITY_ORDER, ["query_id", "doc_id", "proximity", "score"],
+        table="positions", columns=_POS_COLS,
     )
 
 
@@ -810,12 +805,12 @@ def _make_mixed_kernel(parsed: dict[int, tuple], avgdl: float, codec: str):
 
 
 def _mixed_per_shard(
-    spark: SparkSession, index, queries: list[tuple[int, str]]
+    spark: SparkSession, index, queries: list[tuple[int, str]], k: int | None = None
 ) -> DataFrame | None:
-    """Shared plan prefix of the mixed family: parse, OOV-phrase drop, idf
-    pairs, pruned positions scan, and the per-(query, shard) mixed kernel.
-    Returns the UNRANKED per-shard (query_id, doc_id, score) stream, or
-    None when nothing can match."""
+    """Shared plan of the mixed family: parse, OOV-phrase drop, idf pairs,
+    and the per-(query, shard) mixed kernel through the serving dispatch.
+    Returns the top-k (query_id, doc_id, score) rows of each query (k None:
+    every match, unranked), or None when nothing can match."""
     parsed = {qid: parse_mixed_query(q) for qid, q in queries}
     parsed = {
         qid: pf for qid, pf in parsed.items() if pf[0] or pf[1]
@@ -823,10 +818,10 @@ def _mixed_per_shard(
     pairs = _mixed_pairs(spark, index, parsed)
     if not pairs:
         return None
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    return _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
-        _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA,
+    return _serve_kernel(
+        spark, index, pairs,
+        _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA, k,
+        table="positions", columns=_POS_COLS,
     )
 
 
@@ -857,10 +852,8 @@ def search_topk_mixed(
     a query whose phrase contains an out-of-vocabulary term returns no
     rows. Served entirely from the positional table (its block headers are
     full posting blocks, so free-term scoring needs no second scan)."""
-    per_shard = _mixed_per_shard(spark, index, queries)
-    if per_shard is None:
-        return _empty_result(spark, _OUT_SCHEMA)
-    return _rank_topk(per_shard, _n_queries(queries), int(k))
+    top = _mixed_per_shard(spark, index, queries, k)
+    return _empty_result(spark, _OUT_SCHEMA) if top is None else top
 
 
 def mixed_matches(spark: SparkSession, index, query: str) -> DataFrame:
@@ -1032,12 +1025,11 @@ def search_topk_mixed_prefix(
     pairs = _mixed_pairs(spark, index, parsed)
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
-        _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA,
+    return _serve_kernel(
+        spark, index, pairs,
+        _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA, k,
+        table="positions", columns=_POS_COLS,
     )
-    return _rank_topk(per_shard, _n_queries(pairs), int(k))
 
 
 def sql_mixed_prefix_topk(queries: list[tuple[int, str]], k: int = 10) -> str:
@@ -1247,18 +1239,13 @@ def search_topk_phrase_shared(
     idfs = {t: _driver_idf(n_docs, dfm[t]) for t in terms}
     kernel = _make_phrase_shared_kernel(phrases, idfs, avgdl, codec)
     pairs = [(q, t) for q, toks in phrases.items() for t in set(toks)]
-    cols = ["term", "n", "first_doc", "header", "positions"]
-    if search._serve_local(spark, index, pairs):
-        pdf = _local_blocks(index, "positions", terms, cols)
-        return _rank_local(spark, kernel(pdf), int(k), _BM25_ORDER, _OUT_SCHEMA)
     # work-sized groups of consecutive doc-disjoint shards, like the shared
     # posting path; the kernel sorts each term's blocks by first_doc, so
-    # any union of them (a whole partition) is exact
-    g, n_part = _batch_groups(spark, index, pairs)
-    blocks = index.positions(spark).filter(isin("term", terms)).select(
-        (F.col("shard") / g).cast("int").alias("qshard"), *cols
+    # any union of them (a whole partition) is exact. The driver branch
+    # reads and ranks through this module's bindings of the block read and
+    # the local rank.
+    return _serve_kernel(
+        spark, index, pairs, kernel, _OUT_SCHEMA, k, table="positions",
+        columns=["term", "n", "first_doc", "header", "positions"], groups="terms",
+        driver=(_local_blocks, _rank_local),
     )
-    per_shard = _grouped_apply(
-        blocks, ["qshard"], kernel, _OUT_SCHEMA, n_part, slice_groups=False
-    )
-    return _rank_topk(per_shard, len(phrases), int(k))

@@ -55,7 +55,6 @@ from pyspark.sql.window import Window
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.index.positions import FIELD_BITS, FIELD_STRIDE
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
-from grenad_spark.query import search
 from grenad_spark.query.kernels import (
     PROX_INF,
     conjunctive_docs,
@@ -68,18 +67,12 @@ from grenad_spark.query.kernels import (
 from grenad_spark.query.search import (
     _BM25_ORDER,
     _POS_COLS,
-    _apply_groups,
-    _apply_per_query_shard,
-    _batch_groups,
     _empty_result,
-    _local_query_blocks,
-    _local_relation,
     _n_queries,
-    _query_blocks_from_pairs,
     _query_slots,
-    _rank_local,
     _rank_topk,
     _scoring_pairs,
+    _serve_kernel,
     _slot_meta,
     _tokenize_queries,
     expand_fuzzy_queries,
@@ -167,15 +160,11 @@ def search_topk_attr_rule(
     pairs = _scoring_pairs(spark, index, qt, required=qt)
     if not pairs:
         return _empty_result(spark, _ATTR_OUT_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_attr_kernel(qterms, float(index.avgdl), index.payload_codec),
-        _ATTR_OUT_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k), _ATTR_ORDER,
-        ["query_id", "doc_id", "attr", "score"],
+        _ATTR_OUT_SCHEMA, k, _ATTR_ORDER, ["query_id", "doc_id", "attr", "score"],
+        table="positions", columns=_POS_COLS,
     )
 
 
@@ -285,14 +274,13 @@ def _ranked_rows(
     index,
     queries: list[tuple[int, str]],
     max_edits: int = 1,
-) -> DataFrame | pd.DataFrame:
-    """Every rule statistic for every matching (query, doc) pair — the
-    UNRANKED output of the composed kernel (one pruned positions scan, one
-    exchange), before any rule ORDER is applied; score is not rounded yet.
-    A pandas frame when the call is served on the driver
-    (search._serve_local: the derivation terms' position blocks read with
-    pyarrow, the same kernel over the same (query_id, shard DIV g) groups),
-    else the Spark plan."""
+    k: int | None = None,
+) -> DataFrame:
+    """Every rule statistic for every matching (query, doc) pair: the
+    composed kernel over the derivation terms' position blocks (one pruned
+    positions scan, one exchange; a local relation when the call is served
+    on the driver), ranked into the top k rows of each query under the
+    default rule order (k None: unranked, score not rounded yet)."""
     _require_fielded(index)
     pairs0 = expand_fuzzy_queries(spark, index, queries, max_edits)
     if not pairs0:
@@ -302,18 +290,11 @@ def _ranked_rows(
     pairs = [(qid, t) for qid, per_q in slot_meta.items() for t in sorted(per_q)]
     if not pairs:
         return _empty_result(spark, _RANKED_OUT_SCHEMA)
-    kernel = _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec)
-    if search._serve_local(spark, index, pairs):
-        pdf = _local_query_blocks(
-            spark, index, pairs, "positions",
-            ["term", "shard", "n", "first_doc", "header", "positions"],
-        )
-        g, _ = _batch_groups(spark, index, pairs)
-        out = _apply_groups(pdf.assign(shard=pdf["shard"] // g), ["query_id", "shard"], kernel)
-        return _empty_result(spark, _RANKED_OUT_SCHEMA) if out is None else out
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table="positions")
-    return _apply_per_query_shard(
-        spark, index, blocks, pairs, _POS_COLS, kernel, _RANKED_OUT_SCHEMA
+    return _serve_kernel(
+        spark, index, pairs,
+        _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec),
+        _RANKED_OUT_SCHEMA, k, _RANKED_ORDER, _RANKED_OUT_COLS,
+        table="positions", columns=_POS_COLS,
     )
 
 
@@ -323,13 +304,9 @@ def _ranked_stats(
     queries: list[tuple[int, str]],
     max_edits: int = 1,
 ) -> DataFrame:
-    """_ranked_rows as a DataFrame with its score rounded to
-    SCORE_DECIMALS (a local relation when served on the driver): the
+    """_ranked_rows with its score rounded to SCORE_DECIMALS: the
     filtered, distinct, custom-order and threshold pages rank over it."""
     rows = _ranked_rows(spark, index, queries, max_edits)
-    if isinstance(rows, pd.DataFrame):
-        rows = rows.assign(score=rows["score"].round(SCORE_DECIMALS))
-        return _local_relation(spark, rows, _RANKED_OUT_SCHEMA)
     return rows.withColumn("score", F.round("score", SCORE_DECIMALS))
 
 
@@ -349,10 +326,7 @@ def search_topk_ranked(
     each tier: (query_id, doc_id, words, typos, proximity, attribute,
     exactness, score). A call served on the driver ranks there too, in the
     same order, and returns a local relation (no Spark job)."""
-    rows = _ranked_rows(spark, index, queries, max_edits)
-    if isinstance(rows, pd.DataFrame):
-        return _rank_local(spark, rows, int(k), _RANKED_ORDER, _RANKED_OUT_SCHEMA)
-    return _rank_topk(rows, _n_queries(queries), int(k), _RANKED_ORDER, _RANKED_OUT_COLS)
+    return _ranked_rows(spark, index, queries, max_edits, k)
 
 
 # the default rule order: (stats column, ascending) pairs

@@ -33,6 +33,8 @@ import pyarrow as pa
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType, _parse_datatype_string
 from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin, prefix_ranges, sql_lit
@@ -316,14 +318,11 @@ def conjunctive_matches(
     n_terms = {}
     for qid, _ in pairs:
         n_terms[qid] = n_terms.get(qid, 0) + 1
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
     nt = spark.createDataFrame(list(n_terms.items()), "query_id int, n_terms int")
-
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _SCORE_COLS,
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+    per_shard = _serve_kernel(
+        spark, index, pairs,
+        _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
+        _OUT_AND_SCHEMA,
     )
     return (
         per_shard.join(F.broadcast(nt), "query_id")
@@ -358,15 +357,10 @@ def search_topk_words(
     the per-shard kernel already counts matched terms — minus the
     all-terms-required filter."""
     pairs = _tokenize_queries(queries)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _SCORE_COLS,
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k),
+    return _serve_kernel(
+        spark, index, pairs,
+        _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
+        _OUT_AND_SCHEMA, k,
         [("hit_terms", False), *_BM25_ORDER], ["query_id", "doc_id", "hit_terms", "score"],
     )
 
@@ -764,21 +758,6 @@ def _rank_topk(
     )
 
 
-def _make_per_query(apply_fn):
-    """Wrap a one-query kernel so it serves a whole qshard group: sort by
-    query_id once, slice per query, run the kernel per slice. Grouping the
-    shuffle by qshard ONLY (queries loop inside) cuts the per-group pandas
-    construction from |queries|·|qshards| Arrow→pandas groups to |qshards| —
-    measured ~0.3 s of a 0.9 s 12-query batch. Results are identical: each
-    slice is exactly the (query, qshard) group the kernel saw before."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        out = _apply_groups(pdf, ["query_id"], apply_fn)
-        return empty_frame(_OUT_SCHEMA) if out is None else out
-
-    return fn
-
-
 def _serve_local(spark: SparkSession, index: IndexHandle, pairs: list[tuple]) -> bool:
     """Run a kernel call on the driver instead of in a Spark job?
 
@@ -813,42 +792,35 @@ def _local_blocks(
     ).to_pandas()
 
 
-def _local_query_blocks(
-    spark: SparkSession,
-    index: IndexHandle,
-    pairs: list[tuple[int, str]],
-    table: str = "segments",
-    columns: list[str] = ("term", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"),
-) -> pd.DataFrame:
-    """_query_blocks_from_pairs on the driver: the `columns` of the `table`
-    block rows of each (query_id, term) pair with the driver idf attached."""
-    qt = pd.DataFrame(
-        _idf_rows(index, index.df_map(spark), pairs), columns=["query_id", "term", "idf"]
-    )
-    if qt.empty:
-        return qt
-    return qt.merge(_local_blocks(index, table, sorted(set(qt["term"])), list(columns)), on="term")
+@functools.lru_cache(maxsize=None)
+def _struct_type(schema: str, cols: tuple[str, ...] | None = None) -> StructType:
+    """The DDL string `schema` parsed once per process (projected on `cols`
+    when given): createDataFrame parses a DDL string in the JVM on every
+    call, a handful of py4j round trips per local relation."""
+    st = _parse_datatype_string(schema)
+    return st if cols is None else StructType([st[c] for c in cols])
 
 
 @functools.lru_cache(maxsize=None)
-def _arrow_schema(schema: str) -> pa.Schema:
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import _parse_datatype_string
-
-    return to_arrow_schema(_parse_datatype_string(schema))
+def _arrow_schema(schema: str, cols: tuple[str, ...] | None = None) -> pa.Schema:
+    return to_arrow_schema(_struct_type(schema, cols))
 
 
-def _local_relation(spark: SparkSession, rows: pd.DataFrame | None, schema: str) -> DataFrame:
-    """A DataFrame over driver-held rows (None: no rows), built from an
-    Arrow table so it plans a LocalTableScan and collecting it runs no
-    Spark job. createDataFrame of an empty list or an empty pandas frame
-    goes through an RDD instead, and its collect runs one."""
-    arrow = _arrow_schema(schema)
+def _local_relation(
+    spark: SparkSession, rows: pd.DataFrame | None, schema: str, cols: list[str] | None = None
+) -> DataFrame:
+    """A DataFrame over driver-held rows (None: no rows) with the columns
+    of `schema`, or its `cols` in that order, built from an Arrow table so
+    it plans a LocalTableScan and collecting it runs no Spark job.
+    createDataFrame of an empty list or an empty pandas frame goes through
+    an RDD instead, and its collect runs one."""
+    cols = None if cols is None else tuple(cols)
+    arrow = _arrow_schema(schema, cols)
     if rows is None:
         tbl = arrow.empty_table()
     else:
         tbl = pa.Table.from_pandas(rows, schema=arrow, preserve_index=False)
-    return spark.createDataFrame(tbl, schema)
+    return spark.createDataFrame(tbl, _struct_type(schema, cols))
 
 
 def _empty_result(spark: SparkSession, schema: str) -> DataFrame:
@@ -861,25 +833,27 @@ def _rank_local(
     out: pd.DataFrame,
     kk: int,
     order: list[tuple[str, bool]],
+    cols: list[str],
     schema: str,
 ) -> DataFrame:
-    """The top-k window on the driver: round the score, order each query's
-    rows by `order` ((column, ascending) pairs) after query_id — the row
-    order the one-partition Spark plan collects — and keep kk rows per
-    query, as a local relation of `schema`."""
+    """_rank_topk on the driver: round the score, order each query's rows
+    by `order` ((column, ascending) pairs) after query_id — the row order
+    the one-partition Spark plan collects — and keep kk rows per query, as
+    a local relation of the `cols` of `schema`."""
     out = out.assign(score=out["score"].round(SCORE_DECIMALS)).sort_values(
         ["query_id"] + [c for c, _ in order],
         ascending=[True] + [a for _, a in order],
         kind="stable",
     )
-    return _local_relation(spark, out.groupby("query_id", sort=False).head(kk), schema)
+    return _local_relation(spark, out.groupby("query_id", sort=False).head(kk), schema, cols)
 
 
 def _apply_groups(pdf: pd.DataFrame, keys: list[str], fn, slice_groups: bool = True):
     """Call `fn` once per distinct `keys` combination of `pdf` (stable
     lexsort + boundary scan; the whole frame in one call when slice_groups
     is False) and concatenate the outputs. None when nothing came out. The
-    per-group body of _grouped_apply, shared with the driver-local paths."""
+    per-group body of _grouped_apply and of the driver branch of
+    _serve_kernel."""
     if not len(pdf):
         return None
     if not slice_groups:
@@ -913,9 +887,8 @@ def _grouped_apply(
 ) -> DataFrame:
     """Call `fn` once per distinct `keys` group of `df` (the grouped-map
     semantics of Spark's applyInPandas) on the map protocol, mapInPandas.
-    Every serving kernel dispatches through here: the per-(query_id, shard)
-    kernels through _apply_per_query_shard, the qshard-keyed scoring,
-    prune and shared kernels directly.
+    Every serving kernel's Spark branch (_serve_kernel) and the pass-1
+    prune kernels dispatch through here.
 
     n_part is required and comes from _batch_groups (_group_params under
     the batch's posting volume): the exchange is sized by the data it
@@ -967,29 +940,95 @@ _PAYLOAD_COLS = ["term", "idf", "n", "payload"]
 _POS_COLS = ["term", "idf", "n", "first_doc", "header", "positions"]
 
 
-def _apply_per_query_shard(
+def _serve_kernel(
     spark: SparkSession,
     index: IndexHandle,
-    blocks: DataFrame,
-    pairs: list[tuple],
-    columns: list[str],
+    pairs: list[tuple[int, str]],
     fn,
     out_schema: str,
+    k: int | None = None,
+    order: list[tuple[str, bool]] = _BM25_ORDER,
+    cols: list[str] = _OUT_COLS,
+    table: str = "segments",
+    columns: list[str] = _SCORE_COLS,
+    groups: str = "query_shard",
+    prepass=None,
+    driver=None,
 ) -> DataFrame:
-    """The one dispatch of a per-(query_id, shard) kernel `fn` over
-    `blocks` restricted to `columns`. g consecutive doc-disjoint build
-    shards merge into one group (shard DIV g, aliased back to `shard`), and
-    g and n_part come from the one volume rule, _batch_groups over `pairs`.
-    Relabeling is exact: shards are doc-range disjoint and ascending, and
-    kernels never read the shard value — they only group by it and re-sort
-    blocks by first_doc — so a merged group is still one valid posting-list
-    slice, with g× fewer Arrow→pandas groups (a 12-query batch over 128
-    build shards went from 1536 kernel groups to 192)."""
+    """The one serving dispatch: kernel `fn` over the `columns` of the
+    `table` (segments or positions) block rows of the (query_id, term)
+    `pairs`, then the top `k` rows of each query under `order`, projected
+    on `cols` (k None: the kernel's rows, unranked). The call runs on the
+    driver when its posting volume fits one kernel group (_serve_local),
+    else in a Spark job; both give the same rows.
+
+    `groups` is the kernel's input grouping, one per Spark plan shape:
+    - "query_shard": one call per (query_id, shard DIV g) group;
+    - "qshard": partitions of shard DIV g groups, one call per query in
+      each (the BM25 scoring kernels);
+    - "terms": partitions of the batch's term-union blocks, no query
+      column, one call each (the shared-decode kernels; queries and idf
+      ride in `fn`).
+    g and the partition count come from the one volume rule, _batch_groups
+    over `pairs`. Shards are doc-range disjoint and ascending and kernels
+    re-sort blocks by first_doc, so a merged group is still one valid
+    posting-list slice. Under the gate g = n_shards: the driver calls `fn`
+    once per query_id ("terms": once).
+
+    Driver: the block rows are read with pyarrow (_local_blocks), idf is
+    attached from the df map, and _rank_local ranks into a local relation:
+    no Spark job. `driver` replaces that (read, rank) pair. Spark: the
+    block attach (_query_blocks_from_pairs, or the term-union scan), then
+    `prepass` (blocks -> blocks, or None when the call has no rows: the
+    Spark-only pass-1 and shard prunes, which only shrink an exchange the
+    driver does not have), the exchange into _grouped_apply, and
+    _rank_topk."""
+    dfm = index.df_map(spark)
+    terms = sorted({t for _, t in pairs if dfm is None or t in dfm})
+    if _serve_local(spark, index, pairs):
+        read, rank_local = driver or (_local_blocks, _rank_local)
+        out = None
+        if terms:
+            pdf = read(index, table, terms, [c for c in columns if c != "idf"])
+            if groups == "terms":
+                out = _apply_groups(pdf, [], fn, slice_groups=False)
+            else:
+                qt = pd.DataFrame(
+                    _idf_rows(index, dfm, pairs), columns=["query_id", "term", "idf"]
+                )
+                out = _apply_groups(qt.merge(pdf, on="term"), ["query_id"], fn)
+        if out is None:
+            out = empty_frame(out_schema)
+        if k is None:
+            return _local_relation(spark, out, out_schema)
+        return rank_local(spark, out, int(k), order, cols, out_schema)
+
     g, n_part = _batch_groups(spark, index, pairs)
-    sel = blocks.select(
-        "query_id", (F.col("shard") / g).cast("int").alias("shard"), *columns
-    )
-    return _grouped_apply(sel, ["query_id", "shard"], fn, out_schema, n_part)
+    if groups == "terms":
+        blocks = getattr(index, table)(spark).filter(isin("term", terms))
+    else:
+        blocks, _ = _query_blocks_from_pairs(spark, index, pairs, table=table)
+    if prepass is not None:
+        blocks = prepass(blocks)
+        if blocks is None:
+            return _local_relation(spark, None, out_schema, None if k is None else cols)
+    group = (F.col("shard") / g).cast("int")
+    if groups == "query_shard":
+        sel = blocks.select("query_id", group.alias("shard"), *columns)
+        out = _grouped_apply(sel, ["query_id", "shard"], fn, out_schema, n_part)
+    else:
+        if groups == "terms":
+            sel = blocks.select(group.alias("qshard"), *columns)
+        else:
+            # one call per query slice of the partition: |qshards| pandas
+            # groups instead of |queries|·|qshards| (~0.3 s of a 0.9 s
+            # 12-query batch), each slice the (query, qshard) group it was
+            sel = blocks.select("query_id", group.alias("qshard"), *columns)
+            fn = functools.partial(_apply_groups, keys=["query_id"], fn=fn)
+        out = _grouped_apply(sel, ["qshard"], fn, out_schema, n_part, slice_groups=False)
+    if k is None:
+        return out
+    return _rank_topk(out, _n_queries(pairs), int(k), order, cols)
 
 
 def _search_from_pairs(
@@ -998,38 +1037,24 @@ def _search_from_pairs(
     pairs: list[tuple[int, str]],
     k: int = 10,
     mode: str = "exhaustive",
+    prepass=None,
 ) -> DataFrame:
     if mode == "wand_pruned":
         return _search_pruned(spark, index, pairs, k)
     avgdl = float(index.avgdl)
     kk = int(k)
     codec = index.payload_codec
-
     if mode == "exhaustive":
         apply_fn = _make_exhaustive(avgdl, kk, codec)
     elif mode == "wand":
         apply_fn = _make_wand_batched(avgdl, kk, codec)
     else:
         raise ValueError(f"unknown mode {mode!r}")
-
-    if _serve_local(spark, index, pairs):
-        # the one task's work, on the driver: same rows, same kernel call
-        pdf = _local_query_blocks(spark, index, pairs)
-        return _rank_local(spark, _make_per_query(apply_fn)(pdf), kk, _BM25_ORDER, _OUT_SCHEMA)
-    n_queries = _n_queries(pairs)
-    g, n_part = _batch_groups(spark, index, pairs)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    sel = blocks.select(
-        "query_id", (F.col("shard") / g).cast("int").alias("qshard"), *_SCORE_COLS
+    # at n_part == 1 the narrow coalesce keeps the whole query in ONE stage
+    # — no exchange at all
+    return _serve_kernel(
+        spark, index, pairs, apply_fn, _OUT_SCHEMA, kk, groups="qshard", prepass=prepass
     )
-    # _grouped_apply: map-protocol kernel dispatch (~125 ms/job cheaper than
-    # grouped applyInPandas); at n_part == 1 the narrow coalesce keeps the
-    # whole query in ONE stage — no exchange at all
-    per_shard = _grouped_apply(
-        sel, ["qshard"], _make_per_query(apply_fn), _OUT_SCHEMA, n_part,
-        slice_groups=False,
-    )
-    return _rank_topk(per_shard, n_queries, kk)
 
 
 # metadata prune pass: every block column EXCEPT payload (parquet column
@@ -1041,12 +1066,17 @@ _META_COLS = [
 _SURVIVOR_SCHEMA = "query_id int, term string, shard int, block_id int"
 
 
+def _has_block_bounds(spark: SparkSession, index: IndexHandle) -> bool:
+    """Does the index carry the v2 block metadata (min_tf, max_dl) pass 1
+    bounds from? Pre-v2 indexes serve the single-pass plans."""
+    return "min_tf" in index.segments(spark).columns
+
+
 def _search_pruned(
     spark: SparkSession,
     index: IndexHandle,
     pairs: list[tuple[int, str]],
     k: int = 10,
-    survivors: DataFrame | None = None,
 ) -> DataFrame:
     """TWO-PASS serving: prune blocks from METADATA before any payload
     crosses the shuffle (the top r2 scale item — BASELINE.md measured that
@@ -1071,59 +1101,53 @@ def _search_pruned(
     argument as the in-UDF range mask, asserted in tests/test_wand_property
     and the bm25_topk_wand_pruned contract gate).
 
-    A call served on the driver (_serve_local) has no exchange for pass 1
-    to shrink, so it runs the single-pass wand plan there: the batched WAND
-    kernel derives its own θ and skips the blocks that cannot reach it, and
-    both plans are exact, so the rows are the same. So does a batch whose
-    query terms are all sparse (survivor_blocks: pass 1 would keep every
-    block), and pre-v2 indexes (no min_tf/max_dl block metadata)."""
-    if _serve_local(spark, index, pairs) or "min_tf" not in index.segments(spark).columns:
-        return _search_from_pairs(spark, index, pairs, k, "wand")
-    kk = int(k)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    n_queries = _n_queries(pairs)
-    g, n_part = _batch_groups(spark, index, pairs)
+    Pass 1 is the Spark branch's prepass of the wand call: a call served on
+    the driver has no exchange for it to shrink, and the batched WAND
+    kernel derives its own θ and skips the blocks that cannot reach it;
+    both plans are exact, so the rows are the same. A batch whose query
+    terms are all sparse (survivor_blocks: pass 1 would keep every block)
+    and pre-v2 indexes (no min_tf/max_dl block metadata) serve the
+    single-pass plan too."""
 
-    # survivor attach: a SUPERSET of the pass-1 survivors is always exact —
-    # the scoring kernel re-derives its own θ and extra blocks only add
-    # correctly-scored candidates. When the block bound says the survivors
-    # fit the IN literal, pass 1 runs ONCE as a collect and comes back as a
-    # packed-key IN (_packed_in); the packed key drops the term
-    # (query_id·2⁴⁰ + shard·2²⁰ + block_id), so a colliding block of another
-    # query term ships too — the harmless-superset case. Otherwise the lazy
-    # broadcast join keeps pass 1 inside the broadcast build (one run, zero
-    # extra jobs) — AQE alone would cost stage barriers (~0.5 s/batch
-    # measured). When a corpus/query mix prunes nothing, callers should
-    # serve with mode='wand' instead — or search_topk_auto.
-    if survivors is None:
-        survivors = survivor_blocks(spark, index, pairs, kk)
+    def pass1(blocks: DataFrame) -> DataFrame | None:
+        if not _has_block_bounds(spark, index):
+            return blocks
+        surv = survivor_blocks(spark, index, pairs, int(k))
+        return _survivor_attach(spark, index, pairs, blocks, surv)
+
+    return _search_from_pairs(spark, index, pairs, k, "wand", prepass=pass1)
+
+
+def _survivor_attach(
+    spark: SparkSession,
+    index: IndexHandle,
+    pairs: list[tuple[int, str]],
+    blocks: DataFrame,
+    survivors: DataFrame,
+) -> DataFrame | None:
+    """`blocks` restricted to the pass-1 survivors (None: none survive).
+
+    A SUPERSET of the survivors is always exact — the scoring kernel
+    re-derives its own θ and extra blocks only add correctly-scored
+    candidates. When the block bound says the survivors fit the IN literal,
+    pass 1 runs ONCE as a collect and comes back as a packed-key IN
+    (_packed_in); the packed key drops the term (query_id·2⁴⁰ + shard·2²⁰ +
+    block_id), so a colliding block of another query term ships too — the
+    harmless-superset case. Otherwise the lazy broadcast join keeps pass 1
+    inside the broadcast build (one run, zero extra jobs) — AQE alone would
+    cost stage barriers (~0.5 s/batch measured). When pass 1 keeps every
+    block (_keeps_every_block) `blocks` come back as they are."""
     if _keeps_every_block(survivors):
-        return _search_from_pairs(spark, index, pairs, k, "wand")
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
+        return blocks
     est_blocks = _est_blocks(spark, index, [t for _, t in set(pairs)])
     if est_blocks is not None and est_blocks <= PACKED_IN_CAP:
         srows = survivors.select("query_id", "shard", "block_id").collect()
         if not srows:
-            return _empty_result(spark, _OUT_SCHEMA)
-        pruned = _packed_in(
+            return None
+        return _packed_in(
             spark, blocks, srows, ["query_id", "shard", "block_id"], [23, 20, 20]
         )
-    else:
-        pruned = blocks.join(
-            F.broadcast(survivors), ["query_id", "term", "shard", "block_id"]
-        )
-    per_shard = _grouped_apply(
-        pruned.select(
-            "query_id", (F.col("shard") / g).cast("int").alias("qshard"), *_SCORE_COLS
-        ),
-        ["qshard"],
-        _make_per_query(_make_wand_batched(avgdl, kk, codec)),
-        _OUT_SCHEMA,
-        n_part,
-        slice_groups=False,
-    )
-    return _rank_topk(per_shard, n_queries, kk)
+    return blocks.join(F.broadcast(survivors), ["query_id", "term", "shard", "block_id"])
 
 
 # a query term is SPARSE when its whole posting list is comparable in size
@@ -1276,31 +1300,35 @@ def search_topk_auto(
     the denominator comes from term_dict's per-term n_blocks — a
     vocabulary-pruned lookup of |query terms| rows, not a metadata rescan.
 
-    Pass 1 runs only on the Spark path: a call served on the driver
-    (_serve_local) has no exchange for it to shrink, and serves the
+    Pass 1 is the Spark branch's prepass of the wand call: a call served on
+    the driver has no exchange for it to shrink, and serves the
     single-pass plan there with no job (same rows — both plans are exact).
     So does a batch whose query terms are all sparse (survivor_blocks says
     so from the df map, with no job), and a pre-v2 index."""
     pairs = _tokenize_queries(queries)
-    if _serve_local(spark, index, pairs) or "min_tf" not in index.segments(spark).columns:
-        return _search_from_pairs(spark, index, pairs, k, "wand")
-    surv = survivor_blocks(spark, index, pairs, int(k))
-    if _keeps_every_block(surv):
-        return _search_from_pairs(spark, index, pairs, k, "wand")
-    surv = surv.localCheckpoint()
-    n_surv = surv.count()
-    terms = sorted({t for _, t in pairs})
-    nb = {
-        r["term"]: int(r["n_blocks"])
-        for r in index.term_dict(spark)
-        .filter(isin("term", terms))
-        .select("term", "n_blocks")
-        .collect()
-    }
-    total = sum(nb.get(t, 0) for _, t in pairs)
-    if total > 0 and n_surv <= prune_ratio_max * total:
-        return _search_pruned(spark, index, pairs, k, survivors=surv)
-    return _search_from_pairs(spark, index, pairs, k, "wand")
+
+    def pass1(blocks: DataFrame) -> DataFrame | None:
+        if not _has_block_bounds(spark, index):
+            return blocks
+        surv = survivor_blocks(spark, index, pairs, int(k))
+        if _keeps_every_block(surv):
+            return blocks
+        surv = surv.localCheckpoint()
+        n_surv = surv.count()
+        terms = sorted({t for _, t in pairs})
+        nb = {
+            r["term"]: int(r["n_blocks"])
+            for r in index.term_dict(spark)
+            .filter(isin("term", terms))
+            .select("term", "n_blocks")
+            .collect()
+        }
+        total = sum(nb.get(t, 0) for _, t in pairs)
+        if total > 0 and n_surv <= prune_ratio_max * total:
+            return _survivor_attach(spark, index, pairs, blocks, surv)
+        return blocks
+
+    return _search_from_pairs(spark, index, pairs, k, "wand", prepass=pass1)
 
 
 def _make_meta_prune(avgdl: float, k: int, codec: str = "none"):
@@ -1899,16 +1927,12 @@ def search_topk_shared(
             return empty_frame(_OUT_SCHEMA)
         return pd.concat(outs, ignore_index=True)
 
-    if _serve_local(spark, index, pairs):
-        pdf = _local_blocks(index, "segments", terms, ["term", "n", "payload"])
-        return _rank_local(spark, fn(pdf), kk, _BM25_ORDER, _OUT_SCHEMA)
-    g, n_part = _batch_groups(spark, index, pairs)
-
-    seg = index.segments(spark).filter(isin("term", terms))
-    surv_df = None
-    if prune and "min_tf" in seg.columns:
+    def pass1(seg: DataFrame) -> DataFrame | None:
+        if not prune or "min_tf" not in seg.columns:
+            return seg
         surv_df = survivor_blocks(spark, index, pairs, kk)
-    if surv_df is not None and not _keeps_every_block(surv_df):
+        if _keeps_every_block(surv_df):
+            return seg
         # a SUPERSET of the survivors is exact here (every shipped block is
         # scored exhaustively for all queries sharing its term), so the
         # packed key can drop both query_id and term — (shard, block_id)
@@ -1917,24 +1941,15 @@ def search_topk_shared(
         if _est_blocks(spark, index, terms) <= PACKED_IN_CAP:
             srows = surv_df.select("shard", "block_id").collect()
             if not srows:
-                return _empty_result(spark, _OUT_SCHEMA)
-            seg = _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20])
-        else:
-            surv = F.broadcast(
-                surv_df.select("term", "shard", "block_id").distinct()
-            )
-            seg = seg.join(surv, ["term", "shard", "block_id"])
-    blocks = seg.select(
-        (F.col("shard") / g).cast("int").alias("qshard"),
-        "term", "n", "payload",
-    )
+                return None
+            return _packed_in(spark, seg, srows, ["shard", "block_id"], [20, 20])
+        surv = F.broadcast(surv_df.select("term", "shard", "block_id").distinct())
+        return seg.join(surv, ["term", "shard", "block_id"])
 
-    # single work-sized group: narrow coalesce, no exchange — same trick as
-    # _search_from_pairs; map-protocol dispatch via _grouped_apply
-    per_shard = _grouped_apply(
-        blocks, ["qshard"], fn, _OUT_SCHEMA, n_part, slice_groups=False
+    return _serve_kernel(
+        spark, index, pairs, fn, _OUT_SCHEMA, kk,
+        columns=["term", "n", "payload"], groups="terms", prepass=pass1,
     )
-    return _rank_topk(per_shard, _n_queries(pairs), kk)
 
 
 def _make_exhaustive(avgdl: float, k: int, codec: str = "none"):
@@ -2234,15 +2249,10 @@ def search_topk_fuzzy_ranked(
     pairs = [(q, t) for q, t in pairs if t in slot_meta.get(q, {})]
     if not pairs:
         return _empty_result(spark, _OUT_TYPO_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _PAYLOAD_COLS,
-        _make_typo_ranked_kernel(slot_meta, avgdl, codec), _OUT_TYPO_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k), _TYPO_ORDER, _TYPO_COLS
+    return _serve_kernel(
+        spark, index, pairs,
+        _make_typo_ranked_kernel(slot_meta, float(index.avgdl), index.payload_codec),
+        _OUT_TYPO_SCHEMA, k, _TYPO_ORDER, _TYPO_COLS, columns=_PAYLOAD_COLS,
     )
 
 
@@ -2269,9 +2279,8 @@ def search_topk_page(
         return _empty_result(
             spark, "query_id int, doc_id long, score double, rank int, total_hits long"
         )
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _SCORE_COLS,
+    per_shard = _serve_kernel(
+        spark, index, pairs,
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
     )
@@ -2375,10 +2384,10 @@ def typo_slot_expansion(
     """Shared expansion stage of the typoTolerance serving paths:
     (qslots, slot_meta, pairs) where qslots = qid -> ordered deduped query
     words, slot_meta = qid -> term -> [(slot, distance)], pairs = the
-    (qid, term) scan list. Exact words probe the dictionary (In-pruned),
-    1- and 2-edit words expand through expand_fuzzy_queries (the driver
-    neighborhood test or the SymSpell deletion table) — no bucket scans the
-    vocabulary."""
+    (qid, term) scan list. Exact words probe the driver df map when it is
+    held, else the dictionary (In-pruned); 1- and 2-edit words expand
+    through expand_fuzzy_queries (the driver neighborhood test or the
+    SymSpell deletion table) — no bucket scans the vocabulary."""
     qslots = _query_slots(queries)
     if not qslots:
         return {}, {}, []
@@ -2389,7 +2398,8 @@ def typo_slot_expansion(
     pairs: list[tuple[int, str]] = []
     if by_budget[0]:
         zero_terms = sorted({t for ts in by_budget[0].values() for t in ts})
-        present = {
+        dfm = index.df_map(spark)
+        present = set(zero_terms) & dfm.keys() if dfm is not None else {
             r["term"]
             for r in index.term_dict(spark)
             .filter(isin("term", zero_terms))
@@ -2435,14 +2445,10 @@ def search_topk_typo_settings(
     qslots, slot_meta, pairs = typo_slot_expansion(spark, index, queries, settings)
     if not pairs:
         return _empty_result(spark, _OUT_TYPO_SCHEMA)
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _PAYLOAD_COLS,
+    return _serve_kernel(
+        spark, index, pairs,
         _make_typo_ranked_kernel(slot_meta, float(index.avgdl), index.payload_codec),
-        _OUT_TYPO_SCHEMA,
-    )
-    return _rank_topk(
-        per_shard, _n_queries(pairs), int(k), _TYPO_ORDER, _TYPO_COLS
+        _OUT_TYPO_SCHEMA, k, _TYPO_ORDER, _TYPO_COLS, columns=_PAYLOAD_COLS,
     )
 
 
@@ -2466,9 +2472,8 @@ def search_topk_filtered(
     pairs = _tokenize_queries(queries)
     if not pairs:
         return _empty_result(spark, "query_id int, doc_id long, score double")
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pairs, _SCORE_COLS,
+    per_shard = _serve_kernel(
+        spark, index, pairs,
         _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec),
         _OUT_AND_SCHEMA,
     )
@@ -2673,18 +2678,11 @@ def search_topk_negative(
                 neg_pairs.append((qid, t))
     if not pos_pairs:
         return _empty_result(spark, "query_id int, doc_id long, score double")
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    blocks, _ = _query_blocks_from_pairs(spark, index, pos_pairs)
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pos_pairs, _SCORE_COLS,
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-    )
+    kernel = _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec)
+    per_shard = _serve_kernel(spark, index, pos_pairs, kernel, _OUT_AND_SCHEMA)
     if neg_pairs:
-        nblocks, _ = _query_blocks_from_pairs(spark, index, neg_pairs)
-        excluded = _apply_per_query_shard(
-            spark, index, nblocks, neg_pairs, _SCORE_COLS,
-            _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
+        excluded = _serve_kernel(
+            spark, index, neg_pairs, kernel, _OUT_AND_SCHEMA
         ).select("query_id", "doc_id")
         per_shard = per_shard.join(excluded, ["query_id", "doc_id"], "left_anti")
     return _rank_topk(per_shard, _n_queries(pos_pairs), int(k))
@@ -2795,21 +2793,13 @@ def search_topk_negative_phrases(
             ph_pairs.append((qid, p))
     if not pos_pairs:
         return _empty_result(spark, "query_id int, doc_id long, score double")
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
-    blocks, _ = _query_blocks_from_pairs(spark, index, pos_pairs)
-    per_shard = _apply_per_query_shard(
-        spark, index, blocks, pos_pairs, _SCORE_COLS,
-        _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-    )
+    kernel = _make_exhaustive_with_termcount(float(index.avgdl), index.payload_codec)
+    per_shard = _serve_kernel(spark, index, pos_pairs, kernel, _OUT_AND_SCHEMA)
     exclusions: list[DataFrame] = []
     if neg_pairs:
-        nblocks, _ = _query_blocks_from_pairs(spark, index, neg_pairs)
         exclusions.append(
-            _apply_per_query_shard(
-                spark, index, nblocks, neg_pairs, _SCORE_COLS,
-                _make_exhaustive_with_termcount(avgdl, codec), _OUT_AND_SCHEMA,
-            ).select("query_id", "doc_id")
+            _serve_kernel(spark, index, neg_pairs, kernel, _OUT_AND_SCHEMA)
+            .select("query_id", "doc_id")
         )
     if ph_pairs:
         # phrase ids collide across queries only if the same qid repeats a
@@ -2977,9 +2967,8 @@ def _matched_prefix_topk(
         return _empty_result(
             spark, "query_id int, doc_id long, matched_prefix int, score double"
         )
-    blocks, _ = _query_blocks_from_pairs(spark, index, pairs)
-    matches = _apply_per_query_shard(
-        spark, index, blocks, pairs, _SCORE_COLS,
+    matches = _serve_kernel(
+        spark, index, pairs,
         _make_term_match_rows(float(index.avgdl), index.payload_codec),
         _TERM_MATCH_SCHEMA,
     )

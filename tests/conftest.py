@@ -1,8 +1,10 @@
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# this checkout's package, wherever the checkout lives
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 SF_SMALL = "/root/testdata/sf0.001"
 

@@ -1,13 +1,14 @@
-"""One-group batch calls served on the driver vs through Spark.
+"""Kernel calls served on the driver vs through Spark.
 
-When a call's posting volume fits one kernel group, every batch serving
-path — `search_topk` (wand, exhaustive, wand_pruned), `search_topk_auto`,
-`search_topk_shared` (pruned or not), `search_topk_phrase_shared` and
-`search_topk_ranked` — reads its block rows with pyarrow and runs its
-kernel on the driver; turning the `_serve_local` gate off forces the Spark
-plan. Both branches must collect identical rows in identical order, ties
-included; a one-group call must run no Spark job, and a call whose volume
-exceeds one group must still plan the Spark kernel."""
+Every kernel call goes through one dispatch (`search._serve_kernel`). When
+the call's posting volume fits one kernel group, it reads its block rows
+with pyarrow and runs its kernel on the driver; turning the `_serve_local`
+gate off forces the Spark plan. Both branches must collect identical rows
+in identical order, ties included. A one-group call whose kernel output
+goes straight to the rank (or is the result) must run no Spark job; one
+whose kernel output is joined afterwards (conjunctive) still runs that
+join in Spark. A call whose volume exceeds one group must still plan the
+Spark kernel."""
 
 import shutil
 from contextlib import contextmanager
@@ -20,9 +21,28 @@ from hypothesis import strategies as st
 import grenad_spark.query.search as S
 from grenad_spark.index.build import IndexHandle, build_index
 from grenad_spark.index.positions import build_positions
-from grenad_spark.query.phrase import search_topk_phrase_shared
-from grenad_spark.query.ranked import search_topk_ranked
-from grenad_spark.query.search import search_topk, search_topk_auto, search_topk_shared
+from grenad_spark.query.fields import (
+    search_topk_proximity_attr,
+    search_topk_search_on,
+    search_topk_typo_disable_attrs,
+)
+from grenad_spark.query.matches import search_topk_matches
+from grenad_spark.query.phrase import (
+    search_topk_mixed,
+    search_topk_phrase,
+    search_topk_phrase_shared,
+    search_topk_phrase_stopwords,
+    search_topk_proximity,
+)
+from grenad_spark.query.ranked import search_topk_attr_rule, search_topk_ranked
+from grenad_spark.query.search import (
+    search_conjunctive,
+    search_topk,
+    search_topk_auto,
+    search_topk_fuzzy_ranked,
+    search_topk_shared,
+    search_topk_words,
+)
 
 VOCAB = ["spark", "merge", "sort", "dup", "key", "value", "fast", "slow", "grenad"]
 ABSENT = "zzabsent"
@@ -50,7 +70,34 @@ def _calls(spark, idx, queries, k):
         "auto": lambda: search_topk_auto(spark, idx, queries, k=k),
         "phrase_shared": lambda: search_topk_phrase_shared(spark, idx, queries, k=k),
         "ranked": lambda: search_topk_ranked(spark, idx, queries, k=k),
+        "phrase": lambda: search_topk_phrase(spark, idx, queries, k=k),
+        "phrase_stopwords": lambda: search_topk_phrase_stopwords(
+            spark, idx, queries, {"key"}, k=k
+        ),
+        "proximity": lambda: search_topk_proximity(spark, idx, queries, k=k),
+        "mixed": lambda: search_topk_mixed(spark, idx, queries, k=k),
+        "words": lambda: search_topk_words(spark, idx, queries, k=k),
+        "conjunctive": lambda: search_conjunctive(spark, idx, queries, k=k),
+        "typo_ranked": lambda: search_topk_fuzzy_ranked(spark, idx, queries, k=k),
+        "search_on": lambda: search_topk_search_on(spark, idx, queries, ["title"], k=k),
+        "proximity_attr": lambda: search_topk_proximity_attr(spark, idx, queries, k=k),
+        "typo_attr": lambda: search_topk_typo_disable_attrs(spark, idx, queries, k=k),
+        "attr_rule": lambda: search_topk_attr_rule(spark, idx, queries, k=k),
+        "matches": lambda: search_topk_matches(spark, idx, queries, k=k),
     }
+
+
+# calls whose driver-served kernel output Spark still joins (the conjunctive
+# term-count filter); every other call's driver branch is a local relation
+_SPARK_AFTER_KERNEL = {"conjunctive"}
+# calls whose rows have no defined order (every match position of the
+# top-k hits): compared as multisets
+_UNORDERED = {"matches"}
+
+
+def _rows(name, df):
+    rows = [tuple(r) for r in df.collect()]
+    return sorted(rows) if name in _UNORDERED else rows
 
 
 def _index(spark, rows, out, n_shards, block_size):
@@ -105,15 +152,18 @@ def test_local_equals_spark(spark, tmp_path_factory, rows, queries, n_shards, k)
             for forced in (False, True):
                 with _no_local(forced):
                     df = call()
-                    got[forced] = [tuple(r) for r in df.collect()]
+                    got[forced] = _rows(name, df)
                 # a call that returns rows shows its branch in its plan (one
                 # that scores nothing may return before the gate, or after
                 # a pass 1 that keeps no block, with an empty local relation)
                 if got[forced]:
                     plan = _plan(df)
-                    assert "MapInPandas" in plan if forced else plan.startswith(
-                        "LocalTableScan"
-                    ), (name, forced, plan)
+                    if forced:
+                        assert "MapInPandas" in plan, (name, forced, plan)
+                    elif name in _SPARK_AFTER_KERNEL:
+                        assert "MapInPandas" not in plan, (name, forced, plan)
+                    else:
+                        assert plan.startswith("LocalTableScan"), (name, forced, plan)
             assert got[False] == got[True], (name, qs)
 
 
@@ -135,14 +185,14 @@ def test_over_volume_calls_keep_the_spark_plan(spark, multi_shard_index, tmp_pat
     tasks: several groups on a 4-shard index, and one task (n_part == 1) on
     a 1-shard index, whose work still stays out of driver memory."""
     for idx in (multi_shard_index, _build(spark, str(tmp_path / "one"), 1)):
-        want = {n: [tuple(r) for r in c().collect()] for n, c in _calls(spark, idx, QUERIES, 5).items()}
+        want = {n: _rows(n, c()) for n, c in _calls(spark, idx, QUERIES, 5).items()}
         with monkeypatch.context() as m:
             m.setattr(S, "TARGET_GROUP_POSTINGS", 1)
             for name, call in _calls(spark, idx, QUERIES, 5).items():
                 df = call()
                 plan = _plan(df)
                 assert "MapInPandas" in plan and "LocalTableScan" not in plan, (idx.n_shards, name, plan)
-                assert [tuple(r) for r in df.collect()] == want[name], (idx.n_shards, name)
+                assert _rows(name, df) == want[name], (idx.n_shards, name)
 
 
 def _job_free(spark, group, call):
@@ -158,10 +208,14 @@ def _job_free(spark, group, call):
 
 
 def test_one_group_call_runs_no_job(spark, multi_shard_index):
+    """Every call whose kernel output goes straight to the rank (or is the
+    result) collects a local relation: 0 jobs, planning included."""
     idx = multi_shard_index
     idx.df_map(spark)  # the handle's driver map loads once, outside the group
     for qs in (QUERIES, QUERIES[:1]):
         for name, call in _calls(spark, idx, qs, 5).items():
+            if name in _SPARK_AFTER_KERNEL:
+                continue
             rows, plan, jobs = _job_free(spark, f"local-{name}-{len(qs)}", call)
             assert rows and plan.startswith("LocalTableScan"), (name, plan)
             assert jobs == [], name

@@ -88,11 +88,13 @@ def test_pair_db_matches_brute_force(spark, docs_small, pair_index):
 
 
 def test_pair_scan_is_pruned(spark, pair_index):
-    """The pair-posting read reaches parquet as an In(term) pushed filter —
+    """The pair-posting read reaches parquet as a pushed term filter —
     serving never scans pairs outside the query set."""
     df = search_topk_proximity_db(spark, pair_index, [(1, "merge sort")], k=5)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [In(term" in plan, plan
+    scan = [ln for ln in plan.splitlines() if "FileScan" in ln and "pair_proximity" in ln]
+    # one query pair: Spark's optimizer turns the one-value IN into EqualTo
+    assert len(scan) == 1 and "PushedFilters: [IsNotNull(term), EqualTo(term," in scan[0], plan
 
 
 # ---------------------------------------------------------------------------

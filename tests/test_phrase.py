@@ -301,6 +301,9 @@ def test_phrase_literal_map_key_order_is_pinned(spark, phrase_index, monkeypatch
         return attach(seg, rows)
 
     monkeypatch.setattr(S, "_attach_query_terms", spy)
+    # the literal map is the Spark branch's attach: force it (a call this
+    # small is otherwise served on the driver, which attaches nothing)
+    monkeypatch.setattr(S, "_serve_local", lambda *a: False)
     idx, _rows = phrase_index
     qs = [(1, "theta eta zeta eps delta gamma"), (2, "beta alpha gamma")]
     search_topk_phrase(spark, idx, qs, k=5)

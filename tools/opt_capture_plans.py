@@ -8,18 +8,21 @@ Usage:
 Run once with a checkout of the base commit (suffix 'before') and once with
 the current tree (suffix 'after'); the indexes under --index-root are shared.
 They are the ones bench.py builds (bench_idx_h_large, bench_idx_pairprox,
-bench_idx_fielded); --build REPL builds any missing h_large / fielded index
-from sf0.1 replicated REPL (h_large) and REPL/4 (fielded) times, so a capture
-does not need a full bench run. Captures whose index is absent are skipped.
+bench_idx_fielded); --build REPL builds any missing one from sf0.1
+replicated REPL (h_large) and REPL/4 (pairprox, fielded) times, the
+pair-proximity index as bench.py builds it, so a capture does not need a
+full bench run. A capture whose index is absent is skipped with a line
+saying so.
 
 --shuffle-partitions defaults to --cpus. Pass a larger value (the default
 session uses max(cpus, 32)) to see whether a kernel exchange is sized by the
 planner or by the session's shuffle width.
 
-bm25_wand_single and ranked_batch8 fit one kernel group and would be served
-on the driver (a bare LocalTableScan); they are captured with the driver-local
-gate (search._serve_local) off, as the tests force it, so the capture shows
-their Spark plan: block attach, kernel dispatch, top-k.
+A serving call that fits one kernel group would be served on the driver (a
+bare LocalTableScan), so every serving capture is taken with the
+driver-local gate (search._serve_local) off, as the tests force it: the
+capture shows the call's Spark plan (block attach, kernel dispatch, top-k)
+whatever the index size.
 """
 from __future__ import annotations
 
@@ -55,6 +58,9 @@ def main() -> None:
     def dump(name: str, make_df) -> None:
         if args.only is not None and name not in args.only:
             return
+        if make_df is None:
+            print(f"skipped {name}: no index for it under {args.index_root}")
+            return
         df = make_df()
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -76,7 +82,10 @@ def main() -> None:
     from grenad_spark.query.search import search_topk, search_topk_shared
 
     def spark_plan(make_df):
-        """make_df with the driver-local gate off: the call's Spark plan."""
+        """make_df with the driver-local gate off: the call's Spark plan
+        (None, a skipped capture, when make_df is None)."""
+        if make_df is None:
+            return None
 
         def run():
             gate = search._serve_local
@@ -97,69 +106,97 @@ def main() -> None:
 
     if args.build:
         from grenad_spark.corpus import fielded_docs
+        from grenad_spark.index.pairprox import build_pair_proximity
         from grenad_spark.index.positions import build_positions
 
-        for name, repl, fielded in (
-            ("bench_idx_h_large", args.build, False),
-            ("bench_idx_fielded", max(1, args.build // 4), True),
+        for name, repl in (
+            ("bench_idx_h_large", args.build),
+            ("bench_idx_pairprox", max(1, args.build // 4)),
+            ("bench_idx_fielded", max(1, args.build // 4)),
         ):
             if path(name) is not None:
                 continue
             out = os.path.join(args.index_root, name)
             docs, _ = bench.replicated_docs(spark, SF_DIR, repl)
+            if name == "bench_idx_pairprox":
+                parts = bench.PLAN_PARTITIONS
+                build_index(spark, docs, out, overwrite=True, partitions=parts,
+                            docs_per_shard=5000)
+                build_positions(spark, docs, out, partitions=parts)
+                build_pair_proximity(spark, docs, out, partitions=parts)
+                continue
             build_index(spark, docs, out, overwrite=True, docs_per_shard=5000)
+            fielded = name == "bench_idx_fielded"
             build_positions(
                 spark, fielded_docs(docs) if fielded else docs, out,
                 **({"fields": ["title", "body"]} if fielded else {}),
             )
 
-    if path("bench_idx_h_large"):
-        idx = IndexHandle(path("bench_idx_h_large"))
-        q1 = REFERENCE_QUERIES[2:3]
-        dump("bm25_wand_single", spark_plan(lambda: search_topk(spark, idx, q1, k=10, mode="wand")))
-        dump("bm25_wand_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand"))
-        dump("bm25_shared_batch12", lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10))
-        dump("bm25_wand_pruned_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned"))
+    def on(name: str, make_df):
+        """make_df when the index `name` exists, else None (skipped)."""
+        return make_df if path(name) else None
 
-        def seek():
-            terms = sorted(idx.df_map(spark))
-            doc_space = idx.manifest["max_doc"] + 1
-            keys = [(i, terms[i % len(terms)], (i * 9973) % doc_space) for i in range(639)]
-            return seek_gte_postings(spark, idx, keys)
+    h_large = path("bench_idx_h_large")
+    idx = IndexHandle(h_large) if h_large else None
+    q1 = REFERENCE_QUERIES[2:3]
+    for name, make_df in (
+        ("bm25_wand_single", lambda: search_topk(spark, idx, q1, k=10, mode="wand")),
+        ("bm25_wand_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand")),
+        ("bm25_shared_batch12", lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10)),
+        ("bm25_wand_pruned_batch12",
+         lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned")),
+    ):
+        dump(name, spark_plan(on("bench_idx_h_large", make_df)))
 
-        dump("seek_gte_batch639", seek)
+    def seek():
+        terms = sorted(idx.df_map(spark))
+        doc_space = idx.manifest["max_doc"] + 1
+        keys = [(i, terms[i % len(terms)], (i * 9973) % doc_space) for i in range(639)]
+        return seek_gte_postings(spark, idx, keys)
 
-        phrase_qs = [
-            (1, "merge sort"), (2, "the fast"), (3, "key value stream"),
-            (4, "dup"), (5, "data batch data"), (6, "hash join"),
-            (7, "sort table scan"), (8, "group query row"), (9, "stream batch"),
-            (10, "window small"), (11, "customer line"), (12, "slow customer line"),
-        ]
-        dump("phrase_batch12", lambda: search_topk_phrase(spark, idx, phrase_qs, k=10))
-        dump("phrase_shared_batch12", lambda: search_topk_phrase_shared(spark, idx, phrase_qs, k=10))
+    dump("seek_gte_batch639", on("bench_idx_h_large", seek))
 
-    if path("bench_idx_pairprox"):
-        from grenad_spark.index.pairprox import search_topk_proximity_db
+    phrase_qs = [
+        (1, "merge sort"), (2, "the fast"), (3, "key value stream"),
+        (4, "dup"), (5, "data batch data"), (6, "hash join"),
+        (7, "sort table scan"), (8, "group query row"), (9, "stream batch"),
+        (10, "window small"), (11, "customer line"), (12, "slow customer line"),
+    ]
+    dump("phrase_batch12", spark_plan(on(
+        "bench_idx_h_large", lambda: search_topk_phrase(spark, idx, phrase_qs, k=10)
+    )))
+    dump("phrase_shared_batch12", spark_plan(on(
+        "bench_idx_h_large", lambda: search_topk_phrase_shared(spark, idx, phrase_qs, k=10)
+    )))
 
-        pidx = IndexHandle(path("bench_idx_pairprox"))
-        prox_qs = [
-            (1, "merge sort"), (2, "the join"), (3, "key value stream"),
-            (4, "dup spark"), (5, "data stream"), (6, "hash join"),
-            (7, "group query row"), (8, "window the batch"),
-        ]
-        dump("proximity_positions_batch8", lambda: search_topk_proximity(spark, pidx, prox_qs, k=10))
-        dump("proximity_pairdb_batch8", lambda: search_topk_proximity_db(spark, pidx, prox_qs, k=10))
+    from grenad_spark.index.pairprox import search_topk_proximity_db
 
-    if path("bench_idx_fielded"):
-        from grenad_spark.query.ranked import search_topk_ranked
+    pairprox = path("bench_idx_pairprox")
+    pidx = IndexHandle(pairprox) if pairprox else None
+    prox_qs = [
+        (1, "merge sort"), (2, "the join"), (3, "key value stream"),
+        (4, "dup spark"), (5, "data stream"), (6, "hash join"),
+        (7, "group query row"), (8, "window the batch"),
+    ]
+    dump("proximity_positions_batch8", spark_plan(on(
+        "bench_idx_pairprox", lambda: search_topk_proximity(spark, pidx, prox_qs, k=10)
+    )))
+    dump("proximity_pairdb_batch8", spark_plan(on(
+        "bench_idx_pairprox", lambda: search_topk_proximity_db(spark, pidx, prox_qs, k=10)
+    )))
 
-        fidx = IndexHandle(path("bench_idx_fielded"))
-        ranked_qs = [
-            (1, "data stream"), (2, "merge sort"), (3, "the fast join"),
-            (4, "spark window"), (5, "big table"), (6, "key value"),
-            (7, "hash join order"), (8, "filter column row"),
-        ]
-        dump("ranked_batch8", spark_plan(lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10)))
+    from grenad_spark.query.ranked import search_topk_ranked
+
+    fielded = path("bench_idx_fielded")
+    fidx = IndexHandle(fielded) if fielded else None
+    ranked_qs = [
+        (1, "data stream"), (2, "merge sort"), (3, "the fast join"),
+        (4, "spark window"), (5, "big table"), (6, "key value"),
+        (7, "hash join order"), (8, "filter column row"),
+    ]
+    dump("ranked_batch8", spark_plan(on(
+        "bench_idx_fielded", lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10)
+    )))
 
     # build-side plans (pre-write pipelines)
     from grenad_spark.index.pairprox import pair_stream
