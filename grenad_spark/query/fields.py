@@ -51,6 +51,8 @@ from grenad_spark.query.kernels import (
     bm25,
     conjunctive_docs,
     decode_positions,
+    disjunctive_bm25,
+    doc_sums,
     empty_frame,
     matched_bm25,
     member_mask,
@@ -106,18 +108,6 @@ def _allowed_fids(index, fields: list[str]) -> list[int]:
 # attributesToSearchOn
 # ---------------------------------------------------------------------------
 
-def _doc_sums_frame(docs_parts: list, score_parts: list) -> pd.DataFrame:
-    """(doc_id, score) per-doc sums of the field kernels' term parts.
-    pandas' groupby sum is compensated (Kahan) summation, unlike
-    kernels.doc_sums, and these kernels have always scored with it: a
-    plain sum of 3+ terms can differ in the last bit."""
-    return (
-        pd.DataFrame({"doc_id": np.concatenate(docs_parts), "score": np.concatenate(score_parts)})
-        .groupby("doc_id", as_index=False)["score"]
-        .sum()
-    )
-
-
 def _make_search_on_kernel(allowed: list[int], avgdl: float, codec: str):
     allowed_arr = np.asarray(sorted(allowed), dtype=np.int64)
 
@@ -138,9 +128,8 @@ def _make_search_on_kernel(allowed: list[int], avgdl: float, codec: str):
             score_parts.append(bm25(idfs[term], cnt[sel], dl[sel], avgdl))
         if not docs_parts:
             return empty_frame(_SEARCH_ON_SCHEMA)
-        out = _doc_sums_frame(docs_parts, score_parts)
-        out.insert(0, "query_id", qid)
-        return out
+        docs, scores, _ = doc_sums(np.concatenate(docs_parts), np.concatenate(score_parts))
+        return pd.DataFrame({"query_id": qid, "doc_id": docs, "score": scores})
 
     return fn
 
@@ -264,16 +253,8 @@ def _make_exact_kernel(
         toks = qterms[qid]
         decoded, idfs = decode_positions(pdf, codec)
         # disjunctive BM25 over distinct matched terms
-        docs_parts, score_parts = [], []
-        for term, (d, tf, dl, pos, occ) in decoded.items():
-            if d.size == 0:
-                continue
-            docs_parts.append(d)
-            score_parts.append(bm25(idfs[term], tf, dl, avgdl))
-        if not docs_parts:
-            return empty_frame(_EXACT_SCHEMA)
-        agg = _doc_sums_frame(docs_parts, score_parts)
-        docs = agg["doc_id"].to_numpy()
+        docs, scores, _ = disjunctive_bm25(decoded, idfs, avgdl)
+        agg = pd.DataFrame({"doc_id": docs, "score": scores})
         # chain: token i of the query occurs at in-field position i of `fid`
         # (packed occurrence keys are globally sorted: docs ascend, positions
         # ascend per doc — the phrase-kernel discipline)

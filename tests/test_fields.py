@@ -106,6 +106,39 @@ def test_search_on_body_vs_title_disjoint(spark, fields_index):
     assert sorted(map(tuple, both.collect())) == sorted(map(tuple, plain.collect()))
 
 
+def test_search_on_all_fields_scores_like_search_topk(spark, fields_index):
+    """attributesToSearchOn over every field is plain BM25: the search_on
+    kernel sums a doc's term parts with the one per-doc accumulate
+    (kernels.doc_sums), so its unrounded scores carry the same bits as the
+    BM25 kernel's on the same terms, 3-5 term sums included, and the
+    ranked rows are the same."""
+    import grenad_spark.query.fields as FL
+    import grenad_spark.query.search as S
+
+    idx, _rows = fields_index
+    queries = [
+        (1, "alpha beta gamma delta"), (2, "eps zeta eta theta alpha"),
+        (3, "beta gamma delta"), (4, "theta eta"),
+    ]
+    pairs = S._tokenize_queries(queries)
+    avgdl, codec = float(idx.avgdl), idx.payload_codec
+    fields = FL._allowed_fids(idx, ["title", "body"])
+    on = S._serve_kernel(
+        spark, idx, pairs, FL._make_search_on_kernel(fields, avgdl, codec),
+        FL._SEARCH_ON_SCHEMA, table="positions", columns=S._POS_COLS,
+    )
+    bm = S._serve_kernel(
+        spark, idx, pairs, S._make_exhaustive_with_termcount(avgdl, codec),
+        S._OUT_AND_SCHEMA,
+    )
+    got = sorted(map(tuple, on.select("query_id", "doc_id", "score").collect()))
+    want = sorted(map(tuple, bm.select("query_id", "doc_id", "score").collect()))
+    assert len(got) > 200 and got == want
+    ranked = FL.search_topk_search_on(spark, idx, queries, ["title", "body"], k=20)
+    plain = S.search_topk(spark, idx, queries, k=20, mode="exhaustive")
+    assert [tuple(r) for r in ranked.collect()] == [tuple(r) for r in plain.collect()]
+
+
 def test_field_word_counts_table(spark, fields_index):
     from grenad_spark.query.fields import field_word_counts_path
 

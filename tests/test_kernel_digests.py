@@ -356,7 +356,7 @@ PINNED: dict[str, str] = {
         "0aa9e31747416b4ed82471b56968d3a6b95378eb5eb847e40be906a81150bf3c"
     ),
     "exact/per_shard": (
-        "08acefb0d26857b443583abc13e9178c05c74d2615dec1d7103349b6c95126b8"
+        "b08e78f74968ea9b724c68fe5c47799dcbc62090c95c61ff5498764bdfa6e20b"
     ),
     "prox_attr/per_shard": (
         "ccf35fe44d275a7c96eb12a79118b40aa8e588d992de95300a9e57a38771072f"
@@ -416,7 +416,7 @@ PINNED: dict[str, str] = {
         "0aa9e31747416b4ed82471b56968d3a6b95378eb5eb847e40be906a81150bf3c"
     ),
     "exact/merged": (
-        "08acefb0d26857b443583abc13e9178c05c74d2615dec1d7103349b6c95126b8"
+        "c195d126c096f66f80aa71eb16ce5cb7e3430b5200bec42d63d5702c85cdc779"
     ),
     "prox_attr/merged": (
         "ccf35fe44d275a7c96eb12a79118b40aa8e588d992de95300a9e57a38771072f"
