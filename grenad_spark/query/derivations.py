@@ -215,7 +215,6 @@ def search_topk_word_splits(
     from grenad_spark.query.search import (
         _OUT_AND_SCHEMA,
         _OUT_SCHEMA,
-        _POS_COLS,
         _empty_result,
         _make_exhaustive_with_termcount,
         _n_queries,
@@ -244,7 +243,7 @@ def search_topk_word_splits(
             _serve_kernel(
                 spark, index, ppairs,
                 _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
-                _PHRASE_OUT, table="positions", columns=_POS_COLS,
+                _PHRASE_OUT, table="positions",
             )
             # fold the derivation slot back onto its owning query
             .withColumn(

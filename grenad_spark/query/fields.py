@@ -60,7 +60,6 @@ from grenad_spark.query.kernels import (
 from grenad_spark.query.ranked import _require_fielded
 from grenad_spark.query.search import (
     _BM25_ORDER,
-    _POS_COLS,
     _PROXIMITY_ORDER,
     _TYPO_COLS,
     _TYPO_ORDER,
@@ -152,7 +151,7 @@ def search_topk_search_on(
     return _serve_kernel(
         spark, index, pairs,
         _make_search_on_kernel(allowed, float(index.avgdl), index.payload_codec),
-        _SEARCH_ON_SCHEMA, k, table="positions", columns=_POS_COLS,
+        _SEARCH_ON_SCHEMA, k, table="positions",
     )
 
 
@@ -303,7 +302,7 @@ def _exact_matches(spark: SparkSession, index, queries: list[tuple[int, str]], f
     per_shard = _serve_kernel(
         spark, index, pairs,
         _make_exact_kernel(qterms, fid, float(index.avgdl), index.payload_codec),
-        _EXACT_SCHEMA, table="positions", columns=_POS_COLS,
+        _EXACT_SCHEMA, table="positions",
     )
     wc = (
         spark.read.parquet(field_word_counts_path(index.path))
@@ -591,7 +590,7 @@ def search_topk_proximity_attr(
         spark, index, pairs,
         _make_prox_attr_kernel(qtoks, float(index.avgdl), index.payload_codec),
         _PROX_ATTR_SCHEMA, k, _PROXIMITY_ORDER, ["query_id", "doc_id", "proximity", "score"],
-        table="positions", columns=_POS_COLS,
+        table="positions",
     )
 
 
@@ -801,7 +800,7 @@ def search_topk_typo_disable_attrs(
         _make_typo_attr_kernel(
             qslots, slot_meta, allowed, float(index.avgdl), index.payload_codec
         ),
-        _TYPO_ATTR_SCHEMA, k, _TYPO_ORDER, _TYPO_COLS, table="positions", columns=_POS_COLS,
+        _TYPO_ATTR_SCHEMA, k, _TYPO_ORDER, _TYPO_COLS, table="positions",
     )
 
 

@@ -33,7 +33,6 @@ from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE, sql_term_doc_tf
 from grenad_spark.query.bm25 import B, K1, SCORE_DECIMALS, sql_queries_values
 from grenad_spark.query.kernels import decode_positions, empty_frame
 from grenad_spark.query.search import (
-    _POS_COLS,
     _empty_result,
     _scoring_pairs,
     _serve_kernel,
@@ -125,7 +124,7 @@ def search_topk_matches(
 
     return _serve_kernel(
         spark, index, pairs, _make_matches_kernel(hits, index.payload_codec), _OUT_SCHEMA,
-        table="positions", columns=_POS_COLS, prepass=span_prune,
+        table="positions", prepass=span_prune,
     )
 
 

@@ -123,7 +123,7 @@ def phrase_match_pairs(
     return _serve_kernel(
         spark, index, qt,
         _make_phrase_kernel(phrases, float(index.avgdl), index.payload_codec),
-        _OUT_SCHEMA, table="positions", columns=_POS_COLS,
+        _OUT_SCHEMA, table="positions",
     ).select("query_id", "doc_id")
 
 
@@ -166,19 +166,9 @@ def search_topk_phrase(
     pairs = _phrase_pairs(spark, index, phrases)
     if not pairs:
         return _empty_result(spark, _OUT_SCHEMA)
-    return _serve_kernel(
-        spark, index, pairs, _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA, k,
-        table="positions", columns=_POS_COLS,
-        prepass=_shard_prune(spark, index, pairs) if prune_shards else None,
-    )
 
-
-def _shard_prune(spark: SparkSession, index, pairs: list[tuple[int, str]]):
-    """The phrase shard prune, a prepass of the Spark branch: position
-    blocks -> the blocks of the (query, shard) groups where every phrase
-    term has a block (None: no group survives)."""
-
-    def prune(blocks: DataFrame) -> DataFrame | None:
+    def shard_prune(blocks: DataFrame) -> DataFrame | None:
+        # the prepass of the Spark branch: None when no group survives
         terms_by_q: dict[int, set] = {}
         for q, t in pairs:
             terms_by_q.setdefault(q, set()).add(t)
@@ -250,7 +240,10 @@ def _shard_prune(spark: SparkSession, index, pairs: list[tuple[int, str]]):
             blocks = blocks.join(F.broadcast(survivors), ["query_id", "shard"])
         return blocks
 
-    return prune
+    return _serve_kernel(
+        spark, index, pairs, _make_phrase_kernel(phrases, avgdl, codec), _OUT_SCHEMA, k,
+        table="positions", prepass=shard_prune if prune_shards else None,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -318,7 +311,7 @@ def search_topk_phrase_stopwords(
     return _serve_kernel(
         spark, index, pairs,
         _make_phrase_kernel(chains, float(index.avgdl), index.payload_codec),
-        _OUT_SCHEMA, k, table="positions", columns=_POS_COLS,
+        _OUT_SCHEMA, k, table="positions",
     )
 
 
@@ -556,7 +549,7 @@ def search_topk_proximity(
         spark, index, pairs,
         _make_proximity_kernel(phrases, float(index.avgdl), index.payload_codec),
         _PROX_OUT_SCHEMA, k, _PROXIMITY_ORDER, ["query_id", "doc_id", "proximity", "score"],
-        table="positions", columns=_POS_COLS,
+        table="positions",
     )
 
 
@@ -821,7 +814,7 @@ def _mixed_per_shard(
     return _serve_kernel(
         spark, index, pairs,
         _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA, k,
-        table="positions", columns=_POS_COLS,
+        table="positions",
     )
 
 
@@ -1028,7 +1021,7 @@ def search_topk_mixed_prefix(
     return _serve_kernel(
         spark, index, pairs,
         _make_mixed_kernel(parsed, float(index.avgdl), index.payload_codec), _OUT_SCHEMA, k,
-        table="positions", columns=_POS_COLS,
+        table="positions",
     )
 
 

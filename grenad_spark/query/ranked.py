@@ -66,7 +66,6 @@ from grenad_spark.query.kernels import (
 )
 from grenad_spark.query.search import (
     _BM25_ORDER,
-    _POS_COLS,
     _empty_result,
     _n_queries,
     _query_slots,
@@ -164,7 +163,7 @@ def search_topk_attr_rule(
         spark, index, pairs,
         _make_attr_kernel(qterms, float(index.avgdl), index.payload_codec),
         _ATTR_OUT_SCHEMA, k, _ATTR_ORDER, ["query_id", "doc_id", "attr", "score"],
-        table="positions", columns=_POS_COLS,
+        table="positions",
     )
 
 
@@ -294,7 +293,7 @@ def _ranked_rows(
         spark, index, pairs,
         _make_ranked_kernel(qslots, slot_meta, float(index.avgdl), index.payload_codec),
         _RANKED_OUT_SCHEMA, k, _RANKED_ORDER, _RANKED_OUT_COLS,
-        table="positions", columns=_POS_COLS,
+        table="positions",
     )
 
 

@@ -950,17 +950,18 @@ def _serve_kernel(
     order: list[tuple[str, bool]] = _BM25_ORDER,
     cols: list[str] = _OUT_COLS,
     table: str = "segments",
-    columns: list[str] = _SCORE_COLS,
+    columns: list[str] | None = None,
     groups: str = "query_shard",
     prepass=None,
     driver=None,
 ) -> DataFrame:
     """The one serving dispatch: kernel `fn` over the `columns` of the
-    `table` (segments or positions) block rows of the (query_id, term)
-    `pairs`, then the top `k` rows of each query under `order`, projected
-    on `cols` (k None: the kernel's rows, unranked). The call runs on the
-    driver when its posting volume fits one kernel group (_serve_local),
-    else in a Spark job; both give the same rows.
+    `table` block rows of the (query_id, term) `pairs` (default columns:
+    _SCORE_COLS of segments, _POS_COLS of positions), then the top `k` rows
+    of each query under `order`, projected on `cols` (k None: the kernel's
+    rows, unranked). The call runs on the driver when its posting volume
+    fits one kernel group (_serve_local), else in a Spark job; both give
+    the same rows.
 
     `groups` is the kernel's input grouping, one per Spark plan shape:
     - "query_shard": one call per (query_id, shard DIV g) group;
@@ -983,6 +984,8 @@ def _serve_kernel(
     Spark-only pass-1 and shard prunes, which only shrink an exchange the
     driver does not have), the exchange into _grouped_apply, and
     _rank_topk."""
+    if columns is None:
+        columns = _SCORE_COLS if table == "segments" else _POS_COLS
     dfm = index.df_map(spark)
     terms = sorted({t for _, t in pairs if dfm is None or t in dfm})
     if _serve_local(spark, index, pairs):
@@ -1928,7 +1931,7 @@ def search_topk_shared(
         return pd.concat(outs, ignore_index=True)
 
     def pass1(seg: DataFrame) -> DataFrame | None:
-        if not prune or "min_tf" not in seg.columns:
+        if not prune or not _has_block_bounds(spark, index):
             return seg
         surv_df = survivor_blocks(spark, index, pairs, kk)
         if _keeps_every_block(surv_df):

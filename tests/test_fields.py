@@ -125,7 +125,7 @@ def test_search_on_all_fields_scores_like_search_topk(spark, fields_index):
     fields = FL._allowed_fids(idx, ["title", "body"])
     on = S._serve_kernel(
         spark, idx, pairs, FL._make_search_on_kernel(fields, avgdl, codec),
-        FL._SEARCH_ON_SCHEMA, table="positions", columns=S._POS_COLS,
+        FL._SEARCH_ON_SCHEMA, table="positions",
     )
     bm = S._serve_kernel(
         spark, idx, pairs, S._make_exhaustive_with_termcount(avgdl, codec),
