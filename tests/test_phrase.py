@@ -163,10 +163,14 @@ def test_phrase_requires_positions(spark, index_small):
         search_topk_phrase(spark, index_small, [(1, "the fast")], k=5).collect()
 
 
-def test_phrase_shard_prune_identical(spark, phrase_index):
+def test_phrase_shard_prune_identical(spark, phrase_index, monkeypatch):
     """Shard-intersection pruning must be invisible in the results."""
+    import grenad_spark.query.search as S
     from grenad_spark.query.phrase import search_topk_phrase
 
+    # the shard prune is the Spark branch's pre-pass: force it (a call this
+    # small is otherwise served on the driver, which prunes nothing)
+    monkeypatch.setattr(S, "_serve_local", lambda *a: False)
     idx, _rows = phrase_index
     a = sorted(
         map(tuple, search_topk_phrase(spark, idx, PHRASES, k=50,
@@ -179,12 +183,13 @@ def test_phrase_shard_prune_identical(spark, phrase_index):
     assert a == b
 
 
-def test_phrase_shard_prune_drops_headterm_shards(spark, tmp_path):
+def test_phrase_shard_prune_drops_headterm_shards(spark, tmp_path, monkeypatch):
     """Skewed case: head term in every doc, rare term in one doc (one shard).
     The pruned plan must ship only the surviving shard's groups — observed
     via the per-shard candidate rows the kernel emits (k large, no cutoff):
     with pruning, the head term's non-surviving shards contribute nothing
     and match work collapses to the rare term's shard."""
+    import grenad_spark.query.search as S
     from grenad_spark.index.build import build_index
     from grenad_spark.index.positions import build_positions
     from grenad_spark.query.phrase import search_topk_phrase
@@ -195,6 +200,8 @@ def test_phrase_shard_prune_drops_headterm_shards(spark, tmp_path):
     out = str(tmp_path / "skewidx")
     idx = build_index(spark, docs, out, n_shards=6)
     build_positions(spark, docs, out)
+    # the shard prune is the Spark branch's pre-pass: force it for both calls
+    monkeypatch.setattr(S, "_serve_local", lambda *a: False)
     # run the PRUNED plan on the skewed fixture (the identity test's uniform
     # corpus prunes nothing by construction — this is where the survivors
     # join actually removes groups and must not drop the valid one)
