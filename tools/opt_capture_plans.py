@@ -58,9 +58,6 @@ def main() -> None:
     def dump(name: str, make_df) -> None:
         if args.only is not None and name not in args.only:
             return
-        if make_df is None:
-            print(f"skipped {name}: no index for it under {args.index_root}")
-            return
         df = make_df()
         txt = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
@@ -82,10 +79,7 @@ def main() -> None:
     from grenad_spark.query.search import search_topk, search_topk_shared
 
     def spark_plan(make_df):
-        """make_df with the driver-local gate off: the call's Spark plan
-        (None, a skipped capture, when make_df is None)."""
-        if make_df is None:
-            return None
+        """make_df with the driver-local gate off: the call's Spark plan."""
 
         def run():
             gate = search._serve_local
@@ -132,71 +126,67 @@ def main() -> None:
                 **({"fields": ["title", "body"]} if fielded else {}),
             )
 
-    def on(name: str, make_df):
-        """make_df when the index `name` exists, else None (skipped)."""
-        return make_df if path(name) else None
+    def skipped(index: str, *names: str) -> None:
+        for name in names:
+            print(f"skipped {name}: no {index} under {args.index_root}")
 
-    h_large = path("bench_idx_h_large")
-    idx = IndexHandle(h_large) if h_large else None
-    q1 = REFERENCE_QUERIES[2:3]
-    for name, make_df in (
-        ("bm25_wand_single", lambda: search_topk(spark, idx, q1, k=10, mode="wand")),
-        ("bm25_wand_batch12", lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand")),
-        ("bm25_shared_batch12", lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10)),
-        ("bm25_wand_pruned_batch12",
-         lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned")),
-    ):
-        dump(name, spark_plan(on("bench_idx_h_large", make_df)))
+    if path("bench_idx_h_large"):
+        idx = IndexHandle(path("bench_idx_h_large"))
+        q1 = REFERENCE_QUERIES[2:3]
+        dump("bm25_wand_single", spark_plan(lambda: search_topk(spark, idx, q1, k=10, mode="wand")))
+        dump("bm25_wand_batch12", spark_plan(lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand")))
+        dump("bm25_shared_batch12", spark_plan(lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10)))
+        dump("bm25_wand_pruned_batch12", spark_plan(lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned")))
 
-    def seek():
-        terms = sorted(idx.df_map(spark))
-        doc_space = idx.manifest["max_doc"] + 1
-        keys = [(i, terms[i % len(terms)], (i * 9973) % doc_space) for i in range(639)]
-        return seek_gte_postings(spark, idx, keys)
+        def seek():
+            terms = sorted(idx.df_map(spark))
+            doc_space = idx.manifest["max_doc"] + 1
+            keys = [(i, terms[i % len(terms)], (i * 9973) % doc_space) for i in range(639)]
+            return seek_gte_postings(spark, idx, keys)
 
-    dump("seek_gte_batch639", on("bench_idx_h_large", seek))
+        dump("seek_gte_batch639", seek)
 
-    phrase_qs = [
-        (1, "merge sort"), (2, "the fast"), (3, "key value stream"),
-        (4, "dup"), (5, "data batch data"), (6, "hash join"),
-        (7, "sort table scan"), (8, "group query row"), (9, "stream batch"),
-        (10, "window small"), (11, "customer line"), (12, "slow customer line"),
-    ]
-    dump("phrase_batch12", spark_plan(on(
-        "bench_idx_h_large", lambda: search_topk_phrase(spark, idx, phrase_qs, k=10)
-    )))
-    dump("phrase_shared_batch12", spark_plan(on(
-        "bench_idx_h_large", lambda: search_topk_phrase_shared(spark, idx, phrase_qs, k=10)
-    )))
+        phrase_qs = [
+            (1, "merge sort"), (2, "the fast"), (3, "key value stream"),
+            (4, "dup"), (5, "data batch data"), (6, "hash join"),
+            (7, "sort table scan"), (8, "group query row"), (9, "stream batch"),
+            (10, "window small"), (11, "customer line"), (12, "slow customer line"),
+        ]
+        dump("phrase_batch12", spark_plan(lambda: search_topk_phrase(spark, idx, phrase_qs, k=10)))
+        dump("phrase_shared_batch12", spark_plan(lambda: search_topk_phrase_shared(spark, idx, phrase_qs, k=10)))
+    else:
+        skipped(
+            "bench_idx_h_large", "bm25_wand_single", "bm25_wand_batch12", "bm25_shared_batch12",
+            "bm25_wand_pruned_batch12", "seek_gte_batch639", "phrase_batch12",
+            "phrase_shared_batch12",
+        )
 
-    from grenad_spark.index.pairprox import search_topk_proximity_db
+    if path("bench_idx_pairprox"):
+        from grenad_spark.index.pairprox import search_topk_proximity_db
 
-    pairprox = path("bench_idx_pairprox")
-    pidx = IndexHandle(pairprox) if pairprox else None
-    prox_qs = [
-        (1, "merge sort"), (2, "the join"), (3, "key value stream"),
-        (4, "dup spark"), (5, "data stream"), (6, "hash join"),
-        (7, "group query row"), (8, "window the batch"),
-    ]
-    dump("proximity_positions_batch8", spark_plan(on(
-        "bench_idx_pairprox", lambda: search_topk_proximity(spark, pidx, prox_qs, k=10)
-    )))
-    dump("proximity_pairdb_batch8", spark_plan(on(
-        "bench_idx_pairprox", lambda: search_topk_proximity_db(spark, pidx, prox_qs, k=10)
-    )))
+        pidx = IndexHandle(path("bench_idx_pairprox"))
+        prox_qs = [
+            (1, "merge sort"), (2, "the join"), (3, "key value stream"),
+            (4, "dup spark"), (5, "data stream"), (6, "hash join"),
+            (7, "group query row"), (8, "window the batch"),
+        ]
+        dump("proximity_positions_batch8", spark_plan(lambda: search_topk_proximity(spark, pidx, prox_qs, k=10)))
+        dump("proximity_pairdb_batch8", spark_plan(lambda: search_topk_proximity_db(spark, pidx, prox_qs, k=10)))
+    else:
+        skipped("bench_idx_pairprox", "proximity_positions_batch8", "proximity_pairdb_batch8")
 
-    from grenad_spark.query.ranked import search_topk_ranked
+    if path("bench_idx_fielded"):
+        from grenad_spark.query.ranked import search_topk_ranked
 
-    fielded = path("bench_idx_fielded")
-    fidx = IndexHandle(fielded) if fielded else None
-    ranked_qs = [
-        (1, "data stream"), (2, "merge sort"), (3, "the fast join"),
-        (4, "spark window"), (5, "big table"), (6, "key value"),
-        (7, "hash join order"), (8, "filter column row"),
-    ]
-    dump("ranked_batch8", spark_plan(on(
-        "bench_idx_fielded", lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10)
-    )))
+        fidx = IndexHandle(path("bench_idx_fielded"))
+        ranked_qs = [
+            (1, "data stream"), (2, "merge sort"), (3, "the fast join"),
+            (4, "spark window"), (5, "big table"), (6, "key value"),
+            (7, "hash join order"), (8, "filter column row"),
+        ]
+        dump("ranked_batch8", spark_plan(lambda: search_topk_ranked(spark, fidx, ranked_qs, k=10)))
+    else:
+        skipped("bench_idx_fielded", "ranked_batch8")
 
     # build-side plans (pre-write pipelines)
     from grenad_spark.index.pairprox import pair_stream
