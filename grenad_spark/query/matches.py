@@ -110,10 +110,8 @@ def search_topk_matches(
         return _empty_result(spark, _OUT_SCHEMA)
 
     def span_prune(blocks: DataFrame) -> DataFrame:
-        # block-range prune of the Spark branch: a block can contain a hit
-        # only if its doc range overlaps the query's hit span (hits are k
-        # docs; spans are tight). The kernel keeps hit docs only, so the
-        # driver branch reads every block of the terms and gets the same rows.
+        # block-range prune: a block can contain a hit only if its doc range
+        # overlaps the query's hit span (hits are k docs; spans are tight)
         spans = spark.createDataFrame(
             [(qid, int(min(ds)), int(max(ds))) for qid, ds in hits.items()],
             "query_id int, lo long, hi long",

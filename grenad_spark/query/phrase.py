@@ -46,9 +46,7 @@ from grenad_spark.query.search import (
     _PROXIMITY_ORDER,
     _driver_idf,
     _empty_result,
-    _local_blocks,
     _packed_in,
-    _rank_local,
     _rank_topk,
     _scoring_pairs,
     _serve_kernel,
@@ -1234,11 +1232,8 @@ def search_topk_phrase_shared(
     pairs = [(q, t) for q, toks in phrases.items() for t in set(toks)]
     # work-sized groups of consecutive doc-disjoint shards, like the shared
     # posting path; the kernel sorts each term's blocks by first_doc, so
-    # any union of them (a whole partition) is exact. The driver branch
-    # reads and ranks through this module's bindings of the block read and
-    # the local rank.
+    # any union of them (a whole partition) is exact
     return _serve_kernel(
         spark, index, pairs, kernel, _OUT_SCHEMA, k, table="positions",
         columns=["term", "n", "first_doc", "header", "positions"], groups="terms",
-        driver=(_local_blocks, _rank_local),
     )

@@ -953,15 +953,18 @@ def _serve_kernel(
     columns: list[str] | None = None,
     groups: str = "query_shard",
     prepass=None,
-    driver=None,
 ) -> DataFrame:
     """The one serving dispatch: kernel `fn` over the `columns` of the
     `table` block rows of the (query_id, term) `pairs` (default columns:
     _SCORE_COLS of segments, _POS_COLS of positions), then the top `k` rows
     of each query under `order`, projected on `cols` (k None: the kernel's
-    rows, unranked). The call runs on the driver when its posting volume
-    fits one kernel group (_serve_local), else in a Spark job; both give
-    the same rows.
+    rows, unranked). A ranked call runs on the driver when its posting
+    volume fits one kernel group (_serve_local), else in a Spark job; both
+    give the same rows. An unranked call always plans the Spark kernel:
+    its output (up to the batch's matched docs) is joined or windowed in
+    Spark afterwards, and handing that Spark a driver-built local relation
+    measured slower than the one-task kernel job (search_topk_page over
+    ~875k postings on 4 cores: 1.74 s against 0.77 s).
 
     `groups` is the kernel's input grouping, one per Spark plan shape:
     - "query_shard": one call per (query_id, shard DIV g) group;
@@ -978,21 +981,19 @@ def _serve_kernel(
 
     Driver: the block rows are read with pyarrow (_local_blocks), idf is
     attached from the df map, and _rank_local ranks into a local relation:
-    no Spark job. `driver` replaces that (read, rank) pair. Spark: the
-    block attach (_query_blocks_from_pairs, or the term-union scan), then
-    `prepass` (blocks -> blocks, or None when the call has no rows: the
-    Spark-only pass-1 and shard prunes, which only shrink an exchange the
-    driver does not have), the exchange into _grouped_apply, and
-    _rank_topk."""
+    no Spark job. Spark: the block attach (_query_blocks_from_pairs, or
+    the term-union scan), then `prepass` (blocks -> blocks, or None when
+    the call has no rows: the Spark-only pass-1, shard and span prunes,
+    which only shrink an exchange the driver does not have), the exchange
+    into _grouped_apply, and _rank_topk."""
     if columns is None:
         columns = _SCORE_COLS if table == "segments" else _POS_COLS
     dfm = index.df_map(spark)
     terms = sorted({t for _, t in pairs if dfm is None or t in dfm})
-    if _serve_local(spark, index, pairs):
-        read, rank_local = driver or (_local_blocks, _rank_local)
+    if k is not None and _serve_local(spark, index, pairs):
         out = None
         if terms:
-            pdf = read(index, table, terms, [c for c in columns if c != "idf"])
+            pdf = _local_blocks(index, table, terms, [c for c in columns if c != "idf"])
             if groups == "terms":
                 out = _apply_groups(pdf, [], fn, slice_groups=False)
             else:
@@ -1002,9 +1003,7 @@ def _serve_kernel(
                 out = _apply_groups(qt.merge(pdf, on="term"), ["query_id"], fn)
         if out is None:
             out = empty_frame(out_schema)
-        if k is None:
-            return _local_relation(spark, out, out_schema)
-        return rank_local(spark, out, int(k), order, cols, out_schema)
+        return _rank_local(spark, out, int(k), order, cols, out_schema)
 
     g, n_part = _batch_groups(spark, index, pairs)
     if groups == "terms":

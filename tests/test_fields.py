@@ -109,9 +109,11 @@ def test_search_on_body_vs_title_disjoint(spark, fields_index):
 def test_search_on_all_fields_scores_like_search_topk(spark, fields_index):
     """attributesToSearchOn over every field is plain BM25: the search_on
     kernel sums a doc's term parts with the one per-doc accumulate
-    (kernels.doc_sums), so its unrounded scores carry the same bits as the
-    BM25 kernel's on the same terms, 3-5 term sums included, and the
-    ranked rows are the same."""
+    (kernels.doc_sums), so on the same query blocks in the same term order
+    its unrounded scores carry the same bits as the BM25 kernel's, 3-5
+    term sums included, and the ranked rows are the same."""
+    import pandas as pd
+
     import grenad_spark.query.fields as FL
     import grenad_spark.query.search as S
 
@@ -122,17 +124,21 @@ def test_search_on_all_fields_scores_like_search_topk(spark, fields_index):
     ]
     pairs = S._tokenize_queries(queries)
     avgdl, codec = float(idx.avgdl), idx.payload_codec
+    qt = pd.DataFrame(
+        S._idf_rows(idx, idx.df_map(spark), pairs), columns=["query_id", "term", "idf"]
+    )
+
+    def scores(table, fn):
+        # each query's block rows in its own term order, as one kernel group
+        terms = sorted(set(qt["term"]))
+        cols = [c for c in (S._POS_COLS if table == "positions" else S._SCORE_COLS) if c != "idf"]
+        pdf = qt.merge(S._local_blocks(idx, table, terms, cols), on="term")
+        out = S._apply_groups(pdf, ["query_id"], fn)
+        return sorted(map(tuple, out[["query_id", "doc_id", "score"]].itertuples(index=False)))
+
     fields = FL._allowed_fids(idx, ["title", "body"])
-    on = S._serve_kernel(
-        spark, idx, pairs, FL._make_search_on_kernel(fields, avgdl, codec),
-        FL._SEARCH_ON_SCHEMA, table="positions",
-    )
-    bm = S._serve_kernel(
-        spark, idx, pairs, S._make_exhaustive_with_termcount(avgdl, codec),
-        S._OUT_AND_SCHEMA,
-    )
-    got = sorted(map(tuple, on.select("query_id", "doc_id", "score").collect()))
-    want = sorted(map(tuple, bm.select("query_id", "doc_id", "score").collect()))
+    got = scores("positions", FL._make_search_on_kernel(fields, avgdl, codec))
+    want = scores("segments", S._make_exhaustive_with_termcount(avgdl, codec))
     assert len(got) > 200 and got == want
     ranked = FL.search_topk_search_on(spark, idx, queries, ["title", "body"], k=20)
     plain = S.search_topk(spark, idx, queries, k=20, mode="exhaustive")

@@ -200,7 +200,7 @@ class _Index:
         return DF
 
 
-def _shared(monkeypatch, codec, module, entry, table, queries):
+def _shared(monkeypatch, codec, entry, table, queries):
     """Run a shared-decode entry point's driver branch on the fixed blocks:
     the block read returns every row of the call's terms (scrambled), and
     the rank step hands back the kernel's raw output."""
@@ -212,8 +212,8 @@ def _shared(monkeypatch, codec, module, entry, table, queries):
         return b[list(columns)].reset_index(drop=True)
 
     monkeypatch.setattr(search, "_serve_local", lambda *a: True)
-    monkeypatch.setattr(module, "_local_blocks", local_blocks)
-    monkeypatch.setattr(module, "_rank_local", lambda _s, out, *a: out)
+    monkeypatch.setattr(search, "_local_blocks", local_blocks)
+    monkeypatch.setattr(search, "_rank_local", lambda _s, out, *a: out)
     return [entry(None, _Index(codec), queries, k=K)]
 
 
@@ -307,10 +307,10 @@ def _outputs(codec, merged, monkeypatch) -> dict[str, list]:
     ]
     if not merged:
         out["shared"] = _shared(
-            monkeypatch, codec, search, search.search_topk_shared, "segments", QUERIES
+            monkeypatch, codec, search.search_topk_shared, "segments", QUERIES
         )
         out["phrase_shared"] = _shared(
-            monkeypatch, codec, phrase, phrase.search_topk_phrase_shared, "positions",
+            monkeypatch, codec, phrase.search_topk_phrase_shared, "positions",
             QUERIES + [(11, "merge sort data"), (12, f"sort {OOV}")],
         )
     return out

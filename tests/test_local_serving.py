@@ -1,14 +1,13 @@
 """Kernel calls served on the driver vs through Spark.
 
 Every kernel call goes through one dispatch (`search._serve_kernel`). When
-the call's posting volume fits one kernel group, it reads its block rows
-with pyarrow and runs its kernel on the driver; turning the `_serve_local`
-gate off forces the Spark plan. Both branches must collect identical rows
-in identical order, ties included. A one-group call whose kernel output
-goes straight to the rank (or is the result) must run no Spark job; one
-whose kernel output is joined afterwards (conjunctive) still runs that
-join in Spark. A call whose volume exceeds one group must still plan the
-Spark kernel."""
+a ranked call's posting volume fits one kernel group, it reads its block
+rows with pyarrow, runs its kernel and ranks on the driver; turning the
+`_serve_local` gate off forces the Spark plan. Both branches must collect
+identical rows in identical order, ties included. A one-group ranked call
+must run no Spark job. An unranked dispatch (conjunctive, whose kernel
+output Spark joins, and matches) plans the Spark kernel on both branches.
+A call whose volume exceeds one group must still plan the Spark kernel."""
 
 import shutil
 from contextlib import contextmanager
@@ -87,9 +86,9 @@ def _calls(spark, idx, queries, k):
     }
 
 
-# calls whose driver-served kernel output Spark still joins (the conjunctive
-# term-count filter); every other call's driver branch is a local relation
-_SPARK_AFTER_KERNEL = {"conjunctive"}
+# calls that dispatch their kernel unranked: the Spark kernel on both
+# branches; every other call's driver branch is a local relation
+_UNRANKED = {"conjunctive", "matches"}
 # calls whose rows have no defined order (every match position of the
 # top-k hits): compared as multisets
 _UNORDERED = {"matches"}
@@ -158,10 +157,8 @@ def test_local_equals_spark(spark, tmp_path_factory, rows, queries, n_shards, k)
                 # a pass 1 that keeps no block, with an empty local relation)
                 if got[forced]:
                     plan = _plan(df)
-                    if forced:
+                    if forced or name in _UNRANKED:
                         assert "MapInPandas" in plan, (name, forced, plan)
-                    elif name in _SPARK_AFTER_KERNEL:
-                        assert "MapInPandas" not in plan, (name, forced, plan)
                     else:
                         assert plan.startswith("LocalTableScan"), (name, forced, plan)
             assert got[False] == got[True], (name, qs)
@@ -208,13 +205,13 @@ def _job_free(spark, group, call):
 
 
 def test_one_group_call_runs_no_job(spark, multi_shard_index):
-    """Every call whose kernel output goes straight to the rank (or is the
-    result) collects a local relation: 0 jobs, planning included."""
+    """Every call whose kernel output goes straight to the rank collects a
+    local relation: 0 jobs, planning included."""
     idx = multi_shard_index
     idx.df_map(spark)  # the handle's driver map loads once, outside the group
     for qs in (QUERIES, QUERIES[:1]):
         for name, call in _calls(spark, idx, qs, 5).items():
-            if name in _SPARK_AFTER_KERNEL:
+            if name in _UNRANKED:
                 continue
             rows, plan, jobs = _job_free(spark, f"local-{name}-{len(qs)}", call)
             assert rows and plan.startswith("LocalTableScan"), (name, plan)
