@@ -4,15 +4,16 @@ grenad decodes its block format in one place, BlockCursor's in-block walk
 (src/block.rs:86-114); here that walk is a NumPy scan of a kernel group's
 block rows, and every serving kernel (search.py, phrase.py, ranked.py,
 fields.py, matches.py) is built from these primitives: the block decode
-(decode_blocks, decode_postings, decode_positions), the matches
+(decode_blocks, decode_postings, decode_positions, spans), the matches
 (phrase_docs, conjunctive_docs), the scores (bm25, matched_bm25, doc_sums,
-disjunctive_bm25, topk_rows) and the typed no-rows frame (empty_frame).
+disjunctive_bm25, topk_rows: every query's top-k in one lexsort) and the
+typed no-rows frame (empty_frame).
 
 Pure NumPy/pandas: kernels run in Python workers and on the driver, and
 nothing here needs a Spark session. A per-doc sum adds its terms in the
-group's first-appearance order of terms, or in the caller's term list:
-the orders the kernels summed in before these primitives, so their scores
-keep their float bits.
+order its caller gives: by name in the BM25 top-k kernel
+(search._bm25_slice), else by first appearance in the group
+(decode_postings) or in the caller's term list.
 """
 
 from __future__ import annotations
@@ -76,6 +77,12 @@ def decode_blocks(payloads, ns, codec: str):
     """(doc_ids, tfs, dls) of segment block payloads holding ns postings
     each, concatenated in input order: the one posting-block decode."""
     return decode_block_rows(decompress_payloads(list(payloads), codec), ns)
+
+
+def spans(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """The index ranges [starts[i], starts[i] + lens[i]), concatenated."""
+    ends = np.cumsum(lens)
+    return np.repeat(starts - ends + lens, lens) + np.arange(ends[-1] if ends.size else 0)
 
 
 def _term_runs(pdf: pd.DataFrame):
@@ -258,19 +265,24 @@ def disjunctive_bm25(decoded: dict, idfs: dict, avgdl: float):
     )
 
 
-def topk_rows(qid: int, doc_ids: np.ndarray, scores: np.ndarray, k: int) -> pd.DataFrame:
-    """A group's top-k (query_id, doc_id, score) rows."""
-    # full (score desc, doc_id asc) ordering — NOT argpartition: partitioning
-    # on score alone drops tied candidates arbitrarily, and the doc-id
-    # tie-break is part of the ranking contract (Hypothesis-caught: a shard
-    # top-k that keeps doc 4 but drops doc 1 at equal score is wrong even
-    # though the global window re-sorts survivors)
-    # round BEFORE the shard-level truncation: the global window (and the
-    # DuckDB oracle) rank on round(score, SCORE_DECIMALS); truncating on raw
-    # scores could drop a doc that round-ties the kth score with a smaller
-    # doc_id — shard-level and global ordering must use the same key
-    scores = np.round(scores, SCORE_DECIMALS)
-    order = np.lexsort((doc_ids, -scores))[:k]
-    return pd.DataFrame(
-        {"query_id": qid, "doc_id": doc_ids[order], "score": scores[order]}
-    )
+def topk_rows(cands: list, k: int) -> pd.DataFrame:
+    """The top-k (query_id, doc_id, score) rows of every query of `cands`,
+    (query_id, docs, scores) candidate triples. Each query's rounded scores
+    are cut to those tying or beating its kth (an O(n) partition), then one
+    (query_id, -score, doc_id) lexsort ranks every query at once."""
+    # the cut keeps every tie of the kth: the doc-id tie-break is part of
+    # the ranking contract (Hypothesis-caught: a shard top-k that keeps doc
+    # 4 but drops doc 1 at equal score is wrong). Rounding comes first: the
+    # global window and the DuckDB oracle rank on round(score,
+    # SCORE_DECIMALS), so a raw-score cut could drop a round-tie of the kth.
+    parts = []
+    for q, d, s in cands:
+        s = np.round(s, SCORE_DECIMALS)
+        if s.size > k:
+            keep = s >= np.partition(s, s.size - k)[s.size - k]
+            d, s = d[keep], s[keep]
+        parts.append((np.full(s.size, q, dtype=np.int64), d, s))
+    q, d, s = (np.concatenate(p) for p in zip(*parts))
+    order = np.lexsort((d, -s, q))
+    order = order[np.arange(order.size) - np.searchsorted(q[order], q[order]) < k]
+    return pd.DataFrame({"query_id": q[order], "doc_id": d[order], "score": s[order]})

@@ -48,6 +48,7 @@ from grenad_spark.query.kernels import (
     disjunctive_bm25,
     doc_sums,
     empty_frame,
+    spans,
     tfpart,
     topk_rows,
 )
@@ -890,30 +891,23 @@ def _grouped_apply(
     Every serving kernel's Spark branch (_serve_kernel) and the pass-1
     prune kernels dispatch through here.
 
-    n_part is required and comes from _batch_groups (_group_params under
-    the batch's posting volume): the exchange is sized by the data it
-    carries, never by the session's shuffle width. A session-wide default
-    here scheduled 32 Python tasks on 4 cores for an 8-query ranked batch
-    of ~60 block rows, and the task launches cost several times the kernel.
+    n_part comes from _batch_groups: the exchange is sized by the data it
+    carries, never by the session's shuffle width (a session default
+    scheduled 32 Python tasks on 4 cores for ~60 block rows).
 
-    Spark's grouped-map Arrow protocol costs ~125 ms/job more than the plain
-    map protocol on identical data (measured on a one-partition single-query
-    plan: identity applyInPandas 430 ms vs identity mapInPandas 305 ms — the
-    pandas conversion itself is NOT the cost). This helper keeps the exact
-    per-group semantics: hash-repartition on the keys (coalesce(1) when one
-    group — a narrow merge, no exchange), concatenate each partition's Arrow
-    batches, slice per distinct key combination (stable lexsort + boundary
-    scan), and call `fn` once per slice — the same (columns incl. keys,
-    multiset of rows) every applyInPandas group saw.
+    Spark's grouped-map Arrow protocol cost ~125 ms/job more than the map
+    protocol on identical data (identity applyInPandas 430 ms vs identity
+    mapInPandas 305 ms). This helper keeps the per-group semantics:
+    hash-repartition on the keys (coalesce(1) when one group: no
+    exchange), concatenate each partition's Arrow batches, slice per
+    distinct key combination and call `fn` once per slice, on the same
+    (columns incl. keys, multiset of rows) every applyInPandas group saw.
 
-    slice_groups=False skips the per-key slicing and hands `fn` the whole
-    concatenated partition in one call. Only valid for kernels that (a) do
-    their own per-query slicing internally and (b) treat their input as an
-    arbitrary doc-disjoint slice of the index — true for the qshard-keyed
-    scoring/prune kernels (qshards are doc-range disjoint, so a partition
-    holding several of them is just a coarser qshard). Merging gives the
-    kernel a wider pruning scope and fewer Python invocations — measured
-    another ~15% off a 12-query wand batch vs per-qshard slices.
+    slice_groups=False hands `fn` the whole concatenated partition in one
+    call: for kernels that score every query of an arbitrary doc-disjoint
+    slice of the index (qshards are doc-range disjoint, so a partition
+    holding several of them is a coarser qshard) — one Python call per
+    partition and a wider pruning scope.
 
     Memory: a task holds its whole partition instead of one group at a time;
     inputs here are query-term block rows whose volume per partition is
@@ -968,8 +962,8 @@ def _serve_kernel(
 
     `groups` is the kernel's input grouping, one per Spark plan shape:
     - "query_shard": one call per (query_id, shard DIV g) group;
-    - "qshard": partitions of shard DIV g groups, one call per query in
-      each (the BM25 scoring kernels);
+    - "qshard": partitions of shard DIV g groups, one call per partition
+      covering all its queries (the BM25 batch kernel);
     - "terms": partitions of the batch's term-union blocks, no query
       column, one call each (the shared-decode kernels; queries and idf
       ride in `fn`).
@@ -977,15 +971,17 @@ def _serve_kernel(
     over `pairs`. Shards are doc-range disjoint and ascending and kernels
     re-sort blocks by first_doc, so a merged group is still one valid
     posting-list slice. Under the gate g = n_shards: the driver calls `fn`
-    once per query_id ("terms": once).
+    once per query_id ("qshard" and "terms": once).
 
     Driver: the block rows are read with pyarrow (_local_blocks), idf is
-    attached from the df map, and _rank_local ranks into a local relation:
-    no Spark job. Spark: the block attach (_query_blocks_from_pairs, or
-    the term-union scan), then `prepass` (blocks -> blocks, or None when
-    the call has no rows: the Spark-only pass-1, shard and span prunes,
-    which only shrink an exchange the driver does not have), the exchange
-    into _grouped_apply, and _rank_topk."""
+    attached from the df map (a "qshard" kernel takes the (query_id, term,
+    idf) triples as its `queries` arrays: no per-query fan-out of rows), and
+    _rank_local ranks into a local relation: no Spark job. Spark: the block
+    attach (_query_blocks_from_pairs, or the term-union scan), then
+    `prepass` (blocks -> blocks, or None when the call has no rows: the
+    Spark-only pass-1, shard and span prunes, which only shrink an exchange
+    the driver does not have), the exchange into _grouped_apply, and
+    _rank_topk."""
     if columns is None:
         columns = _SCORE_COLS if table == "segments" else _POS_COLS
     dfm = index.df_map(spark)
@@ -994,13 +990,12 @@ def _serve_kernel(
         out = None
         if terms:
             pdf = _local_blocks(index, table, terms, [c for c in columns if c != "idf"])
-            if groups == "terms":
-                out = _apply_groups(pdf, [], fn, slice_groups=False)
-            else:
-                qt = pd.DataFrame(
-                    _idf_rows(index, dfm, pairs), columns=["query_id", "term", "idf"]
-                )
-                out = _apply_groups(qt.merge(pdf, on="term"), ["query_id"], fn)
+            qt = _idf_rows(index, dfm, pairs)
+            if groups == "qshard":  # the BM25 batch kernel takes the queries as arrays
+                fn = functools.partial(fn, queries=tuple(np.array(c) for c in zip(*qt)))
+            elif groups == "query_shard":
+                pdf = pd.DataFrame(qt, columns=["query_id", "term", "idf"]).merge(pdf, on="term")
+            out = _apply_groups(pdf, ["query_id"], fn, groups == "query_shard")
         if out is None:
             out = empty_frame(out_schema)
         return _rank_local(spark, out, int(k), order, cols, out_schema)
@@ -1019,14 +1014,8 @@ def _serve_kernel(
         sel = blocks.select("query_id", group.alias("shard"), *columns)
         out = _grouped_apply(sel, ["query_id", "shard"], fn, out_schema, n_part)
     else:
-        if groups == "terms":
-            sel = blocks.select(group.alias("qshard"), *columns)
-        else:
-            # one call per query slice of the partition: |qshards| pandas
-            # groups instead of |queries|·|qshards| (~0.3 s of a 0.9 s
-            # 12-query batch), each slice the (query, qshard) group it was
-            sel = blocks.select("query_id", group.alias("qshard"), *columns)
-            fn = functools.partial(_apply_groups, keys=["query_id"], fn=fn)
+        qcol = [] if groups == "terms" else ["query_id"]
+        sel = blocks.select(*qcol, group.alias("qshard"), *columns)
         out = _grouped_apply(sel, ["qshard"], fn, out_schema, n_part, slice_groups=False)
     if k is None:
         return out
@@ -1043,19 +1032,12 @@ def _search_from_pairs(
 ) -> DataFrame:
     if mode == "wand_pruned":
         return _search_pruned(spark, index, pairs, k)
-    avgdl = float(index.avgdl)
-    kk = int(k)
-    codec = index.payload_codec
-    if mode == "exhaustive":
-        apply_fn = _make_exhaustive(avgdl, kk, codec)
-    elif mode == "wand":
-        apply_fn = _make_wand_batched(avgdl, kk, codec)
-    else:
+    make = {"exhaustive": _make_exhaustive, "wand": _make_wand_batched}.get(mode)
+    if make is None:
         raise ValueError(f"unknown mode {mode!r}")
-    # at n_part == 1 the narrow coalesce keeps the whole query in ONE stage
-    # — no exchange at all
+    fn = make(float(index.avgdl), int(k), index.payload_codec)
     return _serve_kernel(
-        spark, index, pairs, apply_fn, _OUT_SCHEMA, kk, groups="qshard", prepass=prepass
+        spark, index, pairs, fn, _OUT_SCHEMA, int(k), groups="qshard", prepass=prepass
     )
 
 
@@ -1870,15 +1852,13 @@ def search_topk_shared(
     k: int = 10,
     prune: bool = False,
 ) -> DataFrame:
-    """DECODE-ONCE, SCORE-MANY batch serving.
-
-    The per-query paths join query_ids onto block rows, so a batch of Q
-    queries sharing common terms shuffles each payload up to Q times — at a
-    64-query batch that duplication dominates wall clock. This path ships
-    every distinct (term, qshard) block exactly ONCE (shuffle ∝ index slice,
-    not Q × slice), decodes each term once per group, and scores all queries
-    against the decoded arrays inside one UDF pass — the standard batch shape
-    of production search tiers. Results are identical to mode='exhaustive'
+    """DECODE-ONCE, SCORE-MANY batch serving. The per-query paths join
+    query_ids onto block rows, so a block of a term Q queries share ships Q
+    times; this path ships every distinct (term, qshard) block exactly ONCE
+    (shuffle ∝ index slice, not Q × slice), and the BM25 batch kernel
+    (_bm25_slice, every term sparse) joins the driver's (query_id, term,
+    idf) triples to the rows in-kernel and scores every query of a
+    partition from one decode. Results are identical to mode='exhaustive'
     (asserted in tests/test_search.py).
 
     prune=True composes the pass-1 metadata pruner on top: shuffle becomes
@@ -1890,44 +1870,22 @@ def search_topk_shared(
     serves unpruned otherwise, and when every query term is sparse (pass 1
     would keep every block — survivor_blocks).
 
-    A call whose posting volume fits one kernel group (_serve_local) runs on
-    the driver with no Spark job, pruned or not: pass 1 exists to keep
-    payload bytes out of the exchange, and a driver-local call has none.
-
-    Requires the driver-held df map (vocab-gated); falls back to the
-    per-query batched WAND path on huge vocabularies."""
+    A call that fits one kernel group (_serve_local) runs on the driver with
+    no Spark job and no pass 1 (there is no exchange to shrink). Without the
+    driver-held df map (huge vocabularies) it serves the wand path."""
     pairs = _tokenize_queries(queries)
     dfm = index.df_map(spark)
     if dfm is None:  # 10^9-term vocab: no driver idf map — per-query path
         return _search_from_pairs(spark, index, pairs, k, "wand")
-    avgdl = float(index.avgdl)
-    codec = index.payload_codec
     kk = int(k)
     qinfo = _idf_rows(index, dfm, pairs)
     terms = sorted({t for _, t, _ in qinfo})
     if not terms:
         return _empty_result(spark, _OUT_SCHEMA)
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        # decode each term ONCE: (docs, tfpart) — idf applied per query-term
-        decoded = {
-            t: (d, bm25(1.0, tf, dl, avgdl))
-            for t, (d, tf, dl) in decode_postings(pdf, codec)[0].items()
-        }
-        by_query: dict[int, list[tuple[str, float]]] = {}
-        for q, t, idf in qinfo:
-            if t in decoded:
-                by_query.setdefault(q, []).append((t, idf))
-        outs = []
-        for q, tlist in by_query.items():
-            docs, scores, _ = doc_sums(
-                np.concatenate([decoded[t][0] for t, _ in tlist]),
-                np.concatenate([idf * decoded[t][1] for t, idf in tlist]),
-            )
-            outs.append(topk_rows(q, docs, scores, kk))
-        if not outs:
-            return empty_frame(_OUT_SCHEMA)
-        return pd.concat(outs, ignore_index=True)
+    fn = functools.partial(
+        _make_exhaustive(float(index.avgdl), kk, index.payload_codec),
+        queries=tuple(np.array(c) for c in zip(*qinfo)),
+    )
 
     def pass1(seg: DataFrame) -> DataFrame | None:
         if not prune or not _has_block_bounds(spark, index):
@@ -1955,13 +1913,8 @@ def search_topk_shared(
 
 
 def _make_exhaustive(avgdl: float, k: int, codec: str = "none"):
-    """Fully vectorized scatter-add scoring of one (query, shard) group."""
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        docs, scores, _ = disjunctive_bm25(*decode_postings(pdf, codec), avgdl)
-        return topk_rows(int(pdf["query_id"].iloc[0]), docs, scores, k)
-
-    return fn
+    """_make_wand_batched with every term sparse: no block-max pruning."""
+    return _make_wand_batched(avgdl, k, codec, sparse_postings_max=2**62)
 
 
 # in-UDF sparse threshold: a term whose postings WITHIN the group total at
@@ -1969,7 +1922,8 @@ def _make_exhaustive(avgdl: float, k: int, codec: str = "none"):
 # pseudo-blocks). Without it, a rare term's block span covers most of the
 # group's doc range and its UB resurrects every range it touches — block-
 # granular pruning then structurally can't fire on exactly the zipfian
-# queries it exists for (measured: ~100% of ranges survived).
+# queries it exists for (measured: ~100% of ranges survived). A query with
+# every term this sparse skips block-max.
 SPARSE_GROUP_POSTINGS = 4096
 
 
@@ -1977,15 +1931,109 @@ def _make_wand_batched(
     avgdl: float, k: int, codec: str = "none",
     sparse_postings_max: int = SPARSE_GROUP_POSTINGS,
 ):
-    """Batched block-max pruning — the vectorized serving path.
+    """The BM25 top-k kernel: _bm25_slice over all queries of a doc-disjoint
+    slice of (query_id, term, idf, n, first_doc, last_doc, max_tf, min_dl,
+    payload) rows in one call; only a query with a term of more than
+    sparse_postings_max postings in the slice runs block-max pruning."""
+    return functools.partial(
+        _bm25_slice, avgdl=avgdl, k=k, codec=codec, sparse_max=sparse_postings_max
+    )
 
-    The block-max math of grenad's pull-based seek loop (per-term cursors
-    pivoting doc by doc) with NO per-doc Python:
 
-      0. SPARSE terms (≤ sparse_postings_max postings in the group) decode
-         upfront — cheap by the bound — and turn into exact unit-width
-         pseudo-blocks (first=last=doc, ub=exact contribution), so ranges
-         BETWEEN their postings carry zero mass from them.
+def _bm25_slice(
+    pdf: pd.DataFrame, avgdl: float, k: int, codec: str, sparse_max: int, queries=None
+) -> pd.DataFrame:
+    """Top-k rows of every query over one slice's block rows (term, n,
+    payload[, first_doc, last_doc, max_tf, min_dl]); `queries` = (query ids,
+    terms, idfs) arrays, None for the rows' own. Terms are coded in name
+    order, the order every per-doc sum adds them in. Rows of one (term,
+    first_doc) are one block (each row, without first_doc), decoded at most
+    once into a store of (doc id, BM25 without idf) in (term, first_doc)
+    order. A query whose terms hold at most sparse_max postings each in the
+    slice sums them per doc (doc_sums), any other runs _block_max."""
+    codes, names = pd.factorize(pdf["term"].to_numpy(), sort=True)
+    qids, qterms, qidfs = queries or (pdf["query_id"].to_numpy(), None, pdf["idf"].to_numpy())
+    qcodes = codes if qterms is None else pd.Index(names).get_indexer(qterms)
+    ok = qcodes >= 0
+    # the distinct (query, term) pairs, by query id, then term name
+    key, at = np.unique(qids[ok].astype(np.int64) * len(names) + qcodes[ok], return_index=True)
+    if not key.size:
+        return empty_frame(_OUT_SCHEMA)
+    qids, qcodes, qidfs = key // len(names), key % len(names), qidfs[ok][at].astype(np.float64)
+
+    first = pdf["first_doc"].to_numpy() if "first_doc" in pdf else np.arange(len(pdf))
+    order = np.lexsort((first, codes))
+    c, f = codes[order], first[order]
+    rows = order[np.concatenate(([True], (c[1:] != c[:-1]) | (f[1:] != f[:-1])))]
+    ns = pdf["n"].to_numpy()[rows].astype(np.int64)
+    payloads = pdf["payload"].to_numpy()[rows]
+    tblock = np.searchsorted(codes[rows], np.arange(len(names) + 1))  # term -> blocks
+    boff = np.concatenate(([0], np.cumsum(ns)))  # block -> store range
+    tpost, tlen = boff[tblock], np.diff(boff[tblock])  # term -> store range
+    store_d, store_p = np.empty(boff[-1], dtype=np.int64), np.empty(boff[-1])
+    held = np.zeros(rows.size, dtype=bool)
+
+    def fetch(bidx):
+        """Store positions of distinct blocks bidx (one decode of unheld ones)."""
+        miss = bidx[~held[bidx]]
+        if miss.size:
+            d, tf, dl = decode_blocks(payloads[miss], ns[miss], codec)
+            at = spans(boff[miss], ns[miss])
+            store_d[at] = d
+            store_p[at] = tfpart(tf.astype(np.float64), dl.astype(np.float64), avgdl)
+            held[miss] = True
+        return spans(boff[bidx], ns[bidx])
+
+    def decode(t, bidx):
+        """(docs, BM25) of the blocks bidx of a _block_max term."""
+        if "decoded" in t:
+            return t["decoded"][0][bidx], t["decoded"][1][bidx]
+        at = fetch(t["bix"][bidx])
+        return store_d[at], t["idf"] * store_p[at]
+
+    starts = np.flatnonzero(np.concatenate(([True], qids[1:] != qids[:-1])))
+    ends = np.append(starts[1:], qids.size)
+    dense = np.maximum.reduceat(tlen[qcodes], starts) > sparse_max
+    # the sparse queries' postings, gathered in (query, term) order
+    plen = np.where(np.repeat(dense, ends - starts), 0, tlen[qcodes])
+    used = np.unique(qcodes[plen > 0])
+    at = spans(tpost[qcodes], plen)
+    fetch(spans(tblock[used], np.diff(tblock)[used]))
+    d_all, s_all = store_d[at], np.repeat(qidfs, plen) * store_p[at]
+    pbound = np.append(0, np.cumsum(plen))
+    if dense.any():
+        first, last, max_tf, min_dl = (
+            pdf[c].to_numpy()[rows] for c in ("first_doc", "last_doc", "max_tf", "min_dl")
+        )
+        ub_part = tfpart(max_tf.astype(np.float64), min_dl.astype(np.float64), avgdl)
+    cands = []
+    for q, a, e, is_dense in zip(qids[starts], starts, ends, dense):
+        if not is_dense:
+            sl = slice(pbound[a], pbound[e])
+            cands.append((q, *doc_sums(d_all[sl], s_all[sl])[:2]))
+            continue
+        terms = []
+        for c, idf in zip(qcodes[a:e], qidfs[a:e]):
+            b = np.arange(tblock[c], tblock[c + 1])
+            terms.append({"idf": idf, "bix": b, "first": first[b], "last": last[b],
+                          "ns": ns[b], "ub": idf * ub_part[b]})
+        hit = _block_max(terms, k, sparse_max, decode)
+        if hit is not None:
+            cands.append((q, *hit))
+    return topk_rows(cands, k) if cands else empty_frame(_OUT_SCHEMA)
+
+
+def _block_max(terms: list[dict], k: int, sparse_max: int, decode):
+    """(docs, scores) of one query's top-k contenders, or None: the
+    block-max math of grenad's pull-based seek loop (per-term cursors
+    pivoting doc by doc) with NO per-doc Python, over `terms` (each query
+    term's idf and block arrays bix, first, last, ns, ub); decode(t, bidx)
+    gives (docs, BM25) of the blocks bidx of term t.
+
+      0. SPARSE terms (≤ sparse_max postings in the group) of a multi-term
+         query decode upfront — cheap by the bound — and turn into exact
+         unit-width pseudo-blocks (first=last=doc, ub=exact contribution),
+         so ranges BETWEEN their postings carry zero mass from them.
       1. θ₀: decode the single best block of the highest-impact term, compute
          those docs' EXACT scores (decoding just the blocks of other terms
          that contain them), take the kth best.
@@ -1993,143 +2041,83 @@ def _make_wand_batched(
          resulting range, UB(range) = Σ_terms block_ub of the overlapping
          block. Ranges with UB ≤ θ₀ cannot contain a top-k doc — skip.
       3. Decode only blocks overlapping surviving ranges, mask decoded docs
-         to surviving ranges (exactness at θ ties), scatter-add, top-k.
+         to surviving ranges (exactness at θ ties), scatter-add.
 
     On adversarially uniform corpora nothing prunes and this degrades to the
     exhaustive scorer plus metadata work; on zipfian corpora the rare terms'
     exact positions kill every head-term-only range, exactly like block-max
     WAND over essential lists.
     """
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) == 0:
-            return empty_frame(_OUT_SCHEMA)
-        qid = int(pdf["query_id"].iloc[0])
-        # ONE sort + numpy boundary slicing instead of pandas groupby +
-        # per-group sort_values: per-group metadata prep was the dominant
-        # cost for small groups (measured ~3 ms of a ~5 ms group)
-        pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-        t_np = pdf["term"].to_numpy()
-        idf_np = pdf["idf"].to_numpy().astype(np.float64)
-        first_np = pdf["first_doc"].to_numpy()
-        last_np = pdf["last_doc"].to_numpy()
-        ns_np = pdf["n"].to_numpy()
-        pay_np = pdf["payload"].to_numpy()
-        ub_all = idf_np * tfpart(
-            pdf["max_tf"].to_numpy().astype(np.float64),
-            pdf["min_dl"].to_numpy().astype(np.float64),
-            avgdl,
-        )
-        starts = np.concatenate(
-            ([0], np.flatnonzero(t_np[1:] != t_np[:-1]) + 1, [t_np.size])
-        )
-        terms = []
-        for si in range(starts.size - 1):
-            s, e = int(starts[si]), int(starts[si + 1])
-            terms.append(
-                {
-                    "idf": float(idf_np[s]),
-                    "first": first_np[s:e],
-                    "last": last_np[s:e],
-                    "ns": ns_np[s:e],
-                    "payloads": pay_np[s:e],
-                    "ub": ub_all[s:e],
-                }
-            )
-        if not terms:
-            return empty_frame(_OUT_SCHEMA)
-
-        def decode_term_blocks(t, bidx):
-            """Decode selected blocks of one term -> (docs, scores). A
-            sparse term's pseudo-blocks are one posting each — slicing the
-            cached decode IS the block selection."""
-            if bidx.size == 0:
-                return np.empty(0, dtype=np.int64), np.empty(0)
-            if "decoded" in t:
-                d, s = t["decoded"]
-                return d[bidx], s[bidx]
-            d, tf, dl = decode_blocks([t["payloads"][i] for i in bidx], t["ns"][bidx], codec)
-            return d, bm25(t["idf"], tf, dl, avgdl)
-
-        # --- phase 0: sparse terms -> exact unit pseudo-blocks
-        if len(terms) > 1:
-            for t in terms:
-                tot = int(t["ns"].sum())
-                if 0 < tot <= int(sparse_postings_max):
-                    d, s = decode_term_blocks(t, np.arange(len(t["payloads"])))
-                    t["first"] = d
-                    t["last"] = d
-                    t["ns"] = np.ones(d.size, dtype=np.int64)
-                    t["ub"] = s
-                    t["decoded"] = (d, s)
-                    t["payloads"] = [None] * d.size  # len() used for bounds
-
-        # --- phase 1: θ₀ from the best blocks of the highest-impact terms.
-        # Take blocks in descending-UB order until the seed holds ≥ k DISTINCT
-        # docs, CONTINUING into the next-best term when one term's postings
-        # run out: a rare term (the highest-impact one on zipfian corpora)
-        # often has fewer than k docs in a group, which would otherwise leave
-        # θ = -1 and disable pruning exactly where it matters most.
-        seed_parts = []
-        n_seed = 0
-        for t in sorted(terms, key=lambda t: -float(t["ub"].max())):
-            ub_order = np.argsort(-t["ub"], kind="stable")
-            acc_docs = np.cumsum(t["ns"][ub_order])
-            nb = int(np.searchsorted(acc_docs, max(1, k - n_seed))) + 1
-            d, _ = decode_term_blocks(t, np.sort(ub_order[:nb]))
-            seed_parts.append(d)
-            n_seed = np.unique(np.concatenate(seed_parts)).size
-            if n_seed >= k:
-                break
-        seed_docs = np.unique(np.concatenate(seed_parts))
-        seed_scores = np.zeros(seed_docs.size)
+    # --- phase 0: sparse terms -> exact unit pseudo-blocks
+    if len(terms) > 1:
         for t in terms:
-            # blocks of t containing any seed doc
-            bi = np.unique(np.searchsorted(t["last"], seed_docs))
-            bi = bi[bi < len(t["payloads"])]
-            d, s = decode_term_blocks(t, bi)
-            if d.size == 0:  # seed docs all past this term's last block
-                continue
-            pos = np.searchsorted(d, seed_docs)
-            hit = (pos < d.size) & (d[np.minimum(pos, d.size - 1)] == seed_docs)
-            seed_scores[hit] += s[pos[hit]]
-        if seed_docs.size >= k:
-            theta = float(np.partition(seed_scores, seed_docs.size - k)[seed_docs.size - k])
-        else:
-            theta = -1.0
+            if int(t["ns"].sum()) <= sparse_max:
+                d, s = decode(t, np.arange(t["first"].size))
+                t.update(first=d, last=d, ns=np.ones(d.size, dtype=np.int64), ub=s, decoded=(d, s))
 
-        # --- phase 2: range UBs on block-boundary-aligned doc ranges
-        # (shared machinery with the pass-1 metadata pruner — see
-        # _range_survivors for the θ-tie/PRUNE_EPS reasoning)
-        sur_starts, sur_ends = _range_survivors(terms, theta)
+    # --- phase 1: θ₀ from the best blocks of the highest-impact terms.
+    # Take blocks in descending-UB order until the seed holds ≥ k DISTINCT
+    # docs, CONTINUING into the next-best term when one term's postings
+    # run out: a rare term (the highest-impact one on zipfian corpora)
+    # often has fewer than k docs in a group, which would otherwise leave
+    # θ = -1 and disable pruning exactly where it matters most.
+    seed_parts = []
+    n_seed = 0
+    for t in sorted(terms, key=lambda t: -float(t["ub"].max())):
+        ub_order = np.argsort(-t["ub"], kind="stable")
+        acc_docs = np.cumsum(t["ns"][ub_order])
+        nb = int(np.searchsorted(acc_docs, max(1, k - n_seed))) + 1
+        d, _ = decode(t, np.sort(ub_order[:nb]))
+        seed_parts.append(d)
+        n_seed = np.unique(np.concatenate(seed_parts)).size
+        if n_seed >= k:
+            break
+    seed_docs = np.unique(np.concatenate(seed_parts))
+    seed_scores = np.zeros(seed_docs.size)
+    for t in terms:
+        # blocks of t containing any seed doc
+        bi = np.unique(np.searchsorted(t["last"], seed_docs))
+        bi = bi[bi < t["first"].size]
+        d, s = decode(t, bi)
+        if d.size == 0:  # seed docs all past this term's last block
+            continue
+        pos = np.searchsorted(d, seed_docs)
+        hit = (pos < d.size) & (d[np.minimum(pos, d.size - 1)] == seed_docs)
+        seed_scores[hit] += s[pos[hit]]
+    if seed_docs.size >= k:
+        theta = float(np.partition(seed_scores, seed_docs.size - k)[seed_docs.size - k])
+    else:
+        theta = -1.0
 
-        # --- phase 3: decode surviving blocks, mask, score (doc_sums), top-k
-        doc_parts, score_parts = [], []
-        for t in terms:
-            # a block survives if any surviving range overlaps it
-            bidx = np.flatnonzero(_overlap_mask(t, sur_starts, sur_ends))
-            d, s = decode_term_blocks(t, bidx)
-            if d.size == 0:
-                continue
-            # mask decoded docs to surviving ranges (exactness at θ ties)
-            ridx = np.searchsorted(sur_starts, d, side="right") - 1
-            ok = (ridx >= 0) & (d < sur_ends[np.maximum(ridx, 0)])
-            if ok.any():
-                doc_parts.append(d[ok])
-                score_parts.append(s[ok])
-        if not doc_parts:
-            return empty_frame(_OUT_SCHEMA)
-        docs, scores, _ = doc_sums(np.concatenate(doc_parts), np.concatenate(score_parts))
-        # θ-filter before the ranking sort: every true top-k doc scores
-        # ≥ θ (θ is a lower bound on the kth score), so keeping
-        # score > θ - PRUNE_EPS (rounded-tie slack) is lossless and cuts
-        # the lexsort to the contender set
-        keep = scores > theta - PRUNE_EPS
-        if np.count_nonzero(keep) >= k:
-            docs, scores = docs[keep], scores[keep]
-        return topk_rows(qid, docs, scores, k)
+    # --- phase 2: range UBs on block-boundary-aligned doc ranges
+    # (shared machinery with the pass-1 metadata pruner — see
+    # _range_survivors for the θ-tie/PRUNE_EPS reasoning)
+    sur_starts, sur_ends = _range_survivors(terms, theta)
 
-    return fn
+    # --- phase 3: decode surviving blocks, mask, score (doc_sums)
+    doc_parts, score_parts = [], []
+    for t in terms:
+        # a block survives if any surviving range overlaps it
+        d, s = decode(t, np.flatnonzero(_overlap_mask(t, sur_starts, sur_ends)))
+        if d.size == 0:
+            continue
+        # mask decoded docs to surviving ranges (exactness at θ ties)
+        ridx = np.searchsorted(sur_starts, d, side="right") - 1
+        ok = (ridx >= 0) & (d < sur_ends[np.maximum(ridx, 0)])
+        if ok.any():
+            doc_parts.append(d[ok])
+            score_parts.append(s[ok])
+    if not doc_parts:
+        return None
+    docs, scores, _ = doc_sums(np.concatenate(doc_parts), np.concatenate(score_parts))
+    # θ-filter before the ranking sort: every true top-k doc scores
+    # ≥ θ (θ is a lower bound on the kth score), so keeping
+    # score > θ - PRUNE_EPS (rounded-tie slack) is lossless and cuts
+    # the lexsort to the contender set
+    keep = scores > theta - PRUNE_EPS
+    if np.count_nonzero(keep) >= k:
+        docs, scores = docs[keep], scores[keep]
+    return docs, scores
 
 
 # ---------------------------------------------------------------------------

@@ -201,3 +201,113 @@ def test_cross_term_theta_prunes_heterogeneous_corpus(spark, docs_small, tmp_pat
     a = sorted(map(tuple, search_topk(spark, idx, qs, k=10, mode="wand_pruned").collect()))
     b = sorted(map(tuple, search_topk(spark, idx, qs, k=10, mode="exhaustive").collect()))
     assert a == b and len(a) > 0
+
+
+def _term_rows(term, docs, tfs, dls, idf, block_size):
+    return [
+        {
+            "term": term, "idf": idf, "n": n, "first_doc": first, "last_doc": last,
+            "max_tf": max_tf, "min_dl": min_dl, "payload": payload,
+        }
+        for n, first, last, max_tf, min_dl, _mtf, _mdl, _stf, payload in encode_posting_blocks(
+            docs, tfs, dls, block_size
+        )
+    ]
+
+
+@st.composite
+def query_slice(draw):
+    """One doc-disjoint slice holding 2-5 queries over a shared pool of 2-5
+    terms, so the same block rows appear under several query_ids, with the
+    first query a one-term query. With `head`, one pool term holds more
+    postings than SPARSE_GROUP_POSTINGS, so the default threshold puts its
+    queries on the block-max branch and the others on the sparse one. Rows
+    come in two scrambled orders. Returns (rows, reordered rows, avgdl,
+    term -> (docs, tfs, dls, idf), the queries' term lists)."""
+    from grenad_spark.query.search import SPARSE_GROUP_POSTINGS
+
+    n_terms = draw(st.integers(2, 5))
+    doc_space = draw(st.integers(5, 400))
+    avgdl = float(draw(st.integers(5, 80)))
+    block_size = draw(st.sampled_from([4, 16, 128]))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    pool = []
+    for ti in range(n_terms):
+        n_docs = draw(st.integers(1, min(doc_space, 150)))
+        pool.append((f"t{ti}", rng.choice(doc_space, size=n_docs, replace=False)))
+    if draw(st.booleans()):
+        n_head = SPARSE_GROUP_POSTINGS + draw(st.integers(1, 200))
+        pool.append(("head", rng.choice(n_head + 300, size=n_head, replace=False)))
+    postings, by_term = {}, {}
+    for term, docs in pool:
+        docs = np.sort(docs).astype(np.int64)
+        tfs = rng.choice([1, 1, 2, 5], size=docs.size).astype(np.int64)
+        dls = rng.choice([10, 10, 40], size=docs.size).astype(np.int64)
+        idf = float(draw(st.floats(0.05, 3.0, allow_nan=False)))
+        postings[term] = (docs, tfs, dls, idf)
+        by_term[term] = _term_rows(term, docs, tfs, dls, idf, block_size)
+    names = [t for t, _ in pool]
+    queries = [[draw(st.sampled_from(names))]]
+    for _ in range(draw(st.integers(1, 4))):
+        queries.append(draw(st.lists(st.sampled_from(names), min_size=1, max_size=4, unique=True)))
+    rows = [
+        {"query_id": qid, "shard": 0, **r}
+        for qid, terms in enumerate(queries, start=1)
+        for t in terms
+        for r in by_term[t]
+    ]
+    pdf = pd.DataFrame(rows)
+    a = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
+    b = pdf.iloc[rng.permutation(len(pdf))].reset_index(drop=True)
+    return a, b, avgdl, postings, queries
+
+
+def _rows(df):
+    return list(map(tuple, df[["query_id", "doc_id", "score"]].values.tolist()))
+
+
+def _reference_topk(postings, queries, avgdl, k):
+    """Each query's top-k from the raw postings: per doc, BM25 summed over
+    the query's terms in name order, rounded, ranked by (-score, doc_id)."""
+    from grenad_spark.query.bm25 import SCORE_DECIMALS
+    from grenad_spark.query.kernels import tfpart
+
+    out = []
+    for qid, terms in enumerate(queries, start=1):
+        acc: dict[int, float] = {}
+        for t in sorted(terms):
+            docs, tfs, dls, idf = postings[t]
+            s = idf * tfpart(tfs.astype(np.float64), dls.astype(np.float64), avgdl)
+            for d, v in zip(docs.tolist(), s.tolist()):
+                acc[d] = acc.get(d, 0.0) + v
+        docs = np.array(list(acc), dtype=np.int64)
+        scores = np.round(np.array(list(acc.values())), SCORE_DECIMALS)
+        order = np.lexsort((docs, -scores))[:k]
+        out += [(qid, int(d), float(s)) for d, s in zip(docs[order], scores[order])]
+    return out
+
+
+@given(query_slice(), st.integers(1, 15), st.sampled_from([0, None, 2**62]))
+@settings(max_examples=100, deadline=None)
+def test_batch_kernel_equals_one_query_calls(qs, k, sparse_max):
+    """One call over a multi-query slice equals the one-query calls, the
+    exhaustive kernel and a reference top-k of the raw postings, and gives
+    the same float bits on another row order: sparse_postings_max 0 puts
+    every query on the block-max branch, 2**62 every query on the sparse
+    branch, the default splits them when the slice holds the head term."""
+    from grenad_spark.query.search import SPARSE_GROUP_POSTINGS
+
+    pdf, reordered, avgdl, postings, queries = qs
+    fn = _make_wand_batched(
+        avgdl, k, sparse_postings_max=SPARSE_GROUP_POSTINGS if sparse_max is None else sparse_max
+    )
+    batch = fn(pdf.copy())
+    assert batch["query_id"].dtype == np.int64
+    singles = [fn(g.copy()) for _, g in pdf.groupby("query_id", sort=True)]
+    assert _rows(batch) == _rows(pd.concat(singles, ignore_index=True))
+    assert _rows(batch) == _rows(_make_exhaustive(avgdl, k)(pdf.copy()))
+    assert _rows(batch) == _reference_topk(postings, queries, avgdl, k)
+    again = fn(reordered.copy())
+    assert [(q, d, s.hex()) for q, d, s in _rows(again)] == [
+        (q, d, s.hex()) for q, d, s in _rows(batch)
+    ]

@@ -7,10 +7,11 @@ changes: python tools/dump_plans.py
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def plan_str(df) -> str:

@@ -27,6 +27,7 @@ whatever the index size.
 from __future__ import annotations
 
 import argparse
+import functools
 import os
 import sys
 
@@ -78,16 +79,20 @@ def main() -> None:
     from grenad_spark.query import search
     from grenad_spark.query.search import search_topk, search_topk_shared
 
-    def spark_plan(make_df):
-        """make_df with the driver-local gate off: the call's Spark plan."""
+    def spark_plan(make_df, **patches):
+        """make_df with the driver-local gate off, and each of `patches`
+        set on the search module meanwhile: the call's Spark plan."""
 
         def run():
-            gate = search._serve_local
-            search._serve_local = lambda *a: False
+            patches["_serve_local"] = lambda *a: False
+            saved = {name: getattr(search, name) for name in patches}
+            for name, value in patches.items():
+                setattr(search, name, value)
             try:
                 return make_df()
             finally:
-                search._serve_local = gate
+                for name, value in saved.items():
+                    setattr(search, name, value)
 
         return run
 
@@ -136,7 +141,13 @@ def main() -> None:
         dump("bm25_wand_single", spark_plan(lambda: search_topk(spark, idx, q1, k=10, mode="wand")))
         dump("bm25_wand_batch12", spark_plan(lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand")))
         dump("bm25_shared_batch12", spark_plan(lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10)))
-        dump("bm25_wand_pruned_batch12", spark_plan(lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned")))
+        # every query term's df is under SPARSE_DF_MAX at this size, so pass 1
+        # would keep every block and the call would plan the single pass:
+        # treat every term as dense to capture the two-pass plan
+        dump("bm25_wand_pruned_batch12", spark_plan(
+            lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand_pruned"),
+            survivor_blocks=functools.partial(search.survivor_blocks, sparse_df_max=0),
+        ))
 
         def seek():
             terms = sorted(idx.df_map(spark))
