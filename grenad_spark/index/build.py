@@ -45,6 +45,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from grenad_spark.functions import native
+from grenad_spark.functions.literals import isin
 from grenad_spark.functions.tokenize import term_doc_tf, tokens_col
 
 SEGMENT_SCHEMA = (
@@ -706,6 +707,7 @@ class IndexHandle:
         self.path = path
         self._dfs: dict[str, DataFrame] = {}
         self._datasets: dict = {}
+        self._df_memo: dict[str, int | None] = {}
         with open(os.path.join(path, "manifest.json")) as fh:
             self.manifest = json.load(fh)
         self.format_version: int = int(self.manifest.get("format_version", 0))
@@ -994,7 +996,7 @@ class IndexHandle:
     # serving-path df lookup: a driver-held {term: df} map loaded ONCE per
     # handle kills the per-query term_dict scan+broadcast job (~0.1 s/query).
     # Gated by vocabulary size — beyond IDF_MAP_MAX_TERMS (a 10^9-term web
-    # vocabulary) callers fall back to the distributed broadcast join.
+    # vocabulary) term_dfs looks the batch's terms up instead.
     IDF_MAP_MAX_TERMS = 2_000_000
 
     def df_map(self, spark: SparkSession) -> dict | None:
@@ -1008,6 +1010,27 @@ class IndexHandle:
             else:
                 self._df_map = None
         return self._df_map
+
+    def term_dfs(self, spark: SparkSession, terms) -> dict[str, int]:
+        """{term: df} of the in-vocabulary terms among `terms`: the one df
+        question of every serving path, at any vocabulary size. From the
+        held df map when there is one; else from ONE pruned term_dict
+        lookup of the terms not asked before (the point lookup of grenad's
+        ReaderCursor::move_on_key_equal_to). The index is immutable, so the
+        answers, absent terms included, are remembered; the memo starts
+        over once it holds more than IDF_MAP_MAX_TERMS terms."""
+        dfs = self.df_map(spark)
+        if dfs is None:
+            dfs = self._df_memo
+            miss = set(terms) - dfs.keys()
+            if miss and len(dfs) > self.IDF_MAP_MAX_TERMS:
+                dfs.clear()
+                miss = set(terms)
+            if miss:
+                rows = self.term_dict(spark).filter(isin("term", sorted(miss)))
+                found = {r["term"]: int(r["df"]) for r in rows.select("term", "df").collect()}
+                dfs.update((t, found.get(t)) for t in miss)
+        return {t: dfs[t] for t in terms if dfs.get(t) is not None}
 
     # term → shard-set presence map (the df_map pattern one level deeper):
     # lets shard-level pruning (phrase prune_shards) run as pure driver set

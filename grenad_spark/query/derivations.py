@@ -37,9 +37,9 @@ add one phrase-kernel pass over the derived pairs' POSITION blocks (work ∝
 the halves' postings, the same exchange shape as search_topk_phrase) and
 reuse the standard-postings exhaustive scorer for the word part; the two
 parts meet in one group-sum on (query_id, doc_id) — shuffle ∝ matches,
-never corpus. The vocabulary probe for split halves is the driver df map
-when the vocab is small, else one In(candidate-halves) term_dict scan
-(≤ |token|·|tokens| keys — bounded by query length, not corpus).
+never corpus. The vocabulary probe for split halves is
+IndexHandle.term_dfs of the candidate halves (≤ |token|·|tokens| keys —
+bounded by query length, not corpus).
 """
 
 from __future__ import annotations
@@ -49,7 +49,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from grenad_spark.functions.literals import isin
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
 
 MIN_SPLIT_PART = 2  # shortest half a split may produce
@@ -94,25 +93,6 @@ def word_splits(token: str, vocab, min_part: int = MIN_SPLIT_PART) -> list[tuple
         if a in vocab and b in vocab:
             out.append((a, b))
     return out
-
-
-def _split_vocab(spark: SparkSession, index, candidates: set[str]):
-    """Membership oracle for split halves: the driver df map when the
-    vocabulary is small enough to hold, else ONE pruned In(candidates)
-    term_dict scan (candidates are bounded by query length — a handful of
-    keys against the footer-stats table, collected driver-side)."""
-    dfm = index.df_map(spark)
-    if dfm is not None:
-        return dfm
-    if not candidates:
-        return set()
-    rows = (
-        index.term_dict(spark)
-        .filter(isin("term", sorted(candidates)))
-        .select("term")
-        .collect()
-    )
-    return {r["term"] for r in rows}
 
 
 def search_topk_ngram_concat(
@@ -178,7 +158,7 @@ def _split_derivations(
             for i in range(MIN_SPLIT_PART, len(t) - MIN_SPLIT_PART + 1):
                 vocab_cands.add(t[:i])
                 vocab_cands.add(t[i:])
-    vocab = _split_vocab(spark, index, vocab_cands)
+    vocab = index.term_dfs(spark, vocab_cands)
 
     word_pairs: list[tuple[int, str]] = []
     chains: dict[int, list[str]] = {}

@@ -1203,8 +1203,7 @@ def search_topk_phrase_shared(
     query join — each distinct block of the batch's term union crosses the
     exchange exactly once (shuffle ∝ index slice, not queries × slice), and
     every phrase query is evaluated inside the kernel against the decoded
-    shard. Requires the driver df map (vocabulary-gated, like
-    search_topk_shared); falls back to the per-query plan beyond it. A
+    shard; idf comes from IndexHandle.term_dfs at any vocabulary size. A
     batch whose posting volume fits one kernel group (search._serve_local)
     reads its position blocks with pyarrow and runs the same kernel on the
     driver: no Spark job."""
@@ -1213,21 +1212,19 @@ def search_topk_phrase_shared(
     }
     if not phrases:
         return _empty_result(spark, _OUT_SCHEMA)
-    dfm = index.df_map(spark)
-    if dfm is None:
-        return search_topk_phrase(spark, index, queries, k=k)
+    dfs = index.term_dfs(spark, {t for toks in phrases.values() for t in toks})
     n_docs = float(index.n_docs)
     avgdl = float(index.avgdl)
     codec = index.payload_codec
     phrases = {
         qid: toks
         for qid, toks in phrases.items()
-        if all(t in dfm for t in toks)  # OOV phrase term: can never match
+        if all(t in dfs for t in toks)  # OOV phrase term: can never match
     }
     if not phrases:
         return _empty_result(spark, _OUT_SCHEMA)
     terms = sorted({t for toks in phrases.values() for t in toks})
-    idfs = {t: _driver_idf(n_docs, dfm[t]) for t in terms}
+    idfs = {t: _driver_idf(n_docs, dfs[t]) for t in terms}
     kernel = _make_phrase_shared_kernel(phrases, idfs, avgdl, codec)
     pairs = [(q, t) for q, toks in phrases.items() for t in set(toks)]
     # work-sized groups of consecutive doc-disjoint shards, like the shared

@@ -18,8 +18,8 @@ documents); both are shard-parallel:
                                               rows, driver-tiny]
 
 Scale: the shuffle after the pruned scan carries only query-term block rows
-(compressed); per-group memory is bounded by docs_per_shard. idf/UB constants
-ride in via the grouping DataFrame (broadcast-joined), not closures.
+(compressed); per-group memory is bounded by docs_per_shard. idf is resolved on the
+driver (IndexHandle.term_dfs) and rides in as a literal map of the attach.
 """
 
 from __future__ import annotations
@@ -78,7 +78,7 @@ def _qshard_params(
 ) -> tuple[int, int]:
     """(g, n_qshards): how many consecutive doc-disjoint build shards merge
     into one scoring group. Default (no estimate) sizes groups to the
-    session's core count; with an estimated posting volume (driver df map —
+    session's core count; with an estimated posting volume (_est_postings:
     Σ df over the batch's query-term pairs) groups are sized to
     TARGET_GROUP_POSTINGS each, capped at the core count: fewer Python
     round trips for small batches, unchanged parallelism for large ones."""
@@ -496,20 +496,17 @@ def _packed_in(
     return df.join(F.broadcast(kdf), cols)
 
 
-def _est_blocks(spark: SparkSession, index: IndexHandle, terms: list[str]) -> int | None:
-    """Upper bound on the block rows of `terms` (one entry per occurrence),
-    None without the driver df map. Blocks are chunked per (term, shard),
-    so a term of df postings spread over S ≤ min(n_shards, df) shards
-    holds at most ceil(df / block_size) + S − 1 blocks, and never more
-    than df."""
-    dfm = index.df_map(spark)
-    if dfm is None:
-        return None
+def _est_blocks(spark: SparkSession, index: IndexHandle, terms: list[str]) -> int:
+    """Upper bound on the block rows of `terms` (one entry per occurrence).
+    Blocks are chunked per (term, shard), so a term of df postings spread
+    over S ≤ min(n_shards, df) shards holds at most ceil(df / block_size)
+    + S − 1 blocks, and never more than df."""
+    dfs = index.term_dfs(spark, terms)
     bs = int(index.manifest.get("block_size") or 128)
     n_shards = max(1, int(index.n_shards))
     total = 0
     for t in terms:
-        df = dfm.get(t, 0)
+        df = dfs.get(t, 0)
         if df:
             total += min(df, -(-df // bs) + min(n_shards, df) - 1)
     return total
@@ -546,46 +543,27 @@ def _query_blocks_from_pairs(
     """Pruned (query_id × matching block rows) of the index table `table`
     (segments or positions) with idf attached, for (query_id, term) pairs.
 
-    Fast path: the handle's driver-held df map (vocabulary-gated) computes
-    idf locally (_idf_rows: out-of-vocabulary pairs drop) and ships it
-    INSIDE the attach — one Spark job per query instead of two (no
-    term_dict scan). Fallback for 10^9-term vocabs: broadcast join against
-    term_dict, idf as a Spark expression. columns restricts the scan (the
-    metadata prune pass reads everything BUT the payload — parquet column
-    pruning keeps payload bytes on disk). Returns (blocks, qterms); qterms
-    is None on the literal-map attach."""
-    terms = sorted({t for _, t in qt})
-    seg = getattr(index, table)(spark).filter(isin("term", terms))
+    idf is computed on the driver (_idf_rows over IndexHandle.term_dfs, at
+    any vocabulary size: out-of-vocabulary pairs drop) and ships INSIDE the
+    attach — no term_dict scan or join in the plan. columns restricts the
+    scan (parquet column pruning keeps unread columns on disk). Returns
+    (blocks, qterms); qterms is None on the literal-map attach, the
+    (empty) broadcast side when no pair is in the vocabulary."""
+    seg = getattr(index, table)(spark).filter(isin("term", sorted({t for _, t in qt})))
     if columns is not None:
         seg = seg.select(*columns)
-    n_docs = float(index.n_docs)
-    dfm = index.df_map(spark)
-    if dfm is not None:
-        rows = _idf_rows(index, dfm, qt)
-        if rows:
-            # (query_id, idf) attach via LITERAL MAP expressions instead of a
-            # broadcast hash join: building + shipping even a one-row
-            # broadcast relation costs ~0.2 s per job (measured — it was the
-            # single largest piece of single-query latency), while a literal
-            # map lookup + explode is pure whole-stage-codegen work on the
-            # already-pruned scan. Terms absent from the map yield NULL →
-            # explode drops the row, exactly like the inner join it replaces.
-            blocks = _attach_query_terms(seg, rows)
-            return blocks, None
-        qterms = spark.createDataFrame(rows, "query_id int, term string, idf double")
-        blocks = seg.join(F.broadcast(qterms), "term")
-        return blocks, qterms
-    qterms = spark.createDataFrame(qt, "query_id int, term string")
-    td = index.term_dict(spark).filter(isin("term", terms)).select("term", "df")
-    blocks = (
-        seg.join(F.broadcast(td), "term")
-        .join(F.broadcast(qterms), "term")
-        # Spark-expr idf: formula-identical to _driver_idf
-        .withColumn(
-            "idf", F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        )
-    )
-    return blocks, qterms
+    rows = _idf_rows(spark, index, qt)
+    if rows:
+        # (query_id, idf) attach via LITERAL MAP expressions instead of a
+        # broadcast hash join: building + shipping even a one-row
+        # broadcast relation costs ~0.2 s per job (measured — it was the
+        # single largest piece of single-query latency), while a literal
+        # map lookup + explode is pure whole-stage-codegen work on the
+        # already-pruned scan. Terms absent from the map yield NULL →
+        # explode drops the row, exactly like the inner join it replaces.
+        return _attach_query_terms(seg, rows), None
+    qterms = spark.createDataFrame(rows, "query_id int, term string, idf double")
+    return seg.join(F.broadcast(qterms), "term"), qterms
 
 
 def _scoring_pairs(
@@ -594,18 +572,14 @@ def _scoring_pairs(
     pairs: list[tuple[int, str]],
     required: list[tuple[int, str]] = (),
 ) -> list[tuple[int, str]]:
-    """The (query_id, term) pairs of `pairs` that can match, in order. With
-    the df map held, an out-of-vocabulary term drops (the disjunctive
-    rule), and so does every pair of a query with an out-of-vocabulary
-    `required` pair: pass `pairs` itself for the conjunctive rule (a query
-    with an OOV term can never match). Without the df map every pair passes;
-    the term_dict join drops OOV terms and the kernels see no blocks for
-    them."""
-    dfm = index.df_map(spark)
-    if dfm is None:
-        return list(pairs)
-    dead = {q for q, t in required if t not in dfm}
-    return [(q, t) for q, t in pairs if t in dfm and q not in dead]
+    """The (query_id, term) pairs of `pairs` that can match, in order. An
+    out-of-vocabulary term drops (the disjunctive rule), and so does every
+    pair of a query with an out-of-vocabulary `required` pair: pass `pairs`
+    itself for the conjunctive rule (a query with an OOV term can never
+    match)."""
+    dfs = index.term_dfs(spark, {t for _, t in [*pairs, *required]})
+    dead = {q for q, t in required if t not in dfs}
+    return [(q, t) for q, t in pairs if t in dfs and q not in dead]
 
 
 _OUT_SCHEMA = "query_id int, doc_id long, score double"
@@ -675,17 +649,12 @@ def _overlap_mask(t: dict, sur_starts: np.ndarray, sur_ends: np.ndarray) -> np.n
     )
 
 
-def _est_postings(
-    spark: SparkSession, index: IndexHandle, pairs: list[tuple]
-) -> int | None:
-    """Σ df over the batch's (query, term, ...) pairs from the driver df map —
-    the posting volume the scoring exchange will carry (each pair ships its
-    term's blocks once per referencing query). None on huge vocabularies
-    (no df map) — callers then fall back to core-count-sized groups."""
-    dfm = index.df_map(spark)
-    if dfm is None:
-        return None
-    return sum(dfm.get(p[1], 0) for p in pairs)
+def _est_postings(spark: SparkSession, index: IndexHandle, pairs: list[tuple]) -> int:
+    """Σ df over the batch's (query, term, ...) pairs — the posting volume
+    the scoring exchange will carry (each pair ships its term's blocks once
+    per referencing query)."""
+    dfs = index.term_dfs(spark, {p[1] for p in pairs})
+    return sum(dfs.get(p[1], 0) for p in pairs)
 
 
 def _group_params(
@@ -762,22 +731,25 @@ def _rank_topk(
 def _serve_local(spark: SparkSession, index: IndexHandle, pairs: list[tuple]) -> bool:
     """Run a kernel call on the driver instead of in a Spark job?
 
-    Yes when the df map is held (idf and the volume estimate come from it)
-    and the batch's posting volume fits one TARGET_GROUP_POSTINGS group:
-    _batch_groups then plans one single-threaded task over the same rows,
-    so the driver does the same work minus the job. No threshold of its
-    own, and a 1-shard index or a 1-core session whose batch is bigger
-    than one group still scores in an executor task."""
-    est = _est_postings(spark, index, pairs)
-    return est is not None and est <= TARGET_GROUP_POSTINGS
+    Yes when the batch's posting volume (Σ df) fits one
+    TARGET_GROUP_POSTINGS group: _batch_groups then plans one
+    single-threaded task over the same rows, so the driver does the same
+    work minus the job. No threshold of its own, and a 1-shard index or a
+    1-core session whose batch is bigger than one group still scores in an
+    executor task."""
+    return _est_postings(spark, index, pairs) <= TARGET_GROUP_POSTINGS
 
 
-def _idf_rows(index: IndexHandle, dfm: dict, pairs: list[tuple[int, str]]) -> list[tuple[int, str, float]]:
-    """(query_id, term, idf) for each (query_id, term) pair, idf from the
-    driver df map; terms absent from the vocabulary score nothing and drop.
-    The one resolution rule of the Spark and driver-local plans."""
+def _idf_rows(
+    spark: SparkSession, index: IndexHandle, pairs: list[tuple[int, str]]
+) -> list[tuple[int, str, float]]:
+    """(query_id, term, idf) for each (query_id, term) pair, idf from
+    IndexHandle.term_dfs; terms absent from the vocabulary score nothing
+    and drop. The one resolution rule of the Spark and driver-local
+    plans."""
+    dfs = index.term_dfs(spark, {t for _, t in pairs})
     n_docs = float(index.n_docs)
-    return [(q, t, _driver_idf(n_docs, dfm[t])) for q, t in pairs if t in dfm]
+    return [(q, t, _driver_idf(n_docs, dfs[t])) for q, t in pairs if t in dfs]
 
 
 def _local_blocks(
@@ -927,9 +899,12 @@ def _grouped_apply(
     return part.mapInPandas(mfn, out_schema)
 
 
-# block columns (after idf is attached) the BM25 kernels read; the typo
-# kernels read only the payloads, the positional kernels position blocks
+# block columns (after idf is attached) the BM25 kernels read: exhaustive
+# scoring needs no block bounds, only first_doc to tell apart the blocks of
+# a term (rows fanned out per query repeat a block); the typo kernels read
+# only the payloads, the positional kernels position blocks
 _SCORE_COLS = ["term", "idf", "n", "first_doc", "last_doc", "max_tf", "min_dl", "payload"]
+_EXHAUSTIVE_COLS = ["term", "idf", "n", "first_doc", "payload"]
 _PAYLOAD_COLS = ["term", "idf", "n", "payload"]
 _POS_COLS = ["term", "idf", "n", "first_doc", "header", "positions"]
 
@@ -974,9 +949,9 @@ def _serve_kernel(
     once per query_id ("qshard" and "terms": once).
 
     Driver: the block rows are read with pyarrow (_local_blocks), idf is
-    attached from the df map (a "qshard" kernel takes the (query_id, term,
-    idf) triples as its `queries` arrays: no per-query fan-out of rows), and
-    _rank_local ranks into a local relation: no Spark job. Spark: the block
+    attached from IndexHandle.term_dfs (a "qshard" kernel takes the
+    (query_id, term, idf) triples as its `queries` arrays: no per-query
+    fan-out of rows), and _rank_local ranks into a local relation: no Spark job. Spark: the block
     attach (_query_blocks_from_pairs, or the term-union scan), then
     `prepass` (blocks -> blocks, or None when the call has no rows: the
     Spark-only pass-1, shard and span prunes, which only shrink an exchange
@@ -984,13 +959,12 @@ def _serve_kernel(
     _rank_topk."""
     if columns is None:
         columns = _SCORE_COLS if table == "segments" else _POS_COLS
-    dfm = index.df_map(spark)
-    terms = sorted({t for _, t in pairs if dfm is None or t in dfm})
+    terms = sorted(index.term_dfs(spark, {t for _, t in pairs}))
     if k is not None and _serve_local(spark, index, pairs):
         out = None
         if terms:
             pdf = _local_blocks(index, table, terms, [c for c in columns if c != "idf"])
-            qt = _idf_rows(index, dfm, pairs)
+            qt = _idf_rows(spark, index, pairs)
             if groups == "qshard":  # the BM25 batch kernel takes the queries as arrays
                 fn = functools.partial(fn, queries=tuple(np.array(c) for c in zip(*qt)))
             elif groups == "query_shard":
@@ -1032,12 +1006,17 @@ def _search_from_pairs(
 ) -> DataFrame:
     if mode == "wand_pruned":
         return _search_pruned(spark, index, pairs, k)
-    make = {"exhaustive": _make_exhaustive, "wand": _make_wand_batched}.get(mode)
-    if make is None:
+    kernels = {
+        "exhaustive": (_make_exhaustive, _EXHAUSTIVE_COLS),
+        "wand": (_make_wand_batched, _SCORE_COLS),
+    }
+    if mode not in kernels:
         raise ValueError(f"unknown mode {mode!r}")
+    make, columns = kernels[mode]
     fn = make(float(index.avgdl), int(k), index.payload_codec)
     return _serve_kernel(
-        spark, index, pairs, fn, _OUT_SCHEMA, int(k), groups="qshard", prepass=prepass
+        spark, index, pairs, fn, _OUT_SCHEMA, int(k), columns=columns, groups="qshard",
+        prepass=prepass,
     )
 
 
@@ -1066,11 +1045,12 @@ def _search_pruned(
     crosses the shuffle (the top r2 scale item — BASELINE.md measured that
     payload shuffle duplication dominates serving at scale).
 
-    Pass 1 ships only block metadata (~30 B/block vs KB payloads) into the
-    per-(query, qshard) groups, computes a metadata-only θ lower bound and
-    the surviving block set (see _make_meta_prune). Pass 2 joins the
-    survivors back against the segment table — AQE broadcasts the survivor
-    list when pruning bites, so ONLY surviving payloads cross the exchange
+    Pass 1 ships only block metadata (~30 B/block vs KB payloads), each
+    distinct block once, into qshard partitions, computes a metadata-only θ
+    lower bound per query and the surviving block set (see
+    _make_meta_prune_shared). Pass 2 joins the survivors back against the
+    segment table — AQE broadcasts the survivor list when pruning bites,
+    so ONLY surviving payloads cross the exchange
     into the scoring UDF (which is the standard batched block-max WAND and
     re-derives its own tighter decoded θ on the surviving subset). Shuffled
     payload bytes become ∝ survivors instead of ∝ all query-term blocks —
@@ -1158,103 +1138,53 @@ def survivor_blocks(
     bench can report |survivors| / |query-term blocks| — the shuffled-bytes
     pruning ratio the two-pass plan exists for.
 
-    Low-df (sparse) query terms contribute their PAYLOADS to the metadata
-    pass (bounded by sparse_df_max postings per term); high-df terms ship
-    metadata only. Requires the driver df map for the sparse split; falls
-    back to pure metadata without it.
+    DISTINCT-BLOCK pass 1: the query structure (terms per query, idf per
+    term) is resolved on the driver from IndexHandle.term_dfs, and each
+    block's metadata ships ONCE — a per-query fan-out would multiply the
+    exchange by the number of referencing queries (64× for the zipf batch's
+    common terms); _make_meta_prune_shared rebuilds the per-query views.
+    Low-df (sparse, df ≤ sparse_df_max) query terms contribute their
+    PAYLOADS too; high-df (dense) terms ship metadata only.
 
     A query with no dense term keeps every block (its θ comes from dense
-    block metadata), so when the df map shows no in-vocabulary query term
-    with df > sparse_df_max — every term of an index under sparse_df_max
-    docs — pass 1 cannot prune. The result is then the lazy scan of every
-    query-term block key, built with no job and marked so the two-pass
-    callers serve their single-pass plan instead (_keeps_every_block)."""
-    avgdl = float(index.avgdl)
-    g, n_part = _batch_groups(spark, index, pairs)
-    dfm = index.df_map(spark)
-    if dfm is not None:
-        # DISTINCT-BLOCK pass 1: resolve the query structure driver-side
-        # (terms per query + idf per term) and ship each block's metadata
-        # once — the per-query fan-out would multiply the exchange by the
-        # number of referencing queries (64× for the zipf batch's common
-        # terms). The kernel rebuilds per-query views and runs the same
-        # _prune_query_entries math as the fanned-out path.
-        terms_by_q: dict[int, list[str]] = {}
-        for q, t in pairs:
-            if t in dfm:
-                terms_by_q.setdefault(q, []).append(t)
-        all_terms = sorted({t for ts in terms_by_q.values() for t in ts})
-        if not all_terms:
-            return _empty_result(spark, _SURVIVOR_SCHEMA)
-        sparse_terms = sorted(t for t in all_terms if dfm[t] <= sparse_df_max)
-        dense_terms = sorted(t for t in all_terms if dfm[t] > sparse_df_max)
-        if not dense_terms:
-            every, _ = _query_blocks_from_pairs(
-                spark, index, sorted(set(pairs)),
-                columns=["term", "shard", "block_id"],
-            )
-            every = every.select("query_id", "term", "shard", "block_id")
-            every._keeps_every_block = True
-            return every
-        n_docs = float(index.n_docs)
-        idfs = {t: _driver_idf(n_docs, dfm[t]) for t in all_terms}
-        seg = index.segments(spark)
-        meta = None
-        if dense_terms:
-            meta = (
-                seg.filter(isin("term", dense_terms))
-                .select(*_META_COLS)
-                .withColumn("payload", F.lit(None).cast("binary"))
-            )
-        if sparse_terms:
-            ms = seg.filter(isin("term", sparse_terms)).select(
-                *_META_COLS, "payload"
-            )
-            meta = ms if meta is None else meta.unionByName(ms)
-        return _grouped_apply(
-            meta.select(
-                (F.col("shard") / g).cast("int").alias("qshard"),
-                *_META_COLS,
-                "payload",
-            ),
-            ["qshard"],
-            _make_meta_prune_shared(
-                terms_by_q, idfs, avgdl, int(k), index.payload_codec
-            ),
-            _SURVIVOR_SCHEMA,
-            n_part,
-            slice_groups=False,
-        )
-    sparse = {
-        t for _, t in pairs if dfm is not None and dfm.get(t, 1 << 62) <= sparse_df_max
-    }
-    sparse_pairs = [(q, t) for q, t in pairs if t in sparse]
-    dense_pairs = [(q, t) for q, t in pairs if t not in sparse]
-    if not sparse_pairs and not dense_pairs:
+    block metadata), so when no in-vocabulary query term has df >
+    sparse_df_max — every term of an index under sparse_df_max docs — pass
+    1 cannot prune. The result is then the lazy scan of every query-term
+    block key, built with no job and marked so the two-pass callers serve
+    their single-pass plan instead (_keeps_every_block)."""
+    dfs = index.term_dfs(spark, {t for _, t in pairs})
+    if not dfs:
         return _empty_result(spark, _SURVIVOR_SCHEMA)
-    meta = None
-    if dense_pairs:
-        md, _ = _query_blocks_from_pairs(spark, index, dense_pairs, columns=_META_COLS)
-        meta = md.withColumn("payload", F.lit(None).cast("binary"))
-    if sparse_pairs:
-        ms, _ = _query_blocks_from_pairs(
-            spark, index, sparse_pairs, columns=_META_COLS + ["payload"]
+    sparse_terms = sorted(t for t, df in dfs.items() if df <= sparse_df_max)
+    dense_terms = sorted(t for t, df in dfs.items() if df > sparse_df_max)
+    if not dense_terms:
+        every, _ = _query_blocks_from_pairs(
+            spark, index, sorted(set(pairs)), columns=["term", "shard", "block_id"]
         )
-        meta = ms if meta is None else meta.unionByName(ms)
-    # grouped by qshard ONLY (queries loop inside the UDF): the prune math
-    # is a few hundred numpy ops per query, so per-(query, qshard) groups
-    # would pay ~batch_size× more pandas group overhead than compute —
-    # measured 3× wall-clock on a 64-query batch. Metadata volume per qshard
-    # group is (batch's query-term blocks)/n_qshards — small by construction.
+        every = every.select("query_id", "term", "shard", "block_id")
+        every._keeps_every_block = True
+        return every
+    terms_by_q: dict[int, list[str]] = {}
+    for q, t in pairs:
+        if t in dfs:
+            terms_by_q.setdefault(q, []).append(t)
+    n_docs = float(index.n_docs)
+    idfs = {t: _driver_idf(n_docs, df) for t, df in dfs.items()}
+    seg = index.segments(spark)
+    meta = (
+        seg.filter(isin("term", dense_terms))
+        .select(*_META_COLS)
+        .withColumn("payload", F.lit(None).cast("binary"))
+    )
+    if sparse_terms:
+        ms = seg.filter(isin("term", sparse_terms)).select(*_META_COLS, "payload")
+        meta = meta.unionByName(ms)
+    g, n_part = _batch_groups(spark, index, pairs)
+    fn = _make_meta_prune_shared(terms_by_q, idfs, float(index.avgdl), int(k), index.payload_codec)
     return _grouped_apply(
-        meta.select(
-            "query_id",
-            (F.col("shard") / g).cast("int").alias("qshard"),
-            "term", "shard", "block_id", "idf", "n", "first_doc", "last_doc",
-            "max_tf", "min_dl", "min_tf", "max_dl", "payload",
-        ),
+        meta.select((F.col("shard") / g).cast("int").alias("qshard"), *_META_COLS, "payload"),
         ["qshard"],
-        _make_meta_prune(avgdl, int(k), index.payload_codec),
+        fn,
         _SURVIVOR_SCHEMA,
         n_part,
         slice_groups=False,
@@ -1262,8 +1192,9 @@ def survivor_blocks(
 
 
 def _keeps_every_block(survivors: DataFrame) -> bool:
-    """True when survivor_blocks decided from the df map that pass 1 keeps
-    every query-term block: a two-pass plan would only add its cost."""
+    """True when survivor_blocks decided from the query terms' dfs that
+    pass 1 keeps every query-term block: a two-pass plan would only add its
+    cost."""
     return getattr(survivors, "_keeps_every_block", False)
 
 
@@ -1288,7 +1219,7 @@ def search_topk_auto(
     the driver has no exchange for it to shrink, and serves the
     single-pass plan there with no job (same rows — both plans are exact).
     So does a batch whose query terms are all sparse (survivor_blocks says
-    so from the df map, with no job), and a pre-v2 index."""
+    so from the query terms' dfs, with no job), and a pre-v2 index."""
     pairs = _tokenize_queries(queries)
 
     def pass1(blocks: DataFrame) -> DataFrame | None:
@@ -1315,13 +1246,26 @@ def search_topk_auto(
     return _search_from_pairs(spark, index, pairs, k, "wand", prepass=pass1)
 
 
-def _make_meta_prune(avgdl: float, k: int, codec: str = "none"):
-    """Pass-1 UDF: surviving (term, shard, block_id) of one (query, qshard)
-    group. Input is block METADATA for dense terms; sparse (low-df) terms
-    additionally carry their payloads (tiny by the sparse_df_max bound).
+def _make_meta_prune_shared(
+    terms_by_q: dict[int, list[str]],
+    idfs: dict[str, float],
+    avgdl: float,
+    k: int,
+    codec: str = "none",
+):
+    """Pass-1 kernel: surviving (query_id, term, shard, block_id) of every
+    query of `terms_by_q` over one partition of DISTINCT block rows (no
+    per-query fan-out: the exchange ships each block's metadata ONCE, ≈
+    |blocks| rows instead of |queries| × |blocks| — 64× less on the zipf
+    batch, where two common terms appear in every query). Input is block
+    METADATA for dense terms; sparse (low-df) terms also carry their
+    payloads (tiny by the sparse_df_max bound). Rows are ordered by (term
+    name, first_doc) with factorize and lexsort, as in _bm25_slice, and
+    each term's entry (incl. the sparse decode) is built once and shared by
+    every query that uses the term; the per-query θ/range/emit math is
+    _prune_query_entries.
 
-    θ is the max of two valid lower bounds on the group's kth-best FULL
-    score:
+    θ is the max of valid lower bounds on a query's kth-best FULL score:
     - θ_meta (dense terms): each block guarantees every one of its docs
       scores at least lb = idf · tfpart(min_tf, max_dl) from that term alone
       (tfpart is increasing in tf, decreasing in dl — the dual of the
@@ -1331,90 +1275,38 @@ def _make_meta_prune(avgdl: float, k: int, codec: str = "none"):
     - θ_seed (sparse terms): decode the sparse payloads and aggregate each
       doc's EXACT sparse-term contribution; the kth-largest partial score is
       ≤ the kth-best full score whenever ≥ k docs exist.
+    - the cross-term bound (_cross_term_theta).
 
-    Range analysis (as in _make_wand_batched phase 2, block boundaries →
-    covering-block UB sums), with the sparse refinement: a decoded sparse
-    posting contributes its EXACT score at exactly its own doc position
-    (a unit-width pseudo-block) instead of a block-span UB — so ranges
-    between sparse postings carry zero sparse mass and die when the dense
-    UBs alone can't reach θ. A dense block survives iff it overlaps a
-    surviving range; sparse blocks always ship (they are the small side).
-    θ = −1 (no bound available) keeps everything — never lossy."""
-    # snapshot the A/B toggle at PLAN time (driver): _prune_one_query is a
-    # top-level function — workers import it by reference and would read the
-    # module DEFAULT, not the driver's setting; a closure variable is
-    # pickled by value and travels with the plan
+    Range analysis (as in _block_max, block boundaries → covering-block UB
+    sums), with the sparse refinement: a decoded sparse posting contributes
+    its EXACT score at exactly its own doc position (a unit-width
+    pseudo-block) instead of a block-span UB — so ranges between sparse
+    postings carry zero sparse mass and die when the dense UBs alone can't
+    reach θ. A dense block survives iff it overlaps a surviving range;
+    sparse blocks always ship (they are the small side). θ = −1 (no bound
+    available) keeps everything — never lossy."""
+    # snapshot the A/B toggle at PLAN time (driver): a closure variable is
+    # pickled by value and travels with the plan, where workers importing
+    # the module would read its default
     cross_term = CROSS_TERM_THETA
 
     def fn(pdf: pd.DataFrame) -> pd.DataFrame:
         empty = empty_frame(_SURVIVOR_SCHEMA)
         if len(pdf) == 0:
             return empty
-        # one qshard group holds EVERY query of the batch: sort once, slice
-        # per query, run the prune per slice (decoded sparse payloads are
-        # cached across queries sharing a (term, shard, block) — common in
-        # real batches)
-        pdf = pdf.sort_values(["query_id", "term", "first_doc"], kind="stable")
-        q_np = pdf["query_id"].to_numpy()
-        qstarts = np.concatenate(
-            ([0], np.flatnonzero(q_np[1:] != q_np[:-1]) + 1, [q_np.size])
+        codes, names = pd.factorize(pdf["term"].to_numpy(), sort=True)
+        order = np.lexsort((pdf["first_doc"].to_numpy(), codes))
+        first_np, last_np, ns_np, shard_np, bid_np, pay_np = (
+            pdf[c].to_numpy()[order]
+            for c in ("first_doc", "last_doc", "n", "shard", "block_id", "payload")
         )
-        decoded_cache: dict = {}
-        outs = []
-        for qi in range(qstarts.size - 1):
-            out = _prune_one_query(
-                pdf.iloc[int(qstarts[qi]) : int(qstarts[qi + 1])],
-                avgdl, k, codec, decoded_cache, empty, cross_term,
-            )
-            if len(out):
-                outs.append(out)
-        return pd.concat(outs, ignore_index=True) if outs else empty
-
-    return fn
-
-
-def _make_meta_prune_shared(
-    terms_by_q: dict[int, list[str]],
-    idfs: dict[str, float],
-    avgdl: float,
-    k: int,
-    codec: str = "none",
-):
-    """Pass-1 kernel over DISTINCT block rows (no per-query fan-out): the
-    exchange ships each block's metadata ONCE (≈ |blocks| rows instead of
-    |queries| × |blocks| — 64× less on the zipf batch, where two common
-    terms appear in every query), and the per-query views are reconstructed
-    here from the driver-known query structure, exactly like the
-    shared-decode scorer. Per-term entries (incl. the sparse decode) are
-    built once per partition and shared across every query that uses the
-    term; the per-query θ/range/emit math is _prune_query_entries — the
-    same function the fanned-out kernel calls, so the two plans cannot
-    drift."""
-    cross_term = CROSS_TERM_THETA
-
-    def fn(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = empty_frame(_SURVIVOR_SCHEMA)
-        if len(pdf) == 0:
-            return empty
-        pdf = pdf.sort_values(["term", "first_doc"], kind="stable")
-        t_np = pdf["term"].to_numpy()
-        first_np = pdf["first_doc"].to_numpy()
-        last_np = pdf["last_doc"].to_numpy()
-        ns_np = pdf["n"].to_numpy()
-        shard_np = pdf["shard"].to_numpy()
-        bid_np = pdf["block_id"].to_numpy()
-        pay_np = pdf["payload"].to_numpy()
-        max_tf = pdf["max_tf"].to_numpy().astype(np.float64)
-        min_dl = pdf["min_dl"].to_numpy().astype(np.float64)
-        min_tf = pdf["min_tf"].to_numpy().astype(np.float64)
-        max_dl = pdf["max_dl"].to_numpy().astype(np.float64)
-        starts = np.concatenate(
-            ([0], np.flatnonzero(t_np[1:] != t_np[:-1]) + 1, [t_np.size])
+        max_tf, min_dl, min_tf, max_dl = (
+            pdf[c].to_numpy()[order].astype(np.float64)
+            for c in ("max_tf", "min_dl", "min_tf", "max_dl")
         )
+        starts = np.searchsorted(codes[order], np.arange(len(names) + 1))
         entries: dict[str, dict] = {}
-        for si in range(starts.size - 1):
-            s, e = int(starts[si]), int(starts[si + 1])
-            term = t_np[s]
+        for term, s, e in zip(names, starts[:-1], starts[1:]):
             idf = float(idfs[term])
             entry = {
                 "term": term,
@@ -1556,9 +1448,8 @@ def _prune_query_entries(
 ) -> pd.DataFrame:
     """Prune one query given its per-term entries (dense entries carry
     block-granular first/last/ub/lb/nb + the per-term θ candidate; sparse
-    entries are exact decoded pseudo-blocks). Shared by the per-query kernel
-    (_prune_one_query) and the distinct-block kernel
-    (_make_meta_prune_shared) — the θ/range/emit math lives exactly once."""
+    entries are exact decoded pseudo-blocks): the per-query θ/range/emit
+    math of _make_meta_prune_shared."""
     theta = max([-1.0] + [float(t["theta_cand"]) for t in terms])
     if sparse_terms:
         sd = np.concatenate([t["first"] for t in sparse_terms])
@@ -1615,75 +1506,6 @@ def _dense_theta_cand(lb: np.ndarray, ns: np.ndarray, k: int) -> float:
         j = int(np.searchsorted(c, k))
         return float(lb[order][j])
     return -1.0
-
-
-def _prune_one_query(
-    pdf: pd.DataFrame, avgdl: float, k: int, codec: str, decoded_cache: dict,
-    empty: pd.DataFrame, cross_term: bool = True,
-) -> pd.DataFrame:
-    """Prune one query's blocks within one qshard group (see _make_meta_prune
-    for the math). pdf is pre-sorted by (term, first_doc)."""
-    qid = int(pdf["query_id"].iloc[0])
-    t_np = pdf["term"].to_numpy()
-    idf_np = pdf["idf"].to_numpy().astype(np.float64)
-    first_np = pdf["first_doc"].to_numpy()
-    last_np = pdf["last_doc"].to_numpy()
-    ns_np = pdf["n"].to_numpy()
-    shard_np = pdf["shard"].to_numpy()
-    bid_np = pdf["block_id"].to_numpy()
-    pay_np = (
-        pdf["payload"].to_numpy() if "payload" in pdf.columns
-        else np.full(t_np.size, None, dtype=object)
-    )
-    ub_all = idf_np * tfpart(
-        pdf["max_tf"].to_numpy().astype(np.float64),
-        pdf["min_dl"].to_numpy().astype(np.float64),
-        avgdl,
-    )
-    lb_all = idf_np * tfpart(
-        pdf["min_tf"].to_numpy().astype(np.float64),
-        pdf["max_dl"].to_numpy().astype(np.float64),
-        avgdl,
-    )
-    starts = np.concatenate(
-        ([0], np.flatnonzero(t_np[1:] != t_np[:-1]) + 1, [t_np.size])
-    )
-    terms = []          # dense: block-granular entries for range math
-    sparse_terms = []   # sparse: exact per-doc pseudo-blocks
-    for si in range(starts.size - 1):
-        s, e = int(starts[si]), int(starts[si + 1])
-        entry = {
-            "term": t_np[s],
-            "shard": shard_np[s:e],
-            "bid": bid_np[s:e],
-        }
-        if pay_np[s] is not None:
-            # sparse term: decode now — exact positions + contributions.
-            # Cached across the group's queries: a batch's queries share
-            # terms, and each (term, blocks) decodes once per qshard group
-            ck = (t_np[s], int(shard_np[s]), int(bid_np[s]), e - s)
-            hit = decoded_cache.get(ck)
-            if hit is None:
-                hit = decode_blocks(pay_np[s:e], ns_np[s:e], codec)
-                decoded_cache[ck] = hit
-            d, tf, dl = hit
-            c = bm25(float(idf_np[s]), tf, dl, avgdl)
-            entry["first"] = d
-            entry["last"] = d
-            entry["ub"] = c
-            entry["lb"] = c  # exact — the pseudo-block's bound is its score
-            entry["nb"] = np.ones(d.size, dtype=np.int64)
-            sparse_terms.append(entry)
-            continue
-        entry["first"] = first_np[s:e]
-        entry["last"] = last_np[s:e]
-        entry["ub"] = ub_all[s:e]
-        entry["lb"] = lb_all[s:e]
-        entry["nb"] = ns_np[s:e]
-        entry["theta_cand"] = _dense_theta_cand(lb_all[s:e], ns_np[s:e], k)
-        terms.append(entry)
-    return _prune_query_entries(qid, terms, sparse_terms, k, empty, cross_term)
-
 
 
 def _resolve_live(
@@ -1871,14 +1693,11 @@ def search_topk_shared(
     would keep every block — survivor_blocks).
 
     A call that fits one kernel group (_serve_local) runs on the driver with
-    no Spark job and no pass 1 (there is no exchange to shrink). Without the
-    driver-held df map (huge vocabularies) it serves the wand path."""
+    no Spark job and no pass 1 (there is no exchange to shrink). idf comes
+    from IndexHandle.term_dfs at any vocabulary size."""
     pairs = _tokenize_queries(queries)
-    dfm = index.df_map(spark)
-    if dfm is None:  # 10^9-term vocab: no driver idf map — per-query path
-        return _search_from_pairs(spark, index, pairs, k, "wand")
     kk = int(k)
-    qinfo = _idf_rows(index, dfm, pairs)
+    qinfo = _idf_rows(spark, index, pairs)
     terms = sorted({t for _, t, _ in qinfo})
     if not terms:
         return _empty_result(spark, _OUT_SCHEMA)
@@ -2374,8 +2193,8 @@ def typo_slot_expansion(
     """Shared expansion stage of the typoTolerance serving paths:
     (qslots, slot_meta, pairs) where qslots = qid -> ordered deduped query
     words, slot_meta = qid -> term -> [(slot, distance)], pairs = the
-    (qid, term) scan list. Exact words probe the driver df map when it is
-    held, else the dictionary (In-pruned); 1- and 2-edit words expand
+    (qid, term) scan list. Exact words probe IndexHandle.term_dfs; 1- and
+    2-edit words expand
     through expand_fuzzy_queries (the driver neighborhood test or the
     SymSpell deletion table) — no bucket scans the vocabulary."""
     qslots = _query_slots(queries)
@@ -2387,15 +2206,7 @@ def typo_slot_expansion(
             by_budget[settings.budget(qterm)].setdefault(qid, []).append(qterm)
     pairs: list[tuple[int, str]] = []
     if by_budget[0]:
-        zero_terms = sorted({t for ts in by_budget[0].values() for t in ts})
-        dfm = index.df_map(spark)
-        present = set(zero_terms) & dfm.keys() if dfm is not None else {
-            r["term"]
-            for r in index.term_dict(spark)
-            .filter(isin("term", zero_terms))
-            .select("term")
-            .collect()
-        }
+        present = index.term_dfs(spark, {t for ts in by_budget[0].values() for t in ts})
         pairs.extend(
             (qid, t)
             for qid, ts in by_budget[0].items()
@@ -2997,35 +2808,21 @@ def search_topk_matching_frequency(
     sits at slot 0, and is never dropped: its query matches nothing —
     Meilisearch's dropping likewise never removes it.
 
-    Scale: slot assignment needs df ONLY for the query's own terms — the
-    driver-held df map when the vocabulary is map-gated, else a pruned
-    In(term) term_dict scan collected to the driver (bounded by query word
-    count, never by vocabulary). (query_id, doc_id, matched_prefix,
-    score)."""
+    Scale: slot assignment needs df ONLY for the query's own terms
+    (IndexHandle.term_dfs: bounded by query word count, never by
+    vocabulary). (query_id, doc_id, matched_prefix, score)."""
     pairs = _tokenize_queries(queries)
     if not pairs:
         return _empty_result(
             spark, "query_id int, doc_id long, matched_prefix int, score double"
         )
-    terms = sorted({t for _, t in pairs})
-    dfm = index.df_map(spark)
-    if dfm is not None:
-        df_of = {t: int(dfm.get(t, 0)) for t in terms}
-    else:
-        got = (
-            index.term_dict(spark)
-            .filter(isin("term", terms))
-            .select("term", "df")
-            .collect()
-        )
-        known = {r["term"]: int(r["df"]) for r in got}
-        df_of = {t: known.get(t, 0) for t in terms}
+    dfs = index.term_dfs(spark, {t for _, t in pairs})
     by_query: dict[int, list[str]] = {}
     for qid, t in pairs:
         by_query.setdefault(qid, []).append(t)
     slot_rows: list[tuple[int, str, int]] = []
     for qid, ts in by_query.items():
-        for slot, t in enumerate(sorted(ts, key=lambda t: (df_of[t], t))):
+        for slot, t in enumerate(sorted(ts, key=lambda t: (dfs.get(t, 0), t))):
             slot_rows.append((qid, t, slot))
     return _matched_prefix_topk(spark, index, pairs, slot_rows, k)
 

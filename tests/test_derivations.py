@@ -202,8 +202,8 @@ def test_word_splits_mixed_word_and_split(spark, deriv_index):
 
 
 def test_word_splits_large_vocab_fallback(spark, deriv_index, monkeypatch):
-    """df_map -> None (the 10^9-term path): the term_dict In-scan vocab probe
-    and the Spark-expr idf fallback must give the same answer."""
+    """df_map -> None (the 10^9-term path): the vocab probe and idf from
+    IndexHandle.term_dfs's term_dict lookup must give the same answer."""
     from grenad_spark.index.build import IndexHandle
     from grenad_spark.query.derivations import search_topk_word_splits
 

@@ -125,7 +125,7 @@ def test_search_on_all_fields_scores_like_search_topk(spark, fields_index):
     pairs = S._tokenize_queries(queries)
     avgdl, codec = float(idx.avgdl), idx.payload_codec
     qt = pd.DataFrame(
-        S._idf_rows(idx, idx.df_map(spark), pairs), columns=["query_id", "term", "idf"]
+        S._idf_rows(spark, idx, pairs), columns=["query_id", "term", "idf"]
     )
 
     def scores(table, fn):
@@ -343,11 +343,10 @@ def test_typo_disable_attrs_bruteforce(spark, fields_index):
 
 
 def test_field_paths_large_vocab_fallback(spark, fields_index, monkeypatch):
-    """Force the >IDF_MAP_MAX_TERMS fallback (df_map() -> None): the fields
+    """Force the >IDF_MAP_MAX_TERMS lookup (df_map() -> None): the fields
     family, matches, geo, the attribute rule and the ranked pipeline take
-    their idf from the term_dict broadcast of the shared block attach and
-    must return the rows of the df-map plan, OOV and conjunctive queries
-    included."""
+    their idf from IndexHandle.term_dfs's term_dict lookup and must return
+    the rows of the df-map plan, OOV and conjunctive queries included."""
     from grenad_spark.index.build import IndexHandle
     from grenad_spark.query import fields as FL, geo as G, matches as M, ranked as R
     from grenad_spark.query.search import TypoSettings

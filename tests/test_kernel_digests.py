@@ -196,8 +196,8 @@ class _Index:
     def __init__(self, codec):
         self.payload_codec = codec
 
-    def df_map(self, _spark):
-        return DF
+    def term_dfs(self, _spark, terms):
+        return {t: DF[t] for t in terms if t in DF}
 
 
 def _shared(monkeypatch, codec, entry, table, queries):
@@ -293,7 +293,6 @@ def _outputs(codec, merged, monkeypatch) -> dict[str, list]:
         _groups("segments", codec, bow, meta_cols, False), ignore_index=True
     )
     prune_in.loc[prune_in["term"].map(DF) > 6, "payload"] = None
-    out["meta_prune"] = [search._make_meta_prune(AVGDL, K, codec)(prune_in)]
     distinct_blocks = prune_in.drop(columns=["query_id", "idf"]).drop_duplicates(
         ["term", "shard", "block_id"]
     )
@@ -367,9 +366,6 @@ PINNED: dict[str, str] = {
     "matches/per_shard": (
         "9107c0a500243edf4a1c8856fafdc1b9631f1f724d305a833683c28ef5e931ed"
     ),
-    "meta_prune/per_shard": (
-        "23252d0d3ae7c695b8e2c01ded6604057b87e0cc0808b38d01fa69f396d60403"
-    ),
     "meta_prune_shared/per_shard": (
         "23252d0d3ae7c695b8e2c01ded6604057b87e0cc0808b38d01fa69f396d60403"
     ),
@@ -426,9 +422,6 @@ PINNED: dict[str, str] = {
     ),
     "matches/merged": (
         "9107c0a500243edf4a1c8856fafdc1b9631f1f724d305a833683c28ef5e931ed"
-    ),
-    "meta_prune/merged": (
-        "23252d0d3ae7c695b8e2c01ded6604057b87e0cc0808b38d01fa69f396d60403"
     ),
     "meta_prune_shared/merged": (
         "23252d0d3ae7c695b8e2c01ded6604057b87e0cc0808b38d01fa69f396d60403"

@@ -495,11 +495,11 @@ def test_mixed_query_matches_bruteforce(spark, phrase_index):
 
 
 def test_phrase_paths_large_vocab_fallback(spark, phrase_index, monkeypatch):
-    """Force the >IDF_MAP_MAX_TERMS fallback (df_map() -> None): every
-    phrase-family path must build idf from a term_dict broadcast with Spark
-    exprs and return results identical to the df-map plan. Regression for
-    r4 ADVICE: the fallback crashed at plan build (NumPy _idf applied to a
-    Column) in every path below."""
+    """Force the >IDF_MAP_MAX_TERMS lookup (df_map() -> None): every
+    phrase-family path must take idf from IndexHandle.term_dfs's term_dict
+    lookup and return results identical to the df-map plan. Regression: an
+    earlier fallback crashed at plan build (NumPy _idf applied to a Column)
+    in every path below."""
     from grenad_spark.index.build import IndexHandle
     from grenad_spark.query import phrase as ph
 

@@ -230,6 +230,81 @@ def test_shared_batch_pruned_equals_exhaustive(spark, index_small):
     assert sp == ex and len(ex) > 0
 
 
+def test_bm25_paths_large_vocab_fallback(spark, index_small, monkeypatch):
+    """Force the >IDF_MAP_MAX_TERMS lookup (df_map() -> None): every BM25
+    path takes its dfs from IndexHandle.term_dfs's term_dict lookup and
+    must return the rows of the held-map plan — wand, exhaustive,
+    wand_pruned with pass 1 run on Spark, auto, shared (pruned or not),
+    matching_frequency and typo settings with a zero-typo slot."""
+    from functools import partial
+
+    import grenad_spark.query.search as S
+
+    qs = REFERENCE_QUERIES
+    freq_qs = [(1, "merge sort data"), (2, "stream zzzzunknown"), (3, "batch")]
+    typo_qs = [(1, "sort mrege"), (2, "data striam")]  # 4-char words: no typo
+
+    def run_all():
+        calls = {
+            "wand": lambda: search_topk(spark, index_small, qs, k=10, mode="wand"),
+            "exhaustive": lambda: search_topk(spark, index_small, qs, k=10, mode="exhaustive"),
+            "auto": lambda: S.search_topk_auto(spark, index_small, qs, k=10),
+            "shared": lambda: S.search_topk_shared(spark, index_small, qs, k=10),
+            "shared_pruned": lambda: S.search_topk_shared(
+                spark, index_small, qs, k=10, prune=True
+            ),
+            "matching_frequency": lambda: S.search_topk_matching_frequency(
+                spark, index_small, freq_qs, k=10
+            ),
+            "typo_settings": lambda: S.search_topk_typo_settings(
+                spark, index_small, typo_qs, S.TypoSettings(), k=10
+            ),
+        }
+        out = {name: sorted(map(tuple, fn().collect())) for name, fn in calls.items()}
+        # pass 1 runs only on the Spark path, and only with a dense term
+        with monkeypatch.context() as m:
+            m.setattr(S, "_serve_local", lambda *a: False)
+            m.setattr(S, "survivor_blocks", partial(S.survivor_blocks, sparse_df_max=0))
+            out["wand_pruned"] = sorted(map(tuple, search_topk(
+                spark, index_small, qs, k=10, mode="wand_pruned").collect()))
+        return out
+
+    baseline = run_all()
+    assert all(baseline.values()), baseline
+    assert baseline["wand_pruned"] == baseline["exhaustive"]
+    monkeypatch.setattr(IndexHandle, "IDF_MAP_MAX_TERMS", 0)
+    monkeypatch.delattr(index_small, "_df_map", raising=False)  # bust the handle cache
+    assert index_small.df_map(spark) is None
+    try:
+        assert run_all() == baseline
+    finally:
+        monkeypatch.delattr(index_small, "_df_map", raising=False)  # don't leak None
+
+
+def test_term_dfs_lookup_is_remembered(spark, index_small, monkeypatch):
+    """With IDF_MAP_MAX_TERMS below the vocabulary size, term_dfs looks a
+    batch's terms up in term_dict and the handle remembers the answers,
+    absent terms included: they equal the held map's, and a repeated wand
+    call on the same terms runs no Spark job."""
+    held = index_small.df_map(spark)
+    monkeypatch.setattr(IndexHandle, "IDF_MAP_MAX_TERMS", len(held) - 1)
+    h = IndexHandle(index_small.path)
+    assert h.df_map(spark) is None
+    terms = ["merge", "sort", "data", "zzzzunknown"]
+    assert h.term_dfs(spark, terms) == {t: held[t] for t in terms if t in held}
+    qs = [(1, "merge sort zzzzunknown"), (2, "data stream")]
+    want = _norm(search_topk(spark, index_small, qs, k=5, mode="wand"))
+    assert _norm(search_topk(spark, h, qs, k=5, mode="wand")) == want and want
+    sc = spark.sparkContext
+    sc.setJobGroup("term-dfs-memo", "a repeated lookup must be job-free")
+    try:
+        again = search_topk(spark, h, qs, k=5, mode="wand").collect()
+    finally:
+        sc.setJobGroup(None, None)
+    assert list(sc.statusTracker().getJobIdsForGroup("term-dfs-memo")) == []
+    assert sorted(map(tuple, again)) == want
+
+
 def _lev(a, b):
     dp = list(range(len(b) + 1))
     for i, ca in enumerate(a, 1):

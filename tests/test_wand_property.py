@@ -90,17 +90,20 @@ def test_metadata_prune_preserves_topk(qg, k, dense_bits):
     exhaustive scorer over ALL blocks — on arbitrary posting sets, including
     θ ties at block boundaries, and for every dense/sparse term split
     (dense terms are metadata-only: payload withheld from the pruner;
-    sparse terms carry payloads and prune at exact posting positions)."""
-    from grenad_spark.query.search import _make_meta_prune
+    sparse terms carry payloads and prune at exact posting positions). The
+    pass-1 kernel sees distinct block rows; the query's terms and their idf
+    come from the driver."""
+    from grenad_spark.query.search import _make_meta_prune_shared
 
     pdf, avgdl = qg
-    meta = pdf.copy()
+    meta = pdf.drop(columns=["query_id", "idf"])
     # term ti is DENSE iff bit i of dense_bits is set — fuzz all splits
     meta["payload"] = [
         None if (dense_bits >> int(t[1:])) & 1 else p
         for t, p in zip(meta["term"], meta["payload"])
     ]
-    surv = _make_meta_prune(avgdl, k)(meta)
+    idfs = dict(zip(pdf["term"], pdf["idf"]))
+    surv = _make_meta_prune_shared({1: sorted(idfs)}, idfs, avgdl, k)(meta)
     keep = pdf.merge(surv, on=["query_id", "term", "shard", "block_id"])
     ex = _norm(_make_exhaustive(avgdl, k)(pdf.copy()))
     pruned = _norm(_make_wand_batched(avgdl, k)(keep))

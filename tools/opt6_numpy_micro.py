@@ -7,12 +7,13 @@
 """
 from __future__ import annotations
 
+import os
 import sys
 import time
 
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grenad_spark.functions.varbyte import (
     encode_posting_blocks,

@@ -1,11 +1,12 @@
 """r6 scratch: rebuild the 640k bench-shape index into /tmp/opt_idx_large."""
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench
 from grenad_spark.index.build import build_index

@@ -140,6 +140,9 @@ def main() -> None:
         q1 = REFERENCE_QUERIES[2:3]
         dump("bm25_wand_single", spark_plan(lambda: search_topk(spark, idx, q1, k=10, mode="wand")))
         dump("bm25_wand_batch12", spark_plan(lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="wand")))
+        dump("bm25_exhaustive_batch12", spark_plan(
+            lambda: search_topk(spark, idx, REFERENCE_QUERIES, k=10, mode="exhaustive")
+        ))
         dump("bm25_shared_batch12", spark_plan(lambda: search_topk_shared(spark, idx, REFERENCE_QUERIES, k=10)))
         # every query term's df is under SPARSE_DF_MAX at this size, so pass 1
         # would keep every block and the call would plan the single pass:
@@ -167,9 +170,9 @@ def main() -> None:
         dump("phrase_shared_batch12", spark_plan(lambda: search_topk_phrase_shared(spark, idx, phrase_qs, k=10)))
     else:
         skipped(
-            "bench_idx_h_large", "bm25_wand_single", "bm25_wand_batch12", "bm25_shared_batch12",
-            "bm25_wand_pruned_batch12", "seek_gte_batch639", "phrase_batch12",
-            "phrase_shared_batch12",
+            "bench_idx_h_large", "bm25_wand_single", "bm25_wand_batch12",
+            "bm25_exhaustive_batch12", "bm25_shared_batch12", "bm25_wand_pruned_batch12",
+            "seek_gte_batch639", "phrase_batch12", "phrase_shared_batch12",
         )
 
     if path("bench_idx_pairprox"):

@@ -1,10 +1,11 @@
 """r6 scratch: positions + pair-proximity build cost breakdown (noop sinks)."""
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

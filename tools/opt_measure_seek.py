@@ -1,10 +1,11 @@
 """r6 scratch: seek microbench (bench shape, 639 seeks) on a 640k index."""
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from grenad_spark.index.build import IndexHandle
 from grenad_spark.operators.seek import seek_gte_postings
