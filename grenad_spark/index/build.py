@@ -58,9 +58,30 @@ SEGMENT_SCHEMA = (
 # it to force multi-shard paths.
 DEFAULT_DOCS_PER_SHARD = 2_000_000
 
+# Row-group target (parquet.block.size: bytes of the writer's in-memory
+# estimate) of the term-sorted block tables, segments and positions. Each
+# row group is one of grenad's blocks: its footer min/max term range is the
+# index block IndexHandle.row_groups holds, and a driver read opens only the
+# groups whose range holds a query term. Picked by a sweep of one-query read
+# time against index bytes on 2k- and 20k-doc zipfian indexes (4 cores):
+# 512 KiB reads in 2.8 / 3.3 ms what one group read in 6.0 / 31.8 ms, for
+# +3.9% / +4.7% index bytes; 256 KiB reads 0.7 ms faster at 2k docs but
+# grows that index 6.1%.
+ROW_GROUP_BYTES = 512 * 1024
+
 
 def _done(path: str) -> bool:
     return os.path.exists(os.path.join(path, "_SUCCESS"))
+
+
+def write_term_sorted(df: DataFrame, path: str, compression: str | None = None) -> None:
+    """Write a term-sorted block table (segments, positions) to `path` in
+    row groups of ROW_GROUP_BYTES; Spark's default, 128 MB, makes one
+    group of a whole file, and a one-term read then decodes all of it."""
+    w = df.write.mode("overwrite").option("parquet.block.size", ROW_GROUP_BYTES)
+    if compression is not None:
+        w = w.option("compression", compression)
+    w.parquet(path)
 
 
 # Live build progress — the Sorter::estimated_dumped_memory_usage analog
@@ -545,14 +566,12 @@ def _build_index_inner(
                 # The same ratio holds at cluster scale: scan partitions are
                 # sized by bytes, so fewer-but-larger segment files only
                 # reduce footer overhead.
-                (
+                write_term_sorted(
                     segments.repartitionByRange(
                         max(1, partitions // 4), "term", "shard", "block_id"
-                    )
-                    .sortWithinPartitions("term", "shard", "block_id")
-                    .write.mode("overwrite")
-                    .option("compression", compression)
-                    .parquet(seg_path)
+                    ).sortWithinPartitions("term", "shard", "block_id"),
+                    seg_path,
+                    compression,
                 )
 
             def _dict_chain():
@@ -706,7 +725,7 @@ class IndexHandle:
     def __init__(self, path: str):
         self.path = path
         self._dfs: dict[str, DataFrame] = {}
-        self._datasets: dict = {}
+        self._row_groups: dict[str, list[tuple]] = {}
         self._df_memo: dict[str, int | None] = {}
         with open(os.path.join(path, "manifest.json")) as fh:
             self.manifest = json.load(fh)
@@ -742,16 +761,29 @@ class IndexHandle:
     def segments(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "segments")
 
-    def dataset(self, name: str):
-        """pyarrow dataset over the table `name` (segments, positions) for
-        driver-local reads. Memoized like _table: the file listing and the
-        footers' schema are read once."""
-        if name not in self._datasets:
-            import pyarrow.dataset as pads
+    def row_groups(self, name: str) -> list[tuple]:
+        """(min term, max term, file, row group, footer) of every row group
+        of the table `name` (segments, positions), read once from the
+        parquet footers: grenad's index block, which lets a driver read
+        open only the groups whose term range holds a query term. min and
+        max are None for a group written without term statistics."""
+        if name not in self._row_groups:
+            import pyarrow.parquet as pq
 
-            p = os.path.join(self.path, name)
-            self._datasets[name] = pads.dataset(p, format="parquet")
-        return self._datasets[name]
+            d = os.path.join(self.path, name)
+            entries = []
+            for f in sorted(os.listdir(d)):
+                if f.startswith(("_", ".")):
+                    continue
+                path = os.path.join(d, f)
+                md = pq.read_metadata(path)
+                col = md.schema.names.index("term")
+                for i in range(md.num_row_groups):
+                    st = md.row_group(i).column(col).statistics
+                    lo, hi = (st.min, st.max) if st is not None and st.has_min_max else (None, None)
+                    entries.append((lo, hi, path, i, md))
+            self._row_groups[name] = entries
+        return self._row_groups[name]
 
     def term_dict(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "term_dict")

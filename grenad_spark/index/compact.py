@@ -63,6 +63,7 @@ from grenad_spark.index.build import (
     IndexHandle,
     build_segments,
     term_dict_from_segments,
+    write_term_sorted,
 )
 
 MAX_GENERATIONS = 25  # grenad max_nb_chunks default (src/sorter.rs:21)
@@ -342,11 +343,10 @@ def compact_indexes(
         segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
     os.makedirs(out_dir, exist_ok=True)
     seg_path = os.path.join(out_dir, "segments")
-    (
+    write_term_sorted(
         segments.repartitionByRange(partitions, "term", "shard", "block_id")
-        .sortWithinPartitions("term", "shard", "block_id")
-        .write.mode("overwrite")
-        .parquet(seg_path)
+        .sortWithinPartitions("term", "shard", "block_id"),
+        seg_path,
     )
     segments.unpersist()
     segments = spark.read.parquet(seg_path)
@@ -441,11 +441,10 @@ def compact_indexes(
         from pyspark.storagelevel import StorageLevel
 
         pos_all = pos_all.persist(StorageLevel.MEMORY_AND_DISK)
-        (
+        write_term_sorted(
             pos_all.repartitionByRange(partitions, "term", "shard", "block_id")
-            .sortWithinPartitions("term", "shard", "block_id")
-            .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, "positions"))
+            .sortWithinPartitions("term", "shard", "block_id"),
+            os.path.join(out_dir, "positions"),
         )
         pos_all.unpersist()
 

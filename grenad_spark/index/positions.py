@@ -254,7 +254,7 @@ def build_positions(
     so attribute-ranked serving can verify it."""
     import json
 
-    from grenad_spark.index.build import _done
+    from grenad_spark.index.build import _done, write_term_sorted
 
     out_path = os.path.join(index_dir, "positions")
     mpath = os.path.join(index_dir, "manifest.json")
@@ -290,7 +290,7 @@ def build_positions(
             f"CAST({doc_space} AS BIGINT) AS INT)"
         ),
     )
-    (
+    write_term_sorted(
         stream.repartition(partitions, "term", "shard")
         .sortWithinPartitions("term", "shard", "doc_id", "pos")
         .mapInPandas(
@@ -302,10 +302,11 @@ def build_positions(
         # partitions sequentially — group integrity comes from the
         # repartition above, not the task count). Fewer files = less
         # per-file open/footer overhead on every phrase/proximity scan.
-        .coalesce(max(1, partitions // 4))
-        .write.mode("overwrite")
-        .option("compression", compression)
-        .parquet(out_path)
+        # Each file is then up to 4 term-sorted runs, so a row group at a
+        # run boundary spans a wide term range.
+        .coalesce(max(1, partitions // 4)),
+        out_path,
+        compression,
     )
     # record the stage in the manifest (lineage/metrics contract)
     manifest.setdefault("stage_seconds", {})["positions"] = round(time.time() - t0, 3)

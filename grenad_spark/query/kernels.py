@@ -12,8 +12,8 @@ typed no-rows frame (empty_frame).
 Pure NumPy/pandas: kernels run in Python workers and on the driver, and
 nothing here needs a Spark session. A per-doc sum adds its terms in the
 order its caller gives: by name in the BM25 top-k kernel
-(search._bm25_slice), else by first appearance in the group
-(decode_postings) or in the caller's term list.
+(search._bm25_slice) and in decode_postings / decode_positions, else in
+the caller's term list.
 """
 
 from __future__ import annotations
@@ -87,12 +87,12 @@ def spans(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
 
 def _term_runs(pdf: pd.DataFrame):
     """(row order, ns in that order, terms, per-term posting bounds,
-    term -> idf) of one kernel group's block rows: terms in their order of
-    first appearance (the order every per-doc sum adds them in), each
-    term's blocks by first_doc when the group carries it — multi-file scans
-    scramble rows, and blocks are doc-range disjoint, so first_doc order is
-    doc order. idf is nan when the group carries no idf column."""
-    codes, terms = pd.factorize(pdf["term"].to_numpy())
+    term -> idf) of one kernel group's block rows: terms by name (the order
+    every per-doc sum adds them in, whatever order the rows arrive in),
+    each term's blocks by first_doc when the group carries it — multi-file
+    scans scramble rows, and blocks are doc-range disjoint, so first_doc
+    order is doc order. idf is nan when the group carries no idf column."""
+    codes, terms = pd.factorize(pdf["term"].to_numpy(), sort=True)
     keys = (codes,) if "first_doc" not in pdf else (pdf["first_doc"].to_numpy(), codes)
     order = np.lexsort(keys)
     starts = np.searchsorted(codes[order], np.arange(len(terms) + 1))

@@ -24,12 +24,15 @@ driver (IndexHandle.term_dfs) and rides in as a literal map of the attach.
 
 from __future__ import annotations
 
+import bisect
 import functools
 import math
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -39,7 +42,8 @@ from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin, prefix_ranges, sql_lit
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.index.build import MAX_DELETES, IndexHandle
+from grenad_spark.index.build import MAX_DELETES, SEGMENT_SCHEMA, IndexHandle
+from grenad_spark.index.positions import POSITIONS_SCHEMA
 from grenad_spark.query.bm25 import SCORE_DECIMALS
 from grenad_spark.query.kernels import (
     bm25,
@@ -755,14 +759,33 @@ def _idf_rows(
 def _local_blocks(
     index: IndexHandle, table: str, terms: list[str], columns: list[str]
 ) -> pd.DataFrame:
-    """The `term IN terms` block rows of the index table `table` (segments
-    or positions), read on the driver. Parquet min/max term statistics
-    prune the read as they prune the Spark scan."""
-    import pyarrow.dataset as pads
-
-    return index.dataset(table).to_table(
-        columns=columns, filter=pads.field("term").isin(terms)
-    ).to_pandas()
+    """The `columns` (term among them) of the `term IN terms` block rows of
+    the index table `table` (segments or positions), read on the driver.
+    Only the row groups whose footer [min, max] term range holds a query
+    term are read (IndexHandle.row_groups; a group without term statistics
+    always is), a file whose groups are all selected in one pass; the rows
+    read are then filtered exactly."""
+    want = sorted(terms)
+    files: dict[str, tuple] = {}
+    for lo, hi, path, i, md in index.row_groups(table):
+        if lo is not None:
+            j = bisect.bisect_left(want, lo)
+            if j == len(want) or want[j] > hi:
+                continue
+        files.setdefault(path, (md, []))[1].append(i)
+    parts = []
+    for path, (md, groups) in files.items():
+        f = pq.ParquetFile(path, metadata=md)
+        if len(groups) == md.num_row_groups:
+            parts.append(f.read(columns))
+        else:
+            parts.append(f.read_row_groups(groups, columns))
+    if not parts:
+        ddl = SEGMENT_SCHEMA if table == "segments" else POSITIONS_SCHEMA
+        return _arrow_schema(ddl, tuple(columns)).empty_table().to_pandas()
+    tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+    tbl = tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(want, pa.string())))
+    return tbl.to_pandas()
 
 
 @functools.lru_cache(maxsize=None)
@@ -812,13 +835,17 @@ def _rank_local(
     """_rank_topk on the driver: round the score, order each query's rows
     by `order` ((column, ascending) pairs) after query_id — the row order
     the one-partition Spark plan collects — and keep kk rows per query, as
-    a local relation of the `cols` of `schema`."""
-    out = out.assign(score=out["score"].round(SCORE_DECIMALS)).sort_values(
-        ["query_id"] + [c for c, _ in order],
-        ascending=[True] + [a for _, a in order],
-        kind="stable",
-    )
-    return _local_relation(spark, out.groupby("query_id", sort=False).head(kk), schema, cols)
+    a local relation of the `cols` of `schema`. One stable lexsort over
+    (query_id, order keys; a descending key negated: every rank column is
+    numeric) and a per-query head mask."""
+    out = out.assign(score=out["score"].round(SCORE_DECIMALS))
+    keys = [out[c].to_numpy() if a else -out[c].to_numpy() for c, a in order]
+    qid = out["query_id"].to_numpy()
+    idx = np.lexsort([*keys[::-1], qid])
+    q = qid[idx]
+    starts = np.flatnonzero(np.concatenate(([True], q[1:] != q[:-1])))
+    rank = np.arange(q.size) - np.repeat(starts, np.diff(np.append(starts, q.size)))
+    return _local_relation(spark, out.take(idx[rank < kk]), schema, cols)
 
 
 def _apply_groups(pdf: pd.DataFrame, keys: list[str], fn, slice_groups: bool = True):

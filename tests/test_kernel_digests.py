@@ -316,7 +316,10 @@ def _outputs(codec, merged, monkeypatch) -> dict[str, list]:
 
 
 # computed on the kernels as they stood before the kernel primitives
-# (query/kernels.py) replaced their per-module decode and scoring loops
+# (query/kernels.py) replaced their per-module decode and scoring loops;
+# the termcount, typo_ranked, ranked, exact and typo_attr digests since
+# decode_postings / decode_positions sum terms by name (each now the same
+# for per-shard and merged groups)
 PINNED: dict[str, str] = {
     "exhaustive/per_shard": (
         "50de78832e2c99c6fac8338ec0d1ee11664661b8e644b48fae9c13ae52e33fa8"
@@ -328,13 +331,13 @@ PINNED: dict[str, str] = {
         "50de78832e2c99c6fac8338ec0d1ee11664661b8e644b48fae9c13ae52e33fa8"
     ),
     "termcount/per_shard": (
-        "547f71fdf17b7afac9a4dca853d1ae03b0d4bd8d1304c0d833101bd9905ed357"
+        "447b4262a11355a909e9fbd763ff417f1222eae12f73d59396f509482fed41d7"
     ),
     "term_match/per_shard": (
         "70b33f0313f1537f6fcae4423497281a7c4a25450935c6b2c4d4dcf51f8311d1"
     ),
     "typo_ranked/per_shard": (
-        "898097f399895de4c1ddfb5430824058d74d0401b01b190a10b610db99dbd24e"
+        "3c07d3b7d32d9b98751d704fd841b107fb1d6541c8a50d6b7a13348c55bee5e2"
     ),
     "phrase/per_shard": (
         "8d5e2add1b73327716780f6472b25fae8837d240c7b643b156d223e95a85f666"
@@ -349,19 +352,19 @@ PINNED: dict[str, str] = {
         "91a299420b3374788026033fa6ac4c38aeb058b5c56f3121a1cb195259fce388"
     ),
     "ranked/per_shard": (
-        "b8ba598f64b6c09a7b53711e9b9388c5e00dfb288c4671688d46259d56465222"
+        "4ff3f90d2ef9c2dce8ea4512c62b4b169ef2017dec84baec5e4156b1fc22a455"
     ),
     "search_on/per_shard": (
         "0aa9e31747416b4ed82471b56968d3a6b95378eb5eb847e40be906a81150bf3c"
     ),
     "exact/per_shard": (
-        "b08e78f74968ea9b724c68fe5c47799dcbc62090c95c61ff5498764bdfa6e20b"
+        "f4c98d77ebb1d94291910ab58318ea90996e5cc8336e2852eff2a18f0b82a125"
     ),
     "prox_attr/per_shard": (
         "ccf35fe44d275a7c96eb12a79118b40aa8e588d992de95300a9e57a38771072f"
     ),
     "typo_attr/per_shard": (
-        "0bd96d3f422aa2d0a145b7daf3a6df9c2fd4452c2a7a96e999a9b4b498ccdee4"
+        "a079b23784043e4887d59d6ac39f3b7fc4fb30ddc48cff3b40b2d81e4d3115ba"
     ),
     "matches/per_shard": (
         "9107c0a500243edf4a1c8856fafdc1b9631f1f724d305a833683c28ef5e931ed"
@@ -385,13 +388,13 @@ PINNED: dict[str, str] = {
         "4c5a352c51de2c8b5469b4a53837350d7852bf6287c2f4716f9301c1122429ab"
     ),
     "termcount/merged": (
-        "59b7570efc861e82297913538553aa6979da27e466334ca3223a91d9ce19db62"
+        "447b4262a11355a909e9fbd763ff417f1222eae12f73d59396f509482fed41d7"
     ),
     "term_match/merged": (
         "70b33f0313f1537f6fcae4423497281a7c4a25450935c6b2c4d4dcf51f8311d1"
     ),
     "typo_ranked/merged": (
-        "4c219f924a0b2e1ee2303f934cd1feb7e5d4970e5cab6fb589eb6989b118731b"
+        "3c07d3b7d32d9b98751d704fd841b107fb1d6541c8a50d6b7a13348c55bee5e2"
     ),
     "phrase/merged": (
         "8d5e2add1b73327716780f6472b25fae8837d240c7b643b156d223e95a85f666"
@@ -406,19 +409,19 @@ PINNED: dict[str, str] = {
         "91a299420b3374788026033fa6ac4c38aeb058b5c56f3121a1cb195259fce388"
     ),
     "ranked/merged": (
-        "381862460bed1d715f4bd134a32334d6effbf4cbf3d757d2f5d3ef85fdd15288"
+        "4ff3f90d2ef9c2dce8ea4512c62b4b169ef2017dec84baec5e4156b1fc22a455"
     ),
     "search_on/merged": (
         "0aa9e31747416b4ed82471b56968d3a6b95378eb5eb847e40be906a81150bf3c"
     ),
     "exact/merged": (
-        "c195d126c096f66f80aa71eb16ce5cb7e3430b5200bec42d63d5702c85cdc779"
+        "f4c98d77ebb1d94291910ab58318ea90996e5cc8336e2852eff2a18f0b82a125"
     ),
     "prox_attr/merged": (
         "ccf35fe44d275a7c96eb12a79118b40aa8e588d992de95300a9e57a38771072f"
     ),
     "typo_attr/merged": (
-        "4eb8ded320ffe58e5e1167f6721072fb85ce789aacb41c8b56017b2e0767311e"
+        "a079b23784043e4887d59d6ac39f3b7fc4fb30ddc48cff3b40b2d81e4d3115ba"
     ),
     "matches/merged": (
         "9107c0a500243edf4a1c8856fafdc1b9631f1f724d305a833683c28ef5e931ed"

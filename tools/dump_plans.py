@@ -2,16 +2,21 @@
 
 The point of each annotation is the scale property the plan must exhibit
 (pushdown, pruning, single-shuffle, broadcast) — re-run after plan-shaping
-changes: python tools/dump_plans.py
+changes: python tools/dump_plans.py [TESTDATA_DIR]
+
+TESTDATA_DIR is the sf0.001 test-data directory (default: the one
+TESTDATA.md lists); PLANS.md is written at the root of the checkout this
+script belongs to.
 """
 
 from __future__ import annotations
 
-import os
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 
 def plan_str(df) -> str:
@@ -32,6 +37,8 @@ def main() -> None:
 
     spark = get_spark("plans", cpus=8, shuffle_partitions=8)
     sf = "/root/testdata/sf0.001"
+    if len(sys.argv) > 1:
+        sf = sys.argv[1]
     docs = load_documents(spark, sf)
     sections: list[tuple[str, str, str]] = []
 
@@ -240,7 +247,7 @@ def main() -> None:
         )
     )
 
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(ROOT / "PLANS.md", "w") as fh:
         fh.write(
             "# PLANS — annotated physical plans of the core pipelines\n\n"
             "Generated by tools/dump_plans.py (exprIds normalized). Each\n"
@@ -248,7 +255,7 @@ def main() -> None:
         )
         for title, note, plan in sections:
             fh.write(f"\n## {title}\n\n{note}\n\n```\n{plan}\n```\n")
-    print("wrote PLANS.md")
+    print(f"wrote {ROOT / 'PLANS.md'}")
 
 
 if __name__ == "__main__":
