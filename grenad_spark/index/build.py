@@ -39,7 +39,9 @@ from __future__ import annotations
 import json
 import os
 import time
+from collections import OrderedDict
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
@@ -68,6 +70,24 @@ DEFAULT_DOCS_PER_SHARD = 2_000_000
 # +3.9% / +4.7% index bytes; 256 KiB reads 0.7 ms faster at 2k docs but
 # grows that index 6.1%.
 ROW_GROUP_BYTES = 512 * 1024
+
+# Footers (with their per-group term ranges) an IndexHandle keeps, for the
+# files used last; every other file keeps only its [min, max] term range.
+# A range-partitioned segments file covers a slice of the vocabulary, so a
+# point read touches one or two of them (a positions file, a set of hash
+# runs, covers all of it). The bound keeps driver memory flat however many
+# files a table has.
+FOOTERS_HELD = 64
+
+
+def _ranges_holding(terms, lo, hi, stats):
+    """Mask of the [lo, hi] ranges (object arrays of str) that hold one
+    of the sorted `terms`; a range without statistics (stats False)
+    always holds."""
+    j = np.searchsorted(terms, lo)
+    holds = j < len(terms)
+    holds[holds] = terms[j[holds]] <= hi[holds]
+    return ~stats | holds
 
 
 def _done(path: str) -> bool:
@@ -725,7 +745,8 @@ class IndexHandle:
     def __init__(self, path: str):
         self.path = path
         self._dfs: dict[str, DataFrame] = {}
-        self._row_groups: dict[str, list[tuple]] = {}
+        self._term_files: dict[str, tuple] = {}
+        self._footers: OrderedDict[str, tuple] = OrderedDict()
         self._df_memo: dict[str, int | None] = {}
         with open(os.path.join(path, "manifest.json")) as fh:
             self.manifest = json.load(fh)
@@ -761,29 +782,73 @@ class IndexHandle:
     def segments(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "segments")
 
-    def row_groups(self, name: str) -> list[tuple]:
-        """(min term, max term, file, row group, footer) of every row group
-        of the table `name` (segments, positions), read once from the
-        parquet footers: grenad's index block, which lets a driver read
-        open only the groups whose term range holds a query term. min and
-        max are None for a group written without term statistics."""
-        if name not in self._row_groups:
-            import pyarrow.parquet as pq
-
+    def row_groups(self, name: str, terms: list[str]) -> tuple:
+        """(arrow schema, [(file, footer, groups)]) of the table `name`
+        (segments, positions): every file with a row group whose footer
+        [min, max] term range holds one of the sorted `terms`, and those
+        groups. This is grenad's index block; it lets a driver read open
+        only the groups that can hold a query term. The first call reads
+        every footer once and keeps one [min, max] range per file. A
+        file's footer and per-group ranges stay held only for the
+        FOOTERS_HELD files used last, and are read again when a term
+        falls in the range of a file no longer held. A file or group
+        without term statistics always holds."""
+        if name not in self._term_files:
             d = os.path.join(self.path, name)
-            entries = []
+            schema, paths, lo, hi, stats = None, [], [], [], []
             for f in sorted(os.listdir(d)):
                 if f.startswith(("_", ".")):
                     continue
                 path = os.path.join(d, f)
-                md = pq.read_metadata(path)
-                col = md.schema.names.index("term")
-                for i in range(md.num_row_groups):
-                    st = md.row_group(i).column(col).statistics
-                    lo, hi = (st.min, st.max) if st is not None and st.has_min_max else (None, None)
-                    entries.append((lo, hi, path, i, md))
-            self._row_groups[name] = entries
-        return self._row_groups[name]
+                md, glo, ghi, gstats = self._footer(path)
+                if schema is None:
+                    schema = md.schema.to_arrow_schema()
+                if md.num_row_groups:
+                    # a file's range: its groups' lowest min and highest
+                    # max, or none if a group lacks statistics
+                    paths.append(path)
+                    stats.append(gstats.all())
+                    lo.append(glo.min() if stats[-1] else "")
+                    hi.append(ghi.max() if stats[-1] else "")
+            self._term_files[name] = (
+                schema,
+                paths,
+                np.array(lo, dtype=object),
+                np.array(hi, dtype=object),
+                np.array(stats, dtype=bool),
+            )
+        schema, paths, lo, hi, stats = self._term_files[name]
+        want = np.array(terms, dtype=object)
+        files = []
+        for i in np.flatnonzero(_ranges_holding(want, lo, hi, stats)):
+            md, glo, ghi, gstats = self._footer(paths[i])
+            groups = np.flatnonzero(_ranges_holding(want, glo, ghi, gstats))
+            if groups.size:
+                files.append((paths[i], md, groups.tolist()))
+        return schema, files
+
+    def _footer(self, path: str) -> tuple:
+        """(footer, min terms, max terms, has statistics) of the parquet
+        file at `path`, one array entry per row group; held for the
+        FOOTERS_HELD files used last."""
+        held = self._footers.pop(path, None)
+        if held is None:
+            import pyarrow.parquet as pq
+
+            md = pq.read_metadata(path)
+            col = md.schema.names.index("term")
+            st = [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
+            stats = np.array([s is not None and s.has_min_max for s in st], dtype=bool)
+            held = (
+                md,
+                np.array([s.min if ok else "" for s, ok in zip(st, stats)], dtype=object),
+                np.array([s.max if ok else "" for s, ok in zip(st, stats)], dtype=object),
+                stats,
+            )
+        self._footers[path] = held
+        if len(self._footers) > FOOTERS_HELD:
+            self._footers.popitem(last=False)
+        return held
 
     def term_dict(self, spark: SparkSession) -> DataFrame:
         return self._table(spark, "term_dict")

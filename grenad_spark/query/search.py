@@ -24,7 +24,6 @@ driver (IndexHandle.term_dfs) and rides in as a literal map of the attach.
 
 from __future__ import annotations
 
-import bisect
 import functools
 import math
 
@@ -42,8 +41,7 @@ from pyspark.sql.window import Window
 
 from grenad_spark.functions.literals import isin, prefix_ranges, sql_lit
 from grenad_spark.functions.tokenize import TOKEN_SPLIT_RE
-from grenad_spark.index.build import MAX_DELETES, SEGMENT_SCHEMA, IndexHandle
-from grenad_spark.index.positions import POSITIONS_SCHEMA
+from grenad_spark.index.build import MAX_DELETES, IndexHandle
 from grenad_spark.query.bm25 import SCORE_DECIMALS
 from grenad_spark.query.kernels import (
     bm25,
@@ -763,29 +761,19 @@ def _local_blocks(
     the index table `table` (segments or positions), read on the driver.
     Only the row groups whose footer [min, max] term range holds a query
     term are read (IndexHandle.row_groups; a group without term statistics
-    always is), a file whose groups are all selected in one pass; the rows
-    read are then filtered exactly."""
+    always is); the rows read are then filtered exactly. A read that
+    selects no group is the table's empty schema. The rows convert to
+    pandas on one thread: at the size the driver serves (Σ df ≤
+    TARGET_GROUP_POSTINGS) the thread hand-off costs more than it saves."""
     want = sorted(terms)
-    files: dict[str, tuple] = {}
-    for lo, hi, path, i, md in index.row_groups(table):
-        if lo is not None:
-            j = bisect.bisect_left(want, lo)
-            if j == len(want) or want[j] > hi:
-                continue
-        files.setdefault(path, (md, []))[1].append(i)
-    parts = []
-    for path, (md, groups) in files.items():
-        f = pq.ParquetFile(path, metadata=md)
-        if len(groups) == md.num_row_groups:
-            parts.append(f.read(columns))
-        else:
-            parts.append(f.read_row_groups(groups, columns))
-    if not parts:
-        ddl = SEGMENT_SCHEMA if table == "segments" else POSITIONS_SCHEMA
-        return _arrow_schema(ddl, tuple(columns)).empty_table().to_pandas()
-    tbl = pa.concat_tables(parts) if len(parts) > 1 else parts[0]
+    schema, files = index.row_groups(table, want)
+    parts = [
+        pq.ParquetFile(path, metadata=md).read_row_groups(groups, columns)
+        for path, md, groups in files
+    ]
+    tbl = pa.concat_tables(parts or [schema.empty_table()]).select(columns)
     tbl = tbl.filter(pc.is_in(tbl["term"], value_set=pa.array(want, pa.string())))
-    return tbl.to_pandas()
+    return tbl.to_pandas(use_threads=False)
 
 
 @functools.lru_cache(maxsize=None)

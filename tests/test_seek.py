@@ -1,15 +1,17 @@
 """Driver block reads seek row groups through the held footer index.
 
-`IndexHandle.row_groups` holds each row group's (min term, max term) range
-from the parquet footers, and `search._local_blocks` reads only the groups
-whose range holds a query term. These tests write an index with tiny row
-groups (`ROW_GROUP_BYTES` patched down, as other tests patch
-`IDF_MAP_MAX_TERMS`) and check that the seek returns the rows of a
-`term IN` filter over the whole table, also for one row group per file
-(the layout of indexes written before row groups were sized) and for files
-written without term statistics; and that a one-term read opens exactly
-the groups whose range holds the term. The driver top-k (`_rank_local`,
-NumPy) is checked against the pandas ranking it replaced."""
+`IndexHandle.row_groups` holds each file's (min term, max term) range and,
+for the files used last, each row group's range from the parquet footers;
+`search._local_blocks` reads only the groups whose range holds a query
+term. These tests write an index with tiny row groups (`ROW_GROUP_BYTES`
+patched down, as other tests patch `IDF_MAP_MAX_TERMS`) and check that the
+seek returns the rows of a `term IN` filter over the whole table, also for
+one row group per file (the layout of indexes written before row groups
+were sized), for files written without term statistics and with one held
+footer; that a one-term read opens exactly the groups whose range holds
+the term; and that a file whose range misses every query term is not
+opened. The driver top-k (`_rank_local`, NumPy) is checked against the
+pandas ranking it replaced."""
 
 import os
 import shutil
@@ -85,6 +87,13 @@ def _canon(pdf, cols):
     return pdf[cols].sort_values(["term", "shard", "block_id"]).reset_index(drop=True)
 
 
+def _term_stats(f):
+    """The term column's statistics of each row group of the file f."""
+    md = pq.read_metadata(f)
+    col = md.schema.names.index("term")
+    return [md.row_group(i).column(col).statistics for i in range(md.num_row_groups)]
+
+
 def _groups_holding(path, table, term):
     """(file, row group) pairs that hold rows of `term`, from the data."""
     out = []
@@ -101,14 +110,14 @@ def _groups_holding(path, table, term):
 def test_seek_reads_the_rows_of_a_full_filter(layouts, layout, table):
     path = layouts[layout]
     idx = B.IndexHandle(path)
-    entries = idx.row_groups(table)
+    stats = [_term_stats(f) for f in _files(path, table)]
     if layout == "row_groups":
         assert len(_groups_holding(path, table, "spark")) >= 2
-        assert all(lo is not None for lo, *_ in entries)
+        assert all(st is not None and st.has_min_max for sts in stats for st in sts)
     if layout == "one_group":
-        assert len(entries) == len(_files(path, table))
+        assert all(len(sts) == 1 for sts in stats)
     if layout == "no_stats":
-        assert len(entries) > 1 and all(lo is None and hi is None for lo, hi, *_ in entries)
+        assert sum(map(len, stats)) > 1 and all(st is None for sts in stats for st in sts)
     cols = COLS[table]
     for terms in (["spark"], ["grenad"], ["dup", "key", "spark"], VOCAB, ["zzabsent"],
                   ["aaabsent", "merge"]):
@@ -127,10 +136,6 @@ def test_one_term_read_opens_only_the_groups_holding_it(seek_index, table, monke
     read = []
 
     class Spy(pq.ParquetFile):
-        def read(self, columns=None, **kw):
-            read.extend((self._path, i) for i in range(self.num_row_groups))
-            return super().read(columns=columns, **kw)
-
         def read_row_groups(self, groups, columns=None, **kw):
             read.extend((self._path, i) for i in groups)
             return super().read_row_groups(groups, columns=columns, **kw)
@@ -145,17 +150,52 @@ def test_one_term_read_opens_only_the_groups_holding_it(seek_index, table, monke
     for term in ("spark", "grenad", "merge"):
         read.clear()
         S._local_blocks(idx, table, [term], COLS[table])
-        want = []
-        for f in _files(seek_index, table):
-            md = pq.read_metadata(f)
-            col = md.schema.names.index("term")
-            for i in range(md.num_row_groups):
-                st = md.row_group(i).column(col).statistics
-                if st.min <= term <= st.max:
-                    want.append((f, i))
+        want = [
+            (f, i)
+            for f in _files(seek_index, table)
+            for i, st in enumerate(_term_stats(f))
+            if st.min <= term <= st.max
+        ]
         assert sorted(read) == want
         assert set(_groups_holding(seek_index, table, term)) <= set(want)
         assert len(want) < n_groups
+
+
+@pytest.mark.parametrize("table", TABLES)
+def test_one_footer_held(seek_index, table, monkeypatch):
+    """With one footer held, reads that alternate between files still
+    return the rows of a full filter, and the handle never holds more."""
+    monkeypatch.setattr(B, "FOOTERS_HELD", 1)
+    idx = B.IndexHandle(seek_index)
+    cols = COLS[table]
+    for terms in (["spark"], VOCAB, ["dup"], ["value", "grenad"], ["spark"]):
+        got = S._local_blocks(idx, table, terms, cols)
+        pd.testing.assert_frame_equal(
+            _canon(got, cols), _canon(_full_filter(seek_index, table, terms, cols), cols)
+        )
+        assert len(idx._footers) <= 1
+
+
+def test_file_outside_the_range_is_not_opened(seek_index, monkeypatch):
+    """segments/ is range-partitioned into files: once the per-file ranges
+    are read, a one-term read opens the footer of the files whose range
+    holds the term and of no other."""
+    monkeypatch.setattr(B, "FOOTERS_HELD", 0)
+    files = _files(seek_index, "segments")
+    assert len(files) >= 2
+    idx = B.IndexHandle(seek_index)
+    idx.row_groups("segments", [])
+    sts = {f: _term_stats(f) for f in files}
+    opened, narrow = [], 0
+    real = pq.read_metadata
+    monkeypatch.setattr(pq, "read_metadata", lambda f, **kw: opened.append(f) or real(f, **kw))
+    for term in VOCAB:
+        opened.clear()
+        S._local_blocks(idx, "segments", [term], COLS["segments"])
+        assert opened == [f for f in files if sts[f][0].min <= term <= sts[f][-1].max]
+        narrow += len(opened) < len(files)
+    # a term at a file boundary sits in both files; the others in one
+    assert narrow >= len(VOCAB) - len(files) + 1
 
 
 def _pandas_rank(out, kk, order):
