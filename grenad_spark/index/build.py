@@ -40,10 +40,12 @@ import json
 import os
 import time
 from collections import OrderedDict
+from concurrent.futures import ThreadPoolExecutor
 
 import numpy as np
 import pandas as pd
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from grenad_spark.functions import native
@@ -102,6 +104,34 @@ def write_term_sorted(df: DataFrame, path: str, compression: str | None = None) 
     if compression is not None:
         w = w.option("compression", compression)
     w.parquet(path)
+
+
+def write_vocab_table(df: DataFrame, path: str, compression: str = "zstd") -> None:
+    """Write a vocabulary table (term_dict, term_deletes) to `path` with the
+    build's codec (grenad compresses every block of its sorted files) in
+    parquet v2 data pages. v2 lets the writer prefix-code a sorted string
+    key whose dictionary does not pay (DELTA_BYTE_ARRAY: each delvar stores
+    only what it does not share with the one before) and keeps
+    RLE_DICTIONARY on a repeating one (term of term_deletes). Readers need
+    nothing new: Spark, pyarrow and DuckDB read v2 pages."""
+    (
+        df.write.mode("overwrite")
+        .option("compression", compression)
+        .option("parquet.writer.version", "v2")
+        .parquet(path)
+    )
+
+
+def parquet_rows(path: str) -> int:
+    """Rows of the parquet table at `path`, summed from its file footers
+    (no Spark job)."""
+    import pyarrow.parquet as pq
+
+    return sum(
+        pq.read_metadata(os.path.join(path, f)).num_rows
+        for f in os.listdir(path)
+        if f.endswith(".parquet") and not f.startswith(("_", "."))
+    )
 
 
 # Live build progress — the Sorter::estimated_dumped_memory_usage analog
@@ -488,10 +518,10 @@ def _build_index_inner(
                     "n_docs long, avgdl double, max_doc long",
                 ).coalesce(1).write.mode("overwrite").parquet(stats_path)
 
-        from concurrent.futures import ThreadPoolExecutor
-
         _docs_pool = ThreadPoolExecutor(max_workers=1)
-        docs_write_fut = _docs_pool.submit(_write_docs_and_stats)
+        docs_write_fut = _docs_pool.submit(
+            inheritable_thread_target(spark)(_write_docs_and_stats)
+        )
         stage_secs["docs"] = 0.0  # overlapped; settled when the future joins
     else:
         st = spark.read.parquet(stats_path).first()
@@ -521,16 +551,23 @@ def _build_index_inner(
     # driver-tiny; this table is the vocabulary side, precomputed once.
     deletes_path = os.path.join(out_dir, "term_deletes")
 
-    def _write_dict_from(seg_df) -> None:
-        term_dict_from_segments(seg_df).repartitionByRange(
-            max(1, partitions // 8), "term"
-        ).sortWithinPartitions("term").write.mode("overwrite").parquet(dict_path)
-
-    def _write_aux() -> None:
+    def _vocab_writes(vocab) -> list:
+        """The writes of the vocabulary tables not yet done, each from the
+        one (term, df, cf, n_blocks, max_tf) frame `vocab`: the typo table
+        neither waits for nor re-reads term_dict."""
+        out = []
+        if not _done(dict_path):
+            out.append(lambda: write_vocab_table(
+                vocab.repartitionByRange(max(1, partitions // 8), "term")
+                .sortWithinPartitions("term"),
+                dict_path,
+                compression,
+            ))
         if not _done(deletes_path):
-            write_term_deletes(
-                spark, dict_path, deletes_path, max(1, partitions // 8)
-            )
+            out.append(lambda: write_term_deletes(
+                vocab, deletes_path, max(1, partitions // 8), compression
+            ))
+        return out
 
     # authoritative dumped-bytes/postings totals for the manifest (the live
     # accumulators in LAST_BUILD_PROGRESS show the same numbers mid-build; a
@@ -568,12 +605,13 @@ def _build_index_inner(
             stage_secs["segments_encode"] = time.time() - ts
             ts = time.time()
 
-            # The range write, the term_dict chain (dict → deletes) and the
-            # manifest accounting agg are mutually independent consumers of
-            # the cached block rows — run them concurrently so the
-            # vocabulary-sized jobs hide entirely behind the segment write's
-            # tail (driver threads submitting jobs; FIFO scheduling
-            # back-fills).
+            # The range write, the two vocabulary tables and the manifest
+            # accounting agg are mutually independent consumers of the
+            # cached block rows — run them concurrently so the
+            # vocabulary-sized jobs hide behind the segment write's tail
+            # (driver threads submitting jobs; FIFO scheduling back-fills).
+            # The vocabulary is aggregated once and held, and term_dict and
+            # term_deletes are both written from it.
             def _seg_write():
                 # storage codec = grenad's per-block compression_type
                 # (src/compression.rs:9-28) at the parquet layer; posting
@@ -594,23 +632,21 @@ def _build_index_inner(
                     compression,
                 )
 
-            def _dict_chain():
-                if not _done(dict_path):
-                    _write_dict_from(segments)
-                _write_aux()
-
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=3) as pool:
-                futs = [
-                    pool.submit(_seg_write),
-                    pool.submit(_dict_chain),
-                    pool.submit(lambda: _enc_agg(segments)),
-                ]
-                futs[0].result()
-                futs[1].result()
-                enc = futs[2].result()
-            segments.unpersist()
+            vocab = term_dict_from_segments(segments).persist(
+                StorageLevel.MEMORY_AND_DISK
+            )
+            # each job runs under the caller's job description and group:
+            # a pool thread starts with no Spark local properties
+            jobs = [_seg_write, *_vocab_writes(vocab), lambda: _enc_agg(segments)]
+            try:
+                with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
+                    futs = [pool.submit(inheritable_thread_target(spark)(j)) for j in jobs]
+                    for f in futs[:-1]:
+                        f.result()
+                    enc = futs[-1].result()
+            finally:
+                vocab.unpersist()
+                segments.unpersist()
             stage_secs["segments_finalize"] = time.time() - ts
     finally:
         if docs_write_fut is not None:
@@ -624,34 +660,35 @@ def _build_index_inner(
             stage_secs["docs"] = round(time.time() - ts, 3)
     if docs_write_fut is not None:
         docs_write_fut.result()  # raise a failed docs/stats write
-    segments = spark.read.parquet(seg_path)
-
-    # stage 3 (resume path): term_dict (vocabulary-sized) + aux tables from
-    # the written segments when stage 2 was already complete
-    if not _done(dict_path):
+    # stage 3 (resume path): the vocabulary tables not yet written when
+    # stage 2 was already complete, from the written term_dict or, without
+    # one, from the written segments
+    if not (_done(dict_path) and _done(deletes_path)):
         ts = time.time()
-        _write_dict_from(segments)
-        stage_secs["term_dict"] = time.time() - ts
-    ts = time.time()
-    _write_aux()
-    if time.time() - ts > 0.05:
-        stage_secs["term_aux"] = time.time() - ts
+        vocab = (
+            spark.read.parquet(dict_path) if _done(dict_path)
+            else term_dict_from_segments(spark.read.parquet(seg_path))
+        )
+        for w in _vocab_writes(vocab):
+            w()
+        stage_secs["term_vocab"] = time.time() - ts
 
     # stage 4: manifest — per-file lineage + metrics (north_rule); the
     # grenad metadata footer (src/metadata.rs:105-115) of this index.
     if not os.path.exists(manifest_path):
-        # vocabulary size: parquet row-count from file footers (metadata-only
-        # job) — lets df_map() gate on the manifest with no count job per
-        # handle. UNDER the manifest guard so a resumed/no-op build launches
-        # zero Spark jobs.
-        n_terms = spark.read.parquet(dict_path).count()
+        # vocabulary size: summed from term_dict's file footers, no Spark
+        # job — lets df_map() gate on the manifest with no count job per
+        # handle
+        n_terms = parquet_rows(dict_path)
         files = [
             {"file": f, "bytes": os.path.getsize(os.path.join(seg_path, f))}
             for f in sorted(os.listdir(seg_path))
             if f.endswith(".parquet")
         ]
         if enc is None:
-            enc = _enc_agg(segments)
+            # a resumed build: from the written block rows (a read of a
+            # parquet directory costs a schema job, so only here)
+            enc = _enc_agg(spark.read.parquet(seg_path))
         manifest = {
             "format_version": CURRENT_FORMAT_VERSION,
             "built_at_unix": int(t0),
@@ -714,16 +751,17 @@ def term_delete_rows(vocab: DataFrame) -> DataFrame:
 
 
 def write_term_deletes(
-    spark: SparkSession, dict_path: str, out_path: str, partitions: int
+    vocab: DataFrame, out_path: str, partitions: int, compression: str = "zstd"
 ) -> None:
-    """Persist term_delete_rows of a written term_dict, range-partitioned on
-    delvar so the query side's delvar IN (…) prunes files."""
-    (
-        term_delete_rows(spark.read.parquet(dict_path))
+    """Persist term_delete_rows of a (term, …) vocabulary, range-partitioned
+    on delvar so the query side's delvar IN (…) prunes files, and sorted on
+    (delvar, term) so write_vocab_table prefix-codes delvar."""
+    write_vocab_table(
+        term_delete_rows(vocab)
         .repartitionByRange(partitions, "delvar")
-        .sortWithinPartitions("delvar", "term")
-        .write.mode("overwrite")
-        .parquet(out_path)
+        .sortWithinPartitions("delvar", "term"),
+        out_path,
+        compression,
     )
 
 
@@ -1102,8 +1140,14 @@ class IndexHandle:
             if n_terms is None:
                 n_terms = self.term_dict(spark).count()
             if n_terms <= self.IDF_MAP_MAX_TERMS:
-                rows = self.term_dict(spark).select("term", "df").collect()
-                self._df_map = {r["term"]: int(r["df"]) for r in rows}
+                # read on the driver, like every block read that fits it:
+                # no Spark job, and no cold JVM decoder on the first call
+                import pyarrow.parquet as pq
+
+                t = pq.read_table(
+                    os.path.join(self.path, "term_dict"), columns=["term", "df"]
+                )
+                self._df_map = dict(zip(t["term"].to_pylist(), t["df"].to_pylist()))
             else:
                 self._df_map = None
         return self._df_map

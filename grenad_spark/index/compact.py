@@ -62,8 +62,11 @@ from grenad_spark.index.build import (
     SEGMENT_SCHEMA,
     IndexHandle,
     build_segments,
+    parquet_rows,
     term_dict_from_segments,
+    write_term_deletes,
     write_term_sorted,
+    write_vocab_table,
 )
 
 MAX_GENERATIONS = 25  # grenad max_nb_chunks default (src/sorter.rs:21)
@@ -350,16 +353,13 @@ def compact_indexes(
     )
     segments.unpersist()
     segments = spark.read.parquet(seg_path)
-    term_dict_from_segments(segments).write.mode("overwrite").parquet(
-        os.path.join(out_dir, "term_dict")
-    )
-    n_terms = spark.read.parquet(os.path.join(out_dir, "term_dict")).count()
-    from grenad_spark.index.build import write_term_deletes
-
+    dict_path = os.path.join(out_dir, "term_dict")
+    write_vocab_table(term_dict_from_segments(segments), dict_path)
+    n_terms = parquet_rows(dict_path)
     # the SymSpell deletion table — a compacted index serves typo expansion
     # from the persisted table, same as a fresh build
     write_term_deletes(
-        spark, os.path.join(out_dir, "term_dict"),
+        spark.read.parquet(dict_path),
         os.path.join(out_dir, "term_deletes"), max(1, partitions // 8),
     )
     live_docs.repartition(max(1, partitions // 8)).write.mode("overwrite").parquet(

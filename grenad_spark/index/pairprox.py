@@ -165,6 +165,7 @@ def build_pair_proximity(
     # so both jobs run from a small thread pool (guide-§2.6 tail back-fill).
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.storagelevel import StorageLevel
 
     segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
@@ -189,7 +190,10 @@ def build_pair_proximity(
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_blocks), pool.submit(_write_dict)]
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(w))
+            for w in (_write_blocks, _write_dict)
+        ]
         for fut in futs:
             fut.result()
     segments.unpersist()
@@ -551,6 +555,7 @@ def build_prefix_pair_proximity(
     # agg shares the persisted rows and runs concurrently with the write
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.storagelevel import StorageLevel
 
     segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
@@ -575,7 +580,10 @@ def build_prefix_pair_proximity(
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_blocks), pool.submit(_write_dict)]
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(w))
+            for w in (_write_blocks, _write_dict)
+        ]
         for fut in futs:
             fut.result()
     segments.unpersist()

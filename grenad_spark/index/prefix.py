@@ -134,6 +134,7 @@ def build_prefix_postings(
     # dict agg shares the persisted rows and runs concurrently with the write
     from concurrent.futures import ThreadPoolExecutor
 
+    from pyspark import inheritable_thread_target
     from pyspark.storagelevel import StorageLevel
 
     segments = segments.persist(StorageLevel.MEMORY_AND_DISK)
@@ -158,7 +159,10 @@ def build_prefix_postings(
         )
 
     with ThreadPoolExecutor(max_workers=2) as pool:
-        futs = [pool.submit(_write_blocks), pool.submit(_write_dict)]
+        futs = [
+            pool.submit(inheritable_thread_target(spark)(w))
+            for w in (_write_blocks, _write_dict)
+        ]
         for fut in futs:
             fut.result()
     segments.unpersist()
